@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries against SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. Results are forced
   * with a noop-format write so Catalyst cannot prune work under a count().
@@ -338,22 +336,7 @@ object Bench {
     // invisible to every gate. Counted into the result JSON + validity flag.
     CodegenTripwire.install()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's union partitioning propagation plans SMJ over a 2N-partition
-      // union as exchange-free against an N-partition side -> runtime zip
-      // failure (observed on the fused addressStats). Disable everywhere.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Bucket-aligned gold joins cluster on a SUBSET of the join keys
-      // (tx_hash buckets, (tx_hash, address) joins); allow that co-partition.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Verbose mode: per-job wall times per sample, for tracing which subtree
     // of a DAG re-evaluates on slow samples (the bk4 lead from round 11).
     val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").exists(_ != "0")

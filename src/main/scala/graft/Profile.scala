@@ -1,60 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** Scratch profiling main for round-6 perf work (not part of the API). */
+/** Profiling main (not part of the API): formatted-explain dumps of
+  * registered queries for the plan archive, and a per-stage breakdown of
+  * any registered query. The mode is picked by SPARK_GRAFT_PROFILE.
+  */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Bucket-aligned gold joins cluster on a SUBSET of the join keys
-      // (tx_hash buckets, (tx_hash, address) joins); allow that co-partition.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Ad-hoc conf sweeps: SPARK_GRAFT_CONF="k=v;k=v" (runtime-settable SQL confs).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    })
-    import graft.chain._
-
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[profile] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    BlkCorpus.ensureMaterialized(spark)
-
-    // Minimal bucketing probe
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("bucketprobe")) {
-      val outs = BlkCorpus.silver(spark, "outs")
-      println("== groupBy(tx_hash) ==")
-      println(outs.groupBy("tx_hash").count().queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Exchange") || l.contains("Scan") || l.contains("Aggregate")).mkString("\n"))
-      println("== groupBy(tx_hash, address) ==")
-      println(outs.groupBy("tx_hash", "address").count().queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Exchange") || l.contains("Scan") || l.contains("Aggregate")).mkString("\n"))
-      spark.stop(); sys.exit(0)
-    }
-
-    // Plan dumps: SPARK_GRAFT_PROFILE=plan:<query>[,<query>...]
-    sys.env.get("SPARK_GRAFT_PROFILE").filter(_.startsWith("plan:")).foreach { v =>
-      v.stripPrefix("plan:").split(",").foreach { q =>
-        println(s"===== $q =====")
-        println(SparkEntry.queries(q)(spark, "/root/testdata/sf0.01")
-          .queryExecution.executedPlan.toString)
-      }
-      spark.stop(); sys.exit(0)
-    }
-
+    val spark = GraftSession.local()
     // Formatted-explain dumps for the plan archive (plans/rNN/):
     // SPARK_GRAFT_PROFILE=explainf:<outdir>:<suffix>:<q1,q2,...>
     // writes <outdir>/<query>_<suffix>.txt with explain("formatted") of each
@@ -111,6 +63,12 @@ object Profile {
           }
       }
       spark.sparkContext.addSparkListener(listener)
+      def t[A](name: String)(f: => A): A = {
+        val t0 = System.nanoTime(); val r = f
+        println(f"[profile] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
+      }
+      def force(df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
       qlist.split(",").foreach { q =>
         val build = SparkEntry.queries.getOrElse(q, sys.error(
           s"unknown query '$q' — not in SparkEntry.queries"))
@@ -123,75 +81,7 @@ object Profile {
       spark.stop(); sys.exit(0)
     }
 
-    // bk0 phase breakdown: where does the end-to-end from-raw time go?
-    // Mirrors BlkScale's bk0 staging (headers SER-persisted before the
-    // annotator's eager envelope probe; cTxs/headers/rin/outs SER-persisted
-    // before the digest) so the phase times decompose the bench number.
-    // bk0cache additionally stages the parsed bronze projections
-    // (parse-once pipeline shape).
-    val bk0cache = sys.env.get("SPARK_GRAFT_PROFILE").contains("bk0cache")
-    if (bk0cache || sys.env.get("SPARK_GRAFT_PROFILE").contains("bk0")) {
-      // same scale-routed staging level as BlkScale.stageForRun
-      val Ser =
-        if (BlkCorpus.MainChainLength <= graft.operators.ChainOps.BroadcastMaxRows)
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-        else org.apache.spark.storage.StorageLevel.DISK_ONLY
-      var prev = Seq.empty[org.apache.spark.sql.DataFrame]
-      (1 to 3).foreach { round =>
-        println(s"== bk0 pass $round ==")
-        val parsed = graft.sources.BlockFileSource.read(spark, BlkCorpus.rawDir)
-        val bronze = t("toBronze + blocks force") {
-          val b = graft.sources.BlockFileSource.toBronze(parsed)
-          if (bk0cache) Seq("transactions", "tx_inputs", "tx_outputs")
-            .foreach(n => b(n).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          b("blocks").persist(Ser) // staged first, as BlkScale.stageForRun(headers)
-          force(b("blocks")); b
-        }
-        val ann = t("annotateDistributed (materialized)")(
-          BestChain.annotateDistributed(bronze("blocks")))
-        val cTxs = GoldStats.chainTxs(bronze("transactions"), ann)
-        val rin = Enrich.resolvedInputs(bronze("tx_inputs"), bronze("tx_outputs"))
-          .join(cTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")
-        val outs = bronze("tx_outputs")
-          .join(cTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")
-        prev.foreach(_.unpersist(blocking = false))
-        prev = (if (bk0cache)
-          Seq(cTxs, bronze("transactions"), bronze("tx_inputs"), bronze("tx_outputs"))
-        else Seq(cTxs)) ++ Seq(bronze("blocks"), rin, outs)
-        prev.filterNot(df => df.storageLevel.useMemory || df.storageLevel.useDisk)
-          .foreach(_.persist(Ser))
-        t("scratch materialize (cTxs)")(force(cTxs))
-        val ts = GoldStats.txStats(cTxs, rin, outs)
-        t("digest (txStats agg x ann agg)")(force(
-          ann.agg(
-              count(lit(1)).as("n_blocks"),
-              sum(col("is_on_best_chain").cast("long")).as("n_best"),
-              max(col("height").cast("long")).as("best_height"))
-            .crossJoin(ts.agg(
-              count(lit(1)).as("n_chain_txs"),
-              sum("fee").as("total_fee")))))
-      }
-      spark.stop(); return
-    }
-
-    (1 to 2).foreach { round =>
-      println(s"== pass $round ==")
-      val ann = BlkCorpus.annotated(spark)
-      val txs = BlkCorpus.bronze(spark, "transactions")
-      val ins = BlkCorpus.bronze(spark, "tx_inputs")
-      val outsB = BlkCorpus.bronze(spark, "tx_outputs")
-      t("scan counts")((ann.count(), txs.count(), ins.count(), outsB.count()))
-      val cTxs = GoldStats.chainTxs(txs, ann)
-      t("cTxs force")(force(cTxs))
-      val rin0 = Enrich.resolvedInputs(ins, outsB)
-      t("resolvedInputs force")(force(rin0))
-      val rin = rin0.join(cTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")
-      val outs = outsB.join(cTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")
-      t("rin semi force")(force(rin))
-      t("outs semi force")(force(outs))
-      t("full addressStats")(force(GoldStats.addressStats(cTxs, rin, outs)))
-      t("full txStats")(force(GoldStats.txStats(cTxs, rin, outs)))
-    }
-    spark.stop()
+    sys.error("SPARK_GRAFT_PROFILE must be explainf:<outdir>:<suffix>:<q1,...> " +
+      "or stages:<dir>:<q1,...>")
   }
 }

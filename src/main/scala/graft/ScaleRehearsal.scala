@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal main (not part of the API): materializes the BlkCorpus at
   * the current SPARK_GRAFT_CORPUS_SCALE and times one steady-state run each
   * of bk0/bk1/bk4/bk7 — the evidence behind the "would this survive 10× the
@@ -11,25 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // GC-driven ContextCleaner + a big quiet driver heap = shuffle files
-      // accumulating for the default 30-min periodic-GC interval (the r16
-      // single-JVM aging window) — keep the reclaim continuous. (r17
-      // verified this override is orthogonal to bk0@30×'s heap demand: the
-      // OOM-at-8g reproduces with AND without it, and on r16's own HEAD —
-      // set SPARK_DRIVER_MEM=16g for 30× queries legs in a tight-memory
-      // environment.)
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val scale = graft.chain.BlkCorpus.Scale
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -38,29 +38,7 @@ object StreamRehearsal {
         .forEach(f => { Files.delete(f); () })
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // recentProgress retains only this many entries (default 100); the
-      // corpus-scale drains report batch counts from it, and a long drain
-      // would silently undercount the emitted `batches` metric.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      // Single-JVM campaign aging (r16): ContextCleaner is GC-driven, and a
-      // 16 GiB driver doing mostly small allocations can go the cleaner's
-      // default 30-min periodic-GC interval without a full collection —
-      // shuffle files and checkpoint blocks from dead frames pile up on disk
-      // for exactly the ~40-min window where the archived aged campaign's
-      // tail legs hit 20–70 s/batch. A 2-min interval keeps the reclaim
-      // continuous; the inter-leg vacuum below is the explicit boundary.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val filesPerTrigger =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "4").toInt

@@ -326,14 +326,14 @@ object BestChain {
     if (maxDistRow.isNullAt(0)) { // empty chain: empty annotation, not a driver crash
       resolved.tables.foreach(_._2.unpersist(blocking = false))
       resolved.resultRdd.unpersist(blocking = false)
-      resolved.dictRdd.unpersist(blocking = false)
+      resolved.dict.unpersist()
       return withH.withColumn("is_on_best_chain", lit(false))
     }
     val tipHeight = maxDistRow.getLong(0)
     val tipCands = encState.where(col("dist") === tipHeight)
       .select("id", "ptr").collect().map(r => (r.getLong(0), r.getLong(1)))
     val candVids = tipCands.flatMap(p => Seq(p._1, p._2)).distinct
-    val vidToHash = traced("annotate: tip decode")(resolved.dict
+    val vidToHash = traced("annotate: tip decode")(resolved.dict.frame
       .where(col("vid").isin(candVids: _*)).collect()
       .map(r => r.getLong(1) -> r.get(0).asInstanceOf[String]).toMap)
     val (tipVid, tipRootVid) = tipCands.minBy(p => vidToHash(p._1))
@@ -349,7 +349,7 @@ object BestChain {
     // frontier stays encoded through the loop and decodes once at the end.
     // Starts at {tip, genesis}; after consuming table r it covers every
     // distance in [0, arity^(r+1)-1] ∪ {height}.
-    val seedVids = resolved.dict
+    val seedVids = resolved.dict.frame
       .where(col("oid").isin(tipHash, tipRoot)).select("vid")
       .collect().map(_.getLong(0)).toSeq
     var s = seedVids.distinct.toDF("vid")
@@ -419,8 +419,7 @@ object BestChain {
     // Decode the frontier back to hashes through the resolve's dictionary
     // (one small join — |S| ≈ chain length ≥ the big side only at the very
     // end, and the dict side is the lookup).
-    val sHash = s.join(resolved.dict, s("vid") === resolved.dict("vid"))
-      .select(col("oid").as("hash"))
+    val sHash = resolved.dict.decode(s, "vid").select(col("vid").as("hash"))
     val ann = withH
       .join(sHash.withColumn("is_on_best_chain", lit(true)), Seq("hash"), "left")
       .na.fill(false, Seq("is_on_best_chain"))
@@ -433,7 +432,7 @@ object BestChain {
     // On the walk route no tables were kept, so the height pass's final
     // state RDD is not covered by the loop above — drop it explicitly.
     resolved.resultRdd.unpersist(blocking = false)
-    resolved.dictRdd.unpersist(blocking = false)
+    resolved.dict.unpersist()
     if (sRdd != null) sRdd.unpersist(blocking = false)
     Option(lastAnn.getAndSet(annRdd)).foreach(_.unpersist(blocking = false))
     annDf

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{ChainOps, UnionFind}
+import graft.operators.{ChainOps, UnionFind, VertexDictionary}
 
 /** Wallet clustering = connected components over the co-spend graph —
   * completing the reference's abandoned `AddressWalletID` feature
@@ -106,25 +106,16 @@ object WalletCluster {
         .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id"))
     }
 
-    // Dense unique vertex ids (no hash-collision risk at 100 TB).
-    // zipWithUniqueId over a shuffle output is NOT stable across
-    // re-evaluations (fetch order varies), so the assignment is materialized
-    // ONCE (persist + count) and every consumer — the edge joins AND the
-    // graph's vertex set — reads the cached vdf, never the raw lineage.
-    val funderAddrs = funders.select("address").distinct()
-    val vdf = funderAddrs.rdd.map(_.getString(0)).zipWithUniqueId()
-      .toDF("address", "vid").persist(StorageLevel.MEMORY_AND_DISK)
-    vdf.count()
-    val edgeVids = edgeDf
-      .join(vdf.select(col("address").as("src"), col("vid").as("src_vid")), "src")
-      .join(vdf.select(col("address").as("dst"), col("vid").as("dst_vid")), "dst")
-      .select("src_vid", "dst_vid")
+    // Dense unique vertex ids (no hash-collision risk at 100 TB); the edge
+    // joins AND the graph's vertex set read the one pinned assignment.
+    val dict = VertexDictionary.build(funders.select("address"))
+    val edgeVids = Seq("src", "dst").foldLeft(edgeDf)((df, c) => dict.encode(df, c))
     val edges = edgeVids.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph(vdf.select("vid").rdd.map(r => (r.getLong(0), ())), edges)
+    val graph = Graph(dict.frame.select("vid").rdd.map(r => (r.getLong(0), ())), edges)
     val ccGraph = graph.connectedComponents()
-    val cc = ccGraph.vertices.toDF("vid", "cc")
+    val cc = ccGraph.vertices.toDF("address", "cc")
 
-    val labeled = vdf.join(cc, "vid")
+    val labeled = dict.decode(cc, "address")
     val walletLabel = labeled.groupBy("cc").agg(min("address").as("wallet_id"))
     val out = universe
       .join(labeled.join(walletLabel, "cc").select("address", "wallet_id"),
@@ -136,7 +127,7 @@ object WalletCluster {
     val (outDf, outRdd) = ChainOps.rebase(out)
     ccGraph.unpersist(blocking = false)
     graph.unpersist(blocking = false)
-    vdf.unpersist(blocking = false)
+    dict.unpersist()
     edgeRdd.unpersist(blocking = false)
     Option(lastResult.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
@@ -447,7 +438,7 @@ object WalletCluster {
         // sized persist on the O(affected) path is exactly the cache churn
         // the route exists to avoid.
         val (bfM, bfRdd) = ChainOps.rebase(
-          bf, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          bf, StorageLevel.MEMORY_AND_DISK_SER)
         Option(lastMassBf.getAndSet(bfRdd)).foreach(_.unpersist(blocking = false))
         val fresh = clusters( // clusters distincts both inputs itself
             bfM.select("address"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.operators.VertexDictionary
+
 /** Whole-graph batch analytics over the value-flow graph — the GraphX layer
   * of SURVEY.md §7.1. Vertices are addresses; a directed edge (a → b, v)
   * means a tx funded by `a` paid `v` satoshis to `b` (src_address of a
@@ -44,6 +46,11 @@ object GraphAnalytics {
         coalesce(col("in_value"), lit(0L)).as("in_value"))
   }
 
+  /** `edges`' (src, dst) with both endpoints replaced by their vids. */
+  private def encodeEndpoints(dict: VertexDictionary, edges: DataFrame,
+      bcast: Boolean = true): DataFrame =
+    Seq("src", "dst").foldLeft(edges.select("src", "dst"))((df, c) => dict.encode(df, c, bcast))
+
   /** Per-address triangle participation counts over the UNDIRECTED flow
     * graph — the local-clustering signal (mixing services and exchange
     * hot wallets sit in dense triangle neighborhoods; pass-through chains
@@ -73,27 +80,12 @@ object GraphAnalytics {
     // decoded output is bit-identical; above the envelope the dictionary
     // cannot broadcast and the string dataflow stands unchanged (the
     // discarded endpoint-distinct probe is the only cost).
-    var dictRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var dict: DataFrame = null
-    val base = locally {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val idType = edges.schema("src").dataType
-      val dRdd = edges.select(explode(array(col("src"), col("dst"))).as("x"))
-        .distinct().rdd.map(_.get(0))
-        .zipWithUniqueId().map { case (oid, i) => Row(oid, i) }
-      dRdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val d = edges.sparkSession.createDataFrame(dRdd, StructType(Seq(
-        StructField("oid", idType), StructField("vid", LongType, nullable = false))))
-      val n = d.count() // pins the id assignment AND gates the route
-      if (n <= graft.operators.ChainOps.BroadcastMaxRows) {
-        dict = d; dictRdd = dRdd
-        edges
-          .join(broadcast(dict.select(col("oid").as("src"), col("vid").as("vs"))), "src")
-          .join(broadcast(dict.select(col("oid").as("dst"), col("vid").as("vd"))), "dst")
-          .select(col("vs").as("src"), col("vd").as("dst"))
-      } else { dRdd.unpersist(blocking = false); edges }
-    }
+    val dict = VertexDictionary.build(
+      edges.select(explode(array(col("src"), col("dst")))))
+    val encoded = dict.n <= graft.operators.ChainOps.BroadcastMaxRows
+    val base =
+      if (encoded) encodeEndpoints(dict, edges)
+      else { dict.unpersist(); edges }
     val und = base
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v")).distinct()
@@ -129,17 +121,12 @@ object GraphAnalytics {
     val counts = tris.select(explode(array(col("s"), col("a"), col("b"))).as("address"))
       .groupBy("address").agg(count(lit(1)).as("triangles"))
     // encoded route: one vertex-sized broadcast lookup decodes the counts
-    val out =
-      if (dict == null) counts
-      else counts
-        .join(broadcast(dict.select(col("vid").as("address"), col("oid").as("_oa"))),
-          "address")
-        .select(col("_oa").as("address"), col("triangles"))
+    val out = if (encoded) dict.decode(counts, "address", bcast = true) else counts
     // Materialize the result, then drop the oriented set (one live copy —
     // the kCore/LPA swap-unpersist discipline).
     val (outDf, outRdd) = graft.operators.ChainOps.rebase(out)
     oRdd.unpersist(blocking = false)
-    if (dictRdd != null) dictRdd.unpersist(blocking = false)
+    if (encoded) dict.unpersist()
     Option(lastTri.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
@@ -198,7 +185,7 @@ object GraphAnalytics {
     // it, so id width multiplies by the round count; two ~34-byte address
     // strings per row become two longs). No ordering is consumed anywhere
     // in the peel (degree counts, anti-joins, final endpoint distinct), so
-    // a plain zipWithUniqueId assignment suffices; the k-core member SET
+    // an unordered dictionary suffices; the k-core member SET
     // decodes back identically (GraphSpec brute-force mirrors + the g4
     // oracle pin it). The dictionary is built from the RAW endpoints FIRST
     // so the canonical distinct — the one edge-sized exchange+materialize
@@ -211,28 +198,13 @@ object GraphAnalytics {
     // member, harmless. Above the envelope the dictionary cannot broadcast:
     // the vertex-count probe (endpoint distinct + count) is the only cost
     // that route pays before falling back to strings unchanged.
-    var dictRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var dict: DataFrame = null
-    val base = locally {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val idType = edges.schema("src").dataType
-      val dRdd = edges.select(explode(array(col("src"), col("dst"))).as("x"))
-        .distinct().rdd.map(_.get(0))
-        .zipWithUniqueId().map { case (oid, i) => Row(oid, i) }
-      dRdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val d = edges.sparkSession.createDataFrame(dRdd, StructType(Seq(
-        StructField("oid", idType), StructField("vid", LongType, nullable = false))))
-      val nVerts = graft.operators.ChainOps.traced("kcore: dict build")(
-        d.count()) // pins the id assignment AND gates the route
-      if (nVerts <= graft.operators.ChainOps.BroadcastMaxRows) {
-        dict = d; dictRdd = dRdd
-        edges
-          .join(broadcast(dict.select(col("oid").as("src"), col("vid").as("vs"))), "src")
-          .join(broadcast(dict.select(col("oid").as("dst"), col("vid").as("vd"))), "dst")
-          .select(col("vs").as("src"), col("vd").as("dst"))
-      } else { dRdd.unpersist(blocking = false); edges }
-    }
+    val dict = graft.operators.ChainOps.traced("kcore: dict build")(
+      VertexDictionary.build(
+        edges.select(explode(array(col("src"), col("dst"))))))
+    val encoded = dict.n <= graft.operators.ChainOps.BroadcastMaxRows
+    val base =
+      if (encoded) encodeEndpoints(dict, edges)
+      else { dict.unpersist(); edges }
     var (und, undRdd, undCount) = graft.operators.ChainOps.traced("kcore: und materialize")(
       graft.operators.ChainOps.rebaseCounted(base
         .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
@@ -275,7 +247,7 @@ object GraphAnalytics {
     // that need the most rounds. Fail loudly; the caller raises maxIter.
     if (!converged) {
       prev.foreach(_.unpersist(blocking = false))
-      if (dictRdd != null) dictRdd.unpersist(blocking = false)
+      if (encoded) dict.unpersist()
       throw new IllegalStateException(
         s"kCore(k=$k) did not converge within maxIter=$maxIter peeling rounds; " +
           "raise maxIter (rounds needed grow with graph diameter)")
@@ -283,15 +255,10 @@ object GraphAnalytics {
     val members = und.select(explode(array(col("u"), col("v"))).as("address"))
       .distinct()
     // encoded route: one vertex-sized broadcast lookup decodes the members
-    val out =
-      if (dict == null) members
-      else members
-        .join(broadcast(dict.select(col("vid").as("address"), col("oid").as("_oa"))),
-          "address")
-        .select(col("_oa").as("address"))
+    val out = if (encoded) dict.decode(members, "address", bcast = true) else members
     val (outDf, outRdd) = graft.operators.ChainOps.rebase(out)
     prev.foreach(_.unpersist(blocking = false))
-    if (dictRdd != null) dictRdd.unpersist(blocking = false)
+    if (encoded) dict.unpersist()
     Option(lastCore.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
@@ -319,9 +286,6 @@ object GraphAnalytics {
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = edges.sparkSession
     // Vertex dictionary FIRST, from the raw endpoints (guide §2.3 —
     // narrower types): on the broadcast route the whole loop then runs
     // over DENSE LONG ids — the one edge-sized distinct of the setup and
@@ -330,7 +294,7 @@ object GraphAnalytics {
     // went 35 → 14 s across this change and the single-pass pin below).
     // The encoding must be ORDER-PRESERVING — ties in the per-vertex label
     // vote break by MIN LABEL — so ids are assigned by sorted rank
-    // (zipWithIndex over the sorted endpoint set) and min-by-vid ≡
+    // (the dictionary's orderPreserving mode) and min-by-vid ≡
     // min-by-address; results decode back bit-identically (g5's oracle and
     // the GraphSpec/PropertySpec mirrors pin this). The dictionary may
     // include vertices that only appear in self-loops: they have no
@@ -341,16 +305,10 @@ object GraphAnalytics {
     // joins — the string route stands there unchanged; the discarded
     // vertex probe (endpoint distinct + sort + count) is the only cost
     // that route pays.
-    val idType = edges.schema("src").dataType
-    val dRdd = edges.select(explode(array(col("src"), col("dst"))).as("x"))
-      .distinct().orderBy("x").rdd
-      .zipWithIndex.map { case (r, i) => Row(r.get(0), i) }
-    dRdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val dict = spark.createDataFrame(dRdd, StructType(Seq(
-      StructField("oid", idType), StructField("vid", LongType, nullable = false))))
-    val nVerts = graft.operators.ChainOps.traced("lpa: dict build")(
-      dict.count()) // pins the rank assignment AND gates the route
-    val bcastLabels = nVerts <= graft.operators.ChainOps.BroadcastMaxRows
+    val dict = graft.operators.ChainOps.traced("lpa: dict build")(
+      VertexDictionary.build(
+        edges.select(explode(array(col("src"), col("dst")))), orderPreserving = true))
+    val bcastLabels = dict.n <= graft.operators.ChainOps.BroadcastMaxRows
     // both orientations of each canonical edge, derived MAP-SIDE (explode)
     // so the pinned layouts below consume each |E|-row input exactly once
     // (a union of two selects used to force a 2|E| materialization here —
@@ -384,15 +342,13 @@ object GraphAnalytics {
         // representative, and nothing downstream reads orientation), fan
         // out both directions map-side, repartition. No intermediate
         // string materialization.
-        labels = dict.select(col("vid").as("address"), col("vid").as("label"))
-        val enc = edges
-          .join(broadcast(dict.select(col("oid").as("src"), col("vid").as("vs"))), "src")
-          .join(broadcast(dict.select(col("oid").as("dst"), col("vid").as("vd"))), "dst")
-          .select(least(col("vs"), col("vd")).as("u"),
-            greatest(col("vs"), col("vd")).as("v"))
+        labels = dict.frame.select(col("vid").as("address"), col("vid").as("label"))
+        val enc = encodeEndpoints(dict, edges)
+          .select(least(col("src"), col("dst")).as("u"),
+            greatest(col("src"), col("dst")).as("v"))
           .where(col("u") =!= col("v")).distinct()
         val r = bothDirs(enc).repartition(col("a"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         graft.operators.ChainOps.traced("lpa: pin fill (encode)")(r.count())
         r
       } else {
@@ -402,7 +358,7 @@ object GraphAnalytics {
         // join needs NEITHER an exchange NOR a sort on the edge-sized
         // side; only the vertex-sized label table is shuffled and sorted
         // per round.
-        dRdd.unpersist(blocking = false)
+        dict.unpersist()
         val (und1, undRdd) = graft.operators.ChainOps.traced("lpa: und rebase")(
           graft.operators.ChainOps.rebase(edges
             .select(least(col("src"), col("dst")).as("u"),
@@ -415,7 +371,7 @@ object GraphAnalytics {
         labels = labels0
         prev = Some(labels0Rdd)
         val r = bothDirs(und1).repartition(col("b")).sortWithinPartitions("b")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         graft.operators.ChainOps.traced("lpa: pin fill")(r.count())
         // rounds touch only the pinned layout — one cached copy, not two
         undRdd.unpersist(blocking = false)
@@ -444,14 +400,11 @@ object GraphAnalytics {
         // decode both columns back to the caller's id space (two vertex-
         // sized broadcast lookups) and materialize, so the dictionary can
         // be dropped and repeated calls hold one copy (lastLpa swap).
-        val decoded = labels
-          .join(broadcast(dict.select(col("vid").as("address"), col("oid").as("_oa"))),
-            "address")
-          .join(broadcast(dict.select(col("vid").as("label"), col("oid").as("_ol"))),
-            "label")
-          .select(col("_oa").as("address"), col("_ol").as("community"))
+        val decoded = dict.decode(dict.decode(labels, "address", bcast = true),
+            "label", bcast = true)
+          .select(col("address"), col("label").as("community"))
         val (outDf, outRdd) = graft.operators.ChainOps.rebase(decoded)
-        dRdd.unpersist(blocking = false)
+        dict.unpersist()
         prev.foreach(_.unpersist(blocking = false))
         prev = Some(outRdd)
         outDf
@@ -472,26 +425,16 @@ object GraphAnalytics {
     import spark.implicits._
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // zipWithUniqueId over a shuffle output is not stable across
-    // re-evaluations — materialize the assignment once and derive BOTH the
-    // edge joins and the graph vertex set from the cached vdf.
     // explode(array(src, dst)) emits both endpoints in ONE scan of the edge
     // frame — the union-of-two-selects form it replaces computed the edge
     // subtree twice (for g2 that was the whole flowEdges derivation)
-    val vdf = edges.select(explode(array(col("src"), col("dst"))).as("address"))
-      .distinct()
-      .rdd.map(_.getString(0)).zipWithUniqueId()
-      .toDF("address", "vid").persist(StorageLevel.MEMORY_AND_DISK)
-    vdf.count()
-    val e = edges
-      .join(vdf.select(col("address").as("src"), col("vid").as("src_vid")), "src")
-      .join(vdf.select(col("address").as("dst"), col("vid").as("dst_vid")), "dst")
-      .select("src_vid", "dst_vid")
+    val dict = VertexDictionary.build(
+      edges.select(explode(array(col("src"), col("dst")))))
+    val e = encodeEndpoints(dict, edges, bcast = false)
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1.0))
-    val graph = Graph(vdf.select("vid").rdd.map(r => (r.getLong(0), ())), e)
+    val graph = Graph(dict.frame.select("vid").rdd.map(r => (r.getLong(0), ())), e)
     val rankGraph = graph.staticPageRank(iterations, resetProb)
-    val ranks = rankGraph.vertices.toDF("vid", "rank")
-    val out = vdf.join(ranks, "vid").select("address", "rank")
+    val out = dict.decode(rankGraph.vertices.toDF("address", "rank"), "address")
     // Materialize, then drop GraphX state + the previous call's result —
     // repeated invocations hold one ranking, not one per call. staticPageRank
     // returns an UNcached mapVertices wrapper over its internally-cached

@@ -46,8 +46,7 @@ object ChainOps {
       tables: Seq[(DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])],
       n: Long,
       arity: Int,
-      dict: DataFrame,
-      dictRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])
+      dict: VertexDictionary)
 
   /** Truncate a DataFrame's lineage at the RDD level: compile + materialize
     * the rows into a cached RDD and re-wrap with a fresh LogicalRDD.
@@ -183,9 +182,6 @@ object ChainOps {
   private[graft] def resolve(
       nodes: DataFrame, idCol: String, parentCol: String,
       keepTables: Boolean): Resolved = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = nodes.sparkSession
     // Dictionary-encode the ids to dense longs BEFORE the loop (the
     // join-based vertex-id pattern of depthsPregel — no driver-held map).
     // The jump state is (id, ptr, dist, done) per node per retained round:
@@ -206,29 +202,22 @@ object ChainOps {
     // rebase of the pairs was tried instead and OOMed the 1.5M-block
     // corpus: it adds a THIRD concurrent memory consumer (pair persist +
     // parse transients + upstream cache fill) in the very first stage.
-    val base0 = nodes.select(col(idCol).as("oid"), col(parentCol).as("oparent"))
-    val idType = base0.schema("oid").dataType
-    val universe = base0.select(col("oid"))
-      .union(base0.select(col("oparent").as("oid")).where(col("oparent").isNotNull))
-      .distinct()
-    val dictRdd = universe.rdd.zipWithUniqueId().map { case (r, i) => Row(r.get(0), i) }
-    dictRdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val dict = spark.createDataFrame(dictRdd, StructType(Seq(
-      StructField("oid", idType), StructField("vid", LongType, nullable = false))))
-    dict.count() // pin the assignment before it is joined twice below
-    val enc = base0
-      .join(dict, Seq("oid"))
-      .join(dict.select(col("oid").as("oparent"), col("vid").as("pvid")),
-        Seq("oparent"), "left")
+    val base0 = nodes.select(col(idCol).as("id"), col(parentCol).as("parent"))
+    val dict = VertexDictionary.build(
+      base0.select(col("id")).union(base0.select(col("parent")).where(col("parent").isNotNull)),
+      level = StorageLevel.MEMORY_AND_DISK_SER)
+    // every non-null parent is in the universe, so a null encoded parent is
+    // exactly a root
+    val enc = dict.encode(dict.encode(base0, "id"), "parent", joinType = "left")
     val tables = scala.collection.mutable.ArrayBuffer
       .empty[(DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]
     var (state, stateRdd, n, unresolved) = traced("resolve round 0 (init rebase)")(
       rebaseCountFalse(
         enc.select(
-          col("vid").as("id"),
-          coalesce(col("pvid"), col("vid")).as("ptr"),
-          when(col("oparent").isNull, lit(0L)).otherwise(lit(1L)).as("dist"),
-          col("oparent").isNull.as("done")),
+          col("id"),
+          coalesce(col("parent"), col("id")).as("ptr"),
+          when(col("parent").isNull, lit(0L)).otherwise(lit(1L)).as("dist"),
+          col("parent").isNull.as("done")),
         boolIdx = 3))
     // The table size is fixed across rounds, so the broadcast decision is
     // made once, off the fused round-0 count.
@@ -245,23 +234,8 @@ object ChainOps {
     // (12 rounds, arity 4), and the membership pass (one round per retained
     // table) halves its rounds with it, 40 s → 33 s. Arity 8 would spend
     // 7·log8(d) ≈ 2.3·log2(d) hop shuffles to shave only 4 more rounds —
-    // past the knee. SPARK_GRAFT_SHUFFLE_ARITY overrides for measurement.
-    // The override is validated, not trusted: a malformed value would throw
-    // NumberFormatException deep inside resolve, and arity < 2 produces ZERO
-    // hop passes per round (pending never shrinks) until the maxRounds cycle
-    // guard throws a misleading "cyclic parent pointers" error — fall back
-    // to the measured default with a diagnostic instead.
-    val arity =
-      if (bcast) Arity
-      else sys.env.get("SPARK_GRAFT_SHUFFLE_ARITY") match {
-        case None => 4
-        case Some(v) =>
-          scala.util.Try(v.trim.toInt).toOption.filter(_ >= 2).getOrElse {
-            System.err.println(
-              s"[graft] ignoring invalid SPARK_GRAFT_SHUFFLE_ARITY='$v' (need an int >= 2); using 4")
-            4
-          }
-      }
+    // past the knee.
+    val arity = if (bcast) Arity else 4
     var r = 0
     // A well-formed forest of n nodes resolves in ceil(log_arity n) rounds
     // (depth ≤ n); needing more proves the parent pointers never saturate —
@@ -303,14 +277,11 @@ object ChainOps {
       state = next; stateRdd = nextRdd; unresolved = remaining
     }
     // Decode back to the caller's id space lazily — the frame references
-    // the persisted dict, so consumers must read it before dictRdd is
-    // unpersisted (rootsAndDepths materializes immediately; BestChain
+    // the persisted dict, so consumers must read it before the dictionary
+    // is unpersisted (rootsAndDepths materializes immediately; BestChain
     // cleans up only after its final annotation rebase).
-    val decoded = state
-      .join(dict.select(col("vid").as("id"), col("oid").as("did")), Seq("id"))
-      .join(dict.select(col("vid").as("ptr"), col("oid").as("dptr")), Seq("ptr"))
-      .select(col("did").as("id"), col("dptr").as("ptr"), col("dist"), col("done"))
-    Resolved(decoded, stateRdd, tables.toSeq, n, arity, dict, dictRdd)
+    val decoded = dict.decode(dict.decode(state, "id"), "ptr")
+    Resolved(decoded, stateRdd, tables.toSeq, n, arity, dict)
   }
 
   /** Resolve each node's root and depth in a parent-pointer forest.
@@ -329,7 +300,7 @@ object ChainOps {
       .select(col("id").as(idCol), col("ptr").as("root"), col("dist").as("height")))
     Option(lastResolve.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     resolved.resultRdd.unpersist(blocking = false)
-    resolved.dictRdd.unpersist(blocking = false)
+    resolved.dict.unpersist()
     out
   }
 
@@ -356,15 +327,11 @@ object ChainOps {
     // no driver-held hash map, so a 1M-block forest never funnels through
     // the driver.
     val base = nodes.select(col(idCol).as("id"), col(parentCol).as("parent"))
-    val vdf = base.select("id").rdd.map(_.getString(0)).zipWithUniqueId()
-      .toDF("id", "vid").persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the id assignment ONCE before the two vdf-joins below —
-    // zipWithUniqueId recomputation is not order-stable
-    vdf.count()
-    val withIds = base.join(vdf, "id")
-      .join(vdf.select(col("id").as("parent"), col("vid").as("parent_vid")),
-        Seq("parent"), "left") // dangling parent (orphan) → null = root
-      .select($"id", $"vid", $"parent_vid")
+    val dict = VertexDictionary.build(base.select("id"))
+    // dangling parent (orphan) → null = root
+    val withIds = dict.encode(dict.encode(base.withColumn("vid", col("id")), "vid"),
+        "parent", joinType = "left")
+      .select($"id", $"vid", $"parent".as("parent_vid"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // edge parent → child carries the depth increment
     val edges = withIds.where($"parent_vid".isNotNull)
@@ -387,7 +354,7 @@ object ChainOps {
     val (outDf, outRdd) = rebase(out)
     resolved.unpersist(blocking = false)
     withIds.unpersist(blocking = false)
-    vdf.unpersist(blocking = false)
+    dict.unpersist()
     Option(lastPregel.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }

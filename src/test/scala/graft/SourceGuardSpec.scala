@@ -1,0 +1,56 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source-scan guards for the engine's single-owner decisions: how a session
+  * is configured (GraftSession) and how vertex values get dense ids
+  * (VertexDictionary). A second copy of either drifts from the first.
+  */
+class SourceGuardSpec extends SparkSpec {
+
+  /** The repository's `src` directory, found from the working directory. */
+  private lazy val srcRoot: Path =
+    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null)
+      .map(_.resolve("src"))
+      .find(p => Files.isDirectory(p.resolve("main/scala/graft")))
+      .getOrElse(fail("no src/main/scala/graft above the working directory"))
+
+  private def scalaFiles(under: Path): Seq[Path] = {
+    val s = Files.walk(under)
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    finally s.close()
+  }
+
+  /** Source text with comments removed, so prose may name the methods. */
+  private def code(p: Path): String =
+    Files.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+
+  test("exactly one session builder under src/, in GraftSession") {
+    val hits = scalaFiles(srcRoot).flatMap { p =>
+      "SparkSession\\.builder".r.findAllIn(code(p)).map(_ => srcRoot.relativize(p).toString)
+    }
+    assert(hits == Seq("main/scala/graft/GraftSession.scala"), hits)
+  }
+
+  test("no dense-id assignment outside VertexDictionary in graph/, chain/, ChainOps") {
+    val main = srcRoot.resolve("main/scala/graft")
+    val files = scalaFiles(main.resolve("graph")) ++ scalaFiles(main.resolve("chain")) :+
+      main.resolve("operators/ChainOps.scala")
+    // RDD id assignment: zipWithUniqueId anywhere, or an RDD's zipWithIndex
+    // (a `.rdd` chain reaching it within one statement); a Scala
+    // collection's zipWithIndex is not an id assignment
+    val assign = "zipWithUniqueId|\\.rdd\\b(?:(?!\\b(?:val|var|def)\\b)[^;{}])*\\.zipWithIndex".r
+    val offenders = files.filter(p => assign.findFirstIn(code(p)).isDefined)
+      .map(p => main.relativize(p).toString)
+    assert(offenders.isEmpty, offenders)
+    assert(assign.findFirstIn(code(main.resolve("operators/VertexDictionary.scala"))).isDefined)
+  }
+
+  test("a GraftSession session has the engine's SQL functions") {
+    assert(spark.sql("SELECT block_subsidy(0)").head().getLong(0) == 5000000000L)
+  }
+}

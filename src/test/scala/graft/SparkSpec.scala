@@ -19,26 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Graceful-stop tests wait on QueryIdleEvent, which is throttled to
-      // every 10s by default — 1s keeps boundary-stop latency out of the
-      // suite wall time without changing semantics.
-      .config("spark.sql.streaming.noDataProgressEventInterval", "1s")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's union partitioning propagation plans SMJ over a 2N-partition
-      // union as exchange-free against an N-partition side -> runtime zip
-      // failure (observed on the fused addressStats). Disable everywhere.
-      .config("spark.sql.unionOutputPartitioning", "false")
-      // Bucket-aligned gold joins cluster on a SUBSET of the join keys
-      // (tx_hash buckets, (tx_hash, address) joins); allow that co-partition.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
+    // Graceful-stop tests wait on QueryIdleEvent, which is throttled to
+    // every 10s by default — 1s keeps boundary-stop latency out of the
+    // suite wall time without changing semantics.
+    s.conf.set("spark.sql.streaming.noDataProgressEventInterval", "1s")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
