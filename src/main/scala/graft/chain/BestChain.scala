@@ -12,12 +12,13 @@ import graft.operators.ChainOps
   * never mutated: the best chain is a VIEW over immutable bronze, so a reorg
   * is just this computation returning a different answer (SURVEY.md §2.9 T4).
   *
-  * Scale: heights come from pointer doubling (O(log depth) self-joins,
-  * ChainOps); chain membership from ancestor doubling — the frontier set S_k
-  * holds the 2^k nearest ancestors of the tip and one join per round against
-  * the 2^k-jump table doubles it, so a 1M-block chain resolves in ~20 rounds
-  * of ≤1M-row hash joins. Each round is localCheckpoint'ed: the logical plan
-  * stays flat instead of doubling per iteration.
+  * Scale: a forest inside the broadcast envelope resolves in one in-memory
+  * walk. Above it, heights come from pointer doubling (ChainOps.resolve,
+  * arity 4: ceil(log_4 depth) rounds, ~10 for a 1M-block chain) and chain
+  * membership from ancestor doubling over the jump tables that pass keeps
+  * — the frontier S holds the tip's nearest ancestors and grows 4× per
+  * table. Every round is rebased (ChainOps.rebase): the logical plan stays
+  * flat instead of growing per iteration.
   */
 object BestChain {
 
@@ -42,7 +43,7 @@ object BestChain {
     * root positions and must be filtered by the caller against its id set.
     */
   private def resolveInMemory(pairs: Array[org.apache.spark.sql.Row],
-      connectedOnly: Boolean = false)
+      genesisRootedTips: Boolean = false)
       : (scala.collection.mutable.HashMap[String, Int],
          scala.collection.mutable.HashSet[String]) = {
     // node → parent for every non-null pointer, INCLUDING dangling ones
@@ -50,13 +51,13 @@ object BestChain {
     // parent, so a dangling pointer counts its one unresolvable hop —
     // exactly ChainOps' saturate-at-root semantics (a null-parent root sits
     // at height 0, a dangling-parent block at 1), which the bk6 oracle pins.
-    // connectedOnly restricts the TIP COMPETITION to genesis-rooted blocks
+    // genesisRootedTips restricts the TIP COMPETITION to genesis-rooted blocks
     // (walks ending at a null-parent block, not a phantom) — heights keep
     // the total semantics, the chain just never seats an orphan fragment.
     val parentOf: Map[String, String] = pairs.flatMap(r =>
       Option(r.getString(1)).map(r.getString(0) -> _)).toMap
     val ids: Set[String] =
-      if (connectedOnly) pairs.iterator.map(_.getString(0)).toSet else Set.empty
+      if (genesisRootedTips) pairs.iterator.map(_.getString(0)).toSet else Set.empty
     val memo = scala.collection.mutable.HashMap.empty[String, Int]
     val grounded = scala.collection.mutable.HashSet.empty[String]
     pairs.foreach { r =>
@@ -75,13 +76,13 @@ object BestChain {
         stack ::= cur
         cur = parentOf(cur)
       }
-      val curGrounded = connectedOnly &&
+      val curGrounded = genesisRootedTips &&
         (grounded.contains(cur) || (!memo.contains(cur) && ids.contains(cur)))
       var hh = memo.getOrElseUpdate(cur, 0)
       if (curGrounded) { grounded += cur; grounded ++= stack }
       stack.foreach { n => hh += 1; memo(n) = hh }
     }
-    val candidates = if (connectedOnly) memo.view.filterKeys(grounded) else memo.view
+    val candidates = if (genesisRootedTips) memo.view.filterKeys(grounded) else memo.view
     if (candidates.isEmpty)
       return (memo, scala.collection.mutable.HashSet.empty[String])
     val (tip, tipH) = candidates.minBy { case (k, v) => (-v, k) }
@@ -114,58 +115,18 @@ object BestChain {
     blocks.join(ann, "hash")
   }
 
-  /** (hash, height) of the BEST CHAIN only — the streaming maintainer's
-    * form of [[annotate]]: it never needs heights of stale branches, so on
-    * the envelope route the whole answer is derived in the one driver pass
-    * and returned as a LOCAL relation — no join back against the block set,
-    * no shuffle, no distributed materialization. On a fragment-attaching
-    * catch-up drain this is the difference between a ~1 s resolution and a
-    * chain × chain join per micro-batch. Above the envelope it is the
-    * filtered distributed annotation, unchanged.
-    */
-  def bestChain(blocks: DataFrame): DataFrame = {
-    import ChainOps.traced
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val envelope = math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 1).toLong).toInt
-    val probe = traced("bestChain: envelope probe")(blocks
-      .select("hash", "parent_hash")
-      .limit(envelope + 1).collect())
-    if (probe.length <= envelope) {
-      if (probe.isEmpty)
-        return Seq.empty[(String, Int)].toDF("hash", "height")
-      val (memo, onChain) = traced("bestChain: in-memory walk")(
-        resolveInMemory(probe))
-      val ids = probe.iterator.map(_.getString(0)).toSet
-      // phantom parents saturate the walk but are not blocks — filter them
-      val rows = memo.iterator.collect {
-        case (k, v) if onChain.contains(k) && ids.contains(k) => (k, v)
-      }.toSeq
-      rows.toDF("hash", "height")
-    } else
-      annotateDistributed(blocks)
-        .where(col("is_on_best_chain"))
-        .select(col("hash"), col("height").cast("int").as("height"))
-  }
-
-  /** [[bestChain]] restricted to GENESIS-ROOTED blocks — the incremental
-    * maintainer's semantics (the reference's reorder buffer,
+  /** (hash, height) of the best chain over GENESIS-ROOTED blocks only — the
+    * incremental maintainer's semantics (the reference's reorder buffer,
     * BlockchainToGraph.java:34–35): an orphan-rooted fragment, however
     * long, is not a tip candidate until it connects, so a catch-up drain's
     * shuffled arrivals never seat a fragment as the chain only to rebase it
     * away next batch. EMPTY when no null-parent root has arrived yet. The
     * batch annotator's total orphan semantics (the bk1/bk6 oracles) are
-    * untouched — this variant exists for the maintainer's full routes only.
-    * Above the envelope: one rootsAndDepths pass classifies components,
-    * then the standard annotator runs on the genesis-rooted subset.
-    */
-  def bestChainConnected(blocks: DataFrame): DataFrame =
-    bestChainConnectedWithFrontier(blocks,
-      math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 1).toLong).toInt)._1
-
-  /** [[bestChainConnected]] with a CALLER-CHOSEN driver-walk envelope, and —
-    * when the walk route ran — the off-chain index the same probe already
-    * proves: (dangling parent hashes, pending block → parent). The
+    * untouched. Walked in memory under a CALLER-CHOSEN driver envelope, and
+    * — when the walk route ran — returned with the off-chain index the same
+    * probe already proves: (dangling parent hashes, pending block → parent).
+    * Above the envelope: one rootsAndDepths pass classifies components, then
+    * the standard annotator runs on the genesis-rooted subset. The
     * streaming maintainer's full routes pass a wider envelope than the
     * broadcast cap (the probe is read once per full resolution, reduced
     * immediately to the chain plus a capped frontier, and never broadcast),
@@ -191,7 +152,7 @@ object BestChain {
         return (Seq.empty[(String, Int)].toDF("hash", "height"),
           Some((Set.empty, Map.empty)))
       val (memo, onChain) = traced("bestChainConnected: in-memory walk")(
-        resolveInMemory(probe, connectedOnly = true))
+        resolveInMemory(probe, genesisRootedTips = true))
       val ids = probe.iterator.map(_.getString(0)).toSet
       val rows = memo.iterator.collect {
         case (k, v) if onChain.contains(k) && ids.contains(k) => (k, v)
@@ -281,11 +242,7 @@ object BestChain {
     */
   def annotateDistributed(blocks: DataFrame): DataFrame = {
     import ChainOps.traced
-    // Read the sys-prop-backed envelope ONCE: a second read could disagree
-    // under a concurrent property change and misroute between the in-memory
-    // walk and the doubling loop. Clamped before .toInt — an envelope above
-    // Int.MaxValue-1 would overflow the limit into a negative value.
-    val envelope = math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 1).toLong).toInt
+    val envelope = ChainOps.driverEnvelope
     // The probe stays a limit+collect DELIBERATELY: CollectLimit executes
     // partitions incrementally (1, 4, 16, …) and stops at envelope+1 rows,
     // which above the envelope doubles as a GENTLE warm-up of the upstream
@@ -354,7 +311,7 @@ object BestChain {
       .collect().map(_.getLong(0)).toSeq
     var s = seedVids.distinct.toDF("vid")
     // The jump tables were built at whatever arity the height pass routed
-    // to (Arity broadcast-side, 2 above the envelope — tables(r) jumps
+    // to (Arity broadcast-side, 4 above the envelope — tables(r) jumps
     // arity^r), so the span bookkeeping must follow the SAME arity.
     val arity = resolved.arity
     var span = 1L // = arity^r, the jump distance of the table being consumed

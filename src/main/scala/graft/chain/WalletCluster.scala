@@ -90,7 +90,7 @@ object WalletCluster {
     // same pass), and both routes re-read the edges (collect / vid joins +
     // GraphX's internal scans).
     val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
-    val envelope = math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 1).toLong)
+    val envelope = ChainOps.driverEnvelope
 
     if (nEdges <= envelope) {
       val labels = UnionFind.components(
@@ -290,8 +290,8 @@ object WalletCluster {
     // the probe cap routes distributed and pays its exact count there (the
     // mass/contraction decision needs it; at that scale a parquet-backed
     // count is metadata-cheap).
-    val driverCap = math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 2).toLong)
-    val probeCap = math.min(contractionMinStore, driverCap + 1).toInt
+    val driverCap = ChainOps.driverEnvelope
+    val probeCap = math.min(contractionMinStore, driverCap + 1L).toInt
     val storedProbe =
       if (probeCap > 0) old.limit(probeCap).collect() else Array.empty[org.apache.spark.sql.Row]
     // Replace route iff the probe returned the WHOLE store strictly under

@@ -9,10 +9,11 @@ import org.apache.spark.storage.StorageLevel
   * and its 1,126-block reorder buffer (BlockchainToGraph.java:389–412).
   *
   * A per-hop traversal is O(depth) storage round-trips in the reference; here
-  * `rootsAndDepths` uses pointer jumping — each round chains [[ChainOps.Arity]]−1
-  * self equi-joins before materializing, so every node's resolved prefix
-  * grows Arity× per round and a chain of depth d converges in
-  * ceil(log_Arity d) rounds (5 for a ~1M-block chain at 100 TB). Each round
+  * `rootsAndDepths` uses pointer jumping — each round chains arity−1 self
+  * equi-joins before materializing (arity = [[ChainOps.Arity]] when the
+  * table broadcasts, 4 above the envelope), so every node's resolved prefix
+  * grows arity× per round and a chain of depth d converges in
+  * ceil(log_arity d) rounds (10 for a ~1M-block chain at 100 TB). Each round
   * costs exactly ONE Spark job: the convergence check rides on the
   * materialization pass instead of being a second action, and the in-round
   * hops are broadcast joins when the table fits. Intermediate state is
@@ -122,9 +123,17 @@ object ChainOps {
   def BroadcastMaxRows: Long =
     sys.props.get("graft.broadcastMaxRows").map(_.toLong).getOrElse(1L << 20)
 
+  /** [[BroadcastMaxRows]] as a driver-collect row budget: clamped so the
+    * `limit(envelope + 1)` probes of the envelope routes still fit an Int.
+    * Callers read it ONCE per call — a second read could disagree under a
+    * concurrent property change and misroute between a probe and its
+    * route decision.
+    */
+  def driverEnvelope: Int = math.min(BroadcastMaxRows, (Int.MaxValue - 1).toLong).toInt
+
   /** One saturating pointer hop: advance every unresolved row of `cur` by
     * `state`'s current jump distance. `tag` keeps the hop columns unique so
-    * two hops can chain inside a single plan (the 4-ary round).
+    * the Arity−1 hops of a round can chain inside a single plan.
     */
   private def hopOnce(
       cur: DataFrame, state: DataFrame, tag: String, bcast: Boolean): DataFrame = {
@@ -154,22 +163,6 @@ object ChainOps {
         (cur("done") || col(s"hid$tag").isNull || col(s"hdone$tag")).as("done"))
   }
 
-  /** The pointer-jumping loop shared by [[rootsAndDepths]] and
-    * [[graft.chain.BestChain.annotateDistributed]]. State rows are
-    * (id, ptr, dist, done): ptr = the min(Arity^round, depth)-ancestor
-    * (roots self-loop at dist 0, making the join total), done = ptr reached
-    * a root. Each round chains Arity−1 hops against the round's own table
-    * (jump distance j advances to Arity·j) and materializes ONCE, with the
-    * remaining-unresolved count fused into that pass. The hops broadcast the
-    * table when it fits, so a round under the threshold is one narrow stage;
-    * chaining inside a round is safe because each hop joins against the FLAT
-    * materialized table — only the cur-side plan deepens, linearly.
-    *
-    * @param keepTables retain every round's persisted jump table for ancestor
-    *                   enumeration (memory: rounds × |nodes| rows, i.e.
-    *                   ~log_Arity(depth) copies of the id/ptr pairs — bounded
-    *                   and spill-safe at MEMORY_AND_DISK; callers unpersist).
-    */
   /** Perf tracing for the doubling loops (SPARK_GRAFT_TRACE=1). */
   private[graft] def traced[A](name: String)(f: => A): A =
     if (!sys.env.get("SPARK_GRAFT_TRACE").contains("1")) f
@@ -179,11 +172,29 @@ object ChainOps {
       r
     }
 
+  /** The pointer-jumping loop shared by [[rootsAndDepths]] and
+    * [[graft.chain.BestChain.annotateDistributed]]. State rows are
+    * (id, ptr, dist, done): ptr = the min(arity^round, depth)-ancestor
+    * (roots self-loop at dist 0, making the join total), done = ptr reached
+    * a root. The arity is [[Arity]] when the table broadcasts and 4 above
+    * the envelope. Each round chains arity−1 hops against the round's own
+    * table (jump distance j advances to arity·j) and materializes ONCE,
+    * with the remaining-unresolved count fused into that pass. The hops
+    * broadcast the table when it fits, so a round under the threshold is
+    * one narrow stage; chaining inside a round is safe because each hop
+    * joins against the FLAT materialized table — only the cur-side plan
+    * deepens, linearly.
+    *
+    * @param keepTables retain every round's persisted jump table for ancestor
+    *                   enumeration (memory: rounds × |nodes| rows, i.e.
+    *                   ~log_Arity(depth) copies of the id/ptr pairs — bounded
+    *                   and spill-safe at MEMORY_AND_DISK; callers unpersist).
+    */
   private[graft] def resolve(
       nodes: DataFrame, idCol: String, parentCol: String,
       keepTables: Boolean): Resolved = {
-    // Dictionary-encode the ids to dense longs BEFORE the loop (the
-    // join-based vertex-id pattern of depthsPregel — no driver-held map).
+    // Dictionary-encode the ids to dense longs BEFORE the loop (a join
+    // against the VertexDictionary — no driver-held map).
     // The jump state is (id, ptr, dist, done) per node per retained round:
     // over 64-char block hashes that is ~140 serialized bytes/row — at a
     // 1.5M-block chain the retained jump tables alone are ~4.7 GB and every
@@ -287,7 +298,9 @@ object ChainOps {
   /** Resolve each node's root and depth in a parent-pointer forest.
     *
     * @param nodes  rows with (idCol, parentCol); parentCol NULL marks a root.
-    *               ids must be unique; parents must reference existing ids.
+    *               ids must be unique. A parent that is not itself an id
+    *               (dangling) is a pseudo-root one hop up: the node gets
+    *               height 1 and that parent value as its root.
     * @return DataFrame(idCol, root, height) — height 0 at roots, root = the
     *         id of the chain's origin (≙ genesis block).
     */
@@ -310,66 +323,12 @@ object ChainOps {
   def depths(nodes: DataFrame, idCol: String, parentCol: String): DataFrame =
     rootsAndDepths(nodes, idCol, parentCol).drop("root")
 
-  /** Pregel alternative to [[rootsAndDepths]] — the general graph-traversal
-    * form of the reference's `repeat(out("chain")).until(...)` for when the
-    * structure is not a simple forest (SURVEY.md §2.3 J3). Messages flow
-    * root→leaf: each vertex adopts parent depth + 1; converges in
-    * O(depth) supersteps of partition-local message passing (vs O(log d)
-    * shuffles for doubling — Pregel supersteps are cheaper per round,
-    * doubling needs fewer rounds; both ship).
-    */
-  def depthsPregel(nodes: DataFrame, idCol: String, parentCol: String): DataFrame = {
-    import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel}
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    // Dense unique vertex ids assigned distributively; the parent→vid lookup
-    // is a JOIN against the same table (pattern of WalletCluster.clusters) —
-    // no driver-held hash map, so a 1M-block forest never funnels through
-    // the driver.
-    val base = nodes.select(col(idCol).as("id"), col(parentCol).as("parent"))
-    val dict = VertexDictionary.build(base.select("id"))
-    // dangling parent (orphan) → null = root
-    val withIds = dict.encode(dict.encode(base.withColumn("vid", col("id")), "vid"),
-        "parent", joinType = "left")
-      .select($"id", $"vid", $"parent".as("parent_vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // edge parent → child carries the depth increment
-    val edges = withIds.where($"parent_vid".isNotNull)
-      .select($"parent_vid", $"vid")
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val roots = withIds
-      .select($"vid", $"id", $"parent_vid".isNull.as("is_root"))
-      .rdd.map(r => (r.getLong(0), (r.getString(1), if (r.getBoolean(2)) 0L else Long.MinValue)))
-    val graph = Graph(roots, edges)
-    val resolved = Pregel(graph, Long.MinValue, activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => (attr._1, math.max(attr._2, msg)),
-      sendMsg = t =>
-        if (t.srcAttr._2 >= 0 && t.dstAttr._2 < t.srcAttr._2 + 1)
-          Iterator((t.dstId, t.srcAttr._2 + 1))
-        else Iterator.empty,
-      mergeMsg = math.max)
-    val out = resolved.vertices.map { case (_, (id, d)) => (id, d) }.toDF(idCol, "height")
-    // Materialize, then drop Pregel's cached result graph and the id-assign
-    // scaffolding — repeated calls must not accumulate persisted state.
-    val (outDf, outRdd) = rebase(out)
-    resolved.unpersist(blocking = false)
-    withIds.unpersist(blocking = false)
-    dict.unpersist()
-    Option(lastPregel.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
-    outDf
-  }
-
-  /** Previous depthsPregel materialization (swap-unpersist per call). */
-  private val lastPregel =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
   /** Previous rootsAndDepths materialization (swap-unpersist per call). */
   private val lastResolve =
     new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
 
   /** Drop the retained depth materializations ([[graft.Graft.releaseCaches]]). */
   private[graft] def release(): Unit = {
-    Option(lastPregel.getAndSet(null)).foreach(_.unpersist(blocking = false))
     Option(lastResolve.getAndSet(null)).foreach(_.unpersist(blocking = false))
   }
 

@@ -429,7 +429,7 @@ object Dedup {
     // union-find resolves the components in one pass instead of GraphX's
     // ~6 jobs of fixed Pregel latency; the distributed path remains for
     // genuinely large pair sets.
-    val envelope = math.min(ChainOps.BroadcastMaxRows, (Int.MaxValue - 1).toLong)
+    val envelope = ChainOps.driverEnvelope
     if (nPairs <= envelope) {
       val labels = UnionFind.components(
         p.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))

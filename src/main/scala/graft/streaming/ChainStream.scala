@@ -64,20 +64,8 @@ object ChainStream {
       goldDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    newBlocks.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        batch.write.mode("append").parquet(bronzeDir)
-        // Idempotent: recompute is a pure function of bronze, so replaying a
-        // batch after a crash converges to the same gold state.
-        val bronze = spark.read.parquet(bronzeDir)
-          .dropDuplicates("hash") // replayed appends collapse here
-        recompute(spark, bronze).write.mode("overwrite").parquet(goldDir)
-        ()
-      }
+    appendThenRecompute(newBlocks, bronzeDir, recompute, checkpointDir, trigger)(
+      _.write.mode("overwrite").parquet(goldDir))
 
   /** [[incrementalGold]] with an O(changed) sink: gold must carry a `height`
     * column, is stored height-bucket-partitioned, and each micro-batch
@@ -97,6 +85,20 @@ object ChainStream {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       bucketSize: Int = 10000): DataStreamWriter[Row] =
+    appendThenRecompute(newBlocks, bronzeDir, recompute, checkpointDir, trigger)(
+      graft.sinks.PartitionedGold.syncAffected(_, goldDir, "height", bucketSize))
+
+  /** The micro-batch body both gold writers share: append the batch to
+    * bronze, re-read bronze, collapse replayed appends, recompute gold and
+    * hand it to `sink`. Idempotent: recompute is a pure function of bronze,
+    * so replaying a batch after a crash converges to the same gold state.
+    */
+  private def appendThenRecompute(
+      newBlocks: DataFrame,
+      bronzeDir: String,
+      recompute: (SparkSession, DataFrame) => DataFrame,
+      checkpointDir: String,
+      trigger: Trigger)(sink: DataFrame => Unit): DataStreamWriter[Row] =
     newBlocks.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
@@ -106,9 +108,7 @@ object ChainStream {
         batch.write.mode("append").parquet(bronzeDir)
         val bronze = spark.read.parquet(bronzeDir)
           .dropDuplicates("hash") // replayed appends collapse here
-        graft.sinks.PartitionedGold.syncAffected(
-          recompute(spark, bronze), goldDir, "height", bucketSize)
-        ()
+        sink(recompute(spark, bronze))
       }
 
   private def fsExists(spark: SparkSession, path: String): Boolean =
@@ -134,7 +134,7 @@ object ChainStream {
     */
   @volatile private[graft] var lastFullReason: String = ""
 
-  /** HOW the last full resolution resolved (maintainer routes only):
+  /** HOW the last full resolution resolved:
     * "walk" = the driver-envelope cascade ([[BootstrapWalkCap]]),
     * "distributed" = the doubling resolution (chain above the cap). The
     * catch-up rehearsal's vacuousness guard pins "walk" at every corpus
@@ -196,11 +196,12 @@ object ChainStream {
   /** (hash, height) of the current best chain, computed O(batch) from the
     * prior cursor whenever the batch EXTENDS or shallowly REORGS the known
     * chain — the common steady-state shapes — and falling back to a full
-    * [[graft.chain.BestChain.annotate]] over bronze otherwise. This is the
-    * maintainer's incremental/bulk split applied to its one per-batch term
-    * that otherwise grows with chain length: a tip-following deployment pays
-    * O(batch) joins against the KB–MB cursor instead of the O(chain log
-    * chain) doubling resolution every batch.
+    * resolution of bronze's connected best chain
+    * ([[graft.chain.BestChain.bestChainConnectedWithFrontier]]) otherwise.
+    * This is the maintainer's incremental/bulk split applied to its one
+    * per-batch term that otherwise grows with chain length: a tip-following
+    * deployment pays O(batch) joins against the KB–MB cursor instead of a
+    * full resolution every batch.
     *
     * WITHOUT a [[Frontier]], the O(batch) path applies only when every batch
     * block not already on the known chain resolves its height THROUGH the
@@ -237,60 +238,53 @@ object ChainStream {
     * @return the new best chain plus, on the "extend" route, the EXACT
     *         delta the walk derived — callers then never re-derive
     *         arrived/invalidated with chain-sized set-diff joins — and the
-    *         updated frontier where the route could maintain it (the full
-    *         routes return None = recompute from bronze). On the extend
-    *         route the caller must still fold the reorged-out cursor rows
-    *         into `pending` (they are cursor-derived, see walletLabelsBatch)
+    *         updated frontier where the route could maintain it (a full
+    *         route above the walk cap returns None = recompute from
+    *         bronze). On the extend route the caller must still fold the
+    *         reorged-out cursor rows into `pending` (they are
+    *         cursor-derived, see walletLabelsBatch)
     */
   private[graft] def bestChainIncremental(
       spark: SparkSession, bronze: DataFrame, batch: DataFrame,
       prevCursor: Option[DataFrame],
       prevTipHint: Option[(String, Int)] = None,
       probeCursor: Option[DataFrame] = None,
-      frontier: Option[Frontier] = None,
-      connectedOnly: Boolean = false): BestChainUpdate = {
+      frontier: Option[Frontier] = None): BestChainUpdate = {
     def full(route: String, reason: String = ""): BestChainUpdate = {
       lastBestChainRoute = route
       lastFullReason = if (reason.nonEmpty) reason else route
-      // bestChain skips the full annotation's join back against bronze: on
-      // the envelope route the chain arrives as a driver-local relation.
-      // Checkpointed ONCE either way: the maintainer's ~10 downstream
-      // consumers would otherwise each re-ship it (measured 2.6× on the
-      // corpus drain — and above the envelope, re-run the doubling rounds).
-      // The extend/unchanged routes never pay this — their plans are a
-      // cursor scan + a local path.
-      if (connectedOnly) {
-        // The maintainer's full routes walk a WIDER driver envelope than
-        // the broadcast cap ([[BootstrapWalkCap]] vs BroadcastMaxRows): the
-        // header probe is read once per full resolution (bootstrap /
-        // designed fallback, not per steady-state batch), reduced on the
-        // spot to the chain + a capped frontier, and never broadcast — so
-        // the driver budget is a transient read buffer, not a retained
-        // relation. This is what turns the once-per-deployment catch-up
-        // bootstrap (r16: 155.5 s of distributed doubling at a 1.5M-block
-        // corpus) into the same driver cascade the fragment-drain attach
-        // path runs in seconds — and the walk's probe already proves the
-        // post-batch off-chain index, so the full route hands the Frontier
-        // back instead of making the caller re-derive it with two bronze
-        // anti-joins. Chains above the cap take the distributed resolution
-        // and return no frontier (the caller re-derives, cap-guarded) —
-        // the always-correct from-scratch path stays reachable.
-        val (resolved, walked) = graft.chain.BestChain
-          .bestChainConnectedWithFrontier(bronze, BootstrapWalkCap)
-        lastFullKind = if (walked.isDefined) "walk" else "distributed"
-        BestChainUpdate(resolved
-          .select(col("hash"), col("height").cast("int").as("height"))
-          .localCheckpoint(true),
-          route, None,
-          walked.map { case (d, p) => Frontier(d, p) })
-      } else {
-        lastFullKind = ""
-        val resolved = graft.chain.BestChain.bestChain(bronze)
-        BestChainUpdate(resolved
-          .select(col("hash"), col("height").cast("int").as("height"))
-          .localCheckpoint(true),
-          route, None)
-      }
+      // The full routes resolve the CONNECTED best chain — the reference's
+      // reorder-buffer semantics end to end: they never seat an orphan
+      // fragment as the chain (which the next batch's arrival of its
+      // missing root parent would only rebase away again: the measured
+      // perpetual-fallback failure mode of the shuffled catch-up drain).
+      // They walk a WIDER driver envelope than the broadcast cap
+      // ([[BootstrapWalkCap]] vs BroadcastMaxRows): the header probe is read
+      // once per full resolution (bootstrap / designed fallback, not per
+      // steady-state batch), reduced on the spot to the chain + a capped
+      // frontier, and never broadcast — so the driver budget is a transient
+      // read buffer, not a retained relation. This is what turns the
+      // once-per-deployment catch-up bootstrap (r16: 155.5 s of distributed
+      // doubling at a 1.5M-block corpus) into the same driver cascade the
+      // fragment-drain attach path runs in seconds — and the walk's probe
+      // already proves the post-batch off-chain index, so the full route
+      // hands the Frontier back instead of making the caller re-derive it
+      // with two bronze anti-joins. Chains above the cap take the
+      // distributed resolution and return no frontier (the caller
+      // re-derives, cap-guarded) — the always-correct from-scratch path
+      // stays reachable. Checkpointed ONCE either way: the maintainer's ~10
+      // downstream consumers would otherwise each re-ship it (measured 2.6×
+      // on the corpus drain — and above the envelope, re-run the doubling
+      // rounds). The extend/unchanged routes never pay this — their plans
+      // are a cursor scan + a local path.
+      val (resolved, walked) = graft.chain.BestChain
+        .bestChainConnectedWithFrontier(bronze, BootstrapWalkCap)
+      lastFullKind = if (walked.isDefined) "walk" else "distributed"
+      BestChainUpdate(resolved
+        .select(col("hash"), col("height").cast("int").as("height"))
+        .localCheckpoint(true),
+        route, None,
+        walked.map { case (d, p) => Frontier(d, p) })
     }
     lastFullReason = ""
     if (prevCursor.isEmpty) return full("bootstrap")
@@ -747,14 +741,9 @@ object ChainStream {
           rows.iterator.filter(_.getString(0) == "p")
             .map(r => r.getString(1) -> r.getString(2)).toMap)
       }
-    // connectedOnly: the maintainer's chain is the reference's reorder-
-    // buffer semantics end to end — the full routes never seat an orphan
-    // fragment as the chain (which the next batch's arrival of its missing
-    // root parent would only rebase away again: the measured perpetual-
-    // fallback failure mode of the shuffled catch-up drain).
     val upd = traced("wallet: best chain")(
       bestChainIncremental(spark, bronze, batch, prevCursorH, prevTipHint,
-        probeCursor, frontier, connectedOnly = true))
+        probeCursor, frontier))
     val route = upd.route
     // Slot assignment is a pure function of (address, slots), so the store
     // is only readable-for-overwrite under the SAME slots value it was

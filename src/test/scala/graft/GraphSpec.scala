@@ -69,29 +69,30 @@ class GraphSpec extends SparkSpec {
     assert(got.values.sum == 3L * 3L, "each triangle must count once per member")
   }
 
-  test("triangleCounts / kCore: above-envelope route (no dictionary) agrees with encoded route") {
+  test("triangleCounts / kCore: shuffle-joined dictionary encode agrees with broadcast encode") {
     import spark.implicits._
-    // Both routes must produce identical results: the encoded route (vertex
-    // set fits ChainOps.BroadcastMaxRows — every local fixture) and the
-    // at-scale string route (dictionary skipped). Forcing the envelope to 1
-    // exercises the latter on the hub fixture.
+    // Both envelope choices must produce identical results: the broadcast
+    // dictionary, degree and low-set joins (vertex set fits
+    // ChainOps.BroadcastMaxRows — every local fixture) and their at-scale
+    // shuffle-join forms. Forcing the envelope to 1 exercises the latter on
+    // the hub fixture.
     val edges = Seq(
       ("H", "a"), ("a", "H"), ("H", "b"), ("H", "c"), ("H", "d"), ("H", "e"),
       ("H", "H"), ("a", "b"), ("c", "d"),
       ("x", "y"), ("y", "z"), ("z", "x")
     ).toDF("src", "dst").withColumn("value", lit(0L))
-    val triEnc = GraphAnalytics.triangleCounts(edges).collect()
+    val triBcast = GraphAnalytics.triangleCounts(edges).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toSet
-    val coreEnc = GraphAnalytics.kCore(edges, k = 2).collect()
+    val coreBcast = GraphAnalytics.kCore(edges, k = 2).collect()
       .map(_.getString(0)).toSet
     sys.props("graft.broadcastMaxRows") = "1"
     try {
-      val triStr = GraphAnalytics.triangleCounts(edges).collect()
+      val triShuffle = GraphAnalytics.triangleCounts(edges).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toSet
-      val coreStr = GraphAnalytics.kCore(edges, k = 2).collect()
+      val coreShuffle = GraphAnalytics.kCore(edges, k = 2).collect()
         .map(_.getString(0)).toSet
-      assert(triStr == triEnc)
-      assert(coreStr == coreEnc)
+      assert(triShuffle == triBcast)
+      assert(coreShuffle == coreBcast)
     } finally sys.props.remove("graft.broadcastMaxRows")
   }
 
@@ -189,8 +190,9 @@ class GraphSpec extends SparkSpec {
   test("labelPropagation: above-envelope route (shuffled label joins) agrees with broadcast route") {
     import spark.implicits._
     // Both per-round join routes must produce identical labels: the
-    // broadcast route (labels fit ChainOps.BroadcastMaxRows — every local
-    // fixture) and the at-scale route (adjacency pinned in hash(b) layout,
+    // broadcast route (dictionary encode and labels broadcast — every local
+    // fixture fits ChainOps.BroadcastMaxRows) and the at-scale route
+    // (shuffle-joined encode, adjacency pinned in hash(b) layout,
     // vertex-sized label shuffles per round). Forcing the envelope to 1
     // exercises the latter on the clique fixture.
     def k4(p: String) = for {

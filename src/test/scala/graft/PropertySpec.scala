@@ -78,18 +78,6 @@ class PropertySpec extends SparkSpec {
       })
   }
 
-  test("Pregel depths equal doubling depths on random forests") {
-    import spark.implicits._
-    forAllSeeded(forestGen, 5) { nodes =>
-      val df = nodes.toDF("id", "parent")
-      val doubling = ChainOps.rootsAndDepths(df, "id", "parent")
-        .select("id", "height").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val pregel = ChainOps.depthsPregel(df, "id", "parent")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(pregel == doubling)
-    }
-  }
-
   test("replay idempotence: duplicated bronze rows do not change the best chain") {
     import spark.implicits._
     forAllSeeded(forestGen, 5) { nodes =>

@@ -278,21 +278,50 @@ class StreamingSpec extends SparkSpec {
       blocks += ((h, if (d == 1) forkBase else s"f${d - 1}", 3000L + d))
     }
 
+    // The maintainer's chain: the best chain of the CONNECTED subgraph
+    // (blocks whose ancestry reaches a null-parent root), recomputed from
+    // scratch by the batch annotator over exactly that subgraph — empty
+    // until a genesis arrives.
+    def connectedChain(bronzeRows: Map[String, Option[String]]): Map[String, Int] = {
+      val reachable = {
+        val children = bronzeRows.toSeq.collect {
+          case (h, Some(p)) => p -> h
+        }.groupMap(_._1)(_._2)
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        val queue = scala.collection.mutable.Queue(
+          bronzeRows.collect { case (h, None) => h }.toSeq: _*)
+        while (queue.nonEmpty) {
+          val h = queue.dequeue()
+          if (seen.add(h)) children.getOrElse(h, Nil).foreach(queue.enqueue)
+        }
+        seen.toSet
+      }
+      if (reachable.isEmpty) Map.empty[String, Int]
+      else BestChain.annotate(
+          bronzeRows.filter(kv => reachable(kv._1)).toSeq
+            .map { case (h, p) => (h, p.orNull) }.toDF("hash", "parent_hash"))
+        .where(col("is_on_best_chain"))
+        .select(col("hash"), col("height").cast("int").as("height"))
+        .collect().map(r => (r.getString(0), r.getInt(1))).toMap
+    }
+
+    // FRONTIER-FREE feeds (the maintainer after a stamp loss or an index
+    // overflow): unanchored batches and attachments route to the full
+    // resolution, and every batch must still yield the connected chain.
     def runFeed(feed: Seq[Seq[(String, String, Long)]], label: String): Unit = {
-      var bronzeAcc: org.apache.spark.sql.DataFrame = null
+      var bronzeRows = Map.empty[String, Option[String]] // hash -> parent
       var cursor: Option[org.apache.spark.sql.DataFrame] = None
       feed.foreach { batchRows =>
         val batchDf = batchRows.toDF("hash", "parent_hash", "ts")
-        bronzeAcc = if (bronzeAcc == null) batchDf else bronzeAcc.unionByName(batchDf)
-        val bronze = bronzeAcc.dropDuplicates("hash")
+        bronzeRows = bronzeRows ++ batchRows.map(r => r._1 -> Option(r._2))
+        val bronze = bronzeRows.toSeq.map { case (h, p) => (h, p.orNull) }
+          .toDF("hash", "parent_hash")
         val got = ChainStream.bestChainIncremental(spark, bronze, batchDf, cursor)
           .best
           .select(col("hash"), col("height").cast("int").as("height"))
           .localCheckpoint(true)
-        val expect = BestChain.annotate(bronze).where(col("is_on_best_chain"))
-          .select(col("hash"), col("height").cast("int").as("height"))
         val g = got.collect().map(r => (r.getString(0), r.getInt(1))).toSet
-        val e = expect.collect().map(r => (r.getString(0), r.getInt(1))).toSet
+        val e = connectedChain(bronzeRows).toSet
         assert(g == e,
           s"$label diverged (route=${ChainStream.lastBestChainRoute}): " +
             s"missing=${e -- g} extra=${g -- e}")
@@ -316,19 +345,17 @@ class StreamingSpec extends SparkSpec {
 
     // shuffled feed: dangling fragments arrive before their parents — the
     // attachment/unresolvable probes must route those batches to the full
-    // resolution and still match annotate exactly
+    // resolution and still match the connected chain exactly
     val shuffled = rnd.shuffle(blocks.toList).grouped(7).toSeq
     runFeed(shuffled, "shuffled")
 
-    // FRONTIER-threaded feeds (connectedOnly — the maintainer's mode):
-    // same batches, but unanchored blocks PEND instead of forcing a full
-    // resolution, attachments resolve by the driver cascade, and the chain
-    // is the reorder-buffer one: the best chain of the CONNECTED subgraph
-    // (blocks whose ancestry reaches a null-parent genesis) — fragments
-    // are never tip candidates, empty until a genesis arrives. The
-    // frontier must equal its from-scratch derivation (pending = bronze −
-    // chain, dangling = referenced − present) after every batch; once
-    // everything has arrived, the chain equals the full annotation.
+    // FRONTIER-threaded feeds (the maintainer's steady state): same
+    // batches, but unanchored blocks PEND instead of forcing a full
+    // resolution and attachments resolve by the driver cascade. The chain
+    // is the same connected one. The frontier must equal its from-scratch
+    // derivation (pending = bronze − chain, dangling = referenced −
+    // present) after every batch; once everything has arrived, the chain
+    // equals the full annotation.
     def runFeedFrontier(feed: Seq[Seq[(String, String, Long)]], label: String): Unit = {
       var bronzeRows = Map.empty[String, Option[String]] // hash -> parent
       var cursor: Option[org.apache.spark.sql.DataFrame] = None
@@ -340,8 +367,7 @@ class StreamingSpec extends SparkSpec {
         bronzeDf = bronzeRows.toSeq.map { case (h, p) => (h, p.orNull) }
           .toDF("hash", "parent_hash")
         val upd = ChainStream.bestChainIncremental(
-          spark, bronzeDf, batchDf, cursor, frontier = Some(frontier),
-          connectedOnly = true)
+          spark, bronzeDf, batchDf, cursor, frontier = Some(frontier))
         val got = upd.best
           .select(col("hash"), col("height").cast("int").as("height"))
           .localCheckpoint(true)
@@ -374,30 +400,8 @@ class StreamingSpec extends SparkSpec {
         frontier.pending.foreach { case (h, p) =>
           assert(Option(p) == bronzeRows(h), s"$label pending parent wrong for $h")
         }
-        // 2. the chain == the best chain of the CONNECTED subgraph (blocks
-        // whose ancestry reaches a null-parent root) — recomputed from
-        // scratch by the batch annotator over exactly that subgraph
-        val reachable = {
-          val children = bronzeRows.toSeq.collect {
-            case (h, Some(p)) => p -> h
-          }.groupMap(_._1)(_._2)
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          val queue = scala.collection.mutable.Queue(
-            bronzeRows.collect { case (h, None) => h }.toSeq: _*)
-          while (queue.nonEmpty) {
-            val h = queue.dequeue()
-            if (seen.add(h)) children.getOrElse(h, Nil).foreach(queue.enqueue)
-          }
-          seen.toSet
-        }
-        val expect =
-          if (reachable.isEmpty) Map.empty[String, Int]
-          else BestChain.annotate(
-              bronzeRows.filter(kv => reachable(kv._1)).toSeq
-                .map { case (h, p) => (h, p.orNull) }.toDF("hash", "parent_hash"))
-            .where(col("is_on_best_chain"))
-            .select(col("hash"), col("height").cast("int").as("height"))
-            .collect().map(r => (r.getString(0), r.getInt(1))).toMap
+        // 2. the chain == the best chain of the connected subgraph
+        val expect = connectedChain(bronzeRows)
         assert(gotMap == expect,
           s"$label frontier-chain diverged (route=$route): " +
             s"missing=${expect.toSet -- gotMap.toSet} extra=${gotMap.toSet -- expect.toSet}")
