@@ -1,5 +1,12 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
+
+import graft.streaming.ChainStream.WalletBatch
+
 /** Shared emit for the rehearsal mains ([[ScaleRehearsal]],
   * [[DocScaleRehearsal]], [[StreamRehearsal]]): every JSON evidence line is
   * printed AND appended to a tracked artifact file, so round-over-round
@@ -28,6 +35,28 @@ object Rehearsal {
   }
 
   private val headerStamped = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  private implicit val formats: Formats = DefaultFormats
+
+  /** One evidence line: the fields in order, as a JSON object (a None
+    * field is left out).
+    */
+  def json(fields: (String, Any)*): String = Serialization.write(ListMap(fields: _*))
+
+  /** `x` rounded to `places` decimals, for seconds on an evidence line. */
+  def round(x: Double, places: Int): BigDecimal =
+    BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP)
+
+  /** A maintainer batch record under the evidence-line keys: route, blocks
+    * arrived / invalidated (-1 = not derived), repair route ("bootstrap"
+    * when the store was rebuilt, "skipped" when no repair ran), the
+    * frontier sizes a quiet batch re-stamped, and a full route's why/kind.
+    */
+  def batchWork(b: WalletBatch): ListMap[String, Any] = ListMap(
+    "route" -> b.routeName, "arrived" -> b.arrived, "invalidated" -> b.invalidated,
+    "repair" -> (if (b.storeBootstrap) "bootstrap" else b.repair.fold("skipped")(_.name)),
+    "pending" -> b.pending, "dangling" -> b.dangling,
+    "why" -> b.reason, "kind" -> b.kind)
 
   /** In-leg router-economics assertion with ONE contention retry. The legs
     * compare two wall-clock timings taken SEQUENTIALLY — a host window

@@ -189,11 +189,11 @@ object ScaleRehearsal {
       // SECOND over just-warmed inputs, so the ratio carried the cold-start
       // asymmetry, not the routes' real costs.
       graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-        .collect()
+        ._1.collect()
       graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
       val (rep, tRepair) = timed {
         graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-          .collect()
+          ._1.collect()
       }
       val (full, tFull) = timed {
         graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
@@ -217,7 +217,7 @@ object ScaleRehearsal {
           stored.persist(); stored.count() // re-warm the shared input
           val (_, c) = timed {
             graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-              .collect()
+              ._1.collect()
           }
           val (_, m) = timed {
             graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
@@ -267,19 +267,19 @@ object ScaleRehearsal {
       val keptAddrs = keptFunders.select(col("src_address").as("address")).distinct()
       // warm once, measure once (see the deep leg above for why)
       graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-        .collect()
+        ._1.collect()
       graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
-      val (rep, tRepair) = timed {
-        graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-          .collect()
+      val ((rep, route), tRepair) = timed {
+        val (rows, route) =
+          graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
+        (rows.collect(), route.name)
       }
-      val route = graft.chain.WalletCluster.lastRepairRoute
       val (full, tFull) = timed {
         graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
       }
       val (noop, tNoop) = timed {
         graft.chain.WalletCluster.repairAfterReorg(
-          stored, funders.where(lit(false)), keptFunders).collect()
+          stored, funders.where(lit(false)), keptFunders)._1.collect()
       }
       // Comparator: the route the router REJECTED, forced by moving the
       // economics floor and timed on identical inputs. chosen=replace/mass
@@ -289,11 +289,12 @@ object ScaleRehearsal {
       // under it, in which case the bare recompute full_s is the honest
       // mass proxy — the label says which was asserted).
       val altFloor = if (route == "contraction") Long.MaxValue else 0L
-      val (_, tAlt) = timed {
-        graft.chain.WalletCluster.repairAfterReorg(
-          stored, invFunders, keptFunders, contractionMinStore = altFloor).collect()
+      val (altRoute, tAlt) = timed {
+        val (rows, route) = graft.chain.WalletCluster.repairAfterReorg(
+          stored, invFunders, keptFunders, contractionMinStore = altFloor)
+        rows.collect()
+        route.name
       }
-      val altRoute = graft.chain.WalletCluster.lastRepairRoute
       val (compName, compS) =
         if (route == "contraction" && altRoute == "replace") ("bare_recompute", tFull)
         else (altRoute, tAlt)
@@ -303,14 +304,21 @@ object ScaleRehearsal {
       val fullMap = full.map(r => r.getString(0) -> r.getString(1)).toMap
       val exact = fullMap.forall { case (a, w) => repaired.get(a).contains(w) } &&
         (repaired.keySet -- fullMap.keySet).forall(a => repaired(a) == a)
-      Rehearsal.emit(f"""{"rehearsal":"wallet_reorg_repair_shallow","scale":$scale,"wallets":$nWallets,"affected_wallets":${nWallets / 200},"route":"$route","repair_s":$tRepair%.2f,"alt_route":"$altRoute","alt_s":$tAlt%.2f,"comparator":"$compName","comparator_s":$compS%.2f,"full_s":$tFull%.2f,"noop_s":$tNoop%.2f,"noop_rows":${noop.length},"repair_rows":${rep.length},"stored_rows":$nStored,"exact":$exact}""")
+      Rehearsal.emit(Rehearsal.json(
+        "rehearsal" -> "wallet_reorg_repair_shallow", "scale" -> scale,
+        "wallets" -> nWallets, "affected_wallets" -> nWallets / 200, "route" -> route,
+        "repair_s" -> Rehearsal.round(tRepair, 2), "alt_route" -> altRoute,
+        "alt_s" -> Rehearsal.round(tAlt, 2), "comparator" -> compName,
+        "comparator_s" -> Rehearsal.round(compS, 2), "full_s" -> Rehearsal.round(tFull, 2),
+        "noop_s" -> Rehearsal.round(tNoop, 2), "noop_rows" -> noop.length,
+        "repair_rows" -> rep.length, "stored_rows" -> nStored, "exact" -> exact))
       // contention-robust: one retry of BOTH timings before failing the leg
       Rehearsal.assertEconomics("shallow-reorg router", route, tRepair,
         compName, compS, () => {
           stored.persist(); stored.count() // re-warm the shared input
           val (_, c) = timed {
             graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
-              .collect()
+              ._1.collect()
           }
           val m =
             if (compName == "bare_recompute") timed {
@@ -319,7 +327,7 @@ object ScaleRehearsal {
             else timed {
               graft.chain.WalletCluster.repairAfterReorg(
                 stored, invFunders, keptFunders, contractionMinStore = altFloor)
-                .collect()
+                ._1.collect()
             }._2
           stored.unpersist()
           (c, m)

@@ -295,11 +295,11 @@ object StreamRehearsal {
     // ten bridge blocks; the maintainer must route extend → contraction
     val fork = (0 until 12).map(i =>
       (f"o$i%06d", if (i == 0) f"h${989}%06d" else f"o${i - 1}%06d", 3000L + i))
-    val (_, tBatch) = timed(graft.streaming.ChainStream.walletLabelsBatch(
+    val (reorgBatch, tBatch) = timed(graft.streaming.ChainStream.walletLabelsBatch(
       spark, fork.toDF("hash", "parent_hash", "ts"),
       s"$workDir/bronze", fundersOf, s"$workDir/labels", 64))
-    val chainRoute = graft.streaming.ChainStream.lastBestChainRoute
-    val repairRoute = graft.chain.WalletCluster.lastRepairRoute
+    val chainRoute = reorgBatch.routeName
+    val repairRoute = reorgBatch.repair.fold("skipped")(_.name)
     // both routes timed directly on identical pre-reorg inputs: the one the
     // router chose, and the alternative it rejected
     val topTen = (990 until 1000).map(i => f"h$i%06d")
@@ -308,16 +308,17 @@ object StreamRehearsal {
     val bestFunders = funders.where(!col("block_hash").isin(topTen: _*))
       .select("tx_hash", "src_address")
     val (_, tChosen) = timed(graft.chain.WalletCluster.repairAfterReorg(
-        preStored, invFunders, bestFunders)
-      .count())
-    val (massRows, tMass) = timed(graft.chain.WalletCluster.repairAfterReorg(
-        preStored, invFunders, bestFunders,
-        contractionMinStore = Long.MaxValue)
+        preStored, invFunders, bestFunders)._1
       .count())
     // what the forced-alternative call actually routed: genuinely "mass"
     // once the store exceeds the driver envelope (30×), the driver-side
     // "replace" under it — the label keeps the comparator honest
-    val altRoute = graft.chain.WalletCluster.lastRepairRoute
+    val ((massRows, altRoute), tMass) = timed {
+      val (rows, route) = graft.chain.WalletCluster.repairAfterReorg(
+        preStored, invFunders, bestFunders,
+        contractionMinStore = Long.MaxValue)
+      (rows.count(), route.name)
+    }
     // converged? the post-reorg store must equal a from-scratch clustering
     // of the surviving funders
     val expect = graft.chain.WalletCluster.clusters(
@@ -328,8 +329,14 @@ object StreamRehearsal {
     val staleExtras = store2.exceptAll(expect)
       .where(col("address") =!= col("wallet_id")).count()
     val converged = missing == 0 && staleExtras == 0
-    Rehearsal.emit(
-      f"""{"rehearsal":"maintainer_contraction","scale":$scale,"wallets":$nWallets,"stored_rows":$nStored,"bootstrap_s":$tBoot%.2f,"reorg_batch_s":$tBatch%.2f,"chain_route":"$chainRoute","repair_route":"$repairRoute","chosen_route_s":$tChosen%.2f,"alternative_route":"$altRoute","mass_alternative_s":$tMass%.2f,"mass_rows":$massRows,"missing":$missing,"stale_extras":$staleExtras,"converged":$converged}""")
+    Rehearsal.emit(Rehearsal.json(
+      "rehearsal" -> "maintainer_contraction", "scale" -> scale, "wallets" -> nWallets,
+      "stored_rows" -> nStored, "bootstrap_s" -> Rehearsal.round(tBoot, 2),
+      "reorg_batch_s" -> Rehearsal.round(tBatch, 2), "chain_route" -> chainRoute,
+      "repair_route" -> repairRoute, "chosen_route_s" -> Rehearsal.round(tChosen, 2),
+      "alternative_route" -> altRoute, "mass_alternative_s" -> Rehearsal.round(tMass, 2),
+      "mass_rows" -> massRows, "missing" -> missing, "stale_extras" -> staleExtras,
+      "converged" -> converged))
     if (!converged) throw new IllegalStateException(
       s"maintainer contraction leg diverged: missing=$missing stale=$staleExtras")
     // Router-economics guard (in-leg, every run — not just a JSON field):
@@ -342,10 +349,10 @@ object StreamRehearsal {
     Rehearsal.assertEconomics("maintainer router", repairRoute, tChosen,
       altRoute, tMass, () => {
         val (_, c) = timed(graft.chain.WalletCluster.repairAfterReorg(
-          preStored, invFunders, bestFunders).count())
+          preStored, invFunders, bestFunders)._1.count())
         val (_, m) = timed(graft.chain.WalletCluster.repairAfterReorg(
           preStored, invFunders, bestFunders,
-          contractionMinStore = Long.MaxValue).count())
+          contractionMinStore = Long.MaxValue)._1.count())
         (c, m)
       })
     funders.unpersist(blocking = false)
@@ -391,8 +398,68 @@ object StreamRehearsal {
     * legitimately pays one full in-memory resolution per batch.)
     */
   private def walletOrderedBackfillLeg(spark: SparkSession): Unit = {
-    import spark.implicits._
-    val workDir = Paths.get("target/stream_rehearsal_backfill")
+    val routes = walletSliceLeg(spark, "ordered_backfill",
+      "target/stream_rehearsal_backfill")((nBatches, _) => 0 until nBatches).map(_._2)
+    // Vacuousness guard (the other legs' discipline): this leg's entire
+    // point is that ordered ingest resolves O(batch) — a regression that
+    // silently routes every batch through the full resolution would still
+    // converge and pass, with only the emitted routes array (which nobody
+    // re-reads) changing. Batch 0 bootstraps; every later batch must extend.
+    if (routes.drop(1).exists(_ != "extend")) throw new IllegalStateException(
+      "ordered backfill left the O(batch) path: route histogram = " +
+        routes.groupBy(identity).view.mapValues(_.size).toMap.toString)
+  }
+
+  /** The pending-frontier path under corpus-scale load: slice the corpus by
+    * height, feed slice 0 (genesis-rooted — the maintainer bootstraps a
+    * real chain), then the REMAINING slices top-down — every middle batch
+    * is pure pending growth (parents one slice below have not arrived:
+    * route "unchanged", no resolution, no label work, O(batch) sidecar
+    * append), and the FINAL batch (slice 1) anchors on the bootstrap tip
+    * and cascades the entire buffered corpus back onto the chain in one
+    * O(resolved) driver pass (route "extend"). This is the r15 top-3 ask's
+    * done-bar measured directly: non-attaching batches vs the tip-follow
+    * floor, with the one honest full-cost batch at the end.
+    */
+  private def walletFragmentDrainLeg(spark: SparkSession): Unit = {
+    // slice 0 first (bootstraps the genesis-rooted prefix), then an ordered
+    // prefix, then the REST top-down: slice i's parents live in slice i−1,
+    // so nothing in the reversed suffix anchors until its last slice. The
+    // reversed suffix is sized to the maintainer's PendingCap — buffering
+    // MORE than the cap is designed overflow (honest full resolutions), not
+    // what this leg measures; at 1×/10× the whole corpus fits and the
+    // suffix is everything
+    val runs = walletSliceLeg(spark, "fragment_drain",
+        "target/stream_rehearsal_fragments") { (nBatches, step) =>
+      val maxRev = math.max(2,
+        (graft.streaming.ChainStream.PendingCap / step - 1).toInt)
+      val splitAt = math.max(1, nBatches - maxRev)
+      (0 until splitAt) ++ (splitAt until nBatches).reverse
+    }
+    // vacuousness guards: the leg's POINT is that buffered batches are
+    // O(batch) "unchanged" and the single attach batch cascades on "extend"
+    // — a regression to per-batch full resolutions would still converge.
+    // A slice extends iff the slice below it was fed first.
+    val fed = runs.map(_._1).scanLeft(Set.empty[Int])(_ + _)
+    val expected = runs.indices.map { j =>
+      if (j == 0) "bootstrap" else if (fed(j)(runs(j)._1 - 1)) "extend" else "unchanged"
+    }
+    val routes = runs.map(_._2)
+    if (routes != expected)
+      throw new IllegalStateException(
+        "fragment drain left the pending path: route histogram = " +
+          routes.groupBy(identity).view.mapValues(_.size).toMap.toString)
+  }
+
+  /** Feed the corpus to the maintainer as equal height slices, in the order
+    * `orderOf(nBatches, sliceHeight)` picks, one synchronous
+    * `walletLabelsBatch` each; emit the leg's line and fail unless the final
+    * store equals a from-scratch clustering of the final best chain's
+    * funders. Returns (slice, route) per batch.
+    */
+  private def walletSliceLeg(spark: SparkSession, leg: String, dir: String)(
+      orderOf: (Int, Int) => Seq[Int]): Seq[(Int, String)] = {
+    val workDir = Paths.get(dir)
     deleteRecursively(workDir)
     val txsB = graft.chain.BlkCorpus.bronze(spark, "transactions")
     val rinAll = graft.chain.Enrich.resolvedInputs(
@@ -409,94 +476,7 @@ object StreamRehearsal {
     // measuring the wrong path) — 30× runs ~19 slices of ~75k blocks
     val nBatches = math.max(10, maxH / 80000 + 1)
     val step = maxH / nBatches + 1
-    graft.streaming.ChainStream.walletBatchLog.clear()
-    val runs = (0 until nBatches).map { i =>
-      val lo = i * step
-      val batch = ann
-        .where(col("height") >= lo && col("height") < lo + step)
-        .select(
-          col("hash"),
-          when(col("parent_hash") === "0" * 64, lit(null))
-            .otherwise(col("parent_hash")).as("parent_hash"),
-          col("ts"))
-      val t0 = System.nanoTime()
-      graft.streaming.ChainStream.walletLabelsBatch(
-        spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels", 64)
-      ((System.nanoTime() - t0) / 1e9,
-        graft.streaming.ChainStream.lastBestChainRoute)
-    }
-    val batchWork = {
-      import scala.jdk.CollectionConverters._
-      graft.streaming.ChainStream.walletBatchLog.iterator().asScala.mkString(",")
-    }
-    // convergence: the ordered drain must land on the same labeling a
-    // from-scratch clustering of the final best chain produces
-    val bestTxs = graft.chain.GoldStats.chainTxs(txsB, ann).select("tx_hash")
-    val bestFunders = rinAll.join(bestTxs, Seq("tx_hash"), "left_semi")
-    val expect = graft.chain.WalletCluster.clusters(
-      bestFunders.select(col("src_address").as("address")).distinct(), bestFunders)
-    val store = spark.read.parquet(s"$workDir/labels/labels")
-      .select("address", "wallet_id")
-    val missing = expect.exceptAll(store).count()
-    val staleExtras = store.exceptAll(expect)
-      .where(col("address") =!= col("wallet_id")).count()
-    val converged = missing == 0 && staleExtras == 0
-    rinAll.unpersist(blocking = false)
-    Rehearsal.emit(
-      s"""{"rehearsal":"wallet_labels_ordered_backfill","scale":${graft.chain.BlkCorpus.Scale},"batches":$nBatches,"batch_s":[${runs.map(r => f"${r._1}%.1f").mkString(",")}],"routes":[${runs.map(r => "\"" + r._2 + "\"").mkString(",")}],"batch_work":[$batchWork],"missing":$missing,"stale_extras":$staleExtras,"converged":$converged}""")
-    if (!converged) throw new IllegalStateException(
-      s"ordered backfill diverged: missing=$missing stale=$staleExtras")
-    // Vacuousness guard (the other legs' discipline): this leg's entire
-    // point is that ordered ingest resolves O(batch) — a regression that
-    // silently routes every batch through the full resolution would still
-    // converge and pass, with only the emitted routes array (which nobody
-    // re-reads) changing. Batch 0 bootstraps; every later batch must extend.
-    val offRoute = runs.drop(1).map(_._2).filterNot(_ == "extend")
-    if (offRoute.nonEmpty) throw new IllegalStateException(
-      "ordered backfill left the O(batch) path: route histogram = " +
-        runs.map(_._2).groupBy(identity).view.mapValues(_.size).toMap.toString)
-  }
-
-  /** The pending-frontier path under corpus-scale load: slice the corpus by
-    * height, feed slice 0 (genesis-rooted — the maintainer bootstraps a
-    * real chain), then the REMAINING slices top-down — every middle batch
-    * is pure pending growth (parents one slice below have not arrived:
-    * route "unchanged", no resolution, no label work, O(batch) sidecar
-    * append), and the FINAL batch (slice 1) anchors on the bootstrap tip
-    * and cascades the entire buffered corpus back onto the chain in one
-    * O(resolved) driver pass (route "extend"). This is the r15 top-3 ask's
-    * done-bar measured directly: non-attaching batches vs the tip-follow
-    * floor, with the one honest full-cost batch at the end.
-    */
-  private def walletFragmentDrainLeg(spark: SparkSession): Unit = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val workDir = Paths.get("target/stream_rehearsal_fragments")
-    deleteRecursively(workDir)
-    val txsB = graft.chain.BlkCorpus.bronze(spark, "transactions")
-    val rinAll = graft.chain.Enrich.resolvedInputs(
-        graft.chain.BlkCorpus.bronze(spark, "tx_inputs"),
-        graft.chain.BlkCorpus.bronze(spark, "tx_outputs"))
-      .select("tx_hash", "src_address").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rinAll.count()
-    val fundersOf = corpusFundersOf(rinAll, txsB) _
-    val ann = graft.chain.BlkCorpus.annotated(spark)
-    val maxH = ann.agg(max("height")).head.get(0).asInstanceOf[Number].intValue
-    val nBatches = math.max(10, maxH / 80000 + 1)
-    val step = maxH / nBatches + 1
-    // slice 0 first (bootstraps the genesis-rooted prefix), then an ordered
-    // prefix, then the REST top-down: slice i's parents live in slice i−1,
-    // so nothing in the reversed suffix anchors until its last slice. The
-    // reversed suffix is sized to the maintainer's PendingCap — buffering
-    // MORE than the cap is designed overflow (honest full resolutions), not
-    // what this leg measures; at 1×/10× the whole corpus fits and the
-    // suffix is everything
-    val maxRev = math.max(2,
-      (graft.streaming.ChainStream.PendingCap / step - 1).toInt)
-    val splitAt = math.max(1, nBatches - maxRev)
-    val order = (0 until splitAt) ++ (splitAt until nBatches).reverse
-    graft.streaming.ChainStream.walletBatchLog.clear()
+    val order = orderOf(nBatches, step)
     val runs = order.map { i =>
       val lo = i * step
       val batch = ann
@@ -507,15 +487,12 @@ object StreamRehearsal {
             .otherwise(col("parent_hash")).as("parent_hash"),
           col("ts"))
       val t0 = System.nanoTime()
-      graft.streaming.ChainStream.walletLabelsBatch(
+      val rec = graft.streaming.ChainStream.walletLabelsBatch(
         spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels", 64)
-      ((System.nanoTime() - t0) / 1e9,
-        graft.streaming.ChainStream.lastBestChainRoute)
+      ((System.nanoTime() - t0) / 1e9, rec)
     }
-    val batchWork = {
-      import scala.jdk.CollectionConverters._
-      graft.streaming.ChainStream.walletBatchLog.iterator().asScala.mkString(",")
-    }
+    // convergence: the drain must land on the same labeling a from-scratch
+    // clustering of the final best chain produces
     val bestTxs = graft.chain.GoldStats.chainTxs(txsB, ann).select("tx_hash")
     val bestFunders = rinAll.join(bestTxs, Seq("tx_hash"), "left_semi")
     val expect = graft.chain.WalletCluster.clusters(
@@ -527,21 +504,15 @@ object StreamRehearsal {
       .where(col("address") =!= col("wallet_id")).count()
     val converged = missing == 0 && staleExtras == 0
     rinAll.unpersist(blocking = false)
-    Rehearsal.emit(
-      s"""{"rehearsal":"wallet_labels_fragment_drain","scale":${graft.chain.BlkCorpus.Scale},"batches":$nBatches,"batch_s":[${runs.map(r => f"${r._1}%.1f").mkString(",")}],"routes":[${runs.map(r => "\"" + r._2 + "\"").mkString(",")}],"batch_work":[$batchWork],"missing":$missing,"stale_extras":$staleExtras,"converged":$converged}""")
+    Rehearsal.emit(Rehearsal.json(
+      "rehearsal" -> s"wallet_labels_$leg", "scale" -> graft.chain.BlkCorpus.Scale,
+      "batches" -> nBatches, "batch_s" -> runs.map(r => Rehearsal.round(r._1, 1)),
+      "routes" -> runs.map(_._2.routeName),
+      "batch_work" -> runs.map(r => Rehearsal.batchWork(r._2)),
+      "missing" -> missing, "stale_extras" -> staleExtras, "converged" -> converged))
     if (!converged) throw new IllegalStateException(
-      s"fragment drain diverged: missing=$missing stale=$staleExtras")
-    // vacuousness guards: the leg's POINT is that buffered batches are
-    // O(batch) "unchanged" and the single attach batch cascades on "extend"
-    // — a regression to per-batch full resolutions would still converge
-    val routes = runs.map(_._2)
-    val okShape = routes.head == "bootstrap" && routes.last == "extend" &&
-      routes.slice(1, splitAt).forall(_ == "extend") &&
-      routes.slice(splitAt, routes.length - 1).forall(_ == "unchanged")
-    if (!okShape)
-      throw new IllegalStateException(
-        "fragment drain left the pending path: route histogram = " +
-          routes.groupBy(identity).view.mapValues(_.size).toMap.toString)
+      s"${leg.replace('_', ' ')} diverged: missing=$missing stale=$staleExtras")
+    order.zip(runs.map(_._2.routeName))
   }
 
   /** The round-13 surface at corpus scale: maintain the WALLET LABELING as
@@ -594,7 +565,7 @@ object StreamRehearsal {
     // O(delta) evidence beside the wall times
     val batchWork = {
       import scala.jdk.CollectionConverters._
-      graft.streaming.ChainStream.walletBatchLog.iterator().asScala.mkString(",")
+      graft.streaming.ChainStream.walletBatchLog.asScala.toSeq
     }
 
     val ann = graft.chain.BlkCorpus.annotated(spark)
@@ -614,8 +585,14 @@ object StreamRehearsal {
     val orphanSingletons = extras.where(col("address") === col("wallet_id")).count()
     val nLabels = store.count()
     val converged = missing == 0 && staleExtras == 0
-    Rehearsal.emit(
-      f"""{"rehearsal":"wallet_labels_catchup","scale":${graft.chain.BlkCorpus.Scale},"files_per_trigger":$fpt,"batches":$nBatches,"wall_s":$wallSec%.1f,"batch_s":[${perBatch.map(d => f"$d%.1f").mkString(",")}],"batch_work":[$batchWork],"labels":$nLabels,"missing":$missing,"stale_extras":$staleExtras,"orphan_singletons":$orphanSingletons,"converged":$converged}""")
+    Rehearsal.emit(Rehearsal.json(
+      "rehearsal" -> "wallet_labels_catchup", "scale" -> graft.chain.BlkCorpus.Scale,
+      "files_per_trigger" -> fpt, "batches" -> nBatches,
+      "wall_s" -> Rehearsal.round(wallSec, 1),
+      "batch_s" -> perBatch.map(Rehearsal.round(_, 1)),
+      "batch_work" -> batchWork.map(Rehearsal.batchWork), "labels" -> nLabels,
+      "missing" -> missing, "stale_extras" -> staleExtras,
+      "orphan_singletons" -> orphanSingletons, "converged" -> converged))
     if (!converged) {
       rinAll.unpersist(blocking = false)
       throw new IllegalStateException(
@@ -650,11 +627,11 @@ object StreamRehearsal {
     // silent regression to the distributed doubling would still converge,
     // just ~100 s slower at 30×, which per-batch times alone can't gate.
     val nBlocks = ann.count()
+    val fullKind = batchWork.flatMap(_.kind).lastOption
     if (nBlocks <= graft.streaming.ChainStream.BootstrapWalkCap &&
-        graft.streaming.ChainStream.lastFullKind != "walk")
+        !fullKind.contains("walk"))
       throw new IllegalStateException(
-        "catch-up bootstrap left the driver-walk path: kind=" +
-          s"${graft.streaming.ChainStream.lastFullKind} at $nBlocks blocks")
+        s"catch-up bootstrap left the driver-walk path: kind=$fullKind at $nBlocks blocks")
 
     // Tip-follow: the caught-up steady state — five single-block extensions
     // stepped synchronously through walletLabelsBatch, timing the per-batch
@@ -672,13 +649,15 @@ object StreamRehearsal {
         val nh = f"ffff7$i%059d"
         val batch = Seq((nh, tip, 4100000000L + i)).toDF("hash", "parent_hash", "ts")
         val t0 = System.nanoTime()
-        graft.streaming.ChainStream.walletLabelsBatch(
+        val rec = graft.streaming.ChainStream.walletLabelsBatch(
           spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels", 64)
         tip = nh
-        ((System.nanoTime() - t0) / 1e9, graft.streaming.ChainStream.lastBestChainRoute)
+        ((System.nanoTime() - t0) / 1e9, rec.routeName)
       }
-      Rehearsal.emit(
-        s"""{"rehearsal":"wallet_labels_tip_follow","scale":${graft.chain.BlkCorpus.Scale},"batch_s":[${follows.map(f => f"${f._1}%.2f").mkString(",")}],"routes":[${follows.map(f => "\"" + f._2 + "\"").mkString(",")}]}""")
+      Rehearsal.emit(Rehearsal.json(
+        "rehearsal" -> "wallet_labels_tip_follow", "scale" -> graft.chain.BlkCorpus.Scale,
+        "batch_s" -> follows.map(f => Rehearsal.round(f._1, 2)),
+        "routes" -> follows.map(_._2)))
     }
     rinAll.unpersist(blocking = false)
   }

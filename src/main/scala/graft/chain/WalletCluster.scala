@@ -41,10 +41,18 @@ object WalletCluster {
     */
   val ContractionMinStoreRows: Long = 500000L
 
-  /** Route the last [[repairAfterReorg]] call took — observability for
-    * specs and rehearsals. One of: "noop", "replace", "mass", "contraction".
-    */
-  @volatile private[graft] var lastRepairRoute: String = ""
+  /** The route a [[repairAfterReorg]] call took, returned with its rows. */
+  sealed abstract class RepairRoute(val name: String)
+  object RepairRoute {
+    /** No stored component lost an edge: nothing to repair. */
+    case object Noop extends RepairRoute("noop")
+    /** Driver-sized store: one recompute, diffed in memory. */
+    case object Replace extends RepairRoute("replace")
+    /** Affected components span most of the store: recompute and diff. */
+    case object Mass extends RepairRoute("mass")
+    /** Re-cluster only the affected components, contracted. */
+    case object Contraction extends RepairRoute("contraction")
+  }
 
   /** The previous invocation's materialized clustering — swapped per call so
     * repeated runs (bench reruns) hold ONE copy, not one per run (same
@@ -254,20 +262,20 @@ object WalletCluster {
     *                     current post-reorg best chain
     * @param contractionMinStore stored-row floor below which the
     *                     recompute-diff route is always taken
-    * @return REPLACEMENT rows (address, wallet_id) for every stored member
-    *         of an affected component (split members re-label, possibly to
-    *         themselves), plus every member of an unaffected component
-    *         whose label changes through a merge. Upsert into the store;
-    *         unaffected rows are never emitted. A member address absent
-    *         from the post-reorg chain keeps a singleton self-labeled row —
-    *         semantically a one-address wallet; the next full recompute
-    *         drops it with the rest of the vanished universe.
+    * @return the route taken, and the MINIMAL change set on every route:
+    *         (address, wallet_id) only for stored addresses whose label
+    *         differs from `oldLabels` — split members that re-label, and
+    *         members of unaffected components whose label moves through a
+    *         merge. Upsert into the store; a row equal to its stored label
+    *         is never emitted. A member address absent from the post-reorg
+    *         chain re-labels to itself — semantically a one-address wallet;
+    *         the next full recompute drops it with the rest of the vanished
+    *         universe.
     */
   def repairAfterReorg(
       oldLabels: DataFrame, invalidated: DataFrame,
       bestFunders: DataFrame,
-      contractionMinStore: Long = ContractionMinStoreRows): DataFrame = {
-    lastRepairRoute = "noop"
+      contractionMinStore: Long = ContractionMinStoreRows): (DataFrame, RepairRoute) = {
     val old = oldLabels.select(col("address"), col("wallet_id"))
     val invAddrs = invalidated.select(col("src_address").as("address")).distinct()
     // REPLACE route — store below the economics floor: the store bounds the
@@ -314,12 +322,10 @@ object WalletCluster {
       // diff below is correct with or without the gate (a gate-worthy no-op
       // just produces an empty diff the long way — rare, and bounded by the
       // small-store recompute this route already costs).
-      if (invalidated.isEmpty)
-        return old.select(col("address"), col("wallet_id")).where(lit(false))
+      if (invalidated.isEmpty) return (old.where(lit(false)), RepairRoute.Noop)
       val storedRows = storedProbe.map(r => (r.getString(0), r.getString(1)))
       val bf = bestFunders
         .select(col("tx_hash"), col("src_address").as("address"))
-      lastRepairRoute = "replace"
       val storedAddrs = storedRows.toSeq.map(_._1).toDF("address")
       // The diff below reads fresh labels at STORED addresses only (changed
       // members re-label, vanished members self-label; new addresses are
@@ -377,7 +383,7 @@ object WalletCluster {
         val nw = freshAt(a)
         if (nw != w) Some((a, nw)) else None
       }.toSeq
-      return out.toDF("address", "wallet_id")
+      return (out.toDF("address", "wallet_id"), RepairRoute.Replace)
     }
     // the probe said "not driver-sized": the distributed routes need the
     // exact count (mass-vs-contraction compares member fraction to it)
@@ -398,8 +404,7 @@ object WalletCluster {
       old.join(invAddrs, Seq("address"), "left_semi")
         .select(col("wallet_id")).distinct())
     try {
-      if (nAffected == 0)
-        return old.select(col("address"), col("wallet_id")).where(lit(false))
+      if (nAffected == 0) return (old.where(lit(false)), RepairRoute.Noop)
       // NOT distinct'ed here: a corpus-wide distinct is a full shuffle per
       // consumer, and every consumer below either semi-joins bf down to the
       // affected neighborhood first (then distincts the small result) or—on
@@ -412,9 +417,9 @@ object WalletCluster {
       // cache churn at exactly the scale where churn hurts. The contraction
       // route re-derives the set once under a persist; one extra store-scan
       // semi-join on the SMALL-affected path buys never caching a store-sized
-      // relation on the giant-component path.
-      val memberSet =
-        old.join(affected, Seq("wallet_id"), "left_semi").select("address")
+      // relation on the giant-component path. Members carry their stored
+      // label, so the contraction route drops unchanged rows without a join.
+      val memberSet = old.join(affected, Seq("wallet_id"), "left_semi")
       // belowFloor already decides the route — skip the member-count probe
       // (it was a fifth of the whole repair on the small-store path)
       val nMembers = if (belowFloor) 0L else memberSet.count()
@@ -429,7 +434,6 @@ object WalletCluster {
       // driver-side replace route (the leg that measures the mass
       // alternative does exactly that).
       if (belowFloor || nMembers * 2 >= nStored) {
-        lastRepairRoute = "mass"
         // the recompute consumes bf ~4× (universe distinct, funder distinct,
         // hub self-join, the final label join) — materialize it ONCE, held
         // in the swap register because the route's output is lazy. The
@@ -452,17 +456,17 @@ object WalletCluster {
         // chain: singleton themselves) fall out of the same left join. The
         // affected-label marker joins on wallet_id — label-grain, AQE
         // broadcasts it when small (the common giant-component case).
-        return old
+        return (old
           .join(affected.withColumn("_aff", lit(true)), Seq("wallet_id"), "left")
           .join(fresh, Seq("address"), "left")
           .where((col("new_id").isNotNull && col("new_id") =!= col("wallet_id")) ||
             (col("new_id").isNull && col("_aff").isNotNull &&
               col("wallet_id") =!= col("address")))
-          .select(col("address"), coalesce(col("new_id"), col("address")).as("wallet_id"))
+          .select(col("address"), coalesce(col("new_id"), col("address")).as("wallet_id")),
+          RepairRoute.Mass)
       }
       // Materialized here (and only here): every contraction step below reads
       // the member set at least once.
-      lastRepairRoute = "contraction"
       val (members, membersRdd) = ChainOps.rebase(memberSet)
       try {
         // 2. every best-chain tx a member funds, and ALL funders of those txs
@@ -478,7 +482,8 @@ object WalletCluster {
         // (measured: 9 s of a 19 s repair on a 1M-address store). The
         // contracted graph itself is affected-sized, so the rebase is tiny.
         val (contractedDf, contractedRdd) = ChainOps.rebase(relevantPairs
-          .join(members.withColumn("_member", lit(true)), Seq("address"), "left")
+          .join(members.select(col("address"), lit(true).as("_member")),
+            Seq("address"), "left")
           .join(old, Seq("address"), "left")
           .select(col("tx_hash"),
             when(col("_member").isNotNull, col("address"))
@@ -489,12 +494,14 @@ object WalletCluster {
           // membership-only members (all their edges were retracted) cluster
           // as singletons via the node universe
           val nodes = contractedDf.select(col("src_address").as("address"))
-            .unionByName(members).distinct()
+            .unionByName(members.select("address")).distinct()
           val relabel = clusters(nodes, contractedDf)
             .select(col("address").as("node"), col("wallet_id").as("new_id"))
 
+          // members whose fresh label equals the stored one are no change
           val memberRows = members
             .join(relabel, members("address") === relabel("node"))
+            .where(col("new_id") =!= col("wallet_id"))
             .select(col("address"), col("new_id").as("wallet_id"))
           // unaffected components pulled into a merge: node was a stored LABEL
           // (not a member address) and its id moved — relabel all its members,
@@ -507,7 +514,7 @@ object WalletCluster {
             .select(col("address"), col("new_id").as("wallet_id"))
           // Collected by every caller before the register is reused; the
           // member set is small (affected components only) on this route.
-          memberRows.unionByName(movedMembers)
+          (memberRows.unionByName(movedMembers), RepairRoute.Contraction)
         } finally { contractedRdd.unpersist(blocking = false); () }
       } finally { membersRdd.unpersist(blocking = false); () }
     } finally { affectedRdd.unpersist(blocking = false); () }

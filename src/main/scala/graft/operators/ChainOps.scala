@@ -331,12 +331,4 @@ object ChainOps {
   private[graft] def release(): Unit = {
     Option(lastResolve.getAndSet(null)).foreach(_.unpersist(blocking = false))
   }
-
-  /** Chain tip = maximal height — the reference's getBestAndHeight
-    * (BlockchainToGraph.java:38–49) without any traversal: with height
-    * materialized this is a single agg, and with height-bucketed partitioning
-    * it prunes to the last partition.
-    */
-  def bestTip(blocksWithHeight: DataFrame, heightCol: String): DataFrame =
-    blocksWithHeight.orderBy(col(heightCol).desc).limit(1)
 }

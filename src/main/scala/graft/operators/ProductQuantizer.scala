@@ -229,11 +229,6 @@ object ProductQuantizer {
   def PqFlatScanMaxRows: Long =
     sys.props.get("graft.pqFlatScanMaxRows").map(_.toLong).getOrElse(10000000L)
 
-  /** Last route [[pqTopKFor]] took ("flat" / "ivfpq-delegated") — test
-    * observability, same pattern as WalletCluster.lastRepairRoute.
-    */
-  @volatile var lastPqRoute: String = ""
-
   /** Corpus row count per memo key, so the routing probe costs one count
     * per (plan, params, data version) — not one per query batch. Drained
     * with the caches; also size-bounded (a long-lived session re-keying on
@@ -289,14 +284,12 @@ object ProductQuantizer {
       }
     }
     if (nCorpus > PqFlatScanMaxRows) {
-      lastPqRoute = "ivfpq-delegated"
       org.slf4j.LoggerFactory.getLogger("graft.pq").warn(
         s"pqTopK: corpus has $nCorpus rows > flat-scan ceiling $PqFlatScanMaxRows — " +
           "delegating to the IVF-PQ pruned composition (ivfPqTopKFor)")
       ivfPqTopKFor(corpus, queries, idCol, vecCol, k,
         m = m, ksub = ksub, maxIter = maxIter, rerank = rerank)
     } else {
-      lastPqRoute = "flat"
       pqTopK(pqCache.getOrBuild(key)(
         pqIndex(corpus, idCol, vecCol, m, ksub, maxIter)), queries, k, rerank)
     }

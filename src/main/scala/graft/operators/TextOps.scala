@@ -25,14 +25,6 @@ object TextOps {
   /** Whitespace token count. */
   def tokenCount(textCol: Column): Column = size(tokens(textCol))
 
-  /** BPE-ish subword count: word-piece segments + digits + punctuation runs,
-    * approximating tokenizer granularity with a pure regex split.
-    */
-  def subwordCount(textCol: Column): Column =
-    size(filter(
-      split(textCol, "(?<=[a-zA-Z]{4})(?=[a-zA-Z])|\\s+|(?=[^\\sa-zA-Z0-9])|(?<=[^\\sa-zA-Z0-9])"),
-      t => length(t) > 0))
-
   /** Quality heuristics of one document: length, token stats, punctuation and
     * stopword ratios, and a composite [0,1] score. The stopword list is the
     * tiny language-agnostic function-word core; callers can pass their own.

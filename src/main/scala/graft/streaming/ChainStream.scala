@@ -120,41 +120,68 @@ object ChainStream {
   private def fsReadText(spark: SparkSession, path: String): Option[String] =
     graft.sinks.Hfs.readText(spark, path)
 
-  /** Route the last [[bestChainIncremental]] call took — observability for
-    * specs and rehearsals ("did the O(batch) path actually engage?").
-    * One of: "bootstrap", "unchanged", "extend", "fallback".
-    */
-  @volatile private[graft] var lastBestChainRoute: String = ""
+  /** The route a [[bestChainIncremental]] call took. */
+  sealed abstract class ChainRoute(val name: String)
+  object ChainRoute {
+    /** The batch leaves the best chain as it was. */
+    case object Unchanged extends ChainRoute("unchanged")
+    /** The batch extends or shallowly reorgs the chain, resolved O(batch). */
+    case object Extend extends ChainRoute("extend")
+    /** A full resolution of bronze's connected best chain. `reason` says
+      * why it fired: "bootstrap", or the fallback cause that tells a
+      * designed fallback (root-rebase, overflow) apart from one that signals
+      * the O(batch) machinery disengaged (no-frontier, walk-miss on a
+      * supposedly complete index). `walked`: resolved by the driver walk
+      * within [[BootstrapWalkCap]] (kind "walk"), else by the distributed
+      * doubling (kind "distributed").
+      */
+    final case class Full(reason: String, walked: Boolean)
+        extends ChainRoute(if (reason == "bootstrap") "bootstrap" else "fallback") {
+      def kind: String = if (walked) "walk" else "distributed"
+    }
+  }
 
-  /** WHY the last full resolution fired — the diagnostic that tells a
-    * "fallback" that is doing its designed job (root-rebase, overflow)
-    * apart from one that signals the O(batch) machinery disengaged
-    * (no-frontier, walk-miss on a supposedly complete index). Empty when
-    * the last call took an incremental route.
+  /** What one [[walletLabelsBatch]] call did — the evidence that a batch's
+    * cost tracks ITS delta, not the accumulated corpus. Counts are taken
+    * only where already materialized (checkpointed sets / local paths), so
+    * the record costs no extra jobs.
+    *
+    * @param route       the best-chain route; None = no genesis in bronze
+    *                    yet, the batch waited without resolving a chain
+    * @param arrived     blocks newly on the best chain (-1 = not derived)
+    * @param invalidated blocks reorged out (-1 = not derived)
+    * @param repair      the reorg repair's route; None = no repair ran
+    * @param storeBootstrap the batch rebuilt the store by a full clustering
+    * @param pending     pending-index size, when a quiet batch rewrote the
+    *                    frontier (-1 = it wrote the overflow marker)
+    * @param dangling    dangling-index size, same rule
     */
-  @volatile private[graft] var lastFullReason: String = ""
+  final case class WalletBatch(
+      route: Option[ChainRoute],
+      arrived: Long = 0L,
+      invalidated: Long = 0L,
+      repair: Option[graft.chain.WalletCluster.RepairRoute] = None,
+      storeBootstrap: Boolean = false,
+      pending: Option[Int] = None,
+      dangling: Option[Int] = None) {
+    /** The route's name; "pre-genesis" when the batch waited for genesis. */
+    def routeName: String = route.fold("pre-genesis")(_.name)
+    private def full = route.collect { case f: ChainRoute.Full => f }
+    /** Why the full resolution fired; None on the incremental routes. */
+    def reason: Option[String] = full.map(_.reason)
+    /** How the full resolution resolved; None on the incremental routes. */
+    def kind: Option[String] = full.map(_.kind)
+  }
 
-  /** HOW the last full resolution resolved:
-    * "walk" = the driver-envelope cascade ([[BootstrapWalkCap]]),
-    * "distributed" = the doubling resolution (chain above the cap). The
-    * catch-up rehearsal's vacuousness guard pins "walk" at every corpus
-    * scale that fits the cap. Empty when no maintainer full route ran yet.
-    */
-  @volatile private[graft] var lastFullKind: String = ""
-
-  /** Per-batch work-size log of [[walletLabelsBatch]] (route, blocks newly
-    * on-chain, blocks reorged out, repair route) — the evidence that a
-    * batch's cost tracks ITS delta, not the accumulated corpus. Appended
-    * once per label-updating batch; rehearsal legs drain it alongside the
-    * per-batch durations. Counts are taken only where already materialized
-    * (checkpointed sets / local paths), so logging costs no extra jobs;
-    * -1 = not derived on that route. Bounded: a month-long maintainer must
-    * not accumulate a line per batch forever — the oldest entries drop past
-    * [[WalletBatchLogCap]] (rehearsals drain it per leg, far below the cap).
+  /** The records of recent [[walletLabelsBatch]] calls, for callers that
+    * drive the maintainer through a streaming query and so never see the
+    * return values (rehearsal legs drain it per leg). Bounded: a month-long
+    * maintainer must not accumulate a record per batch forever — the oldest
+    * entries drop past [[WalletBatchLogCap]].
     */
   private[graft] val WalletBatchLogCap = 10000
   private[graft] val walletBatchLog =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
+    new java.util.concurrent.ConcurrentLinkedQueue[WalletBatch]
   /** On-disk wallet-store data schema (the slot partition column is
     * directory-derived). Store reads specify it explicitly because an empty
     * store — zero data files, just _SUCCESS — is valid state that schema
@@ -164,11 +191,18 @@ object ChainStream {
     org.apache.spark.sql.types.StructField("address", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("wallet_id", org.apache.spark.sql.types.StringType)))
 
-  private def logWalletBatch(line: String): Unit = {
-    walletBatchLog.add(line)
+  private def logWalletBatch(record: WalletBatch): Unit = {
+    walletBatchLog.add(record)
     while (walletBatchLog.size() > WalletBatchLogCap) walletBatchLog.poll()
     ()
   }
+
+  /** The chain tip rule, stated once: max height, ties to the min hash —
+    * annotate's own order. Reads `hash` and `height` of any chain frame.
+    */
+  private def tipOf(chain: DataFrame): Option[(String, Int)] =
+    chain.orderBy(col("height").desc, col("hash").asc).limit(1).collect()
+      .headOption.map(r => (r.getAs[String]("hash"), r.getAs[Number]("height").intValue))
 
   /** The maintained OFF-CHAIN index beside the cursor: `dangling` = parent
     * hashes bronze references but does not contain; `pending` = every bronze
@@ -250,9 +284,7 @@ object ChainStream {
       prevTipHint: Option[(String, Int)] = None,
       probeCursor: Option[DataFrame] = None,
       frontier: Option[Frontier] = None): BestChainUpdate = {
-    def full(route: String, reason: String = ""): BestChainUpdate = {
-      lastBestChainRoute = route
-      lastFullReason = if (reason.nonEmpty) reason else route
+    def full(reason: String): BestChainUpdate = {
       // The full routes resolve the CONNECTED best chain — the reference's
       // reorder-buffer semantics end to end: they never seat an orphan
       // fragment as the chain (which the next batch's arrival of its
@@ -279,14 +311,12 @@ object ChainStream {
       // are a cursor scan + a local path.
       val (resolved, walked) = graft.chain.BestChain
         .bestChainConnectedWithFrontier(bronze, BootstrapWalkCap)
-      lastFullKind = if (walked.isDefined) "walk" else "distributed"
       BestChainUpdate(resolved
         .select(col("hash"), col("height").cast("int").as("height"))
         .localCheckpoint(true),
-        route, None,
+        ChainRoute.Full(reason, walked.isDefined), None,
         walked.map { case (d, p) => Frontier(d, p) })
     }
-    lastFullReason = ""
     if (prevCursor.isEmpty) return full("bootstrap")
     val cursor = prevCursor.get.select(col("hash"), col("height").cast("int").as("height"))
     // the batch must be driver-sized for the in-memory walk; micro-batches
@@ -298,7 +328,7 @@ object ChainStream {
     // silently routed every one of them to the full resolution).
     val batchRows = batch.select("hash", "parent_hash")
       .dropDuplicates("hash").limit(BatchWalkCap + 1).collect()
-    if (batchRows.length > BatchWalkCap) return full("fallback", "batch-cap")
+    if (batchRows.length > BatchWalkCap) return full("batch-cap")
     val batchHashes = batchRows.map(_.getString(0)).toSet
     val parentOf: Map[String, Option[String]] =
       batchRows.map(r => r.getString(0) -> Option(r.getString(1))).toMap
@@ -355,10 +385,8 @@ object ChainStream {
     }
     var anchors = cursorHits ++ deepHits
     val batchNew = batchRows.filterNot(r => anchors.contains(r.getString(0)))
-    if (batchNew.isEmpty) {
-      lastBestChainRoute = "unchanged"
-      return BestChainUpdate(cursor, "unchanged", None, frontier)
-    }
+    if (batchNew.isEmpty)
+      return BestChainUpdate(cursor, ChainRoute.Unchanged, None, frontier)
     val newHashes = batchNew.map(_.getString(0)).toSeq
     // Frontier-free path (no stamped index): a pre-existing bronze block
     // pointing INTO the new batch = a dangling fragment being attached; its
@@ -370,7 +398,7 @@ object ChainStream {
         .join(broadcast(newHashes.toDF("parent_hash")), Seq("parent_hash"), "left_semi")
         .join(broadcast(batchHashes.toSeq.toDF("hash")), Seq("hash"), "left_anti")
         .isEmpty
-      if (attaches) return full("fallback", "attach-scan")
+      if (attaches) return full("attach-scan")
     }
     // anchored height walk over the new blocks (memoized, stack-safe):
     // height = anchor height + path length. An unresolvable parent (neither
@@ -405,7 +433,7 @@ object ChainStream {
         val stepCap = batchRows.length + pendParent.size + 1
         while (anchorH.isEmpty && !pend && !heights.contains(cur)) {
           steps += 1
-          if (steps > stepCap) return full("fallback", "cycle")
+          if (steps > stepCap) return full("cycle")
           if (unres.contains(cur)) pend = true
           else allParent.get(cur) match {
             case Some(None) => // genesis root inside the walkable set: height 0
@@ -421,7 +449,7 @@ object ChainStream {
               // stack waits this pass
               if (!danglingSet.contains(p) && pendParent.contains(cur)) needLookup += p
               stack ::= cur; pend = true
-            case _ => return full("fallback", "no-index-walk-miss") // unresolvable parent, no index
+            case _ => return full("no-index-walk-miss") // unresolvable parent, no index
           }
         }
         if (pend) { unres ++= stack; unres += cur }
@@ -474,8 +502,7 @@ object ChainStream {
     if (heights.isEmpty) {
       // nothing resolved: the whole batch waits (frontier) — impossible
       // without one (the strict walk would have returned full already)
-      lastBestChainRoute = "unchanged"
-      return BestChainUpdate(cursor, "unchanged", None, frontierAfter(Set.empty))
+      return BestChainUpdate(cursor, ChainRoute.Unchanged, None, frontierAfter(Set.empty))
     }
     // candidate tip among the RESOLVED blocks vs the prior tip — annotate's
     // exact ordering (max height, then min hash)
@@ -484,21 +511,17 @@ object ChainStream {
     // from the cursor's TOP height bucket — partition-pruned, O(bucket));
     // the TakeOrdered fallback scans the whole cursor, which a 100M-block
     // chain should never pay per batch
-    val prevTip = prevTipHint.orElse(
-      cursor.orderBy(col("height").desc, col("hash").asc).limit(1).collect()
-        .headOption.map(r => (r.getString(0), r.getInt(1))))
+    val prevTip = prevTipHint.orElse(tipOf(cursor))
     val candWins = prevTip.forall { case (ph, pH) =>
       candidate._2 > pH || (candidate._2 == pH && candidate._1 < ph)
     }
     if (!candWins) {
       // new stale blocks joined bronze — off-chain, so they join pending
       // (resolved and unresolved alike); the chain itself is untouched
-      lastBestChainRoute = "unchanged"
-      return BestChainUpdate(cursor, "unchanged", None, frontierAfter(Set.empty))
+      return BestChainUpdate(cursor, ChainRoute.Unchanged, None, frontierAfter(Set.empty))
     }
     // new best = the winner's path through the walkable set down to its
     // anchor, plus the known chain's prefix at or below the anchor height
-    lastBestChainRoute = "extend"
     val path = scala.collection.mutable.ListBuffer.empty[(String, Int)]
     var cur = candidate._1
     var anchorHeight = -1
@@ -508,7 +531,7 @@ object ChainStream {
       allParent(cur) match {
         case Some(p) if heights.contains(p) => cur = p
         case Some(p) if anchors.contains(p) => anchorHeight = anchors(p); done = true
-        case Some(_) => return full("fallback", "invariant") // broken invariant: stay correct
+        case Some(_) => return full("invariant") // broken invariant: stay correct
         case None => done = true // genesis root: no known-chain prefix
       }
     }
@@ -519,12 +542,13 @@ object ChainStream {
     // path blocks are ON the chain now — everything else that arrived or
     // resolved stays/lands in pending (stale); the caller folds reorged-out
     // cursor rows (above the anchor) into pending too, cursor-side
-    BestChainUpdate(best, "extend", Some((path.toSeq, anchorHeight)),
+    BestChainUpdate(best, ChainRoute.Extend, Some((path.toSeq, anchorHeight)),
       frontierAfter(path.iterator.map(_._1).toSet))
   }
 
   /** Result of [[bestChainIncremental]]: the full best chain, the route
-    * taken, and — on the "extend" route — the exact delta: the path blocks
+    * taken (a full route carries its reason and kind), and — on the
+    * "extend" route — the exact delta: the path blocks
     * that joined the chain (tip-down, driver-sized) and the anchor height
     * (prior-chain rows ABOVE it are the ones reorged out; on a pure
     * extension the anchor is the prior tip and that set is empty).
@@ -534,7 +558,7 @@ object ChainStream {
     * folds the reorged-out cursor rows into `pending` (cursor-derived).
     */
   private[graft] final case class BestChainUpdate(
-      best: DataFrame, route: String,
+      best: DataFrame, route: ChainRoute,
       extendDelta: Option[(Seq[(String, Int)], Int)],
       newFrontier: Option[Frontier] = None)
 
@@ -554,8 +578,8 @@ object ChainStream {
     *
     * The store is hash-slot-partitioned parquet, and the per-batch write is
     * O(changed) in COMPUTE as well as bytes: the changed-row set is known
-    * exactly (both update paths emit deltas; repair output is additionally
-    * diffed against the store so no-op re-assertions don't count), its
+    * exactly (both update paths emit minimal deltas: only rows whose label
+    * differs from the store), its
     * slots are derived from the delta alone, and only those slots' full
     * content — store rows in the slot minus replaced rows, plus the delta —
     * is materialized (a `localCheckpoint` of slot-sized data, breaking the
@@ -586,6 +610,7 @@ object ChainStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         walletLabelsBatch(batch.sparkSession, batch, bronzeDir, fundersOf,
           labelsDir, slots)
+        ()
       }
 
   /** One micro-batch of [[incrementalWalletLabels]] — package-visible so the
@@ -606,6 +631,9 @@ object ChainStream {
     * already reflects this chain, because the cursor is written last (see
     * write-ordering note below); only the frontier sidecar is re-stamped
     * when it grew.
+    *
+    * @return what the batch did; the record is also appended to
+    *         [[walletBatchLog]]
     */
   private[graft] def walletLabelsBatch(
       spark: SparkSession,
@@ -613,7 +641,7 @@ object ChainStream {
       bronzeDir: String,
       fundersOf: (SparkSession, DataFrame) => DataFrame,
       labelsDir: String,
-      slots: Int): Unit = {
+      slots: Int): WalletBatch = {
     // Swap-register discipline applied to the batch as a whole: every frame
     // the batch materializes (localCheckpoints of slot-, bucket- and
     // chain-sized data; the resolvers' internal rebases) is DEAD once the
@@ -629,10 +657,13 @@ object ChainStream {
     // CONCURRENTLY with a batch would see them swept; persist before the
     // stream starts instead (the rehearsal legs' rinAll pattern).
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    try walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots)
-    finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!persistedBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
+    val record =
+      try walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots)
+      finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!persistedBefore.contains(id)) rdd.unpersist(blocking = false)
+      }
+    logWalletBatch(record)
+    record
   }
 
   private def walletLabelsBatchImpl(
@@ -641,7 +672,7 @@ object ChainStream {
       bronzeDir: String,
       fundersOf: (SparkSession, DataFrame) => DataFrame,
       labelsDir: String,
-      slots: Int): Unit = {
+      slots: Int): WalletBatch = {
     import graft.chain.WalletCluster
     import graft.operators.ChainOps.traced
     traced("wallet: bronze append")(
@@ -670,12 +701,8 @@ object ChainStream {
     // discipline applied to the chain's own root).
     if (prevCursorAny.isEmpty &&
         traced("wallet: genesis probe")(
-          bronze.where(col("parent_hash").isNull).isEmpty)) {
-      logWalletBatch(
-        """{"route":"pre-genesis","arrived":0,"invalidated":0,"repair":"skipped"}""")
-      lastBestChainRoute = "pre-genesis"
-      return
-    }
+          bronze.where(col("parent_hash").isNull).isEmpty))
+      return WalletBatch(route = None)
     val prevCursorH = prevCursorAny.filter(_.columns.contains("height"))
       .map(_.select(col("hash"), col("height")))
     // prior tip + membership probe from the TOP height buckets only: the
@@ -693,9 +720,7 @@ object ChainStream {
     }
     val prevTipHint: Option[(String, Int)] =
       if (tipBuckets.isEmpty) None
-      else prevCursorAny.get.where(col(bucketColName) === tipBuckets.max)
-        .orderBy(col("height").desc, col("hash").asc).limit(1).collect()
-        .headOption.map(r => (r.getAs[String]("hash"), r.getAs[Number]("height").intValue))
+      else tipOf(prevCursorAny.get.where(col(bucketColName) === tipBuckets.max))
     val probeCursor: Option[DataFrame] =
       if (tipBuckets.isEmpty) None
       else Some(prevCursorAny.get.where(col(bucketColName) >= tipBuckets.max - 1))
@@ -745,6 +770,7 @@ object ChainStream {
       bestChainIncremental(spark, bronze, batch, prevCursorH, prevTipHint,
         probeCursor, frontier))
     val route = upd.route
+    val unchanged = route match { case ChainRoute.Unchanged => true; case _ => false }
     // Slot assignment is a pure function of (address, slots), so the store
     // is only readable-for-overwrite under the SAME slots value it was
     // written with: resuming with a different value would route an address's
@@ -756,7 +782,7 @@ object ChainStream {
     val storedSlots = fsReadText(spark, slotsPath).map(_.trim.toInt)
     val bootstrapping = !fsExists(spark, storePath) || prevCursorAny.isEmpty ||
       !storedSlots.contains(slots)
-    if (!bootstrapping && route == "unchanged") {
+    if (!bootstrapping && unchanged) {
       // The store provably already reflects this chain (no label work), but
       // the FRONTIER may have changed: a catch-up batch whose blocks all
       // pend grows `pending`, and a crash-broken stamp deserves repair here
@@ -775,12 +801,11 @@ object ChainStream {
         fsWriteText(spark, frontierStampPath, "!pending\n")
         writeFrontierBody(spark, frontierPath, nf)
         fsWriteText(spark, frontierStampPath, tip.get + "\n")
-        val (np, nd) = nf.map(f => (f.pending.size, f.dangling.size)).getOrElse((-1, -1))
-        logWalletBatch(
-          s"""{"route":"unchanged","arrived":0,"invalidated":0,"repair":"skipped","pending":$np,"dangling":$nd}""")
-      } else logWalletBatch(
-        """{"route":"unchanged","arrived":0,"invalidated":0,"repair":"skipped"}""")
-      return
+        return WalletBatch(Some(route),
+          pending = Some(nf.fold(-1)(_.pending.size)),
+          dangling = Some(nf.fold(-1)(_.dangling.size)))
+      }
+      return WalletBatch(Some(route))
     }
     // bestFunders is only EVALUATED by the bootstrap clustering and the
     // reorg repair (both rare) — a pure tip extension never pays this
@@ -794,14 +819,7 @@ object ChainStream {
     def upsert(store: DataFrame, delta: DataFrame): DataFrame =
       delta.unionByName(
         store.join(delta.select("address"), Seq("address"), "left_anti"))
-    // only rows whose label REALLY differs from the store count as
-    // changes — repair's contraction route re-asserts every member
-    def minimize(store: DataFrame, rows: DataFrame): DataFrame =
-      rows.join(store.withColumnRenamed("wallet_id", "_old"),
-          Seq("address"), "left")
-        .where(!(col("_old") <=> col("wallet_id")))
-        .select("address", "wallet_id")
-    if (bootstrapping) {
+    val record = if (bootstrapping) {
       // bootstrap (or cursor lost / slots disagree): one full clustering
       // of the best chain. The clustering consumes the funder set TWICE
       // (address universe + co-spend edge derivation), and each lazy
@@ -814,9 +832,7 @@ object ChainStream {
         .write.mode("overwrite").partitionBy(bucket).parquet(storePath))
       bf.unpersist(blocking = false)
       fsWriteText(spark, slotsPath, slots.toString + "\n")
-      logWalletBatch(
-        s"""{"route":"$route","arrived":-1,"invalidated":-1,"repair":"bootstrap","kind":"$lastFullKind"}""")
-      ()
+      WalletBatch(Some(route), arrived = -1, invalidated = -1, storeBootstrap = true)
     } else {
       // Explicit schema: a legitimately-EMPTY store is valid state — a
       // bootstrap over a connected prefix with no funders yet (out-of-order
@@ -868,26 +884,20 @@ object ChainStream {
       // corpus-sized funder-join subtree underneath (measured 3–6× on the
       // catch-up drain's middle batches, the difference between O(batch)
       // and O(corpus) per batch).
-      WalletCluster.lastRepairRoute = "skipped"
-      val repairChanges =
+      val repair =
         if (traced("wallet: invalidated probe")(invalidated.isEmpty)) None
         else traced("wallet: repair") {
           // the mass route materializes its own funder input (swap-register
-          // discipline in repairAfterReorg); the change set is checkpointed
-          // here so its several consumers below never re-run the repair
-          val rep = WalletCluster.repairAfterReorg(
+          // discipline in repairAfterReorg); the change set — minimal on
+          // every route — is checkpointed here so its several consumers
+          // below never re-run the repair
+          val (rows, repairRoute) = WalletCluster.repairAfterReorg(
             stored,
             fundersOf(spark, bronze.join(invalidated, Seq("hash"), "left_semi")),
             bestFunders)
-          // the replace route (small stores) diffs against the store driver-
-          // side and runs eagerly, so by the time it returns the output is
-          // provably minimal — a second distributed diff would only re-pay
-          // the store scan the route exists to avoid
-          val minimal =
-            if (WalletCluster.lastRepairRoute == "replace") rep
-            else minimize(stored, rep)
-          Some(minimal.localCheckpoint(true))
+          Some((rows.localCheckpoint(true), repairRoute))
         }
+      val repairChanges = repair.map(_._1)
       val afterRepair = repairChanges.fold(stored)(upsert(stored, _))
       // nothing newly on-chain → no new edges, provably an empty delta: skip
       // the whole incremental pass (its funder derivation alone is a
@@ -903,10 +913,6 @@ object ChainStream {
       val slotted = changes.withColumn(bucket, slotOf(col("address")))
       val changedSlots = slotted.select(bucket).distinct()
         .collect().map(_.getInt(0))
-      val why =
-        if (route == "fallback") s""","why":"$lastFullReason","kind":"$lastFullKind""""
-        else ""
-      logWalletBatch(s"""{"route":"$route","arrived":$nArrived,"invalidated":$nInvalidated,"repair":"${WalletCluster.lastRepairRoute}"$why}""")
       if (changedSlots.nonEmpty) traced("wallet: slot write") {
         // full content of ONLY the changed slots; localCheckpoint is
         // slot-sized, not store-sized, and breaks the cycle of reading
@@ -921,6 +927,7 @@ object ChainStream {
           .localCheckpoint(true)
         graft.sinks.PartitionedGold.overwriteAffected(content, storePath, bucket)
       }
+      WalletBatch(Some(route), nArrived, nInvalidated, repair.map(_._2))
     }
     // Frontier upkeep, stamp-invalidate-first (see the read-side note):
     // 1. invalidate the stamp, 2. rewrite the body if it changed, 3. write
@@ -933,7 +940,10 @@ object ChainStream {
     // would put bronze-sized anti-joins plus capped driver collects back on
     // the O(batch) path, so overflow sticks until the next full route
     // refreshes it.
-    val incrementalRoute = route == "extend" || route == "unchanged"
+    val incrementalRoute = route match {
+      case _: ChainRoute.Full => false
+      case ChainRoute.Extend | ChainRoute.Unchanged => true
+    }
     val refreshedFrontier: Option[Frontier] = upd.newFrontier.orElse {
       if (frontierOverflow && incrementalRoute) None
       else deriveFrontier(spark, bronze, bestHashes)
@@ -991,14 +1001,13 @@ object ChainStream {
     // the new tip, derived BEFORE the cursor write — on the migration
     // routes upd.best is a lazy read of the very files the write replaces
     val newTip: Option[String] = upd.extendDelta.map(_._1.head._1)
-      .orElse(if (route == "unchanged") prevTipHint.map(_._1) else None)
-      .orElse(upd.best.orderBy(col("height").desc, col("hash").asc).limit(1)
-        .collect().headOption.map(_.getString(0)))
+      .orElse(if (unchanged) prevTipHint.map(_._1) else None)
+      .orElse(tipOf(upd.best).map(_._1))
     writeCursor(spark, upd, prevCursorAny, cursorPath)
     // 4. re-stamp with the NEW tip — the last write of the batch, so a
     // matching stamp proves body and cursor were both committed together
     newTip.foreach(t => fsWriteText(spark, frontierStampPath, t + "\n"))
-    ()
+    record
   }
 
   /** Re-derive the [[Frontier]] from bronze: dangling = parents referenced
@@ -1122,10 +1131,9 @@ object ChainStream {
         // bit-identical by definition of the route), and a flat pre-bucketing
         // cursor being migrated must be checkpointed first or the overwrite
         // destroys the path its own plan reads mid-job.
-        val readsCursorPath = upd.route == "unchanged" ||
-          upd.extendDelta.exists(_._2 >= 0)
-        if (upd.route == "unchanged" &&
-            prevCursor.exists(_.columns.contains(bucketCol))) return
+        val unchanged = upd.route match { case ChainRoute.Unchanged => true; case _ => false }
+        val readsCursorPath = unchanged || upd.extendDelta.exists(_._2 >= 0)
+        if (unchanged && prevCursor.exists(_.columns.contains(bucketCol))) return
         // checkpoint wherever the plan reads cursorPath (migration cases) —
         // the full-resolution route is already checkpointed in the resolver
         val src = (if (readsCursorPath) upd.best.localCheckpoint(true) else upd.best)
@@ -1193,21 +1201,6 @@ object ChainStream {
       }
       .toDF("address", "balance")
   }
-
-  /** Incremental file-list scan (S2) — the reference enumerates blk%05d.dat
-    * from a persisted cursor (BlockchainToGraph.java:79–88, 1096–1107); the
-    * Spark form is a file stream source whose checkpoint IS the cursor.
-    * `maxFilesPerTrigger` bounds per-batch work exactly like the reference's
-    * one-file-at-a-time loop, but each batch is still fully parallel.
-    */
-  def fileStreamBlocks(
-      spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      maxFilesPerTrigger: Int = 4): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
 
   /** Streaming form of S1: raw blk files arriving in a directory are parsed
     * incrementally — the reference's tail-the-datadir loop

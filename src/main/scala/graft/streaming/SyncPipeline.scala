@@ -36,15 +36,6 @@ object SyncPipeline {
       graceful.close()
       ()
     }
-
-    /** Block until the query terminates on its own (e.g. an AvailableNow
-      * drain) — the batch-catchup form of [[stop]].
-      */
-    def awaitDrained(timeoutMs: Long = 60000): Boolean = {
-      val done = query.awaitTermination(timeoutMs)
-      if (done) { node.stop(timeoutMs); graceful.close() }
-      done
-    }
   }
 
   /** Start the full sync. `recompute` derives gold from the deduplicated

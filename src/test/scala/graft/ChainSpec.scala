@@ -162,27 +162,30 @@ class ChainSpec extends SparkSpec {
     val stored = WalletCluster.clusters(universe, all).persist()
     assert(stored.count() == 24)
 
+    def run(inv: org.apache.spark.sql.DataFrame, best: org.apache.spark.sql.DataFrame,
+        floor: Long = WalletCluster.ContractionMinStoreRows)
+        : (Map[String, String], WalletCluster.RepairRoute) = {
+      val (rows, route) = WalletCluster.repairAfterReorg(stored, inv, best,
+        contractionMinStore = floor)
+      (rows.collect().map(r => r.getString(0) -> r.getString(1)).toMap, route)
+    }
     // SMALL reorg: only t00 retracts → members = 2 of 24 → contraction
     // route (forced past the economics floor — a 24-row store would
-    // otherwise take the recompute-diff route), which emits replacement
-    // rows for every member of the affected component (the x00 row is a
-    // no-op re-assertion of its own label)
+    // otherwise take the recompute-diff route), which emits only the split
+    // member whose label changes: x00 keeps its own label, so no row
     val inv1 = all.where(col("tx_hash") === "t00")
     val best1 = all.where(col("tx_hash") =!= "t00")
-    val small = WalletCluster.repairAfterReorg(stored, inv1, best1,
-        contractionMinStore = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(WalletCluster.lastRepairRoute == "contraction")
-    assert(small == Map("x00" -> "x00", "y00" -> "y00"))
+    val (small, smallRoute) = run(inv1, best1, floor = 0)
+    assert(smallRoute == WalletCluster.RepairRoute.Contraction)
+    assert(small == Map("y00" -> "y00"))
 
     // the SAME small reorg under the default economics floor: the store is
     // tiny (driver-sized by the floor itself), so the router takes the
-    // REPLACE route — recompute once, diff in memory — and still emits only
-    // genuinely changed rows, same converged state
-    val smallMass = WalletCluster.repairAfterReorg(stored, inv1, best1)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(WalletCluster.lastRepairRoute == "replace")
-    assert(smallMass == Map("y00" -> "y00"))
+    // REPLACE route — recompute once, diff in memory — and the two routes
+    // agree row for row on the same reorg
+    val (smallReplace, replaceRoute) = run(inv1, best1)
+    assert(replaceRoute == WalletCluster.RepairRoute.Replace)
+    assert(smallReplace == small)
 
     // MASS reorg: t00..t06 retract → members = 14 of 24 → recompute-diff
     // route, which emits ONLY rows whose label changes: the y of each
@@ -190,10 +193,8 @@ class ChainSpec extends SparkSpec {
     val hot = (0 until 7).map(i => f"t$i%02d")
     val inv2 = all.where(col("tx_hash").isin(hot: _*))
     val best2 = all.where(!col("tx_hash").isin(hot: _*))
-    val mass = WalletCluster.repairAfterReorg(stored, inv2, best2,
-        contractionMinStore = 0) // member fraction alone picks the route
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(WalletCluster.lastRepairRoute == "mass")
+    val (mass, massRoute) = run(inv2, best2, floor = 0) // member fraction alone picks the route
+    assert(massRoute == WalletCluster.RepairRoute.Mass)
     assert(mass == (0 until 7).map(i => f"y$i%02d" -> f"y$i%02d").toMap)
 
     // both routes converge to the same state as a full recompute
@@ -226,8 +227,8 @@ class ChainSpec extends SparkSpec {
       // the replace route's LIMIT-1 probe concludes this without any
       // derivation pass
       val emptyInv = all.where(lit(false))
-      val r1 = WalletCluster.repairAfterReorg(stored, emptyInv, all).collect()
-      assert(r1.isEmpty)
+      val (r1, route1) = WalletCluster.repairAfterReorg(stored, emptyInv, all)
+      assert(route1 == WalletCluster.RepairRoute.Noop && r1.collect().isEmpty)
       // listener events are posted asynchronously; a short settle beats
       // reaching into the private listener bus
       Thread.sleep(500)
@@ -243,8 +244,8 @@ class ChainSpec extends SparkSpec {
       // repair premium, r16 rehearsal), so the call costs the bounded
       // small-store recompute rather than a discovery ladder
       val unknownInv = Seq(("tz", "zz99")).toDF("tx_hash", "src_address")
-      val r2 = WalletCluster.repairAfterReorg(stored, unknownInv, all).collect()
-      assert(r2.isEmpty)
+      val (r2, _) = WalletCluster.repairAfterReorg(stored, unknownInv, all)
+      assert(r2.collect().isEmpty)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       stored.unpersist()

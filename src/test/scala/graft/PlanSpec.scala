@@ -189,11 +189,12 @@ class PlanSpec extends SparkSpec {
     val all = txs.toDF("tx_hash", "src_address")
     val stored = txs.map(t => (t._2, t._2.replace('y', 'x'))).distinct
       .toDF("address", "wallet_id")
-    val p = graft.chain.WalletCluster
+    val (rows, route) = graft.chain.WalletCluster
       .repairAfterReorg(stored, all.where(col("tx_hash") === "t00"),
         all.where(col("tx_hash") =!= "t00"),
         contractionMinStore = 0) // pin the contraction route's plan shape
-      .queryExecution.explainString(FormattedMode)
+    assert(route == graft.chain.WalletCluster.RepairRoute.Contraction)
+    val p = rows.queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
@@ -211,10 +212,12 @@ class PlanSpec extends SparkSpec {
     val all = txs.toDF("tx_hash", "src_address")
     val stored = (Seq("a0", "a1", "a2", "a3", "a4", "a5").map((_, "a0")) ++
       Seq(("b0", "b0"), ("b1", "b0"))).toDF("address", "wallet_id")
-    val p = graft.chain.WalletCluster
+    val (rows, route) = graft.chain.WalletCluster
       .repairAfterReorg(stored, all.where(col("tx_hash") === "t2"),
-        all.where(col("tx_hash") =!= "t2"))
-      .queryExecution.explainString(FormattedMode)
+        all.where(col("tx_hash") =!= "t2"),
+        contractionMinStore = 0) // past the replace route's small-store floor
+    assert(route == graft.chain.WalletCluster.RepairRoute.Mass)
+    val p = rows.queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 }

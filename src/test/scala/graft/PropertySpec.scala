@@ -447,10 +447,14 @@ class PropertySpec extends SparkSpec {
         // to gate the O(affected) route on random graphs (tiny stores would
         // otherwise all route to the recompute-diff path, which ChainSpec
         // pins separately)
-        val repair = WalletCluster.repairAfterReorg(
+        val (repairRows, _) = WalletCluster.repairAfterReorg(
             stored.toSeq.toDF("address", "wallet_id"), oldBr, bestFunders,
             contractionMinStore = 0)
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        val repair = repairRows.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        // minimality: no emitted row re-asserts its stored label
+        assert(repair.forall { case (a, w) => !stored.get(a).contains(w) },
+          s"repair re-asserted stored labels: " +
+            repair.filter { case (a, w) => stored.get(a).contains(w) })
         val afterRepair = stored ++ repair
         val delta = WalletCluster.incrementalClusters(
             afterRepair.toSeq.toDF("address", "wallet_id"), newBr)

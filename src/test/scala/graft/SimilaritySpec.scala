@@ -37,14 +37,16 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 3)
     Graft.releaseCaches() // reset memoized indexes + routing counts
+    // the route shows in which memo served the call: flat PQ or IVF-PQ
+    def memos = (ProductQuantizer.pqCacheEntries, ProductQuantizer.ivfPqCacheEntries)
     ProductQuantizer.pqTopKFor(emb, queries, "vec_id", "embedding", k = 5).collect()
-    assert(ProductQuantizer.lastPqRoute == "flat")
+    assert(memos == ((1, 0)), "flat route expected")
     sys.props("graft.pqFlatScanMaxRows") = "10"
     try {
       Graft.releaseCaches()
       val rows = ProductQuantizer
         .pqTopKFor(emb, queries, "vec_id", "embedding", k = 5).collect()
-      assert(ProductQuantizer.lastPqRoute == "ivfpq-delegated")
+      assert(memos == ((0, 1)), "IVF-PQ delegation expected")
       val perQuery = rows.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
       assert(perQuery.keySet.size == 3 && perQuery.values.forall(_ == 5))
     } finally sys.props.remove("graft.pqFlatScanMaxRows")
@@ -69,14 +71,16 @@ class SimilaritySpec extends SparkSpec {
       ProductQuantizer.pqTopKFor(
         spark.read.parquet(dir), queries, "vec_id", "embedding",
         k = 3, m = 4, ksub = 4).collect()
-      assert(ProductQuantizer.lastPqRoute == "flat")
+      // the route shows in which memo served the call: flat PQ or IVF-PQ
+      assert(ProductQuantizer.pqCacheEntries == 1 &&
+        ProductQuantizer.ivfPqCacheEntries == 0, "flat route expected")
       // grow past the ceiling — NO releaseCaches: the re-key alone must flip
       vecs(61, 220).coalesce(1).write.mode("append").parquet(dir)
       val rows = ProductQuantizer.pqTopKFor(
         spark.read.parquet(dir), queries, "vec_id", "embedding",
         k = 3, m = 4, ksub = 4, rerank = 12).collect()
-      assert(ProductQuantizer.lastPqRoute == "ivfpq-delegated",
-        s"stale memo kept the flat route after growth (route=${ProductQuantizer.lastPqRoute})")
+      assert(ProductQuantizer.ivfPqCacheEntries == 1,
+        "stale memo kept the flat route after growth")
       assert(rows.nonEmpty)
     } finally {
       sys.props.remove("graft.pqFlatScanMaxRows")

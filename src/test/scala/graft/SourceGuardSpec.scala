@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-scan guards for the engine's single-owner decisions: how a session
-  * is configured (GraftSession) and how vertex values get dense ids
-  * (VertexDictionary). A second copy of either drifts from the first.
+  * is configured (GraftSession), how vertex values get dense ids
+  * (VertexDictionary), and where a route decision lives (the return value of
+  * the call that made it). A second copy of any of them drifts from the first.
   */
 class SourceGuardSpec extends SparkSpec {
 
@@ -48,6 +49,17 @@ class SourceGuardSpec extends SparkSpec {
       .map(p => main.relativize(p).toString)
     assert(offenders.isEmpty, offenders)
     assert(assign.findFirstIn(code(main.resolve("operators/VertexDictionary.scala"))).isDefined)
+  }
+
+  test("no @volatile register in graph/, chain/, streaming/, operators/") {
+    // a route or verdict belongs in the result of the call that made it: a
+    // shared mutable field is overwritten by the next call, on any thread
+    val main = srcRoot.resolve("main/scala/graft")
+    val offenders = Seq("graph", "chain", "streaming", "operators")
+      .flatMap(d => scalaFiles(main.resolve(d)))
+      .filter(p => code(p).contains("@volatile"))
+      .map(p => main.relativize(p).toString)
+    assert(offenders.isEmpty, offenders)
   }
 
   test("a GraftSession session has the engine's SQL functions") {

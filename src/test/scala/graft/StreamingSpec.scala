@@ -11,6 +11,12 @@ import graft.streaming.ChainStream
 
 class StreamingSpec extends SparkSpec {
 
+  /** Route of the last maintainer batch a streaming query ran. */
+  private def lastLoggedRoute: String = {
+    import scala.jdk.CollectionConverters._
+    ChainStream.walletBatchLog.asScala.last.routeName
+  }
+
   test("parseUpdateTips extracts hash+height from bitcoind-style log lines") {
     import spark.implicits._
     val lines = Seq(
@@ -168,7 +174,7 @@ class StreamingSpec extends SparkSpec {
       ("a", "g", 1100L, Seq(("t2", Seq("a3", "a4")))),
       ("b", "a", 1200L, Seq(("t3", Seq("a2", "a3")))))
     writer.start().awaitTermination()
-    assert(ChainStream.lastBestChainRoute == "bootstrap")
+    assert(lastLoggedRoute == "bootstrap")
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1", "a4" -> "a1"))
 
     // Batch 2: longer fork b2 <- c2 reorgs b out — t3's merge RETRACTS (the
@@ -180,7 +186,7 @@ class StreamingSpec extends SparkSpec {
     writer.start().awaitTermination()
     // the reorg batch resolved O(batch) against the cursor, not via a full
     // bronze annotate
-    assert(ChainStream.lastBestChainRoute == "extend")
+    assert(lastLoggedRoute == "extend")
     assert(labels() == Map(
       "a1" -> "a1", "a2" -> "a1", "a3" -> "a3", "a4" -> "a3", "a5" -> "a3"))
     // repaired store == full recompute of the post-reorg chain
@@ -201,7 +207,7 @@ class StreamingSpec extends SparkSpec {
     writer.start().awaitTermination()
     // a replayed batch is recognized on the cursor and exits before any
     // label work — no store read, no cursor rewrite
-    assert(ChainStream.lastBestChainRoute == "unchanged")
+    assert(lastLoggedRoute == "unchanged")
     assert(storeFiles() == fpBefore, "replayed batch rewrote label slots")
     assert(labels() == full)
   }
@@ -240,8 +246,9 @@ class StreamingSpec extends SparkSpec {
     // stay byte-identical (the O(delta) cursor write, not a chain rewrite)
     val ext = Seq((f"b$n%06d", f"b${n - 1}%06d", 1000L + n,
       Seq.empty[(String, Seq[String])])).toDF("hash", "parent_hash", "ts", "txs")
-    ChainStream.walletLabelsBatch(spark, ext, s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-    assert(ChainStream.lastBestChainRoute == "extend")
+    val rec = ChainStream.walletLabelsBatch(spark, ext, s"$tmp/bronze", fundersOf,
+      s"$tmp/labels", 8)
+    assert(rec.routeName == "extend")
     val after = sigs()
     val b0Before = before.filter(_._1.contains("height_bucket=0"))
     val b0After = after.filter(_._1.contains("height_bucket=0"))
@@ -316,14 +323,14 @@ class StreamingSpec extends SparkSpec {
         bronzeRows = bronzeRows ++ batchRows.map(r => r._1 -> Option(r._2))
         val bronze = bronzeRows.toSeq.map { case (h, p) => (h, p.orNull) }
           .toDF("hash", "parent_hash")
-        val got = ChainStream.bestChainIncremental(spark, bronze, batchDf, cursor)
-          .best
+        val upd = ChainStream.bestChainIncremental(spark, bronze, batchDf, cursor)
+        val got = upd.best
           .select(col("hash"), col("height").cast("int").as("height"))
           .localCheckpoint(true)
         val g = got.collect().map(r => (r.getString(0), r.getInt(1))).toSet
         val e = connectedChain(bronzeRows).toSet
         assert(g == e,
-          s"$label diverged (route=${ChainStream.lastBestChainRoute}): " +
+          s"$label diverged (route=${upd.route}): " +
             s"missing=${e -- g} extra=${g -- e}")
         cursor = Some(got)
       }
@@ -387,7 +394,7 @@ class StreamingSpec extends SparkSpec {
             (bronzeRows.keySet -- gotMap.keySet).iterator
               .map(h => h -> bronzeRows(h).orNull).toMap)
         }
-        val route = ChainStream.lastBestChainRoute
+        val route = upd.route
         // 1. frontier == from-scratch derivation
         val expectDangling = bronzeRows.valuesIterator.flatten.toSet -- bronzeRows.keySet
         val expectPending = bronzeRows.keySet -- gotMap.keySet
@@ -689,9 +696,9 @@ class StreamingSpec extends SparkSpec {
     // forced (sidecar disagrees) while the best chain is UNCHANGED — the
     // cursor's plan is a read of its own path, so the write must be skipped
     // (already bucketed, content identical), not an overwrite-while-reading
-    ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
+    val replay = ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
       s"$tmp/labels", slots = 4)
-    assert(ChainStream.lastBestChainRoute == "unchanged")
+    assert(replay.routeName == "unchanged" && replay.storeBootstrap)
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1"))
     assert(cursorSigs() == before, "unchanged re-bootstrap rewrote the bucketed cursor")
 
@@ -702,9 +709,9 @@ class StreamingSpec extends SparkSpec {
     val fsPath = java.nio.file.Paths.get(s"$tmp/labels/_bestchain")
     org.apache.commons.io.FileUtils.deleteDirectory(fsPath.toFile)
     flat.write.mode("overwrite").parquet(s"$tmp/labels/_bestchain")
-    ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
+    val migrate = ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
       s"$tmp/labels", slots = 2)
-    assert(ChainStream.lastBestChainRoute == "unchanged")
+    assert(migrate.routeName == "unchanged")
     val migrated = spark.read.parquet(s"$tmp/labels/_bestchain")
     assert(migrated.columns.contains(graft.sinks.PartitionedGold.BucketCol),
       "flat cursor was not migrated to the bucketed layout")
@@ -722,9 +729,9 @@ class StreamingSpec extends SparkSpec {
     def batchOf(rows: Seq[(String, String, Long)]) = rows
       .map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
       .toDF("hash", "parent_hash", "ts", "txs")
-    def step(rows: Seq[(String, String, Long)]): Unit =
+    def step(rows: Seq[(String, String, Long)]): String =
       ChainStream.walletLabelsBatch(spark, batchOf(rows), s"$tmp/bronze",
-        fundersOf, s"$tmp/labels", 8)
+        fundersOf, s"$tmp/labels", 8).routeName
     def cursorSigs(): Map[String, String] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(s"$tmp/labels/_bestchain"))
@@ -749,15 +756,13 @@ class StreamingSpec extends SparkSpec {
 
     // a dangling fragment (parent not yet arrived) PENDS under the frontier
     // and leaves the best chain unchanged — no cursor bucket may move
-    step(Seq(("x00001".padTo(64, 'x').mkString, "f" * 64, 9000L)))
-    assert(ChainStream.lastBestChainRoute == "unchanged")
+    assert(step(Seq(("x00001".padTo(64, 'x').mkString, "f" * 64, 9000L))) == "unchanged")
     assert(cursorSigs() == sigs0, "quiet pending batch rewrote cursor buckets")
 
     // the missing parent arrives, attaching the fragment and extending the
     // chain by 2 — the cascade resolves it on the EXTEND route, and the
     // diff write must rewrite only the TIP bucket
-    step(Seq(("f" * 64, f"b${n - 1}%06d", 9001L)))
-    assert(ChainStream.lastBestChainRoute == "extend")
+    assert(step(Seq(("f" * 64, f"b${n - 1}%06d", 9001L))) == "extend")
     val sigs1 = cursorSigs()
     val b0Before = sigs0.filter(_._1.contains("height_bucket=0"))
     val b0After = sigs1.filter(_._1.contains("height_bucket=0"))
@@ -781,8 +786,7 @@ class StreamingSpec extends SparkSpec {
       ChainStream.walletLabelsBatch(spark,
         rows.map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
           .toDF("hash", "parent_hash", "ts", "txs"),
-        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-      ChainStream.lastBestChainRoute
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8).routeName
     }
     // (dangling parents, pending blocks) from the parquet sidecar
     def frontierSets(): (Set[String], Map[String, String]) = {
@@ -874,8 +878,7 @@ class StreamingSpec extends SparkSpec {
     def step(rows: Seq[(String, String, Long, Seq[(String, Seq[String])])]): String = {
       ChainStream.walletLabelsBatch(spark,
         rows.toDF("hash", "parent_hash", "ts", "txs"),
-        s"$tmp/bronze", fundersOf, s"$tmp/labels", 4)
-      ChainStream.lastBestChainRoute
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 4).routeName
     }
     // batch 1: genesis + child, no funders anywhere → bootstrap writes an
     // empty store (only _SUCCESS)
@@ -913,8 +916,7 @@ class StreamingSpec extends SparkSpec {
       ChainStream.walletLabelsBatch(spark,
         rows.map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
           .toDF("hash", "parent_hash", "ts", "txs"),
-        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-      ChainStream.lastBestChainRoute
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8).routeName
     }
     def frontierSets(): (Set[String], Map[String, String]) = {
       val rows = spark.read.parquet(s"$tmp/labels/_frontier")
@@ -993,8 +995,7 @@ class StreamingSpec extends SparkSpec {
       ChainStream.walletLabelsBatch(spark,
         rows.map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
           .toDF("hash", "parent_hash", "ts", "txs"),
-        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-      ChainStream.lastBestChainRoute
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8).routeName
     }
     def frontierBody(): Seq[(String, String, String)] =
       spark.read.parquet(s"$tmp/labels/_frontier")
@@ -1047,13 +1048,11 @@ class StreamingSpec extends SparkSpec {
         df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       df.select(explode(col("txs")).as("t"))
         .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
-    def step(rows: Seq[(String, String, Long)]): String = {
+    def step(rows: Seq[(String, String, Long)]): ChainStream.WalletBatch =
       ChainStream.walletLabelsBatch(spark,
         rows.map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
           .toDF("hash", "parent_hash", "ts", "txs"),
         s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-      ChainStream.lastBestChainRoute
-    }
     def body(): Seq[(String, String)] =
       spark.read.parquet(s"$tmp/labels/_frontier")
         .select("kind", "hash").collect()
@@ -1072,16 +1071,17 @@ class StreamingSpec extends SparkSpec {
       // unbounded body
       val frag = (1 to 3).map(i =>
         (s"c$i" * 16, if (i == 1) X else s"c${i - 1}" * 16, 2000L + i))
-      assert(step(frag) == "unchanged")
+      assert(step(frag).routeName == "unchanged")
       assert(body().map(_._1) == Seq("overflow"),
         s"expected the overflow marker, got ${body()}")
       // with the index overflowed, the next unresolvable batch has no
       // frontier to pend into — the authoritative full path runs
-      assert(step(Seq(("d" * 64, "e" * 64, 3000L))) == "fallback")
-      assert(ChainStream.lastFullReason == "no-index-walk-miss")
+      val miss = step(Seq(("d" * 64, "e" * 64, 3000L)))
+      assert(miss.routeName == "fallback")
+      assert(miss.reason.contains("no-index-walk-miss"), miss)
       // the arrival that connects the big fragment takes the full route and
       // RESTORES the index: post-attach the off-chain backlog fits the cap
-      assert(step(Seq((X, "a", 4000L))) == "fallback")
+      assert(step(Seq((X, "a", 4000L))).routeName == "fallback")
       val restored = body()
       assert(restored.nonEmpty && !restored.exists(_._1 == "overflow"),
         s"index not restored after the full route: $restored")
@@ -1118,21 +1118,21 @@ class StreamingSpec extends SparkSpec {
       ("o2" * 32, "o1" * 32, 3001L, Seq.empty[(String, Seq[String])]))
     val batch = scala.util.Random.shuffle(main ++ fork ++ orphan)
       .toDF("hash", "parent_hash", "ts", "txs")
-    def bootstrapInto(tmp: String): (Map[String, Int], Set[(String, String, String)]) = {
-      ChainStream.walletLabelsBatch(spark, batch,
+    def bootstrapInto(tmp: String)
+        : (ChainStream.WalletBatch, Map[String, Int], Set[(String, String, String)]) = {
+      val rec = ChainStream.walletLabelsBatch(spark, batch,
         s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
       val chain = spark.read.parquet(s"$tmp/labels/_bestchain").collect()
         .map(r => r.getAs[String]("hash") -> r.getAs[Number]("height").intValue).toMap
       val frontier = spark.read.parquet(s"$tmp/labels/_frontier")
         .select("kind", "hash", "parent_hash").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      (chain, frontier)
+      (rec, chain, frontier)
     }
     val tmpW = Files.createTempDirectory("graft-boot-walk").toString
-    val (chainW, frontW) = bootstrapInto(tmpW)
-    assert(ChainStream.lastBestChainRoute == "bootstrap")
-    assert(ChainStream.lastFullKind == "walk",
-      s"in-cap bootstrap took kind=${ChainStream.lastFullKind}")
+    val (recW, chainW, frontW) = bootstrapInto(tmpW)
+    assert(recW.routeName == "bootstrap")
+    assert(recW.kind.contains("walk"), s"in-cap bootstrap took kind=${recW.kind}")
     // the walk seats only the genesis-rooted chain, pends everything else
     assert(chainW.size == 40 && chainW(f"b39b" * 16) == 39)
     assert(frontW.count(_._1 == "p") == 5, s"fork+fragment not pending: $frontW")
@@ -1143,9 +1143,8 @@ class StreamingSpec extends SparkSpec {
     val tmpD = Files.createTempDirectory("graft-boot-dist").toString
     sys.props("graft.bootstrapWalkCap") = "4"
     try {
-      val (chainD, frontD) = bootstrapInto(tmpD)
-      assert(ChainStream.lastFullKind == "distributed",
-        s"over-cap bootstrap took kind=${ChainStream.lastFullKind}")
+      val (recD, chainD, frontD) = bootstrapInto(tmpD)
+      assert(recD.kind.contains("distributed"), s"over-cap bootstrap took kind=${recD.kind}")
       assert(chainD == chainW, "distributed bootstrap chain differs from walk")
       assert(frontD == frontW, "distributed bootstrap frontier differs from walk")
     } finally {
@@ -1172,8 +1171,7 @@ class StreamingSpec extends SparkSpec {
       ChainStream.walletLabelsBatch(spark,
         rows.map { case (h, p, ts) => (h, p, ts, Seq.empty[(String, Seq[String])]) }
           .toDF("hash", "parent_hash", "ts", "txs"),
-        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
-      ChainStream.lastBestChainRoute
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8).routeName
     }
     def body(): Seq[String] =
       spark.read.parquet(s"$tmp/labels/_frontier")
@@ -1238,6 +1236,8 @@ class StreamingSpec extends SparkSpec {
         .best.collect()
     }
     assert(ex.getMessage.toLowerCase.contains("cycl"))
-    assert(ChainStream.lastBestChainRoute == "fallback")
+    // the error comes from the full resolver, which only a full route calls
+    assert(ex.getStackTrace.exists(_.getClassName.startsWith("graft.chain.BestChain")),
+      ex.getStackTrace.take(12).mkString("\n"))
   }
 }
