@@ -1,7 +1,8 @@
 package graft.chain
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.ChainOps
 
@@ -42,7 +43,7 @@ object BestChain {
     * never seen as blocks) are INCLUDED in the memo at their saturate-at-
     * root positions and must be filtered by the caller against its id set.
     */
-  private def resolveInMemory(pairs: Array[org.apache.spark.sql.Row],
+  private def resolveInMemory(pairs: Array[(String, String)],
       genesisRootedTips: Boolean = false)
       : (scala.collection.mutable.HashMap[String, Int],
          scala.collection.mutable.HashSet[String]) = {
@@ -54,20 +55,20 @@ object BestChain {
     // genesisRootedTips restricts the TIP COMPETITION to genesis-rooted blocks
     // (walks ending at a null-parent block, not a phantom) — heights keep
     // the total semantics, the chain just never seats an orphan fragment.
-    val parentOf: Map[String, String] = pairs.flatMap(r =>
-      Option(r.getString(1)).map(r.getString(0) -> _)).toMap
+    val parentOf: Map[String, String] = pairs.flatMap { case (h, p) =>
+      Option(p).map(h -> _) }.toMap
     val ids: Set[String] =
-      if (genesisRootedTips) pairs.iterator.map(_.getString(0)).toSet else Set.empty
+      if (genesisRootedTips) pairs.iterator.map(_._1).toSet else Set.empty
     val memo = scala.collection.mutable.HashMap.empty[String, Int]
     val grounded = scala.collection.mutable.HashSet.empty[String]
-    pairs.foreach { r =>
+    pairs.foreach { case (h, _) =>
       // walk up to the first memoized ancestor or a root (stack-safe),
       // then assign heights back down the walked path. Step cap = cycle
       // guard: a legitimate walk visits each block at most once, so more
       // steps than blocks proves a parent-pointer loop (corrupt input —
       // real block hashes can't cycle) and the walk must error, not hang.
       var stack = List.empty[String]
-      var cur = r.getString(0)
+      var cur = h
       var steps = 0
       while (!memo.contains(cur) && parentOf.contains(cur)) {
         steps += 1
@@ -96,23 +97,31 @@ object BestChain {
     (memo, onChain)
   }
 
-  /** One-pass in-memory resolution of a collected parent forest. Shared by
-    * [[annotate]]'s driver route and [[annotateDistributed]]'s
-    * broadcast-envelope route — identical semantics by construction.
+  /** [[annotateDistributed]]'s envelope route: the collected block rows
+    * (every column), resolved in one in-memory walk and returned as a
+    * driver-built frame — `blocks`' columns with `hash` first, then
+    * `height` and `is_on_best_chain`, the column order (and nullability)
+    * of the doubling route's join. A null-hash row drops (the doubling
+    * route's dictionary encode drops it before the walk, so it never
+    * competes for the tip) and a duplicated hash keeps one output row per
+    * input row.
     */
-  private def annotateInMemory(
-      blocks: DataFrame, pairs: Array[org.apache.spark.sql.Row]): DataFrame = {
-    if (pairs.isEmpty) return blocks
-      .withColumn("height", lit(0).cast("int"))
-      .withColumn("is_on_best_chain", lit(false))
-      .where(lit(false))
-    val (memo, onChain) = resolveInMemory(pairs)
-    val spark = blocks.sparkSession
-    // phantom memo entries drop out of the join (they are not block rows)
-    val ann = spark.createDataFrame(
-      memo.toSeq.map { case (k, v) => (k, v, onChain.contains(k)) })
-      .toDF("hash", "height", "is_on_best_chain")
-    blocks.join(ann, "hash")
+  private def annotateInMemory(blocks: DataFrame, rows: Array[Row]): DataFrame = {
+    val schema = blocks.schema
+    val hashIdx = schema.fieldIndex("hash")
+    val parentIdx = schema.fieldIndex("parent_hash")
+    val rest = schema.indices.filter(_ != hashIdx)
+    val keyed = rows.filterNot(_.isNullAt(hashIdx))
+    val (memo, onChain) = resolveInMemory(
+      keyed.map(r => (r.getString(hashIdx), r.getString(parentIdx))))
+    val out = keyed.toSeq.map { r =>
+      val h = r.getString(hashIdx)
+      Row.fromSeq(h +: rest.map(r.get) :+ memo(h) :+ onChain.contains(h))
+    }
+    ChainOps.driverFrame(blocks.sparkSession, out, StructType(
+      schema(hashIdx) +: rest.map(schema(_)) :+
+        StructField("height", IntegerType) :+
+        StructField("is_on_best_chain", BooleanType, nullable = false)))
   }
 
   /** (hash, height) of the best chain over GENESIS-ROOTED blocks only — the
@@ -142,39 +151,22 @@ object BestChain {
       blocks: DataFrame, envelope: Int)
       : (DataFrame, Option[(Set[String], Map[String, String])]) = {
     import ChainOps.traced
-    val spark = blocks.sparkSession
-    import spark.implicits._
     val probe = traced("bestChainConnected: envelope probe")(blocks
       .select("hash", "parent_hash")
-      .limit(envelope + 1).collect())
+      .limit(envelope + 1).collect()
+      .map(r => (r.getString(0), r.getString(1))))
     if (probe.length <= envelope) {
-      if (probe.isEmpty)
-        return (Seq.empty[(String, Int)].toDF("hash", "height"),
-          Some((Set.empty, Map.empty)))
       val (memo, onChain) = traced("bestChainConnected: in-memory walk")(
         resolveInMemory(probe, genesisRootedTips = true))
-      val ids = probe.iterator.map(_.getString(0)).toSet
+      val ids = probe.iterator.map(_._1).toSet
       val rows = memo.iterator.collect {
-        case (k, v) if onChain.contains(k) && ids.contains(k) => (k, v)
-      }.toArray
-      val dangling = probe.iterator
-        .flatMap(r => Option(r.getString(1))).filterNot(ids).toSet
-      val pending = probe.iterator.collect {
-        case r if !onChain.contains(r.getString(0)) =>
-          r.getString(0) -> r.getString(1)
-      }.toMap
-      // parallelize, don't LocalRelation: a chain-sized local relation
-      // converts to internal rows single-threaded ON THE DRIVER when the
-      // caller materializes it (measured ~17 s of the 30× bootstrap's final
-      // batch for 1.5M rows); an RDD splits the same conversion across the
-      // executor threads.
-      val slices = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, rows.length))
-      val chainDf =
-        if (rows.isEmpty) Seq.empty[(String, Int)].toDF("hash", "height")
-        else spark.sparkContext.parallelize(rows.toIndexedSeq, slices)
-          .toDF("hash", "height")
-      (chainDf, Some((dangling, pending)))
+        case (k, v) if onChain.contains(k) && ids.contains(k) => Row(k, v)
+      }.toSeq
+      val dangling = probe.iterator.flatMap(p => Option(p._2)).filterNot(ids).toSet
+      val pending = probe.iterator.filterNot(p => onChain.contains(p._1)).toMap
+      (ChainOps.driverFrame(blocks.sparkSession, rows, StructType(Seq(
+          StructField("hash", StringType), StructField("height", IntegerType, nullable = false)))),
+        Some((dangling, pending)))
     } else {
       // No dangling reference in bronze ⇒ every root is a null-parent block
       // ⇒ connected == total, and the classification pass (a SECOND
@@ -217,14 +209,16 @@ object BestChain {
   /** The scale path, route-picked on the block count with the same size cut
     * as Spark's own broadcast-vs-shuffle join decision:
     *
-    *  - **≤ [[graft.operators.ChainOps.BroadcastMaxRows]]**: the parent
-    *    forest fits the broadcast envelope (the exact build-side collect a
-    *    BroadcastExchange performs), so the whole resolution — heights AND
-    *    membership — is ONE in-memory pass over the collected pairs
-    *    ([[annotateInMemory]], identical to the driver route) instead of
-    *    O(log depth) distributed jobs of fixed stage latency. Chain walks
-    *    are inherently sequential (each hop needs the previous hash), so
-    *    the in-memory pass is the optimal plan whenever the forest ships.
+    *  - **≤ [[graft.operators.ChainOps.BroadcastMaxRows]]**: the block set
+    *    fits the broadcast envelope (the exact build-side collect a
+    *    BroadcastExchange performs), so the probe that proves it already
+    *    holds every row, and the whole resolution — heights AND membership
+    *    — is ONE in-memory pass over them ([[annotateInMemory]]) instead of
+    *    O(log depth) distributed jobs of fixed stage latency. The result is
+    *    built on the driver: no join back to `blocks`, so its consumers
+    *    never re-read the input. Chain walks are inherently sequential
+    *    (each hop needs the previous hash), so the in-memory pass is the
+    *    optimal plan whenever the forest ships.
     *  - **above it**: O(log_Arity depth) self-join doubling rounds for
     *    heights, then membership = the tip's ancestor set via the
     *    ancestor-doubling loop over the jump tables retained from the
@@ -238,7 +232,8 @@ object BestChain {
     *
     * The probe collects at most envelope+1 rows (an early-terminating
     * limit), so the above-envelope path never ships more than the envelope
-    * before taking the loop.
+    * before taking the loop. It collects every column of `blocks`: callers
+    * pass narrow header frames — (hash, parent_hash, ts[, nonce_order]).
     */
   def annotateDistributed(blocks: DataFrame): DataFrame = {
     import ChainOps.traced
@@ -250,11 +245,11 @@ object BestChain {
     // parallelism passes. A count-over-limit probe plans as
     // LocalLimit→Exchange→count — every partition computes in ONE job, and
     // at a 1.5M-block corpus that max-concurrency parse storm OOMed a heap
-    // the incremental probe survives. The ~130 MB collect at the 2²⁰
-    // envelope is the exact build-side cost a BroadcastExchange would pay.
-    val probe = traced("annotate: envelope probe")(blocks
-      .select("hash", "parent_hash")
-      .limit(envelope + 1).collect())
+    // the incremental probe survives. At the 2²⁰ envelope a header row
+    // (hash, parent, ts) is ~300 B on the driver, ~300 MB in all: the
+    // build-side cost a BroadcastExchange of the block set would pay.
+    val probe = traced("annotate: envelope probe")(
+      blocks.limit(envelope + 1).collect())
     if (probe.length <= envelope)
       return annotateInMemory(blocks, probe)
 
@@ -274,7 +269,6 @@ object BestChain {
     // lexicographically smallest hash — the same (dist desc, hash asc)
     // order the TakeOrdered applied (hex hashes are ASCII, so JVM string
     // ordering equals Spark's binary collation).
-    import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
     val encState = blocks.sparkSession.createDataFrame(resolved.resultRdd,
       StructType(Seq(StructField("id", LongType), StructField("ptr", LongType),
         StructField("dist", LongType), StructField("done", BooleanType))))

@@ -1,8 +1,9 @@
 package graft.chain
 
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{ChainOps, UnionFind, VertexDictionary}
@@ -14,21 +15,24 @@ import graft.operators.{ChainOps, UnionFind, VertexDictionary}
   *
   * Co-spend heuristic: addresses funding the same transaction belong to one
   * wallet. Edges are a star per tx (each funder → the tx's min funder), so
-  * edge count is linear in inputs, not quadratic per tx. The edge DERIVATION
-  * (distincts + hub join) is always distributed; the components step routes
-  * on the materialized edge count with the same size cut as a
-  * broadcast-vs-shuffle join decision (mirror of
+  * edge count is linear in inputs, not quadratic per tx. Routing uses the
+  * same size cut as a broadcast-vs-shuffle join decision (mirror of
   * [[BestChain.annotateDistributed]]):
   *
-  *  - edge list ≤ [[ChainOps.BroadcastMaxRows]]: collect it (the exact
-  *    transfer a BroadcastExchange performs) and run driver union-find —
-  *    one pass instead of GraphX's ~6 jobs of fixed Pregel stage latency,
-  *    which dominate end-to-end time whenever the co-spend graph is small
-  *    (it usually is: vertices are DISTINCT co-spending addresses, orders
-  *    of magnitude fewer than events).
-  *  - above it: GraphX `connectedComponents` — O(diameter) supersteps of
-  *    partition-local message passing, the scalable form of the reference's
-  *    per-vertex traversals.
+  *  - distinct (tx, funder) pairs ≤ [[ChainOps.BroadcastMaxRows]]: the one
+  *    probe that proves it collects them (the exact transfer a
+  *    BroadcastExchange performs), and hubs, star edges and union-find all
+  *    run on the driver — one pass instead of a distributed derivation
+  *    ladder plus GraphX's ~6 jobs of fixed Pregel stage latency, which
+  *    dominate end-to-end time whenever the co-spend graph is small (it
+  *    usually is: vertices are DISTINCT co-spending addresses, orders of
+  *    magnitude fewer than events).
+  *  - above it: the edge derivation (distincts + hub join) runs
+  *    distributed, and the components step routes on the materialized edge
+  *    count — union-find over the collected edges when they fit, else
+  *    GraphX `connectedComponents`: O(diameter) supersteps of
+  *    partition-local message passing, the scalable form of the
+  *    reference's per-vertex traversals.
   *
   * Both routes label each component with its MIN address; GraphSpec gates
   * route equality on a forced-envelope fixture.
@@ -74,6 +78,39 @@ object WalletCluster {
     Option(lastMassBf.getAndSet(null)).foreach(_.unpersist(blocking = false))
   }
 
+  private val LabelSchema = StructType(Seq(
+    StructField("address", StringType), StructField("wallet_id", StringType)))
+
+  /** (address, wallet_id) rows on the driver as a frame. */
+  private def labelFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Iterable[(String, String)]): DataFrame =
+    ChainOps.driverFrame(spark,
+      rows.iterator.map { case (a, w) => Row(a, w) }.toSeq, LabelSchema)
+
+  /** The (tx, address) rows of `pairs` when at most `envelope` of them exist
+    * — one early-terminating probe; None above the envelope.
+    */
+  private def collectPairs(pairs: DataFrame, envelope: Int): Option[Array[(String, String)]] = {
+    val rows = pairs.limit(envelope + 1).collect()
+    if (rows.length > envelope) None
+    else Some(rows.map(r => (r.getString(0), r.getString(1))))
+  }
+
+  /** Component labels of the co-spend graph over collected (tx, address)
+    * pairs: a star per tx around its min funder, then union-find. Every
+    * address on an edge maps to its component's min address; an address on
+    * no edge is absent (a singleton). A null tx or null address adds no
+    * edge, as in the distributed derivation (its hub join and `=!=` drop
+    * them).
+    */
+  private def starLabels(pairs: Iterable[(String, String)]): Map[String, String] = {
+    val kept = pairs.filter { case (t, a) => t != null && a != null }
+    val hub = kept.groupMapReduce(_._1)(_._2)((x, y) => if (x < y) x else y)
+    UnionFind.components(kept.iterator.collect {
+      case (t, a) if a != hub(t) => (a, hub(t))
+    })
+  }
+
   /** @param addresses  one-column DF of the full address universe
     * @param txFunders  (tx_hash, src_address) distinct funding pairs
     * @return (address, wallet_id) where wallet_id = min address in the
@@ -85,10 +122,27 @@ object WalletCluster {
 
     val universe = addresses.select(col(addresses.columns.head).as("address")).distinct()
     val funders = txFunders.select(col("tx_hash"), col("src_address").as("address")).distinct()
+    // Funder-only vertices: every other address is a singleton by
+    // construction and labels itself via the final left join.
+    def labelled(labels: Map[String, String]): DataFrame = {
+      // the in-memory routes hold NO persisted state of their own — but they
+      // must still drain the register a previous DISTRIBUTED run filled, or
+      // that stale clustering stays cached for the rest of the session
+      Option(lastResult.getAndSet(null)).foreach(_.unpersist(blocking = false))
+      universe
+        .join(broadcast(labelFrame(spark, labels)), Seq("address"), "left")
+        .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id"))
+    }
+    val envelope = ChainOps.driverEnvelope
+    // Envelope route, decided on the pairs actually collected (there are
+    // at least as many pairs as star edges, so the edges fit too).
+    collectPairs(funders, envelope) match {
+      case Some(pairs) => return labelled(starLabels(pairs))
+      case None =>
+    }
     // Star per tx around the MIN funder address (any fixed hub keeps the
-    // same components; min-address makes both routes derivable from the
-    // same table). Funder-only vertices: every other address is a singleton
-    // by construction and labels itself via the final left join.
+    // same components; min-address makes every route derivable from the
+    // same table).
     val hub = funders.groupBy("tx_hash").agg(min("address").as("hub"))
     val edgeRows = funders.join(hub, "tx_hash")
       .where(col("address") =!= col("hub"))
@@ -98,20 +152,12 @@ object WalletCluster {
     // same pass), and both routes re-read the edges (collect / vid joins +
     // GraphX's internal scans).
     val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
-    val envelope = ChainOps.driverEnvelope
 
     if (nEdges <= envelope) {
       val labels = UnionFind.components(
         edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
       edgeRdd.unpersist(blocking = false)
-      // the in-memory route holds NO persisted state of its own — but it
-      // must still drain the register a previous DISTRIBUTED run filled, or
-      // that stale clustering stays cached for the rest of the session
-      Option(lastResult.getAndSet(null)).foreach(_.unpersist(blocking = false))
-      val labelDf = labels.toSeq.toDF("address", "wallet_id")
-      return universe
-        .join(broadcast(labelDf), Seq("address"), "left")
-        .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id"))
+      return labelled(labels)
     }
 
     // Dense unique vertex ids (no hash-collision risk at 100 TB); the edge
@@ -165,6 +211,15 @@ object WalletCluster {
     */
   def incrementalClusters(oldLabels: DataFrame, newFunders: DataFrame): DataFrame = {
     val old = oldLabels.select(col("address"), col("wallet_id"))
+    // Envelope route: the batch's pairs fit the driver, so the contraction,
+    // its star edges and union-find run there; the store is read by one
+    // broadcast semi-join for the batch addresses' labels, and once more
+    // for the members of labels that moved. Same delta as below.
+    collectPairs(newFunders.select(col("tx_hash"), col("src_address")).distinct(),
+        ChainOps.driverEnvelope) match {
+      case Some(pairs) => return incrementalInMemory(old, pairs)
+      case None =>
+    }
     // Both frames below are BATCH-grain (the day's funding pairs and their
     // contraction — never the store or the chain) and each is consumed
     // several times by the nested clustering (distincts, the hub self-join,
@@ -172,15 +227,13 @@ object WalletCluster {
     // Lineage roots in the immutable bronze/batch source, so the eager
     // local checkpoint risks nothing a batch retry wouldn't recover —
     // measured 2× on the catch-up drain's middle batches left lazy.
-    val funders = newFunders
-      .select(col("tx_hash"), col("src_address").as("address")).distinct()
-      .localCheckpoint(true)
+    val funders = ChainOps.localCheckpoint(newFunders
+      .select(col("tx_hash"), col("src_address").as("address")).distinct())
     // contract: funder → its stored component label (itself when unseen)
-    val contracted = funders.join(old, Seq("address"), "left")
+    val contracted = ChainOps.localCheckpoint(funders.join(old, Seq("address"), "left")
       .select(col("tx_hash"),
         coalesce(col("wallet_id"), col("address")).as("src_address"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val nodes = contracted.select(col("src_address").as("address")).distinct()
     // (contracted node → merged-component label); routing, star edges and
     // cache discipline are clusters' own
@@ -200,6 +253,39 @@ object WalletCluster {
       .select(col("address"),
         coalesce(col("new_id"), col("address")).as("wallet_id"))
     movedMembers.unionByName(newRows)
+  }
+
+  /** [[incrementalClusters]] over collected batch pairs. Null addresses
+    * follow the distributed path: contracted to themselves, on no edge, and
+    * emitted as a (null, null) new-address row.
+    */
+  private def incrementalInMemory(
+      old: DataFrame, pairs: Array[(String, String)]): DataFrame = {
+    val spark = old.sparkSession
+    val addrs = pairs.iterator.map(_._2).toSet
+    // stored label of every batch address already in the store
+    val known = addrs.filter(_ != null)
+    val stored: Map[String, String] =
+      if (known.isEmpty) Map.empty
+      else old.join(broadcast(ChainOps.driverFrame(spark,
+          known.toSeq.map(Row(_)), StructType(Seq(LabelSchema("address"))))),
+          Seq("address"), "left_semi")
+        .collect().iterator.map(r => r.getString(0) -> r.getString(1)).toMap
+    def node(a: String): String = if (a == null) null else stored.getOrElse(a, a)
+    val relabel = starLabels(pairs.iterator.map { case (t, a) => (t, node(a)) }.toSeq.distinct)
+    // contracted nodes whose label moved; stored labels among them carry
+    // their stored members along
+    val moved = relabel.filter { case (n, w) => n != w }
+    val movedMembers: Seq[(String, String)] =
+      if (moved.isEmpty) Nil
+      else old.join(broadcast(labelFrame(spark, moved)
+            .select(col("address").as("node"), col("wallet_id").as("new_id"))),
+          old("wallet_id") === col("node"))
+        .select(col("address"), col("new_id")).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1)))
+    val newRows = (addrs -- stored.keySet).toSeq.map(a =>
+      (a, if (a == null) null else relabel.getOrElse(a, a)))
+    labelFrame(spark, movedMembers ++ newRows)
   }
 
   /** REORG repair for the stored labeling — the retraction half of
@@ -326,52 +412,59 @@ object WalletCluster {
       val storedRows = storedProbe.map(r => (r.getString(0), r.getString(1)))
       val bf = bestFunders
         .select(col("tx_hash"), col("src_address").as("address"))
-      val storedAddrs = storedRows.toSeq.map(_._1).toDF("address")
       // The diff below reads fresh labels at STORED addresses only (changed
       // members re-label, vanished members self-label; new addresses are
       // never emitted), so the whole-universe labeling clusters() builds is
       // overkill here: its final pass distincts the corpus-grain universe
       // and left-joins the labels — a shuffle and a job whose only consumer
       // would be a ≤nStored-row lookup. Inline the clustering instead: the
-      // SAME min-address-hub edge derivation, and UnionFind labels by
-      // component minimum — canonical across every route. No presence pass
-      // either: a stored address with NO kept co-spend edge emits (a, a)
-      // when its label moved whether it is a kept SINGLETON (fresh label =
-      // itself) or VANISHED from the post-reorg chain (self-labeled by the
-      // output contract) — the two cases produce the same row, so the
-      // post-reorg universe is never consulted. Everything collected is
-      // structurally bounded: edges by the broadcast envelope (beyond it,
-      // the distributed clustering restricted to the broadcast stored set —
-      // a post-reorg funder universe that dwarfs the store, the
-      // ADVICE-flagged hazard, semi-joins down to ≤ nStored rows).
+      // SAME min-address-hub star edges, and UnionFind labels by component
+      // minimum — canonical across every route. No presence pass either: a
+      // stored address with NO kept co-spend edge emits (a, a) when its
+      // label moved whether it is a kept SINGLETON (fresh label = itself)
+      // or VANISHED from the post-reorg chain (self-labeled by the output
+      // contract) — the two cases produce the same row, so the post-reorg
+      // universe is never consulted. Everything collected is structurally
+      // bounded by the broadcast envelope: the distinct funding pairs when
+      // they fit (hubs, star edges and union-find then run on the driver,
+      // as in clusters' envelope route), else the distributed edge list;
+      // beyond that, the distributed clustering restricted to the stored
+      // set — a post-reorg funder universe that dwarfs the store, the
+      // ADVICE-flagged hazard, semi-joins down to ≤ nStored rows.
       val fu = bf.distinct()
-      val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
-      val edgeRows = fu.join(hubs, "tx_hash")
-        .where(col("address") =!= col("hub"))
-        .select(col("address").as("src"), col("hub").as("dst"))
-        .distinct()
-      val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
-      val freshAt: String => String =
-        if (nEdges <= driverCap) {
-          val labels = graft.operators.UnionFind.components(
-            edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
-          edgeRdd.unpersist(blocking = false)
+      val freshAt: String => String = collectPairs(fu, driverCap) match {
+        case Some(pairs) =>
+          val labels = starLabels(pairs)
           a => labels.getOrElse(a, a)
-        } else {
-          // co-spend edges outgrew the driver envelope under a tiny store
-          // (pathologically dense corpus): distributed clustering, restricted
-          // to the stored universe before it leaves the cluster. An address
-          // absent from the restricted result (vanished) self-labels — same
-          // rule as the in-memory arm.
-          edgeRdd.unpersist(blocking = false)
-          val freshRows = clusters( // clusters distincts both inputs itself
-              bf.select("address"),
-              bf.select(col("tx_hash"), col("address").as("src_address")))
-            .join(broadcast(storedAddrs), Seq("address"), "left_semi")
-            .collect()
-          val m = freshRows.iterator.map(r => r.getString(0) -> r.getString(1)).toMap
-          a => m.getOrElse(a, a)
-        }
+        case None =>
+          val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
+          val edgeRows = fu.join(hubs, "tx_hash")
+            .where(col("address") =!= col("hub"))
+            .select(col("address").as("src"), col("hub").as("dst"))
+            .distinct()
+          val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
+          if (nEdges <= driverCap) {
+            val labels = graft.operators.UnionFind.components(
+              edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
+            edgeRdd.unpersist(blocking = false)
+            a => labels.getOrElse(a, a)
+          } else {
+            // co-spend edges outgrew the driver envelope under a tiny store
+            // (pathologically dense corpus): distributed clustering,
+            // restricted to the stored universe before it leaves the
+            // cluster. An address absent from the restricted result
+            // (vanished) self-labels — same rule as the in-memory arms.
+            edgeRdd.unpersist(blocking = false)
+            val freshRows = clusters( // clusters distincts both inputs itself
+                bf.select("address"),
+                bf.select(col("tx_hash"), col("address").as("src_address")))
+              .join(broadcast(storedRows.toSeq.map(_._1).toDF("address")),
+                Seq("address"), "left_semi")
+              .collect()
+            val m = freshRows.iterator.map(r => r.getString(0) -> r.getString(1)).toMap
+            a => m.getOrElse(a, a)
+          }
+      }
       // same emission rule as the mass route's diff join, as a map pass:
       // changed labels (including unaffected components merged by
       // replacement-branch edges), and vanished members singleton. A
@@ -383,7 +476,7 @@ object WalletCluster {
         val nw = freshAt(a)
         if (nw != w) Some((a, nw)) else None
       }.toSeq
-      return (out.toDF("address", "wallet_id"), RepairRoute.Replace)
+      return (labelFrame(spark, out), RepairRoute.Replace)
     }
     // the probe said "not driver-sized": the distributed routes need the
     // exact count (mass-vs-contraction compares member fraction to it)

@@ -84,9 +84,68 @@ object ChainOps {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long) = {
     val rdd = df.rdd
-    rdd.persist(level)
+    pin(rdd.persist(level))
     val n = rdd.count() // materialize now so the previous round can be dropped
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd, n)
+  }
+
+  /** Eager local checkpoint that the calling thread's [[scoped]] block (if
+    * any) drops at its close — the form every per-batch checkpoint of the
+    * streaming maintainer takes.
+    */
+  private[graft] def localCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    cp.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => pin(l.rdd)
+      case _ =>
+    }
+    cp
+  }
+
+  /** RDDs materialized on this thread since its open [[scoped]] block began;
+    * null when none is open. Thread-confined, so a query running beside the
+    * scope on another thread never has its caches swept by it.
+    */
+  private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]]
+
+  /** Record `rdd` in the calling thread's open scope, if any. */
+  private[graft] def pin[R <: org.apache.spark.rdd.RDD[_]](rdd: R): R = {
+    Option(scope.get).foreach(_ += rdd)
+    rdd
+  }
+
+  /** Run `f`, then unpersist everything [[rebase]], [[rebaseCounted]],
+    * [[localCheckpoint]] and the resolve loop materialized on THIS thread
+    * meanwhile — for work whose intermediate results are all dead once it
+    * returns (a maintainer micro-batch re-opens its state from disk).
+    * Nested calls join the outer scope.
+    */
+  private[graft] def scoped[A](f: => A): A =
+    if (scope.get != null) f
+    else {
+      val pinned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+      scope.set(pinned)
+      try f
+      finally {
+        scope.remove()
+        pinned.foreach(_.unpersist(blocking = false))
+      }
+    }
+
+  /** A DataFrame over rows already on the driver, as a parallelized RDD —
+    * not a LocalRelation. Catalyst rules (ConvertToLocalRelation,
+    * checkAnalysis) walk a local relation's every row on every plan that
+    * consumes it, and it converts to internal rows single-threaded ON THE
+    * DRIVER when materialized (measured ~17 s of the 30× bootstrap's final
+    * batch for a 1.5M-row chain); an RDD splits the conversion across the
+    * executor threads.
+    */
+  private[graft] def driverFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
   }
 
   /** [[rebase]] fused with the loop's bookkeeping: the total row count AND
@@ -99,7 +158,7 @@ object ChainOps {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long, Long) = {
     val rdd = df.rdd
-    rdd.persist(level)
+    pin(rdd.persist(level))
     val (total, pending) = rdd.mapPartitions { it =>
       var t = 0L; var p = 0L
       it.foreach { r => t += 1; if (!r.getBoolean(boolIdx)) p += 1 }
@@ -218,8 +277,10 @@ object ChainOps {
       base0.select(col("id")).union(base0.select(col("parent")).where(col("parent").isNotNull)),
       level = StorageLevel.MEMORY_AND_DISK_SER)
     // every non-null parent is in the universe, so a null encoded parent is
-    // exactly a root
-    val enc = dict.encode(dict.encode(base0, "id"), "parent", joinType = "left")
+    // exactly a root. Distinct over the encoded longs: a replayed node (the
+    // same id and parent twice) must resolve once — duplicate state rows
+    // multiply every hop that lands on them, compounding down the subtree.
+    val enc = dict.encode(dict.encode(base0, "id"), "parent", joinType = "left").distinct()
     val tables = scala.collection.mutable.ArrayBuffer
       .empty[(DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]
     var (state, stateRdd, n, unresolved) = traced("resolve round 0 (init rebase)")(

@@ -39,9 +39,12 @@ object PartitionedGold {
     * so it is insensitive to task scheduling). The on-disk side's signatures
     * come from the [[sidecarPath]] sidecar written after every sync, so a
     * steady-state sync reads KBs of sidecar, not the table: both the write
-    * AND the change-detection read are O(new work), not O(history). A
-    * missing or unreadable sidecar (pre-sidecar table, manual deletion,
-    * crash mid-sidecar-write) degrades to a one-time full table scan; a
+    * AND the change-detection read are O(new work), not O(history). Both
+    * signature sets hold one row per bucket (maxHeight/bucketSize rows), so
+    * they are collected and compared as maps on the driver, and the changed
+    * buckets are selected by a predicate on the bucket column. A missing or
+    * unreadable sidecar (pre-sidecar table, manual deletion, crash
+    * mid-sidecar-write) degrades to a one-time full table scan; a
     * STALE sidecar (crash between data write and sidecar write) merely
     * re-marks the already-written buckets as changed — the rewrite is
     * idempotent, so every failure mode converges. A replayed batch
@@ -59,10 +62,13 @@ object PartitionedGold {
     val spark = gold.sparkSession
     val bucketed = withBucket(gold, heightCol, bucketSize)
     val dataCols = bucketed.columns.filterNot(_ == BucketCol).toSeq
-    def sig(df: DataFrame): DataFrame =
+    def sig(df: DataFrame): Array[Row] =
       df.groupBy(col(BucketCol)).agg(
         count(lit(1)).as("n"),
         expr(s"bit_xor(xxhash64(struct(${dataCols.map(c => s"`$c`").mkString(",")})))").as("sig"))
+        .collect()
+    def sigMap(rows: Array[Row]): Map[Any, (Long, Long)] =
+      rows.iterator.map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     def writeSidecar(sigs: Array[Row]): Unit =
       spark.createDataFrame(
         spark.sparkContext.parallelize(sigs.toSeq, 1),
@@ -77,63 +83,40 @@ object PartitionedGold {
 
     if (!fsExists(spark, path)) {
       overwriteAffected(bucketed, path)
-      val sigs = sig(bucketed).collect()
+      val sigs = sig(bucketed)
       writeSidecar(sigs)
       return sigs.map(_.get(0)).toSeq
     }
-    // Bucket counts are bounded by maxHeight/bucketSize (~100 at 1M blocks)
-    // — collected signature sets are driver-trivial at any scale.
-    val newSigRows = sig(bucketed).collect()
-    val sidecarRead: Option[DataFrame] =
-      if (fsExists(spark, sidecarPath(path)))
-        scala.util.Try(spark.read.parquet(sidecarPath(path))).toOption // half-written ⇒ None
-      else None
-    val oldSig: DataFrame = sidecarRead.getOrElse(
+    val newSigRows = sig(bucketed)
+    val newSig = sigMap(newSigRows)
+    val sidecarRows: Option[Array[Row]] =
+      if (!fsExists(spark, sidecarPath(path))) None
+      else scala.util.Try(spark.read.parquet(sidecarPath(path)) // half-written ⇒ None
+        .select(BucketCol, "n", "sig").collect()).toOption
+    val oldSig = sigMap(sidecarRows.getOrElse(
       sig(spark.read.parquet(path)
-        .select(BucketCol, dataCols: _*))) // no/bad sidecar: one-time table scan
-    val newSig = spark.createDataFrame(
-      spark.sparkContext.parallelize(newSigRows.toSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(BucketCol,
-          bucketed.schema(BucketCol).dataType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.LongType))))
-    val joined = newSig.as("nw").join(oldSig.as("od"),
-      col(s"nw.$BucketCol") <=> col(s"od.$BucketCol"), "full_outer")
-    val rows = joined.select(
-      col(s"nw.$BucketCol").as("nb"), col(s"od.$BucketCol").as("ob"),
-      col("nw.n").as("nn"), col("od.n").as("on"),
-      col("nw.sig").as("nsig"), col("od.sig").as("osig")).collect()
-    val removed = rows.filter(r => r.isNullAt(0) && !r.isNullAt(1))
+        .select(BucketCol, dataCols: _*)))) // no/bad sidecar: one-time table scan
     val changed: Seq[Any] =
-      if (removed.nonEmpty) {
+      if (oldSig.keys.exists(b => !newSig.contains(b))) {
         // cannot express deletion via dynamic overwrite: rewrite the table
         // (static overwrite clears the dir, sidecar included — rewritten below)
         bucketed.write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
         newSigRows.map(_.get(0)).toSeq
       } else {
-        val diff = rows.filter { r =>
-          !r.isNullAt(0) && (r.isNullAt(1) ||
-            r.getLong(2) != r.getLong(3) || r.getLong(4) != r.getLong(5))
-        }.map(_.get(0)).toSeq
+        val diff = newSigRows.iterator.map(_.get(0))
+          .filter(b => !oldSig.get(b).contains(newSig(b))).toSeq
         if (diff.nonEmpty) {
-          val keep = spark.createDataFrame(
-            spark.sparkContext.parallelize(diff.map(Row(_)), 1),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(
-                "cb", bucketed.schema(BucketCol).dataType))))
-          overwriteAffected(
-            bucketed.join(broadcast(keep),
-              col(BucketCol) <=> col("cb"), "left_semi"), path)
+          val (nulls, keys) = diff.partition(_ == null)
+          val inKeys = if (keys.isEmpty) lit(false) else col(BucketCol).isin(keys: _*)
+          overwriteAffected(bucketed.where(
+            if (nulls.isEmpty) inKeys else inKeys || col(BucketCol).isNull), path)
         }
         diff
       }
     // Sidecar LAST: data-then-sigs ordering is the crash-safety contract.
     // Also (re)written when it had to be derived by table scan, so a
     // missing/corrupt sidecar costs ONE scan, not one per sync.
-    if (changed.nonEmpty || sidecarRead.isEmpty) writeSidecar(newSigRows)
+    if (changed.nonEmpty || sidecarRows.isEmpty) writeSidecar(newSigRows)
     changed
   }
 

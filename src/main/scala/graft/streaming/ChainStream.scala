@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.operators.ChainOps
+
 /** Structured Streaming path (SURVEY.md §2.9) — the Spark-native form of the
   * reference's `synchronizeDatabase` loop (BlockchainToGraph.java:116–167):
   *
@@ -283,7 +285,22 @@ object ChainStream {
       prevCursor: Option[DataFrame],
       prevTipHint: Option[(String, Int)] = None,
       probeCursor: Option[DataFrame] = None,
-      frontier: Option[Frontier] = None): BestChainUpdate = {
+      frontier: Option[Frontier] = None): BestChainUpdate =
+    advanceChain(spark, bronze,
+      batch.select("hash", "parent_hash").dropDuplicates("hash")
+        .limit(BatchWalkCap + 1).collect().map(r => (r.getString(0), r.getString(1))),
+      prevCursor, prevTipHint, probeCursor, frontier)
+
+  /** [[bestChainIncremental]] over the batch's (hash, parent_hash) rows,
+    * already on the driver and unique by hash — more than [[BatchWalkCap]]
+    * of them take the full resolution.
+    */
+  private def advanceChain(
+      spark: SparkSession, bronze: DataFrame, batchRows: Array[(String, String)],
+      prevCursor: Option[DataFrame],
+      prevTipHint: Option[(String, Int)],
+      probeCursor: Option[DataFrame],
+      frontier: Option[Frontier]): BestChainUpdate = {
     def full(reason: String): BestChainUpdate = {
       // The full routes resolve the CONNECTED best chain — the reference's
       // reorder-buffer semantics end to end: they never seat an orphan
@@ -311,9 +328,8 @@ object ChainStream {
       // are a cursor scan + a local path.
       val (resolved, walked) = graft.chain.BestChain
         .bestChainConnectedWithFrontier(bronze, BootstrapWalkCap)
-      BestChainUpdate(resolved
-        .select(col("hash"), col("height").cast("int").as("height"))
-        .localCheckpoint(true),
+      BestChainUpdate(ChainOps.localCheckpoint(resolved
+        .select(col("hash"), col("height").cast("int").as("height"))),
         ChainRoute.Full(reason, walked.isDefined), None,
         walked.map { case (d, p) => Frontier(d, p) })
     }
@@ -321,17 +337,11 @@ object ChainStream {
     val cursor = prevCursor.get.select(col("hash"), col("height").cast("int").as("height"))
     // the batch must be driver-sized for the in-memory walk; micro-batches
     // are bounded by maxFilesPerTrigger, so the cap only trips on abusive
-    // inputs — which take the always-correct full path. 250k (hash, parent)
-    // rows ≈ 75 MB of driver heap — a quarter of the pending index's own
-    // budget, and comfortably above a catch-up drain's file-bounded batches
-    // (the 10× rehearsal lands ~125k blocks per batch; the old 100k cap
-    // silently routed every one of them to the full resolution).
-    val batchRows = batch.select("hash", "parent_hash")
-      .dropDuplicates("hash").limit(BatchWalkCap + 1).collect()
+    // inputs — which take the always-correct full path.
     if (batchRows.length > BatchWalkCap) return full("batch-cap")
-    val batchHashes = batchRows.map(_.getString(0)).toSet
+    val batchHashes = batchRows.map(_._1).toSet
     val parentOf: Map[String, Option[String]] =
-      batchRows.map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      batchRows.map(r => r._1 -> Option(r._2)).toMap
     // ONE cursor lookup serves membership (replayed/known blocks) and anchor
     // heights (parents the new blocks hang from): cursor ∩ (hashes ∪ parents),
     // against the PRUNED probe view when the caller provides one — a probe
@@ -340,7 +350,7 @@ object ChainStream {
     // never literal isin lists (a catch-up batch's thousands of keys would
     // blow the plan).
     import spark.implicits._
-    val probeKeys = (batchHashes ++ batchRows.flatMap(r => Option(r.getString(1)))).toSeq
+    val probeKeys = (batchHashes ++ batchRows.flatMap(r => Option(r._2))).toSeq
     val probeView = probeCursor
       .map(_.select(col("hash"), col("height").cast("int").as("height")))
       .getOrElse(cursor)
@@ -376,7 +386,7 @@ object ChainStream {
         // COMPLETENESS (bronze ⊆ chain ∪ pending), never minimality, and
         // the entry clears on the next full-route frontier refresh. On a
         // steady extend batch this set is empty and no cursor scan runs.
-        val unknown = batchRows.flatMap(r => Option(r.getString(1)))
+        val unknown = batchRows.flatMap(r => Option(r._2))
           .filterNot(p => allParent.contains(p) || danglingSet.contains(p) ||
             cursorHits.contains(p)).distinct
         if (unknown.isEmpty) Map.empty
@@ -384,10 +394,10 @@ object ChainStream {
           .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     }
     var anchors = cursorHits ++ deepHits
-    val batchNew = batchRows.filterNot(r => anchors.contains(r.getString(0)))
+    val batchNew = batchRows.filterNot(r => anchors.contains(r._1))
     if (batchNew.isEmpty)
       return BestChainUpdate(cursor, ChainRoute.Unchanged, None, frontier)
-    val newHashes = batchNew.map(_.getString(0)).toSeq
+    val newHashes = batchNew.map(_._1).toSeq
     // Frontier-free path (no stamped index): a pre-existing bronze block
     // pointing INTO the new batch = a dangling fragment being attached; its
     // heights change outside the batch and nothing tracks the fragment, so
@@ -421,7 +431,7 @@ object ChainStream {
       val needLookup = scala.collection.mutable.HashSet.empty[String]
       for (r <- batchNew) {
         var stack = List.empty[String]
-        var cur = r.getString(0)
+        var cur = r._1
         var anchorH: Option[Int] = None
         var pend = false
         // cycle guard: corrupt input whose parent pointers form a loop would
@@ -491,12 +501,12 @@ object ChainStream {
     // second-chance lookup could not place
     def frontierAfter(onChain: Set[String]): Option[Frontier] =
       frontier.map { f =>
-        val newDangling = batchRows.flatMap(r => Option(r.getString(1)))
+        val newDangling = batchRows.flatMap(r => Option(r._2))
           .filterNot(p => allParent.contains(p) || anchors.contains(p) ||
             danglingSet.contains(p)).toSet
         Frontier(
           (f.dangling -- batchHashes) ++ newDangling,
-          (f.pending ++ batchNew.map(r => r.getString(0) -> r.getString(1)))
+          (f.pending ++ batchNew)
             .removedAll(onChain))
       }
     if (heights.isEmpty) {
@@ -652,16 +662,11 @@ object ChainStream {
     // are rare) accumulates checkpoint blocks + their shuffle files for the
     // cleaner's 30-min periodic-GC default — the measured single-JVM aging
     // of the r16 30× campaign (tail batches 20–70 s on constant batch
-    // work). Assumes batches execute exclusively (Structured Streaming
-    // serializes foreachBatch per query) — a caller persisting frames
-    // CONCURRENTLY with a batch would see them swept; persist before the
-    // stream starts instead (the rehearsal legs' rinAll pattern).
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val record =
-      try walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots)
-      finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!persistedBefore.contains(id)) rdd.unpersist(blocking = false)
-      }
+    // work). The sweep covers only what THIS thread materialized: a query
+    // running beside the maintainer (the gold sink on the same feed) keeps
+    // its caches and checkpoints.
+    val record = ChainOps.scoped(
+      walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots))
     logWalletBatch(record)
     record
   }
@@ -674,9 +679,17 @@ object ChainStream {
       labelsDir: String,
       slots: Int): WalletBatch = {
     import graft.chain.WalletCluster
-    import graft.operators.ChainOps.traced
+    import ChainOps.traced
+    // The micro-batch is read ONCE: its header rows land in bronze and feed
+    // the chain walk from the same collect. Over the walk cap the batch is
+    // written as it stands and the walk's own probe routes to the full
+    // resolution.
+    val batchRows = traced("wallet: batch collect")(
+      batch.limit(BatchWalkCap + 1).collect())
+    val collected = batchRows.length <= BatchWalkCap
     traced("wallet: bronze append")(
-      batch.write.mode("append").parquet(bronzeDir))
+      (if (collected) ChainOps.driverFrame(spark, batchRows.toSeq, batch.schema) else batch)
+        .write.mode("append").parquet(bronzeDir))
     val bronze = spark.read.parquet(bronzeDir)
       .dropDuplicates("hash") // replayed appends collapse here
     val storePath = s"$labelsDir/labels"
@@ -767,8 +780,15 @@ object ChainStream {
             .map(r => r.getString(1) -> r.getString(2)).toMap)
       }
     val upd = traced("wallet: best chain")(
-      bestChainIncremental(spark, bronze, batch, prevCursorH, prevTipHint,
-        probeCursor, frontier))
+      if (!collected)
+        bestChainIncremental(spark, bronze, batch, prevCursorH, prevTipHint,
+          probeCursor, frontier)
+      else {
+        val (h, p) = (batch.schema.fieldIndex("hash"), batch.schema.fieldIndex("parent_hash"))
+        advanceChain(spark, bronze,
+          batchRows.map(r => (r.getString(h), r.getString(p))).distinctBy(_._1),
+          prevCursorH, prevTipHint, probeCursor, frontier)
+      })
     val route = upd.route
     val unchanged = route match { case ChainRoute.Unchanged => true; case _ => false }
     // Slot assignment is a pure function of (address, slots), so the store
@@ -871,8 +891,8 @@ object ChainStream {
           // by the chain, KBs–MBs), so one eager checkpoint apiece beats
           // re-running the chain × chain set-diff join per consumer.
           val prevBest = prevCursorAny.get.select("hash")
-          val inv = prevBest.join(bestHashes, Seq("hash"), "left_anti").localCheckpoint(true)
-          val arr = bestHashes.join(prevBest, Seq("hash"), "left_anti").localCheckpoint(true)
+          val inv = ChainOps.localCheckpoint(prevBest.join(bestHashes, Seq("hash"), "left_anti"))
+          val arr = ChainOps.localCheckpoint(bestHashes.join(prevBest, Seq("hash"), "left_anti"))
           nArrived = arr.count(); nInvalidated = inv.count() // local, checkpointed
           (inv, arr)
       }
@@ -895,7 +915,7 @@ object ChainStream {
             stored,
             fundersOf(spark, bronze.join(invalidated, Seq("hash"), "left_semi")),
             bestFunders)
-          Some((rows.localCheckpoint(true), repairRoute))
+          Some((ChainOps.localCheckpoint(rows), repairRoute))
         }
       val repairChanges = repair.map(_._1)
       val afterRepair = repairChanges.fold(stored)(upsert(stored, _))
@@ -904,10 +924,9 @@ object ChainStream {
       // corpus-grain scan a quiet fallback batch should never pay)
       val delta =
         if (nArrived == 0L) Seq.empty[(String, String)].toDF("address", "wallet_id")
-        else traced("wallet: incremental")(WalletCluster.incrementalClusters(
-          afterRepair,
-          fundersOf(spark, bronze.join(arrived, Seq("hash"), "left_semi")))
-          .localCheckpoint(true))
+        else traced("wallet: incremental")(ChainOps.localCheckpoint(
+          WalletCluster.incrementalClusters(afterRepair,
+            fundersOf(spark, bronze.join(arrived, Seq("hash"), "left_semi")))))
       // combined changed-row set vs the ON-DISK store
       val changes = repairChanges.fold(delta)(upsert(_, delta))
       val slotted = changes.withColumn(bucket, slotOf(col("address")))
@@ -918,13 +937,13 @@ object ChainStream {
         // slot-sized, not store-sized, and breaks the cycle of reading
         // the path being overwritten. Explicit schema: the store can be
         // legitimately empty (see the bootstrapping read above).
-        val content = spark.read.schema(WalletStoreSchema).parquet(storePath)
-          .select("address", "wallet_id")
-          .withColumn(bucket, slotOf(col("address")))
-          .where(col(bucket).isin(changedSlots.map(Integer.valueOf): _*))
-          .join(changes.select("address"), Seq("address"), "left_anti")
-          .unionByName(slotted)
-          .localCheckpoint(true)
+        val content = ChainOps.localCheckpoint(
+          spark.read.schema(WalletStoreSchema).parquet(storePath)
+            .select("address", "wallet_id")
+            .withColumn(bucket, slotOf(col("address")))
+            .where(col(bucket).isin(changedSlots.map(Integer.valueOf): _*))
+            .join(changes.select("address"), Seq("address"), "left_anti")
+            .unionByName(slotted))
         graft.sinks.PartitionedGold.overwriteAffected(content, storePath, bucket)
       }
       WalletBatch(Some(route), nArrived, nInvalidated, repair.map(_._2))
@@ -1089,9 +1108,14 @@ object ChainStream {
   private[graft] def BootstrapWalkCap: Int =
     sys.props.get("graft.bootstrapWalkCap").map(_.toInt).getOrElse(2000000)
 
-  /** Driver-side cap on the per-batch (hash, parent) collect that feeds the
-    * incremental walk — batches above it take the always-correct full
-    * resolution.
+  /** Driver-side cap on the per-batch collect that feeds the incremental
+    * walk (and, in [[walletLabelsBatch]], the bronze append of the same
+    * rows) — batches above it take the always-correct full resolution.
+    * 250k header rows (hash, parent, ts) ≈ 75 MB of driver heap — a
+    * quarter of the pending index's own budget, and comfortably above a
+    * catch-up drain's file-bounded batches (the 10× rehearsal lands ~125k
+    * blocks per batch; the old 100k cap silently routed every one of them
+    * to the full resolution).
     */
   private[graft] val BatchWalkCap = 250000
 
@@ -1119,9 +1143,8 @@ object ChainStream {
         val prefix = cursorPrune(prevCursor.get, anchorH)
           .where(col("height") <= anchorH)
           .select("hash", "height")
-        val content = graft.sinks.PartitionedGold.withBucket(
-            prefix.unionByName(pathDf), "height", CursorBucketSize)
-          .localCheckpoint(true)
+        val content = ChainOps.localCheckpoint(graft.sinks.PartitionedGold.withBucket(
+            prefix.unionByName(pathDf), "height", CursorBucketSize))
         graft.sinks.PartitionedGold.overwriteAffected(content, cursorPath)
       case _ =>
         // The "unchanged" route only reaches here during a re-bootstrap
@@ -1136,7 +1159,7 @@ object ChainStream {
         if (unchanged && prevCursor.exists(_.columns.contains(bucketCol))) return
         // checkpoint wherever the plan reads cursorPath (migration cases) —
         // the full-resolution route is already checkpointed in the resolver
-        val src = (if (readsCursorPath) upd.best.localCheckpoint(true) else upd.best)
+        val src = (if (readsCursorPath) ChainOps.localCheckpoint(upd.best) else upd.best)
           .select(col("hash"), col("height").cast("int").as("height"))
         val newBuckets = graft.sinks.PartitionedGold.withBucket(
           src, "height", CursorBucketSize)

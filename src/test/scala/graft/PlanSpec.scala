@@ -220,4 +220,18 @@ class PlanSpec extends SparkSpec {
     val p = rows.queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
+
+  test("annotate inside the envelope collects once: no file scan, no local relation") {
+    import spark.implicits._
+    // the result is built on the driver from the probe's rows, so consuming
+    // it (the gold sink's signature pass and write) never re-reads blocks
+    val dir = java.nio.file.Files.createTempDirectory("graft-annotate-plan").toString
+    Seq(("g", null: String, 1L), ("a", "g", 2L), ("b", "a", 3L), ("x", "g", 4L))
+      .toDF("hash", "parent_hash", "ts").write.mode("overwrite").parquet(dir)
+    val ann = graft.chain.BestChain.annotate(spark.read.parquet(dir))
+    val p = ann.queryExecution.executedPlan.toString
+    assert(!p.contains("FileScan") && !p.contains("Scan parquet") &&
+      !p.contains("LocalTableScan"), p)
+    assert(ann.where($"is_on_best_chain").count() == 3)
+  }
 }

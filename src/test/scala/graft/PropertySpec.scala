@@ -133,6 +133,35 @@ class PropertySpec extends SparkSpec {
       }) finally sys.props.remove("graft.broadcastMaxRows")
   }
 
+  test("annotate's driver-built frame equals the doubling route (duplicates, null hashes, extra column)") {
+    // The envelope route builds its result on the driver instead of joining
+    // back to the input, so the join's semantics are pinned against the
+    // doubling route's: replayed rows (same hash and parent, another ts)
+    // keep one output row each, null-hash rows drop and never compete for
+    // the tip, dangling parents count their one hop — and the frame has the
+    // same columns in the same order, with the same types and nullability.
+    import spark.implicits._
+    Seq(forestGen, forestWithDanglingGen).foreach(g =>
+      forAllSeeded(g, 6) { nodes =>
+        val base = nodes.zipWithIndex.map { case ((h, p), i) => (h, p.orNull, i.toLong) }
+        val replays = base.zipWithIndex.collect {
+          case ((h, p, _), i) if i % 3 == 1 => (h, p, 1000L + i)
+        }
+        val nullHashes = Seq((null: String, base.last._1, 2000L), (null: String, null: String, 2001L))
+        val df = (base ++ replays ++ nullHashes).toDF("hash", "parent_hash", "ts")
+        def rows(d: org.apache.spark.sql.DataFrame) =
+          d.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+        val walk = BestChain.annotateDistributed(df)
+        sys.props("graft.broadcastMaxRows") = "1"
+        val doubling = try BestChain.annotateDistributed(df)
+        finally sys.props.remove("graft.broadcastMaxRows")
+        assert(walk.schema == doubling.schema,
+          s"${walk.schema.treeString} vs ${doubling.schema.treeString}")
+        assert(rows(walk) == rows(doubling), s"nodes=$nodes")
+        assert(rows(walk).length == base.length + replays.length)
+      })
+  }
+
   test("dangling-parent heights: all three routes count the unresolvable hop") {
     import spark.implicits._
     // b1's parent was never seen as a block; b3 is a true (null-parent) root.
@@ -414,6 +443,31 @@ class PropertySpec extends SparkSpec {
         s"upsert != full: base=$baseTxs batch=$batchTxs delta=$delta")
       // minimality: every delta row is a real change (new or relabeled)
       assert(delta.forall { case (a, w) => !stored.get(a).contains(w) })
+    }
+  }
+
+  test("property: incrementalClusters' driver route equals its distributed route (incl. null funders)") {
+    import spark.implicits._
+    import graft.chain.WalletCluster
+    val txGen = Gen.choose(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0, 14)).map(_.distinct.map(i => f"a$i%02d")))
+    val txsGen = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, txGen))
+    forAllSeeded(Gen.zip(txsGen, txsGen), 8) { case (baseTxs, batchTxs) =>
+      def pairs(txs: Seq[Seq[String]], tag: String) =
+        txs.zipWithIndex.flatMap { case (addrs, i) => addrs.map(a => (s"$tag$i", a)) }
+      val base = pairs(baseTxs, "b").toDF("tx_hash", "src_address")
+      // a null funder beside a real one, and one alone on its own tx
+      val batch = (pairs(batchTxs, "n") ++ batchTxs.headOption.map(_ => ("n0", null: String)) ++
+        Seq(("nz", null: String))).toDF("tx_hash", "src_address")
+      val stored = WalletCluster.clusters(base.select(col("src_address").as("address")), base)
+        .localCheckpoint(true)
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => (Option(r.getString(0)), Option(r.getString(1)))).sorted.toSeq
+      val driver = rows(WalletCluster.incrementalClusters(stored, batch))
+      sys.props("graft.broadcastMaxRows") = "0"
+      val distributed = try rows(WalletCluster.incrementalClusters(stored, batch))
+      finally sys.props.remove("graft.broadcastMaxRows")
+      assert(driver == distributed, s"base=$baseTxs batch=$batchTxs")
     }
   }
 

@@ -719,6 +719,46 @@ class StreamingSpec extends SparkSpec {
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1"))
   }
 
+  test("wallet batch sweep drops only its own thread's materializations: a frame cached beside it survives") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-batch-sweep").toString
+    val sc = spark.sparkContext
+    // a query running beside the maintainer (the gold sink on the same
+    // feed) caches a frame on ITS thread while a wallet batch is in flight
+    var beside: org.apache.spark.rdd.RDD[_] = null
+    def fundersOf(s: org.apache.spark.sql.SparkSession,
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      if (beside == null) {
+        val t = new Thread(() => {
+          beside = graft.operators.ChainOps.rebase((0 until 10).toDF("x"))._2
+        })
+        t.start(); t.join()
+      }
+      df.select(explode(col("txs")).as("t"))
+        .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    }
+    def step(rows: Seq[(String, String, Long, Seq[(String, Seq[String])])]) = {
+      val before = sc.getPersistentRDDs.keySet
+      val rec = ChainStream.walletLabelsBatch(spark,
+        rows.toDF("hash", "parent_hash", "ts", "txs"), s"$tmp/bronze", fundersOf,
+        s"$tmp/labels", 8)
+      val left = sc.getPersistentRDDs.keySet -- before - beside.id
+      assert(left.isEmpty, s"${rec.routeName} batch left ${left.size} materializations cached")
+      assert(sc.getPersistentRDDs.contains(beside.id),
+        s"${rec.routeName} batch swept a frame cached on another thread")
+      rec
+    }
+    // bootstrap (checkpointed full resolution), then a funded tip extension
+    // (checkpointed delta, slot content and cursor buckets)
+    assert(step(Seq(
+      ("g", null, 1000L, Seq(("t1", Seq("a1", "a2")))),
+      ("a", "g", 1100L, Seq.empty[(String, Seq[String])]))).storeBootstrap)
+    assert(step(Seq(("b", "a", 1200L, Seq(("t2", Seq("a2", "a3")))))).routeName == "extend")
+    assert(spark.read.parquet(s"$tmp/labels/labels").select("wallet_id").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq("a1"))
+    beside.unpersist(blocking = true)
+  }
+
   test("fallback cursor write is a changed-bucket diff: quiet fallbacks write nothing, extensions touch only the tip bucket") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-cursor-diff").toString
