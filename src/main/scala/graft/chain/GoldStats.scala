@@ -113,13 +113,15 @@ object GoldStats {
     * expands for tx counts and the self-churn count
     * (AddressBetweenAddressTransactionCount, BlockchainToGraph.java:870–882)
     * is a plain conditional count. The counterparty distincts
-    * (BlockchainToGraph.java:950–983) join each side's pair keys against
-    * the opposite role's participant list — bucket-aligned — then one
-    * role-tagged dedup feeds both counts from a single grouped pass. On
-    * bucketed silver NOTHING shuffles until the address grain: three
-    * address-hash exchanges total, vs 6 aggregates and a 6-way join chain
-    * done naively — at 100 TB that removes every exchange on the widest
-    * (pair/event) tables.
+    * (BlockchainToGraph.java:950–983) both read ONE flow-pair set: F =
+    * distinct (funder f, recipient r) over inputs ⋈ outputs on tx_hash, built
+    * once (bucket-aligned on tx_hash). A recipient's input_addr_count is its
+    * F rows with a non-null funder; a funder's output_addr_count is its F
+    * rows with a non-null recipient — one grouped pass over both
+    * projections. So the per-tx funder × recipient product is built once,
+    * not once per role, and no counterparty side re-joins the context. On
+    * bucketed silver NOTHING shuffles until the pair/address grain — at
+    * 100 TB that removes every exchange on the widest (event) tables.
     */
   def addressStats(cTxs: DataFrame, rin: DataFrame, outs: DataFrame): DataFrame = {
     val ctxTs = cTxs.select("tx_hash", "ts")
@@ -147,22 +149,21 @@ object GoldStats {
       max("ts_s").as("last_spend"),
       count(when(col("has_r") && col("has_s"), lit(1))).as("between_addr_tx_count"))
 
-    // Distinct counterparties per role: funders of the txs that paid me /
-    // recipients of the txs I funded. Null counterparties are dropped up
-    // front (countDistinct ignores nulls) so the role-tagged dedup + one
-    // conditional-count pass is exactly two COUNT(DISTINCT cp)s.
-    val funders = rin.select(col("tx_hash"), col("src_address").as("cp"))
-      .where(col("cp").isNotNull).distinct()
-    val recips = outs.select(col("tx_hash"), col("address").as("cp"))
-      .where(col("cp").isNotNull).distinct()
-    val cpPairs = recvA.select("tx_hash", "address").join(funders, "tx_hash")
-      .select(col("address"), col("cp"), lit("in").as("role"))
-      .unionByName(spendA.select("tx_hash", "address").join(recips, "tx_hash")
-        .select(col("address"), col("cp"), lit("out").as("role")))
-      .distinct()
-    val cpCounts = cpPairs.groupBy("address").agg(
-      count(when(col("role") === "in", lit(1))).as("input_addr_count"),
-      count(when(col("role") === "out", lit(1))).as("output_addr_count"))
+    // Distinct counterparties per role from one flow-pair set: the funders
+    // of the txs that paid me / the recipients of the txs I funded. A pair
+    // with a null side counts for its other side only (countDistinct
+    // ignores nulls); both sides null counts for nobody.
+    val flows = rin.select(col("tx_hash"), col("src_address").as("f"))
+      .join(outs.select(col("tx_hash"), col("address").as("r")), "tx_hash")
+      .where(col("f").isNotNull || col("r").isNotNull)
+      .select("f", "r").distinct()
+    val cpCounts = flows.select(col("r").as("address"),
+        col("f").isNotNull.as("in"), lit(false).as("out"))
+      .unionByName(flows.select(col("f").as("address"),
+        lit(false).as("in"), col("r").isNotNull.as("out")))
+      .groupBy("address").agg(
+        count(when(col("in"), lit(1))).as("input_addr_count"),
+        count(when(col("out"), lit(1))).as("output_addr_count"))
 
     perAddr
       .join(cpCounts, Seq("address"), "left")

@@ -315,11 +315,14 @@ object WalletCluster {
     * push down to the bronze scan — the same rare-path bronze read the
     * partitioned gold sink's reorg recompute performs.
     *
-    * NOT handled here: txs present ONLY in the replacement blocks and
-    * funded entirely by unaffected addresses — those are ordinary NEW
-    * transactions; feed them through [[incrementalClusters]] after this
-    * repair (the property suite gates exactly that composition against a
-    * full recompute of the post-reorg chain).
+    * Txs present ONLY in the replacement blocks and funded entirely by
+    * unaffected addresses are ordinary NEW transactions. The replace route
+    * handles them too: it clusters the whole post-reorg chain, so its
+    * output alone equals a full recompute of that chain, new addresses
+    * included. The noop, mass and contraction routes do not: feed those
+    * txs through [[incrementalClusters]] after them (the property suite
+    * gates both compositions against a full recompute of the post-reorg
+    * chain).
     *
     * ROUTE ECONOMICS: the contraction route is O(affected) in DATA but pays
     * a fixed ladder of ~10 jobs (affected probe, member materialization,
@@ -352,7 +355,10 @@ object WalletCluster {
     *         (address, wallet_id) only for stored addresses whose label
     *         differs from `oldLabels` — split members that re-label, and
     *         members of unaffected components whose label moves through a
-    *         merge. Upsert into the store; a row equal to its stored label
+    *         merge. New addresses are never emitted, except on the replace
+    *         route: there every post-reorg funder address missing from the
+    *         store is emitted with its label (a null funder as (null,
+    *         null)). Upsert into the store; a row equal to its stored label
     *         is never emitted. A member address absent from the post-reorg
     *         chain re-labels to itself — semantically a one-address wallet;
     *         the next full recompute drops it with the rest of the vanished
@@ -372,8 +378,9 @@ object WalletCluster {
     // recompute this route is measured against) + two driver-sized collects;
     // r15's measured premium over the full recompute on small stores — the
     // corpus-grain bestFunders materialization plus the 3-way diff join of
-    // the mass route below — is gone. Output contract unchanged: only
-    // genuinely changed rows, vanished affected members self-labeled.
+    // the mass route below — is gone. Output: genuinely changed rows,
+    // vanished affected members self-labeled, and the post-reorg chain's
+    // new addresses with their labels.
     //
     // ONE bounded probe answers the routing question AND (on the replace
     // path) IS the store snapshot the diff needs: collecting up to
@@ -412,59 +419,74 @@ object WalletCluster {
       val storedRows = storedProbe.map(r => (r.getString(0), r.getString(1)))
       val bf = bestFunders
         .select(col("tx_hash"), col("src_address").as("address"))
-      // The diff below reads fresh labels at STORED addresses only (changed
-      // members re-label, vanished members self-label; new addresses are
-      // never emitted), so the whole-universe labeling clusters() builds is
-      // overkill here: its final pass distincts the corpus-grain universe
-      // and left-joins the labels — a shuffle and a job whose only consumer
-      // would be a ≤nStored-row lookup. Inline the clustering instead: the
-      // SAME min-address-hub star edges, and UnionFind labels by component
-      // minimum — canonical across every route. No presence pass either: a
-      // stored address with NO kept co-spend edge emits (a, a) when its
-      // label moved whether it is a kept SINGLETON (fresh label = itself)
-      // or VANISHED from the post-reorg chain (self-labeled by the output
-      // contract) — the two cases produce the same row, so the post-reorg
-      // universe is never consulted. Everything collected is structurally
-      // bounded by the broadcast envelope: the distinct funding pairs when
-      // they fit (hubs, star edges and union-find then run on the driver,
-      // as in clusters' envelope route), else the distributed edge list;
-      // beyond that, the distributed clustering restricted to the stored
-      // set — a post-reorg funder universe that dwarfs the store, the
-      // ADVICE-flagged hazard, semi-joins down to ≤ nStored rows.
+      // The diff reads fresh labels at STORED addresses (changed members
+      // re-label, vanished members self-label) and at every post-reorg
+      // funder address the store lacks — the replacement branch's new
+      // addresses, which get their label from the same clustering, so the
+      // caller needs no incremental pass over the arrivals. A null funder
+      // is never stored: it gives the distributed path's (null, null) row.
+      // The whole-universe labeling clusters() builds is overkill here: its
+      // final pass left-joins the labels onto the universe — a shuffle and a
+      // job whose only consumer is this lookup. Inline the clustering
+      // instead: the SAME min-address-hub star edges, and UnionFind labels
+      // by component minimum — canonical across every route. No presence
+      // pass for stored addresses either: one with NO kept co-spend edge
+      // emits (a, a) when its label moved whether it is a kept SINGLETON
+      // (fresh label = itself) or VANISHED from the post-reorg chain
+      // (self-labeled by the output contract) — the two cases produce the
+      // same row. Everything collected is structurally bounded by the
+      // broadcast envelope: the distinct funding pairs when they fit (hubs,
+      // star edges and union-find then run on the driver, as in clusters'
+      // envelope route), else the distributed edge list; beyond that, the
+      // distributed clustering, whose rows at stored addresses are
+      // collected (≤ nStored) — a post-reorg funder universe that dwarfs
+      // the store, the ADVICE-flagged hazard, never reaches the driver.
+      val storedAddrs = storedRows.iterator.map(_._1).filter(_ != null).toSet
+      def storedFrame = broadcast(storedAddrs.toSeq.toDF("address"))
+      def isNew(a: String) = a == null || !storedAddrs.contains(a)
       val fu = bf.distinct()
-      val freshAt: String => String = collectPairs(fu, driverCap) match {
-        case Some(pairs) =>
-          val labels = starLabels(pairs)
-          a => labels.getOrElse(a, a)
-        case None =>
-          val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
-          val edgeRows = fu.join(hubs, "tx_hash")
-            .where(col("address") =!= col("hub"))
-            .select(col("address").as("src"), col("hub").as("dst"))
-            .distinct()
-          val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
-          if (nEdges <= driverCap) {
-            val labels = graft.operators.UnionFind.components(
-              edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
-            edgeRdd.unpersist(blocking = false)
-            a => labels.getOrElse(a, a)
-          } else {
-            // co-spend edges outgrew the driver envelope under a tiny store
-            // (pathologically dense corpus): distributed clustering,
-            // restricted to the stored universe before it leaves the
-            // cluster. An address absent from the restricted result
-            // (vanished) self-labels — same rule as the in-memory arms.
-            edgeRdd.unpersist(blocking = false)
-            val freshRows = clusters( // clusters distincts both inputs itself
+      val (freshAt, newRows): (String => String, DataFrame) =
+        collectPairs(fu, driverCap) match {
+          case Some(pairs) =>
+            val labels = starLabels(pairs)
+            val at = (a: String) => if (a == null) null else labels.getOrElse(a, a)
+            (at, labelFrame(spark, pairs.iterator.map(_._2).filter(isNew).toSet.map(
+              (a: String) => (a, at(a)))))
+          case None =>
+            val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
+            val edgeRows = fu.join(hubs, "tx_hash")
+              .where(col("address") =!= col("hub"))
+              .select(col("address").as("src"), col("hub").as("dst"))
+              .distinct()
+            val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
+            // new addresses are found distributed on both arms below: the
+            // post-reorg universe may dwarf the driver envelope
+            val newAddrs = fu.select("address").distinct()
+              .join(storedFrame, Seq("address"), "left_anti")
+            if (nEdges <= driverCap) {
+              val labels = graft.operators.UnionFind.components(
+                edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
+              edgeRdd.unpersist(blocking = false)
+              ((a: String) => labels.getOrElse(a, a),
+                newAddrs.join(broadcast(labelFrame(spark, labels)), Seq("address"), "left")
+                  .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id")))
+            } else {
+              // co-spend edges outgrew the driver envelope under a tiny store
+              // (pathologically dense corpus): distributed clustering. An
+              // address absent from its stored-address rows (vanished)
+              // self-labels — same rule as the in-memory arms.
+              edgeRdd.unpersist(blocking = false)
+              val fresh = clusters( // clusters distincts both inputs itself
                 bf.select("address"),
                 bf.select(col("tx_hash"), col("address").as("src_address")))
-              .join(broadcast(storedRows.toSeq.map(_._1).toDF("address")),
-                Seq("address"), "left_semi")
-              .collect()
-            val m = freshRows.iterator.map(r => r.getString(0) -> r.getString(1)).toMap
-            a => m.getOrElse(a, a)
-          }
-      }
+              val m = fresh.join(storedFrame, Seq("address"), "left_semi").collect()
+                .iterator.map(r => r.getString(0) -> r.getString(1)).toMap
+              ((a: String) => m.getOrElse(a, a),
+                fresh.join(newAddrs, Seq("address"), "left_semi")
+                  .unionByName(newAddrs.where(col("address").isNull)
+                    .select(col("address"), col("address").as("wallet_id"))))
+            }
+        }
       // same emission rule as the mass route's diff join, as a map pass:
       // changed labels (including unaffected components merged by
       // replacement-branch edges), and vanished members singleton. A
@@ -476,7 +498,7 @@ object WalletCluster {
         val nw = freshAt(a)
         if (nw != w) Some((a, nw)) else None
       }.toSeq
-      return (labelFrame(spark, out), RepairRoute.Replace)
+      return (labelFrame(spark, out).unionByName(newRows), RepairRoute.Replace)
     }
     // the probe said "not driver-sized": the distributed routes need the
     // exact count (mass-vs-contraction compares member fraction to it)

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Height-bucket-partitioned gold storage with DYNAMIC partition overwrite —
   * the physical mechanism behind "reorg = recompute the affected height
@@ -37,13 +38,15 @@ object PartitionedGold {
     * physical write. Change detection is a per-bucket signature compare
     * (row count + bit_xor of xxhash64 over all columns — order-independent,
     * so it is insensitive to task scheduling). The on-disk side's signatures
-    * come from the [[sidecarPath]] sidecar written after every sync, so a
-    * steady-state sync reads KBs of sidecar, not the table: both the write
-    * AND the change-detection read are O(new work), not O(history). Both
+    * come from the [[sidecarPath]] sidecar written after every sync and
+    * read with the schema that wrote it, so a steady-state sync reads KBs
+    * of sidecar, not the table, and starts no schema-inference job: both
+    * the write AND the change-detection read are O(new work), not
+    * O(history). Both
     * signature sets hold one row per bucket (maxHeight/bucketSize rows), so
     * they are collected and compared as maps on the driver, and the changed
-    * buckets are selected by a predicate on the bucket column. A missing or
-    * unreadable sidecar (pre-sidecar table, manual deletion, crash
+    * buckets are selected by a predicate on the bucket column. A missing,
+    * empty or unreadable sidecar (pre-sidecar table, manual deletion, crash
     * mid-sidecar-write) degrades to a one-time full table scan; a
     * STALE sidecar (crash between data write and sidecar write) merely
     * re-marks the already-written buckets as changed — the rewrite is
@@ -69,16 +72,11 @@ object PartitionedGold {
         .collect()
     def sigMap(rows: Array[Row]): Map[Any, (Long, Long)] =
       rows.iterator.map(r => r.get(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val sidecarSchema = StructType(Seq(
+      StructField(BucketCol, bucketed.schema(BucketCol).dataType),
+      StructField("n", LongType), StructField("sig", LongType)))
     def writeSidecar(sigs: Array[Row]): Unit =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(sigs.toSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(BucketCol,
-            bucketed.schema(BucketCol).dataType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sig",
-            org.apache.spark.sql.types.LongType))))
+      spark.createDataFrame(spark.sparkContext.parallelize(sigs.toSeq, 1), sidecarSchema)
         .write.mode(SaveMode.Overwrite).parquet(sidecarPath(path))
 
     if (!fsExists(spark, path)) {
@@ -89,10 +87,15 @@ object PartitionedGold {
     }
     val newSigRows = sig(bucketed)
     val newSig = sigMap(newSigRows)
+    // the sidecar is read with the schema that wrote it (no inference job);
+    // a directory without data files counts as missing, like a half-written
+    // one — read as "no buckets on disk" it would rewrite every bucket
     val sidecarRows: Option[Array[Row]] =
       if (!fsExists(spark, sidecarPath(path))) None
-      else scala.util.Try(spark.read.parquet(sidecarPath(path)) // half-written ⇒ None
-        .select(BucketCol, "n", "sig").collect()).toOption
+      else scala.util.Try {
+        val df = spark.read.schema(sidecarSchema).parquet(sidecarPath(path))
+        if (df.inputFiles.isEmpty) None else Some(df.collect())
+      }.toOption.flatten
     val oldSig = sigMap(sidecarRows.getOrElse(
       sig(spark.read.parquet(path)
         .select(BucketCol, dataCols: _*)))) // no/bad sidecar: one-time table scan

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.operators.ChainOps
 
@@ -94,6 +95,8 @@ object ChainStream {
     * bronze, re-read bronze, collapse replayed appends, recompute gold and
     * hand it to `sink`. Idempotent: recompute is a pure function of bronze,
     * so replaying a batch after a crash converges to the same gold state.
+    * Bronze is read with the schema that wrote it — the batch's — so the
+    * read starts no schema-inference job.
     */
   private def appendThenRecompute(
       newBlocks: DataFrame,
@@ -108,7 +111,7 @@ object ChainStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         batch.write.mode("append").parquet(bronzeDir)
-        val bronze = spark.read.parquet(bronzeDir)
+        val bronze = spark.read.schema(batch.schema).parquet(bronzeDir)
           .dropDuplicates("hash") // replayed appends collapse here
         sink(recompute(spark, bronze))
       }
@@ -189,9 +192,18 @@ object ChainStream {
     * store — zero data files, just _SUCCESS — is valid state that schema
     * inference cannot read.
     */
-  private val WalletStoreSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("address", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("wallet_id", org.apache.spark.sql.types.StringType)))
+  private val WalletStoreSchema = StructType(Seq(
+    StructField("address", StringType), StructField("wallet_id", StringType)))
+  /** The height-bucketed `_bestchain` cursor as [[writeCursor]] writes it
+    * (the bucket is the partition column). A flat or pre-height cursor is
+    * read by inference for its one-time migration.
+    */
+  private val CursorSchema = StructType(Seq(StructField("hash", StringType),
+    StructField("height", IntegerType),
+    StructField(graft.sinks.PartitionedGold.BucketCol, IntegerType)))
+  /** The frontier sidecar body as [[writeFrontierBody]] writes it. */
+  private val FrontierSchema = StructType(
+    Seq("kind", "hash", "parent_hash").map(StructField(_, StringType)))
 
   private def logWalletBatch(record: WalletBatch): Unit = {
     walletBatchLog.add(record)
@@ -205,6 +217,25 @@ object ChainStream {
   private def tipOf(chain: DataFrame): Option[(String, Int)] =
     chain.orderBy(col("height").desc, col("hash").asc).limit(1).collect()
       .headOption.map(r => (r.getAs[String]("hash"), r.getAs[Number]("height").intValue))
+
+  /** The prior cursor's top two height buckets on the driver: every cursor
+    * row at height `fromHeight` or above, as hash → height. A wallet batch
+    * collects it once and derives from it the prior tip, the cursor-hit and
+    * deep-anchor lookups, the reorged-out rows and the cursor write's
+    * prefix, whenever the heights they need are in range. A key it lacks is
+    * never taken as absent: it still gets the full-cursor lookup.
+    */
+  private[graft] final case class CursorTop(rows: Map[String, Int], fromHeight: Int) {
+    /** The prior tip, by annotate's rule (the rows hold the top bucket). */
+    val tip: Option[(String, Int)] =
+      if (rows.isEmpty) None else Some(rows.minBy { case (h, ht) => (-ht, h) })
+    /** The rows at `from` or above, when they are all in range. */
+    def from(h: Int): Option[Iterator[(String, Int)]] =
+      if (h < fromHeight) None else Some(rows.iterator.filter(_._2 >= h))
+    /** Hit heights of `keys`. */
+    def hits(keys: Iterable[String]): Map[String, Int] =
+      keys.iterator.flatMap(k => rows.get(k).map(k -> _)).toMap
+  }
 
   /** The maintained OFF-CHAIN index beside the cursor: `dangling` = parent
     * hashes bronze references but does not contain; `pending` = every bronze
@@ -258,16 +289,15 @@ object ChainStream {
     *                   schema-incompatible (pre-height cursors force one
     *                   full resolution, after which the new cursor carries
     *                   heights)
-    * @param prevTipHint the prior tip, when the caller can derive it without
-    *                   a full cursor scan (top height bucket)
-    * @param probeCursor a PRUNED view of prevCursor (e.g. its top height
-    *                   buckets) to serve the membership/anchor lookups — the
-    *                   O(bucket) form of the one remaining cursor-sized scan
-    *                   on the extend path. Sound by construction: a key the
-    *                   pruned view misses is never trusted as absence — with
-    *                   a Frontier it gets a second-chance lookup against the
-    *                   FULL cursor (deep anchors), without one it routes to
-    *                   the full resolution
+    * @param top        prevCursor's top height buckets, collected once by the
+    *                   caller ([[CursorTop]]): the prior tip and the
+    *                   membership/anchor lookups come from it instead of
+    *                   cursor scans. Sound by construction: a key it lacks
+    *                   is never trusted as absence — with a Frontier it gets
+    *                   a second-chance lookup against the FULL cursor (deep
+    *                   anchors), without one it routes to the full
+    *                   resolution. None (a flat cursor) = every lookup and
+    *                   the prior tip read the full cursor
     * @param frontier   the stamped off-chain index, or None when absent,
     *                   crash-invalidated, or overflowed (→ the conservative
     *                   bronze-probe path above)
@@ -283,13 +313,12 @@ object ChainStream {
   private[graft] def bestChainIncremental(
       spark: SparkSession, bronze: DataFrame, batch: DataFrame,
       prevCursor: Option[DataFrame],
-      prevTipHint: Option[(String, Int)] = None,
-      probeCursor: Option[DataFrame] = None,
+      top: Option[CursorTop] = None,
       frontier: Option[Frontier] = None): BestChainUpdate =
     advanceChain(spark, bronze,
       batch.select("hash", "parent_hash").dropDuplicates("hash")
         .limit(BatchWalkCap + 1).collect().map(r => (r.getString(0), r.getString(1))),
-      prevCursor, prevTipHint, probeCursor, frontier)
+      prevCursor, top, frontier)
 
   /** [[bestChainIncremental]] over the batch's (hash, parent_hash) rows,
     * already on the driver and unique by hash — more than [[BatchWalkCap]]
@@ -298,8 +327,7 @@ object ChainStream {
   private def advanceChain(
       spark: SparkSession, bronze: DataFrame, batchRows: Array[(String, String)],
       prevCursor: Option[DataFrame],
-      prevTipHint: Option[(String, Int)],
-      probeCursor: Option[DataFrame],
+      top: Option[CursorTop],
       frontier: Option[Frontier]): BestChainUpdate = {
     def full(reason: String): BestChainUpdate = {
       // The full routes resolve the CONNECTED best chain — the reference's
@@ -344,20 +372,18 @@ object ChainStream {
       batchRows.map(r => r._1 -> Option(r._2)).toMap
     // ONE cursor lookup serves membership (replayed/known blocks) and anchor
     // heights (parents the new blocks hang from): cursor ∩ (hashes ∪ parents),
-    // against the PRUNED probe view when the caller provides one — a probe
-    // miss is never trusted as absence for routing, it just fails to anchor
-    // and falls back. Probe sets ride local relations + broadcast semi-joins,
-    // never literal isin lists (a catch-up batch's thousands of keys would
-    // blow the plan).
+    // answered from the collected top buckets when the caller has them — a
+    // miss there is never trusted as absence for routing, it just fails to
+    // anchor and falls back. Full-cursor key sets ride local relations +
+    // broadcast semi-joins, never literal isin lists (a catch-up batch's
+    // thousands of keys would blow the plan).
     import spark.implicits._
-    val probeKeys = (batchHashes ++ batchRows.flatMap(r => Option(r._2))).toSeq
-    val probeView = probeCursor
-      .map(_.select(col("hash"), col("height").cast("int").as("height")))
-      .getOrElse(cursor)
-    val cursorHits: Map[String, Int] =
-      if (probeKeys.isEmpty) Map.empty
-      else probeView.join(broadcast(probeKeys.toDF("hash")), Seq("hash"), "left_semi")
+    def cursorLookup(keys: Iterable[String]): Map[String, Int] =
+      if (keys.isEmpty) Map.empty
+      else cursor.join(broadcast(keys.toSeq.toDF("hash")), Seq("hash"), "left_semi")
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val probeKeys = batchHashes ++ batchRows.flatMap(r => Option(r._2))
+    val cursorHits: Map[String, Int] = top.fold(cursorLookup(probeKeys))(_.hits(probeKeys))
     // With a frontier: pending blocks are walkable (their parents are in
     // pending or dangling by the index invariant), and a key known to NONE
     // of batch/pending/dangling/probe gets a second-chance lookup against
@@ -378,20 +404,18 @@ object ChainStream {
         // but every genuinely-new hash on every steady-state extend batch is
         // also absent from the pruned probe, so that half made the
         // full-cursor semi-join run on EVERY micro-batch: the O(chain)
-        // cursor read per batch that probeCursor exists to avoid, paid for a
-        // deep-replay case the bronze dedupe makes rare. The trade accepted
-        // instead: a deep replay now resolves through its (eagerly-anchored)
-        // parent as if new, loses the tip race, and transiently joins
-        // `pending` — benign, because the absence proof needs pending
-        // COMPLETENESS (bronze ⊆ chain ∪ pending), never minimality, and
-        // the entry clears on the next full-route frontier refresh. On a
-        // steady extend batch this set is empty and no cursor scan runs.
-        val unknown = batchRows.flatMap(r => Option(r._2))
+        // cursor read per batch that the top-bucket collect exists to
+        // avoid, paid for a deep-replay case the bronze dedupe makes rare.
+        // The trade accepted instead: a deep replay now resolves through its
+        // (eagerly-anchored) parent as if new, loses the tip race, and
+        // transiently joins `pending` — benign, because the absence proof
+        // needs pending COMPLETENESS (bronze ⊆ chain ∪ pending), never
+        // minimality, and the entry clears on the next full-route frontier
+        // refresh. On a steady extend batch this set is empty and no cursor
+        // scan runs.
+        cursorLookup(batchRows.flatMap(r => Option(r._2))
           .filterNot(p => allParent.contains(p) || danglingSet.contains(p) ||
-            cursorHits.contains(p)).distinct
-        if (unknown.isEmpty) Map.empty
-        else cursor.join(broadcast(unknown.toSeq.toDF("hash")), Seq("hash"), "left_semi")
-          .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+            cursorHits.contains(p)).distinct)
     }
     var anchors = cursorHits ++ deepHits
     val batchNew = batchRows.filterNot(r => anchors.contains(r._1))
@@ -418,9 +442,10 @@ object ChainStream {
     // `pending` can reach a pending block whose parent is ON the chain but
     // deep (a stale branch hanging off old history — its root anchored when
     // it first arrived, but anchors are not stored in the index); phase 1
-    // collects those keys, one full-cursor lookup anchors them, phase 2
-    // re-walks. Steady-state batches never touch a pending chain, so the
-    // extra lookup fires only when the batch actually extends one.
+    // collects those keys, the collected top buckets and then one
+    // full-cursor lookup for their misses anchor them, phase 2 re-walks.
+    // Steady-state batches never touch a pending chain, so the extra lookup
+    // fires only when the batch actually extends one.
     val heights = scala.collection.mutable.HashMap.empty[String, Int]
     val unres = scala.collection.mutable.HashSet.empty[String]
     var walkPass = 0
@@ -469,9 +494,8 @@ object ChainStream {
         }
       }
       if (walkPass == 1 && needLookup.nonEmpty) {
-        val extra = cursor
-          .join(broadcast(needLookup.toSeq.toDF("hash")), Seq("hash"), "left_semi")
-          .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+        val inTop = top.fold(Map.empty[String, Int])(_.hits(needLookup))
+        val extra = inTop ++ cursorLookup(needLookup.filterNot(inTop.contains))
         anchors = anchors ++ extra
         walkDone = extra.isEmpty // re-walk only if something anchored
       } else walkDone = true
@@ -515,13 +539,10 @@ object ChainStream {
       return BestChainUpdate(cursor, ChainRoute.Unchanged, None, frontierAfter(Set.empty))
     }
     // candidate tip among the RESOLVED blocks vs the prior tip — annotate's
-    // exact ordering (max height, then min hash)
+    // exact ordering (max height, then min hash). The prior tip is in the
+    // collected top bucket; only a flat cursor pays the TakeOrdered scan.
     val candidate = heights.minBy { case (k, v) => (-v, k) }
-    // the caller can hand the prior tip in (walletLabelsBatch derives it
-    // from the cursor's TOP height bucket — partition-pruned, O(bucket));
-    // the TakeOrdered fallback scans the whole cursor, which a 100M-block
-    // chain should never pay per batch
-    val prevTip = prevTipHint.orElse(tipOf(cursor))
+    val prevTip = top.fold(tipOf(cursor))(_.tip)
     val candWins = prevTip.forall { case (ph, pH) =>
       candidate._2 > pH || (candidate._2 == pH && candidate._1 < ph)
     }
@@ -584,7 +605,9 @@ object ChainStream {
     *    all), from best-chain bronze;
     *  - blocks NEWLY ON the best chain →
     *    [[graft.chain.WalletCluster.incrementalClusters]] applies their
-    *    co-spend merges on the contracted graph.
+    *    co-spend merges on the contracted graph — except after a repair on
+    *    the replace route, whose one clustering of the whole post-reorg
+    *    chain already covers the arrivals and emits their new addresses.
     *
     * The store is hash-slot-partitioned parquet, and the per-batch write is
     * O(changed) in COMPUTE as well as bytes: the changed-row set is known
@@ -690,19 +713,30 @@ object ChainStream {
     traced("wallet: bronze append")(
       (if (collected) ChainOps.driverFrame(spark, batchRows.toSeq, batch.schema) else batch)
         .write.mode("append").parquet(bronzeDir))
-    val bronze = spark.read.parquet(bronzeDir)
+    // the engine wrote every bronze file with the batch's schema: read with
+    // it, no schema-inference job
+    val bronze = spark.read.schema(batch.schema).parquet(bronzeDir)
       .dropDuplicates("hash") // replayed appends collapse here
     val storePath = s"$labelsDir/labels"
     val cursorPath = s"$labelsDir/_bestchain"
     val slotsPath = s"$labelsDir/_slots"
+    // the cursor's height buckets come from a directory listing (no scan);
+    // a listing with buckets is the layout writeCursor writes, read with its
+    // known schema
+    val bucketColName = graft.sinks.PartitionedGold.BucketCol
+    val tipBuckets: Seq[Int] = graft.sinks.Hfs.listDirNames(spark, cursorPath)
+      .filter(_.startsWith(bucketColName + "="))
+      .flatMap(n => scala.util.Try(n.split("=")(1).toInt).toOption)
     // prior cursor, if present and height-carrying (a pre-r14 hash-only
     // cursor still serves the reorg diff below, but not incremental heights)
-    // Try-guarded: a cursor dir written from an EMPTY chain (connected-only
-    // bootstrap before any genesis arrived) has no parquet files and cannot
-    // be read — treated as no cursor, so the maintainer keeps bootstrapping
-    // until a genesis-rooted chain exists (conservative, documented).
+    // A flat or pre-height cursor is read by inference, Try-guarded: a
+    // cursor dir written from an EMPTY chain (connected-only bootstrap
+    // before any genesis arrived) has no parquet files and cannot be read —
+    // treated as no cursor, so the maintainer keeps bootstrapping until a
+    // genesis-rooted chain exists (conservative, documented).
     val prevCursorAny: Option[DataFrame] =
-      if (!fsExists(spark, cursorPath)) None
+      if (tipBuckets.nonEmpty) Some(spark.read.schema(CursorSchema).parquet(cursorPath))
+      else if (!fsExists(spark, cursorPath)) None
       else scala.util.Try {
         val df = spark.read.parquet(cursorPath); df.schema; df
       }.toOption
@@ -718,25 +752,22 @@ object ChainStream {
       return WalletBatch(route = None)
     val prevCursorH = prevCursorAny.filter(_.columns.contains("height"))
       .map(_.select(col("hash"), col("height")))
-    // prior tip + membership probe from the TOP height buckets only: the
-    // bucket set comes from a directory listing (no scan) and the filters
-    // partition-prune the reads — O(buckets probed) instead of full cursor
-    // scans per micro-batch. The pruned probe is sound: an anchor it misses
-    // (a reorg deeper than the probed range) routes to the full resolution.
-    val bucketColName = graft.sinks.PartitionedGold.BucketCol
-    val tipBuckets: Seq[Int] = prevCursorAny match {
-      case Some(c) if c.columns.contains(bucketColName) =>
-        graft.sinks.Hfs.listDirNames(spark, cursorPath)
-          .filter(_.startsWith(bucketColName + "="))
-          .flatMap(n => scala.util.Try(n.split("=")(1).toInt).toOption)
-      case _ => Seq.empty
-    }
-    val prevTipHint: Option[(String, Int)] =
+    // The TOP two height buckets, collected ONCE (≤ 2 × CursorBucketSize
+    // rows, partition-pruned): the prior tip, the membership/anchor
+    // lookups, the reorged-out rows, the frontier's reorged-out pairs and
+    // the cursor write's prefix all come from these rows when the heights
+    // they need are in range — one cursor read per batch instead of one
+    // per consumer. What lies below the range takes the full-cursor reads.
+    val prevTop: Option[CursorTop] =
       if (tipBuckets.isEmpty) None
-      else tipOf(prevCursorAny.get.where(col(bucketColName) === tipBuckets.max))
-    val probeCursor: Option[DataFrame] =
-      if (tipBuckets.isEmpty) None
-      else Some(prevCursorAny.get.where(col(bucketColName) >= tipBuckets.max - 1))
+      else {
+        val fromBucket = math.max(tipBuckets.max - 1, 0)
+        val rows = prevCursorAny.get.where(col(bucketColName) >= fromBucket)
+          .select("hash", "height").collect()
+        Some(CursorTop(rows.iterator.map(r => r.getString(0) -> r.getInt(1)).toMap,
+          fromBucket * CursorBucketSize))
+      }
+    val prevTip: Option[(String, Int)] = prevTop.flatMap(_.tip)
     // the OFF-CHAIN index ([[Frontier]]): dangling parent hashes bronze
     // references but does not contain, plus every bronze block NOT on the
     // best chain as (hash → parent) — the reorder buffer that lets a
@@ -761,14 +792,13 @@ object ChainStream {
     val frontierPath = s"$labelsDir/_frontier"
     val frontierStampPath = s"$labelsDir/_frontier_ok"
     val stampOk = (fsReadText(spark, frontierStampPath).map(_.trim),
-      prevTipHint.map(_._1)) match {
+      prevTip.map(_._1)) match {
       case (Some(s), Some(tip)) => s == tip
       case _ => false
     }
     val frontierRows: Option[Array[Row]] =
       if (!stampOk || !fsExists(spark, frontierPath)) None
-      else Some(spark.read.parquet(frontierPath)
-        .select("kind", "hash", "parent_hash").collect())
+      else Some(spark.read.schema(FrontierSchema).parquet(frontierPath).collect())
     val frontierOverflow =
       frontierRows.exists(_.exists(_.getString(0) == "overflow"))
     val frontier: Option[Frontier] =
@@ -781,13 +811,12 @@ object ChainStream {
       }
     val upd = traced("wallet: best chain")(
       if (!collected)
-        bestChainIncremental(spark, bronze, batch, prevCursorH, prevTipHint,
-          probeCursor, frontier)
+        bestChainIncremental(spark, bronze, batch, prevCursorH, prevTop, frontier)
       else {
         val (h, p) = (batch.schema.fieldIndex("hash"), batch.schema.fieldIndex("parent_hash"))
         advanceChain(spark, bronze,
           batchRows.map(r => (r.getString(h), r.getString(p))).distinctBy(_._1),
-          prevCursorH, prevTipHint, probeCursor, frontier)
+          prevCursorH, prevTop, frontier)
       })
     val route = upd.route
     val unchanged = route match { case ChainRoute.Unchanged => true; case _ => false }
@@ -810,7 +839,7 @@ object ChainStream {
       // authoritative bronze scan (the batch just paid that scan for the
       // attaches check, so the re-derivation amortizes into it). The tip is
       // unchanged, so the stamp protocol closes over the same tip.
-      val tip = prevTipHint.map(_._1)
+      val tip = prevTip.map(_._1)
       val grewOrShrank = upd.newFrontier.isDefined && upd.newFrontier != frontier
       if (tip.isDefined && (grewOrShrank || !stampOk)) {
         val nf: Option[Frontier] =
@@ -866,8 +895,9 @@ object ChainStream {
       // arrived/invalidated: on the "extend" route the walk already knows
       // the EXACT delta — arrived = the path blocks (a driver-sized local
       // relation), invalidated = prior-chain rows above the anchor height
-      // (a pushed-down filter on the cursor; empty on a pure extension) —
-      // so the two chain × chain set-diff joins run only on the full-
+      // (from the collected top buckets when the anchor is in range, else a
+      // pushed-down filter on the cursor; empty on a pure extension) — so
+      // the two chain × chain set-diff joins run only on the full-
       // resolution fallback. Every plan consuming these is materialized
       // (collect / checkpoint) before the cursor swap at the end.
       import spark.implicits._
@@ -875,21 +905,27 @@ object ChainStream {
       val (invalidated, arrived) = upd.extendDelta match {
         case Some((path, anchorH)) =>
           nArrived = path.length.toLong
-          (
-          // bucket predicate first: on a height-bucketed cursor the reorged-
-          // out rows live at or above the anchor's bucket, so the scan is
-          // partition-pruned to the tip buckets (a pre-bucketing cursor just
-          // scans — one-time, until the next cursor write migrates it)
-          cursorPrune(prevCursorAny.get, anchorH)
-            .where(col("height") > anchorH).select("hash"),
-          path.map(_._1).toDF("hash"))
+          val inv = prevTop.flatMap(_.from(anchorH + 1)) match {
+            case Some(rows) =>
+              val hashes = rows.map(_._1).toSeq
+              nInvalidated = hashes.length.toLong
+              hashes.toDF("hash")
+            case None =>
+              // bucket predicate first: the reorged-out rows live at or
+              // above the anchor's bucket, so the scan is partition-pruned
+              // (a pre-bucketing cursor just scans — one-time, until the
+              // next cursor write migrates it)
+              cursorPrune(prevCursorAny.get, anchorH)
+                .where(col("height") > anchorH).select("hash")
+          }
+          (inv, path.map(_._1).toDF("hash"))
         case None =>
           // Full-resolution fallback (the catch-up drain's steady state):
           // both hash sets are consumed several times below — invalidated by
-          // the isEmpty pre-route AND the repair's input derivation, arrived
-          // by the incremental path — and each is block-hash-grain (bounded
-          // by the chain, KBs–MBs), so one eager checkpoint apiece beats
-          // re-running the chain × chain set-diff join per consumer.
+          // the repair's input derivation, arrived by the incremental path —
+          // and each is block-hash-grain (bounded by the chain, KBs–MBs), so
+          // one eager checkpoint apiece beats re-running the chain × chain
+          // set-diff join per consumer.
           val prevBest = prevCursorAny.get.select("hash")
           val inv = ChainOps.localCheckpoint(prevBest.join(bestHashes, Seq("hash"), "left_anti"))
           val arr = ChainOps.localCheckpoint(bestHashes.join(prevBest, Seq("hash"), "left_anti"))
@@ -905,7 +941,8 @@ object ChainStream {
       // catch-up drain's middle batches, the difference between O(batch)
       // and O(corpus) per batch).
       val repair =
-        if (traced("wallet: invalidated probe")(invalidated.isEmpty)) None
+        if (if (nInvalidated >= 0) nInvalidated == 0
+            else traced("wallet: invalidated probe")(invalidated.isEmpty)) None
         else traced("wallet: repair") {
           // the mass route materializes its own funder input (swap-register
           // discipline in repairAfterReorg); the change set — minimal on
@@ -921,9 +958,13 @@ object ChainStream {
       val afterRepair = repairChanges.fold(stored)(upsert(stored, _))
       // nothing newly on-chain → no new edges, provably an empty delta: skip
       // the whole incremental pass (its funder derivation alone is a
-      // corpus-grain scan a quiet fallback batch should never pay)
+      // corpus-grain scan a quiet fallback batch should never pay). The
+      // replace repair clustered the whole post-reorg chain, arrivals
+      // included, and already emitted their new addresses: one clustering
+      // per reorg batch, no second pass over the arrivals.
+      val replaced = repair.exists(_._2 == WalletCluster.RepairRoute.Replace)
       val delta =
-        if (nArrived == 0L) Seq.empty[(String, String)].toDF("address", "wallet_id")
+        if (nArrived == 0L || replaced) Seq.empty[(String, String)].toDF("address", "wallet_id")
         else traced("wallet: incremental")(ChainOps.localCheckpoint(
           WalletCluster.incrementalClusters(afterRepair,
             fundersOf(spark, bronze.join(arrived, Seq("hash"), "left_semi")))))
@@ -970,20 +1011,22 @@ object ChainStream {
     // On the extend route the reorged-out cursor rows (above the anchor)
     // left the chain and must join `pending`. The prior chain is a LINE, so
     // each one's parent is the prior-chain block one height below — all
-    // derivable from the (hash, height) rows the pruned cursor read already
-    // covers, no bronze access. Depth is reorg-bounded; a depth the pending
+    // derivable from the (hash, height) rows of the collected top buckets
+    // when the anchor is in range (a pruned cursor read below it), no
+    // bronze access. Depth is reorg-bounded; a depth the pending
     // cap cannot absorb (or a full prior-chain replacement, anchor < 0)
     // re-derives from bronze instead of collecting unbounded cursor rows.
     val frontierFinal: Option[Frontier] = (refreshedFrontier, upd.extendDelta) match {
-      case (Some(f), Some((_, anchorH))) if prevTipHint.exists(_._2 > anchorH) =>
-        val depth = prevTipHint.get._2.toLong - anchorH
+      case (Some(f), Some((_, anchorH))) if prevTip.exists(_._2 > anchorH) =>
+        val depth = prevTip.get._2.toLong - anchorH
         if (anchorH < 0 || depth > PendingCap.toLong - f.pending.size)
           deriveFrontier(spark, bronze, bestHashes)
         else {
-          val invRows = cursorPrune(prevCursorAny.get, anchorH)
-            .where(col("height") >= anchorH)
-            .select(col("hash"), col("height").cast("int").as("height"))
-            .collect().map(r => (r.getString(0), r.getInt(1)))
+          val invRows = prevTop.flatMap(_.from(anchorH)).map(_.toArray).getOrElse(
+            cursorPrune(prevCursorAny.get, anchorH)
+              .where(col("height") >= anchorH)
+              .select(col("hash"), col("height").cast("int").as("height"))
+              .collect().map(r => (r.getString(0), r.getInt(1))))
           val hashAt = invRows.map { case (h, ht) => ht -> h }.toMap
           val invPairs = invRows.filter(_._2 > anchorH).map { case (h, ht) =>
             h -> hashAt.getOrElse(ht - 1, null)
@@ -1020,9 +1063,9 @@ object ChainStream {
     // the new tip, derived BEFORE the cursor write — on the migration
     // routes upd.best is a lazy read of the very files the write replaces
     val newTip: Option[String] = upd.extendDelta.map(_._1.head._1)
-      .orElse(if (unchanged) prevTipHint.map(_._1) else None)
+      .orElse(if (unchanged) prevTip.map(_._1) else None)
       .orElse(tipOf(upd.best).map(_._1))
-    writeCursor(spark, upd, prevCursorAny, cursorPath)
+    writeCursor(spark, upd, prevCursorAny, prevTop, cursorPath)
     // 4. re-stamp with the NEW tip — the last write of the batch, so a
     // matching stamp proves body and cursor were both committed together
     newTip.foreach(t => fsWriteText(spark, frontierStampPath, t + "\n"))
@@ -1129,7 +1172,8 @@ object ChainStream {
 
   private def writeCursor(
       spark: SparkSession, upd: BestChainUpdate,
-      prevCursor: Option[DataFrame], cursorPath: String): Unit = {
+      prevCursor: Option[DataFrame], top: Option[CursorTop],
+      cursorPath: String): Unit = {
     import spark.implicits._
     val bucketCol = graft.sinks.PartitionedGold.BucketCol
     upd.extendDelta match {
@@ -1137,14 +1181,22 @@ object ChainStream {
           prevCursor.exists(_.columns.contains(bucketCol)) =>
         // affected buckets = [anchor bucket .. new tip bucket]; content =
         // the prior chain's rows at or below the anchor WITHIN those
-        // buckets, plus the new path. Bucket-sized, so the checkpoint that
-        // breaks the read-from-overwritten-path cycle is bucket-sized too.
-        val pathDf = path.toDF("hash", "height")
-        val prefix = cursorPrune(prevCursor.get, anchorH)
-          .where(col("height") <= anchorH)
-          .select("hash", "height")
-        val content = ChainOps.localCheckpoint(graft.sinks.PartitionedGold.withBucket(
-            prefix.unionByName(pathDf), "height", CursorBucketSize))
+        // buckets, plus the new path. When the anchor bucket is in the
+        // collected top buckets the content is driver rows that do not
+        // read cursorPath; below them the bucket-sized read is checkpointed
+        // to break the read-from-overwritten-path cycle.
+        val content = top.flatMap(_.from(anchorH / CursorBucketSize * CursorBucketSize)) match {
+          case Some(rows) =>
+            (rows.filter(_._2 <= anchorH) ++ path)
+              .map { case (h, ht) => (h, ht, ht / CursorBucketSize) }.toSeq
+              .toDF("hash", "height", bucketCol)
+          case None =>
+            val prefix = cursorPrune(prevCursor.get, anchorH)
+              .where(col("height") <= anchorH)
+              .select("hash", "height")
+            ChainOps.localCheckpoint(graft.sinks.PartitionedGold.withBucket(
+              prefix.unionByName(path.toDF("hash", "height")), "height", CursorBucketSize))
+        }
         graft.sinks.PartitionedGold.overwriteAffected(content, cursorPath)
       case _ =>
         // The "unchanged" route only reaches here during a re-bootstrap

@@ -187,6 +187,19 @@ class ChainSpec extends SparkSpec {
     assert(replaceRoute == WalletCluster.RepairRoute.Replace)
     assert(smallReplace == small)
 
+    // the same reorg whose replacement branch also carries a tx co-spending
+    // a stored address (y05) with a NEW one (z05): the replace route
+    // clustered the whole post-reorg chain, so it emits z05 with the
+    // full-recompute label; the contraction route never sees a tx no
+    // affected member funds, and leaves z05 to the incremental pass
+    val best1n = best1.unionByName(Seq(("tnew", "y05"), ("tnew", "z05"))
+      .toDF("tx_hash", "src_address"))
+    val (newReplace, newReplaceRoute) = run(inv1, best1n)
+    assert(newReplaceRoute == WalletCluster.RepairRoute.Replace)
+    assert(newReplace == small + ("z05" -> "x05"))
+    val (newContraction, _) = run(inv1, best1n, floor = 0)
+    assert(newContraction == small)
+
     // MASS reorg: t00..t06 retract → members = 14 of 24 → recompute-diff
     // route, which emits ONLY rows whose label changes: the y of each
     // split pair (each x already labels itself)
@@ -201,10 +214,11 @@ class ChainSpec extends SparkSpec {
     val storedMap = stored.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     stored.unpersist()
     def full(best: org.apache.spark.sql.DataFrame): Map[String, String] =
-      WalletCluster.clusters(universe, best)
+      WalletCluster.clusters(universe.union(best.select("src_address")), best)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(storedMap ++ small == full(best1))
     assert(storedMap ++ mass == full(best2))
+    assert(storedMap ++ newReplace == full(best1n))
   }
 
   test("repairAfterReorg: no-op pre-route — a reorg touching no stored funder returns empty before any discovery pass") {

@@ -531,6 +531,60 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("property: the replace repair alone == full recompute of the post-reorg chain (every arm, null funder)") {
+    import spark.implicits._
+    import graft.chain.WalletCluster
+    // the same random reorgs, repaired on the replace route with no
+    // incremental pass after it: its one clustering of the post-reorg chain
+    // must label every stored AND every new address. Run at the default
+    // envelope (the pair-collect arm) and at an envelope equal to the store
+    // size, which still routes to replace but sends cases with more pairs,
+    // or more edges, than stored rows to the edge-collect and distributed
+    // arms. The post-reorg chain carries a null funder on a tx of its own.
+    val txGen = Gen.choose(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0, 14)).map(_.distinct.map(i => f"a$i%02d")))
+    val txsGen = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, txGen))
+    val retractGen = Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, txGen))
+    forAllSeeded(Gen.zip(txsGen, retractGen, txsGen), 8) {
+      case (commonTxs, oldBranchTxs, newBranchTxs) =>
+        def funders(txs: Seq[Seq[String]], tag: String) =
+          txs.zipWithIndex.flatMap { case (addrs, i) => addrs.map(a => (s"$tag$i", a)) }
+        val common = funders(commonTxs, "c")
+        val oldBr = funders(oldBranchTxs, "o").toDF("tx_hash", "src_address")
+        val best = (common ++ funders(newBranchTxs, "n") :+ (("nz", null: String)))
+          .toDF("tx_hash", "src_address")
+        val postUniverse = (commonTxs ++ newBranchTxs).flatten.distinct
+        val storedDf = WalletCluster.clusters(
+          (commonTxs ++ oldBranchTxs).flatten.distinct.toDF("address"),
+          (common.toDF("tx_hash", "src_address")).unionByName(oldBr))
+          .localCheckpoint(true)
+        val stored = storedDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        val full = WalletCluster.clusters(postUniverse.toDF("address"), best)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        for (envelope <- Seq(None, Some(stored.size))) {
+          envelope.foreach(e => sys.props("graft.broadcastMaxRows") = e.toString)
+          val (rows, route) = try WalletCluster.repairAfterReorg(storedDf, oldBr, best)
+            finally sys.props.remove("graft.broadcastMaxRows")
+          val ctx = s"envelope=$envelope common=$commonTxs old=$oldBranchTxs new=$newBranchTxs"
+          assert(route == WalletCluster.RepairRoute.Replace, ctx)
+          val got = rows.collect().map(r => (Option(r.getString(0)), Option(r.getString(1))))
+          assert(got.count(_._1.isEmpty) == 1 && got.contains((None, None)),
+            s"null funder row: ${got.filter(_._1.isEmpty).toSeq} $ctx")
+          val repair = got.collect { case (Some(a), w) => a -> w.orNull }.toMap
+          assert(repair.forall { case (a, w) => !stored.get(a).contains(w) },
+            s"replace re-asserted stored labels $ctx")
+          val maintained = stored ++ repair
+          postUniverse.foreach { a =>
+            assert(maintained.get(a).contains(full(a)),
+              s"label diverges at $a: maintained=${maintained.get(a)} full=${full(a)} $ctx")
+          }
+          (maintained.keySet -- postUniverse).foreach { a =>
+            assert(maintained(a) == a, s"orphaned $a not a singleton: ${maintained(a)} $ctx")
+          }
+        }
+    }
+  }
+
   test("property: minhashBandAgreement == brute-force band comparison of the signatures") {
     import spark.implicits._
     import graft.operators.Dedup

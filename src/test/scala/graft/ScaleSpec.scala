@@ -112,6 +112,19 @@ class ScaleSpec extends SparkSpec {
     val healed = PartitionedGold.syncAffected(annotateAll(), dir, bucketSize = 5)
     assert(healed.isEmpty, s"sidecar-less replay rewrote buckets $healed")
     assert(java.nio.file.Files.exists(sidecar), "sidecar not restored")
+    // A sidecar DIRECTORY left with no data files counts as missing too:
+    // one table scan, no bucket rewrite — never "no buckets on disk", which
+    // would rewrite every bucket
+    java.nio.file.Files.list(sidecar).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(p => { java.nio.file.Files.delete(p); () })
+    val table = "file:" + dir // as a scan's Location prints it
+    val (emptyHealed, counts) = ExecutionProbe(spark, table)(
+      PartitionedGold.syncAffected(annotateAll(), dir, bucketSize = 5))
+    assert(emptyHealed.isEmpty, s"empty-sidecar replay rewrote buckets $emptyHealed")
+    assert(counts.scans(table) == 1, s"empty sidecar cost ${counts.scans(table)} table scans")
+    assert(spark.read.parquet(PartitionedGold.sidecarPath(dir)).count() > 0,
+      "sidecar not rewritten")
     // Stale-sidecar crash window: gold changed on disk but the sidecar was
     // not updated (simulated by restoring an OLD sidecar copy) — the next
     // sync re-marks those buckets changed and converges.

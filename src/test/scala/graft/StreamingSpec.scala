@@ -146,10 +146,14 @@ class StreamingSpec extends SparkSpec {
       .select(col("hash"),
         when(col("parent_hash") === "", lit(null)).otherwise(col("parent_hash")).as("parent_hash"),
         col("ts"), col("txs"))
+    // every funder derivation the maintainer plans goes through here
+    val funderCalls = new java.util.concurrent.atomic.AtomicInteger(0)
     def fundersOf(s: org.apache.spark.sql.SparkSession,
-        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      funderCalls.incrementAndGet()
       df.select(explode(col("txs")).as("t"))
         .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    }
     val writer = ChainStream.incrementalWalletLabels(
       blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt", slots = 8)
     def labels(): Map[String, String] = spark.read.parquet(s"$tmp/labels/labels")
@@ -180,6 +184,7 @@ class StreamingSpec extends SparkSpec {
     // Batch 2: longer fork b2 <- c2 reorgs b out — t3's merge RETRACTS (the
     // stored component splits) while the replacement branch's t4 co-spends
     // (a4,a5), merging a new address into the {a3,a4} side
+    funderCalls.set(0)
     input.addData(
       ("b2", "a", 1201L, Seq(("t4", Seq("a4", "a5")))),
       ("c2", "b2", 1300L, Seq.empty[(String, Seq[String])]))
@@ -187,6 +192,16 @@ class StreamingSpec extends SparkSpec {
     // the reorg batch resolved O(batch) against the cursor, not via a full
     // bronze annotate
     assert(lastLoggedRoute == "extend")
+    // ONE clustering per reorg batch: the replace repair clusters the whole
+    // post-reorg chain, arrivals included, so the batch derives funders for
+    // the invalidated blocks and the best chain only — no third derivation
+    // for an incremental pass over the arrivals
+    val reorgRecord = {
+      import scala.jdk.CollectionConverters._
+      ChainStream.walletBatchLog.asScala.last
+    }
+    assert(reorgRecord.repair.contains(graft.chain.WalletCluster.RepairRoute.Replace))
+    assert(funderCalls.get == 2, s"reorg batch derived funders ${funderCalls.get} times")
     assert(labels() == Map(
       "a1" -> "a1", "a2" -> "a1", "a3" -> "a3", "a4" -> "a3", "a5" -> "a3"))
     // repaired store == full recompute of the post-reorg chain
@@ -261,6 +276,60 @@ class StreamingSpec extends SparkSpec {
     assert(cursor.count() == n + 1)
     assert(cursor.agg(max("height")).head.getInt(0) == n)
     assert(cursor.select("hash").distinct().count() == n + 1)
+  }
+
+  test("one cursor read per batch: a stepped extend and a shallow reorg each scan _bestchain in one SQL execution and infer no schema") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-cursor-reads").toString
+    def fundersOf(s: org.apache.spark.sql.SparkSession,
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(explode(col("txs")).as("t"))
+        .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    def step(rows: Seq[(String, String)]) =
+      ChainStream.walletLabelsBatch(spark,
+        rows.zipWithIndex.map { case ((h, p), i) =>
+          (h, p, 5000L + i, Seq.empty[(String, Seq[String])]) }
+          .toDF("hash", "parent_hash", "ts", "txs"),
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
+    // bootstrap heights 0..29; only genesis funds a tx, so the reorg below
+    // retracts no co-spend edge and its repair stops at the no-op probe
+    val n = 30
+    def b(i: Int) = f"b$i%03d"
+    ChainStream.walletLabelsBatch(spark,
+      (0 until n).map(i => (b(i), if (i == 0) null else b(i - 1), 1000L + i,
+        if (i == 0) Seq(("t1", Seq("a1", "a2"))) else Seq.empty[(String, Seq[String])]))
+        .toDF("hash", "parent_hash", "ts", "txs"),
+      s"$tmp/bronze", fundersOf, s"$tmp/labels", 8)
+    assert(step(Seq((b(n), b(n - 1)))).routeName == "extend") // warm steady state
+    val cursorPath = s"file:$tmp/labels/_bestchain" // as a scan's Location prints it
+    // the probe sees an inference job where one runs
+    assert(ExecutionProbe(spark)(spark.read.parquet(cursorPath))._2.inferenceJobs == 1)
+
+    val (ext, extCounts) = ExecutionProbe(spark, cursorPath)(step(Seq((b(n + 1), b(n)))))
+    assert(ext.routeName == "extend")
+    assert(extCounts.scans(cursorPath) == 1,
+      s"extend batch scanned the cursor in ${extCounts.scans(cursorPath)} executions")
+    assert(extCounts.inferenceJobs == 0,
+      s"extend batch started ${extCounts.inferenceJobs} schema-inference jobs")
+
+    // shallow reorg: a three-block branch off height n-1 replaces n, n+1
+    val branch = Seq(("x1", b(n - 1)), ("x2", "x1"), ("x3", "x2"))
+    val (reorg, reorgCounts) = ExecutionProbe(spark, cursorPath)(step(branch))
+    assert(reorg.routeName == "extend" && reorg.invalidated == 2 && reorg.arrived == 3)
+    assert(reorgCounts.scans(cursorPath) == 1,
+      s"reorg batch scanned the cursor in ${reorgCounts.scans(cursorPath)} executions")
+    assert(reorgCounts.inferenceJobs == 0,
+      s"reorg batch started ${reorgCounts.inferenceJobs} schema-inference jobs")
+
+    // the cursor is the reorged chain, and the reorged-out rows pend
+    val cursor = spark.read.parquet(s"$tmp/labels/_bestchain").select("hash", "height")
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(cursor == (0 until n).map(i => b(i) -> i).toMap ++
+      Map("x1" -> n, "x2" -> (n + 1), "x3" -> (n + 2)))
+    val pending = spark.read.parquet(s"$tmp/labels/_frontier")
+      .where(col("kind") === "p").select("hash", "parent_hash").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(pending == Map(b(n) -> b(n - 1), b(n + 1) -> b(n)))
   }
 
   test("bestChainIncremental equals a full annotate on random batched feeds (in-order and shuffled)") {
