@@ -373,7 +373,7 @@ object BlkCorpus {
   /** Bucket layout. Bronze: the two outpoint-join sides — outputs clustered
     * by tx_hash, inputs by prev_tx_hash, same bucket count — so the join
     * (Enrich.resolvedInputs) reads co-located buckets with NO Exchange on
-    * either side, every gold rebuild (asserted in PlanSpec). Silver: the
+    * either side, every gold rebuild (asserted in ScaleSpec). Silver: the
     * chain-filtered tx context + resolved inputs + outputs all clustered by
     * tx_hash, so every tx-grain aggregate/join in GoldStats is exchange-free
     * too. 16 buckets ≈ one task per core locally; at 100 TB the same layout

@@ -1,5 +1,7 @@
 package graft.chain
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,6 +16,21 @@ object Enrich {
   /** Inputs with the value + source address of the output they spend
     * (≙ BlockchainToGraph.java:986–994 outpoint resolution).
     * Returns (tx_hash, prev_tx_hash, prev_index, value, src_address).
+    *
+    * The join output passes an optimizer barrier (an observed row count)
+    * before any caller sees it. Every caller narrows the result with a
+    * `left_semi` on `tx_hash` (the best-chain txs); without the barrier
+    * Catalyst pushes that semi-join below the outpoint join — `tx_hash`
+    * comes from the inputs side only — so the inputs shuffle by `tx_hash`
+    * for the semi-join and again by `prev_tx_hash` for this join, and the
+    * result leaves partitioned by `prev_tx_hash`. With the barrier the
+    * outpoint join stays exchange-free over bucketed bronze, the result
+    * crosses one `tx_hash` exchange into the semi-join with bucketed
+    * `silver_ctx`, and a `tx_hash`-bucketed write of it (`silver_rin`) lands
+    * one file per bucket (pinned in ScaleSpec). Filters above the barrier
+    * stay above it too; column pruning still passes through. Each call
+    * observes under its own name: Spark rejects two observations with the
+    * same name in one plan.
     */
   def resolvedInputs(txInputs: DataFrame, txOutputs: DataFrame): DataFrame =
     txInputs.join(
@@ -21,6 +38,9 @@ object Enrich {
         col("tx_hash").as("prev_tx_hash"), col("idx").as("prev_index"),
         col("value"), col("address").as("src_address")),
       Seq("prev_tx_hash", "prev_index"))
+      .observe(s"resolved_inputs_${calls.incrementAndGet()}", count(lit(1)).as("rows"))
+
+  private val calls = new AtomicLong()
 
   /** Outputs annotated with their spending tx (null = UTXO) — the relational
     * form of the `input` edge + `OutputIsUsed` flag

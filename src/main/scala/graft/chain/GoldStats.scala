@@ -36,11 +36,15 @@ object GoldStats {
     * narrow passes when the input is tx_hash-bucketed (HashPartitioning(tx)
     * satisfies the grouping). Only the self-churn flag
     * (BlockchainToGraph.java:873–882: "some address has both directions")
-    * needs pair semantics, and an INNER join of the two distinct (tx, addr)
-    * key sets delivers it while PRESERVING the tx partitioning — unlike a
-    * full-outer merge, whose coalesced key breaks propagation and forces a
-    * pair-grain re-exchange. On bucketed silver the whole tx-grain DAG is
-    * exchange-free; only new-address attribution
+    * needs pair semantics: the outputs' (tx, addr) partials LEFT-join the
+    * distinct spend keys and roll up to the tx in one pass that yields the
+    * output count, the output value and the flag together. A left join
+    * PRESERVES the tx partitioning — unlike a full-outer merge, whose
+    * coalesced key breaks propagation and forces a pair-grain re-exchange.
+    * On bucketed silver the whole tx-grain DAG is exchange-free, and the
+    * output aggregate joins the context as a merge join: the planner sizes
+    * it from compressed parquet and would broadcast a tx-grain table both
+    * sides of which are already co-located. Only new-address attribution
     * (BlockchainToGraph.java:1076–1080: global first appearance in chain
     * order = height, then tx_hash as the deterministic batch stand-in for
     * intra-block order) shuffles, at the address grain.
@@ -50,16 +54,19 @@ object GoldStats {
     * @param outs  tx_outputs, pre-filtered to best-chain txs
     */
   def txStats(cTxs: DataFrame, rin: DataFrame, outs: DataFrame): DataFrame = {
-    val outAgg = outs.groupBy("tx_hash").agg(
-      count(lit(1)).as("output_count"), sum("value").as("out_value"))
     val inAgg = rin.groupBy("tx_hash").agg(
       count(lit(1)).as("input_count"), sum("value").as("in_value"))
-    val recvKeys = outs.select("tx_hash", "address").distinct()
-    val spendKeys = rin.select(col("tx_hash"), col("src_address").as("address"))
-      .distinct()
-    val churn = recvKeys.join(spendKeys, Seq("tx_hash", "address"))
-      .groupBy("tx_hash").agg(lit(true).as("is_between_one_address"))
-    val firstTx = recvKeys
+    val recvPairs = outs.groupBy("tx_hash", "address")
+      .agg(count(lit(1)).as("n"), sum("value").as("v"))
+    val spendKeys = rin.select(col("tx_hash"), col("src_address").as("address"),
+        lit(true).as("spent")).distinct()
+    val outAgg = recvPairs.join(spendKeys, Seq("tx_hash", "address"), "left")
+      .groupBy("tx_hash").agg(
+        sum("n").as("output_count"), sum("v").as("out_value"),
+        max("spent").as("is_between_one_address"))
+      .hint("merge")
+    // no distinct first: a repeated (tx, address) pair leaves the minimum as it is
+    val firstTx = outs.select("tx_hash", "address")
       .join(cTxs.select("tx_hash", "height"), "tx_hash")
       .groupBy("address")
       .agg(min(struct(col("height"), col("tx_hash"))).as("f"))
@@ -68,7 +75,6 @@ object GoldStats {
     cTxs
       .join(inAgg, Seq("tx_hash"), "left")
       .join(outAgg, Seq("tx_hash"), "left")
-      .join(churn, Seq("tx_hash"), "left")
       .join(firstTx, Seq("tx_hash"), "left")
       .select(
         col("tx_hash"), col("block_hash"), col("is_coinbase"),
@@ -117,11 +123,13 @@ object GoldStats {
     * distinct (funder f, recipient r) over inputs ⋈ outputs on tx_hash, built
     * once (bucket-aligned on tx_hash). A recipient's input_addr_count is its
     * F rows with a non-null funder; a funder's output_addr_count is its F
-    * rows with a non-null recipient — one grouped pass over both
-    * projections. So the per-tx funder × recipient product is built once,
-    * not once per role, and no counterparty side re-joins the context. On
-    * bucketed silver NOTHING shuffles until the pair/address grain — at
-    * 100 TB that removes every exchange on the widest (event) tables.
+    * rows with a non-null recipient. Each F row emits both role rows in one
+    * pass (an explode), so the physical plan holds one funder × recipient
+    * join and one exchange on (f, r) — a union of two projections of F
+    * would plan the join and its exchange twice (pinned in PlanSpec) — and
+    * no counterparty side re-joins the context. On bucketed silver NOTHING
+    * shuffles until the pair/address grain — at 100 TB that removes every
+    * exchange on the widest (event) tables.
     */
   def addressStats(cTxs: DataFrame, rin: DataFrame, outs: DataFrame): DataFrame = {
     val ctxTs = cTxs.select("tx_hash", "ts")
@@ -157,10 +165,12 @@ object GoldStats {
       .join(outs.select(col("tx_hash"), col("address").as("r")), "tx_hash")
       .where(col("f").isNotNull || col("r").isNotNull)
       .select("f", "r").distinct()
-    val cpCounts = flows.select(col("r").as("address"),
-        col("f").isNotNull.as("in"), lit(false).as("out"))
-      .unionByName(flows.select(col("f").as("address"),
-        lit(false).as("in"), col("r").isNotNull.as("out")))
+    val cpCounts = flows
+      .select(explode(array(
+        struct(col("r").as("address"), col("f").isNotNull.as("in"), lit(false).as("out")),
+        struct(col("f").as("address"), lit(false).as("in"), col("r").isNotNull.as("out"))))
+        .as("role"))
+      .select("role.*")
       .groupBy("address").agg(
         count(when(col("in"), lit(1))).as("input_addr_count"),
         count(when(col("out"), lit(1))).as("output_addr_count"))

@@ -8,10 +8,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * Writing `tx_outputs` bucketed by `tx_hash` and `tx_inputs` bucketed by
   * `prev_tx_hash` with the same bucket count lets Catalyst plan the join
-  * with NO Exchange on either side (asserted in BucketingSpec) — at 100 TB
-  * that is the difference between re-shuffling the whole history every gold
-  * rebuild and reading co-located buckets. Bucket count should be sized so
-  * one bucket ≈ one task's worth of data (e.g. 4096 buckets for 100 TB).
+  * with NO Exchange on either side (asserted in ScaleSpec, "bucketed
+  * outpoint join plans with zero exchanges") — at 100 TB that is the
+  * difference between re-shuffling the whole history every gold rebuild and
+  * reading co-located buckets. Bucket count should be sized so one bucket ≈
+  * one task's worth of data (e.g. 4096 buckets for 100 TB).
   */
 object BronzeWriter {
 

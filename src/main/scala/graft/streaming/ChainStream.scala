@@ -194,6 +194,14 @@ object ChainStream {
     */
   private val WalletStoreSchema = StructType(Seq(
     StructField("address", StringType), StructField("wallet_id", StringType)))
+  /** Default slot count of the wallet label store: Spark's default
+    * `parallelPartitionDiscovery.threshold`. Every batch that reads the
+    * store lists its slot directories, and Spark lists more than 32
+    * subdirectories through a Spark job (one task per directory, about 0.5 s
+    * per read at 64 slots); at 32 the listing stays on the driver. A store
+    * written under another count re-bootstraps once (the `_slots` sidecar).
+    */
+  private[graft] val LabelSlots = 32
   /** The height-bucketed `_bestchain` cursor as [[writeCursor]] writes it
     * (the bucket is the partition column). A flat or pre-height cursor is
     * read by inference for its one-time migration.
@@ -635,7 +643,7 @@ object ChainStream {
       labelsDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      slots: Int = 64): DataStreamWriter[Row] =
+      slots: Int = LabelSlots): DataStreamWriter[Row] =
     newBlocks.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)

@@ -17,8 +17,11 @@ object ExecutionProbe {
     * @param inferenceJobs  jobs outside any SQL execution whose one stage is
     *                       a one-partition `parallelize` — the shape of a
     *                       parquet read's schema inference
+    * @param listingJobs    jobs that list a file index's directories (Spark
+    *                       lists more than `parallelPartitionDiscovery
+    *                       .threshold` directories through a job)
     */
-  final case class Counts(scans: Map[String, Int], inferenceJobs: Int)
+  final case class Counts(scans: Map[String, Int], inferenceJobs: Int, listingJobs: Int)
 
   private def roots(p: SparkPlanInfo): Seq[String] =
     p.metadata.get("Location").toSeq ++ p.children.flatMap(roots)
@@ -26,6 +29,7 @@ object ExecutionProbe {
   def apply[A](spark: SparkSession, locations: String*)(f: => A): (A, Counts) = {
     val scans = locations.map(_ -> new AtomicInteger(0)).toMap
     val inference = new AtomicInteger(0)
+    val listing = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
@@ -42,6 +46,8 @@ object ExecutionProbe {
         val oneParallelize = js.stageInfos.size == 1 && js.stageInfos.head.numTasks == 1 &&
           js.stageInfos.head.rddInfos.exists(_.name == "ParallelCollectionRDD")
         if (outside && oneParallelize) inference.incrementAndGet()
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files"))) listing.incrementAndGet()
         ()
       }
     }
@@ -51,7 +57,7 @@ object ExecutionProbe {
     try {
       val out = f
       org.apache.spark.ListenerBusDrain(sc)
-      (out, Counts(scans.map { case (k, v) => k -> v.get }, inference.get))
+      (out, Counts(scans.map { case (k, v) => k -> v.get }, inference.get, listing.get))
     } finally sc.removeSparkListener(listener)
   }
 }

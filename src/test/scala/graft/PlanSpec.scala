@@ -79,6 +79,22 @@ class PlanSpec extends SparkSpec {
     assert(n <= 4, s"bk2 exchange count regressed: $n\n$p")
   }
 
+  test("address stats build the flow-pair set once: one exchange on (f, r)") {
+    // cpCounts emits both role rows from ONE pass over F; two projections
+    // of F planned two funder x recipient joins, each with its own exchange
+    val p = plan("bk4_address_stats")
+    val pairKeys = "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(p).map(_.group(1))
+      .filter(_.matches("""f#\d+, r#\d+, \d+""")).toSeq
+    assert(pairKeys.size == 1, s"flow-pair exchanges: $pairKeys\n$p")
+  }
+
+  test("tx stats join the per-tx output aggregate bucket-aligned, not broadcast") {
+    // both sides are tx_hash-bucketed; a broadcast of the silver_outs
+    // aggregate ships a tx-grain table the merge join reads in place
+    val p = plan("bk2_tx_stats")
+    assert(!p.contains("BroadcastExchange"), p)
+  }
+
   test("UTXO set is an equi anti-join with a partial-aggregated rollup") {
     val p = plan("bk7_utxo_set")
     assert(p.contains("LeftAnti"), p)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
+import graft.chain.Enrich
 import graft.operators.Salting
 import graft.sinks.{BronzeWriter, PartitionedGold}
 
@@ -16,11 +17,14 @@ class ScaleSpec extends SparkSpec {
   test("bucketed outpoint join plans with zero exchanges") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-bucket").toString
-    val outs = (1 to 1000).map(i => (s"tx$i", 0, i * 100L)).toDF("tx_hash", "idx", "value")
+    val outs = (1 to 1000).map(i => (s"tx$i", 0, i * 100L, s"addr$i"))
+      .toDF("tx_hash", "idx", "value", "address")
     val ins = (1 to 500).map(i => (s"spend$i", s"tx$i", 0)).toDF("tx_hash", "prev_tx_hash", "prev_index")
+    val ctx = (1 to 400).map(i => s"spend$i").toDF("tx_hash")
 
     BronzeWriter.writeBucketed(outs, "b_outs", s"$dir/outs", "tx_hash", 4)
     BronzeWriter.writeBucketed(ins, "b_ins", s"$dir/ins", "prev_tx_hash", 4)
+    BronzeWriter.writeBucketed(ctx, "b_ctx", s"$dir/ctx", "tx_hash", 4)
     // Force the sort-merge path (at real scale neither side broadcasts).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -31,10 +35,27 @@ class ScaleSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), plan)
       assert(plan.contains("Bucketed: true"), plan)
       assert(joined.count() == 500)
+
+      // The silver_rin composition: the outpoint join stays exchange-free,
+      // its output crosses ONE tx_hash exchange into the semi-join with the
+      // bucketed context, and the tx_hash-bucketed write lands one file per
+      // bucket (a prev_tx_hash-partitioned result would write one per
+      // (task, bucket)).
+      val rin = Enrich.resolvedInputs(spark.table("b_ins"), spark.table("b_outs"))
+        .join(spark.table("b_ctx"), Seq("tx_hash"), "left_semi")
+      val rinPlan = rin.queryExecution.explainString(FormattedMode)
+      val exchanges = """\(\d+\) Exchange""".r.findAllMatchIn(rinPlan).size
+      assert(exchanges == 1, s"expected exactly 1 Exchange, got $exchanges:\n$rinPlan")
+      val keys = "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(rinPlan).map(_.group(1)).toSeq
+      assert(keys.size == 1 && keys.head.startsWith("tx_hash#"), s"$keys\n$rinPlan")
+      BronzeWriter.writeBucketed(rin, "b_rin", s"$dir/rin", "tx_hash", 4)
+      val files = new java.io.File(s"$dir/rin").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet"))
+      assert(files.length == 4, files.mkString("\n"))
+      assert(spark.table("b_rin").count() == 400)
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS b_outs")
-      spark.sql("DROP TABLE IF EXISTS b_ins")
+      Seq("b_outs", "b_ins", "b_ctx", "b_rin").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 

@@ -332,6 +332,43 @@ class StreamingSpec extends SparkSpec {
     assert(pending == Map(b(n) -> b(n - 1), b(n + 1) -> b(n)))
   }
 
+  test("a streaming extend batch reads the default-slot label store without a listing job") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-store-listing").toString
+    val input = MemoryStream[(String, String, Long, Seq[(String, Seq[String])])]
+    val blocks = input.toDF().toDF("hash", "parent_hash", "ts", "txs")
+      .select(col("hash"),
+        when(col("parent_hash") === "", lit(null)).otherwise(col("parent_hash")).as("parent_hash"),
+        col("ts"), col("txs"))
+    def fundersOf(s: org.apache.spark.sql.SparkSession,
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(explode(col("txs")).as("t"))
+        .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    // the maintainer's default slot count, as tip-following runs it
+    val writer = ChainStream.incrementalWalletLabels(
+      blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt")
+    // bootstrap: 400 single-funder txs spread the store over every slot
+    input.addData(("g", "", 1000L, (0 until 400).map(i => (f"t$i%03d", Seq(f"a$i%03d")))))
+    writer.start().awaitTermination()
+    assert(lastLoggedRoute == "bootstrap")
+    import scala.jdk.CollectionConverters._
+    val slotDirs = Files.list(java.nio.file.Paths.get(s"$tmp/labels/labels")).iterator().asScala
+      .count(p => Files.isDirectory(p))
+    assert(slotDirs > 1, s"store holds $slotDirs slot directories")
+
+    // extension: a co-spend of a stored and a new address reads the store
+    // and rewrites the changed slots
+    input.addData(("h", "g", 1100L, Seq(("u1", Seq("a000", "z")))))
+    val (_, counts) = ExecutionProbe(spark)(writer.start().awaitTermination())
+    assert(lastLoggedRoute == "extend")
+    assert(counts.listingJobs == 0,
+      s"extend batch started ${counts.listingJobs} listing jobs over $slotDirs slot directories")
+    val labels = spark.read.parquet(s"$tmp/labels/labels").select("address", "wallet_id")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels.size == 401 && labels("z") == "a000" && labels("a000") == "a000")
+  }
+
   test("bestChainIncremental equals a full annotate on random batched feeds (in-order and shuffled)") {
     import spark.implicits._
     // deterministic fixture: a 60-block main chain, stale siblings, one
