@@ -285,8 +285,7 @@ object StreamRehearsal {
       (f"h$i%06d", if (i == 0) null else f"h${i - 1}%06d", 1000L + i))
     val (_, tBoot) = timed(graft.streaming.ChainStream.walletLabelsBatch(
       spark, chain.toDF("hash", "parent_hash", "ts"),
-      s"$workDir/bronze", fundersOf, s"$workDir/labels",
-      graft.streaming.ChainStream.LabelSlots))
+      s"$workDir/bronze", fundersOf, s"$workDir/labels"))
     val nStored = spark.read.parquet(s"$workDir/labels/labels").count()
     // the PRE-reorg store, pinned before batch 2 overwrites slots — both
     // direct route timings below must see exactly what the maintainer saw
@@ -298,8 +297,7 @@ object StreamRehearsal {
       (f"o$i%06d", if (i == 0) f"h${989}%06d" else f"o${i - 1}%06d", 3000L + i))
     val (reorgBatch, tBatch) = timed(graft.streaming.ChainStream.walletLabelsBatch(
       spark, fork.toDF("hash", "parent_hash", "ts"),
-      s"$workDir/bronze", fundersOf, s"$workDir/labels",
-      graft.streaming.ChainStream.LabelSlots))
+      s"$workDir/bronze", fundersOf, s"$workDir/labels"))
     val chainRoute = reorgBatch.routeName
     val repairRoute = reorgBatch.repair.fold("skipped")(_.name)
     // both routes timed directly on identical pre-reorg inputs: the one the
@@ -490,8 +488,7 @@ object StreamRehearsal {
           col("ts"))
       val t0 = System.nanoTime()
       val rec = graft.streaming.ChainStream.walletLabelsBatch(
-        spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels",
-        graft.streaming.ChainStream.LabelSlots)
+        spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels")
       ((System.nanoTime() - t0) / 1e9, rec)
     }
     // convergence: the drain must land on the same labeling a from-scratch
@@ -653,8 +650,7 @@ object StreamRehearsal {
         val batch = Seq((nh, tip, 4100000000L + i)).toDF("hash", "parent_hash", "ts")
         val t0 = System.nanoTime()
         val rec = graft.streaming.ChainStream.walletLabelsBatch(
-          spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels",
-          graft.streaming.ChainStream.LabelSlots)
+          spark, batch, s"$workDir/bronze", fundersOf, s"$workDir/labels")
         tip = nh
         ((System.nanoTime() - t0) / 1e9, rec.routeName)
       }

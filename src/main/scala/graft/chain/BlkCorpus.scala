@@ -84,9 +84,12 @@ object BlkCorpus {
     */
   val SentinelOutputRate = 0.15
 
+  /** Under the working directory (sbt's forked JVMs start in the checkout
+    * root): one corpus per checkout. SPARK_GRAFT_CORPUS_DIR overrides it. */
   def baseDir: String =
     sys.env.getOrElse("SPARK_GRAFT_CORPUS_DIR",
-      "/root/repo/target/blkcorpus_v5" + (if (Scale == 1) "" else s"_x$Scale"))
+      Paths.get("target/blkcorpus_v5" + (if (Scale == 1) "" else s"_x$Scale"))
+        .toAbsolutePath.toString)
   def rawDir: String = s"$baseDir/raw"
   def bronzeDir(table: String): String = s"$baseDir/bronze/$table"
   def silverDir(table: String): String = s"$baseDir/silver/$table"
@@ -102,7 +105,6 @@ object BlkCorpus {
     * path; that is what keeps the gate independent.
     */
   def truthDir: String = s"$baseDir/oracle_truth/blocks"
-  private def marker = Paths.get(s"$baseDir/_MATERIALIZED")
 
   // ---- wire-format serializer (write side of BlockFileSource's reader) ----
   private final class W {
@@ -188,8 +190,8 @@ object BlkCorpus {
 
   /** Generate the corpus into `rawDir` (driver-side). Returns the oracle
     * ground truth: (hash, height, is_on_best_chain) for every emitted block.
-    * Idempotent via the deterministic bytes — callers gate on the
-    * materialization marker, not on this.
+    * Idempotent via the deterministic bytes — callers gate on the corpus
+    * manifest, not on this.
     */
   def generate(): Seq[(String, Int, Boolean)] = {
     val truth = ArrayBuffer.empty[(String, Int, Boolean)]
@@ -389,6 +391,13 @@ object BlkCorpus {
     "silver_outs" -> (silverDir("outs"), "tx_hash"))
   private def tableName(table: String): String = s"blk_$table"
 
+  /** Version of what [[ensureMaterialized]] lays down: a change to the
+    * generator or to the bronze or silver layout bumps it.
+    */
+  val Version = 1
+  private[graft] val Manifest = graft.sinks.StoreManifest("blkcorpus", Version,
+    Map("scale" -> Scale, "buckets" -> Buckets))
+
   /** Re-register the bucketed tables in this session's catalog (the files
     * carry Spark bucket ids; the DDL re-attaches the bucket spec that
     * `saveAsTable` metadata does not survive across sessions).
@@ -421,34 +430,35 @@ object BlkCorpus {
     * the same joins per query. Oracle layering is unchanged: DuckDB oracles
     * recompute everything from BRONZE (+ the bk1-gated annotation), so a bug
     * in the silver build still fails bk2–bk5.
+    * A directory whose manifest is not [[Manifest]] is deleted and rebuilt.
     */
   def ensureMaterialized(spark: SparkSession): Unit = synchronized {
-    if (Files.exists(marker)) { registerBucketed(spark); return }
-    val truth = generate()
-    spark.createDataFrame(truth).toDF("hash", "height", "is_on_best_chain")
-      .coalesce(1).write.mode("overwrite").parquet(truthDir)
-    val blocks = BlockFileSource.read(spark, rawDir)
-    val bronze = BlockFileSource.toBronze(blocks)
-    bronze.foreach { case (name, df) =>
-      if (bucketed.contains(name)) writeBucketed(spark, name, df)
-      else df.coalesce(1).write.mode("overwrite").parquet(bronzeDir(name))
+    graft.sinks.StoreManifest.ensure(spark, baseDir, Manifest) {
+      val truth = generate()
+      spark.createDataFrame(truth).toDF("hash", "height", "is_on_best_chain")
+        .coalesce(1).write.mode("overwrite").parquet(truthDir)
+      val blocks = BlockFileSource.read(spark, rawDir)
+      val bronze = BlockFileSource.toBronze(blocks)
+      bronze.foreach { case (name, df) =>
+        if (bucketed.contains(name)) writeBucketed(spark, name, df)
+        else df.coalesce(1).write.mode("overwrite").parquet(bronzeDir(name))
+      }
+      val ann = BestChain.annotateDistributed(spark.read.parquet(bronzeDir("blocks")))
+      ann.select(col("hash"), col("parent_hash"), col("ts"),
+          col("height").cast("int").as("height"), col("is_on_best_chain"))
+        .coalesce(1).write.mode("overwrite").parquet(annotatedDir)
+      val annDf = spark.read.parquet(annotatedDir)
+      val ctx = GoldStats.chainTxs(spark.read.parquet(bronzeDir("transactions")), annDf)
+      writeBucketed(spark, "silver_ctx", ctx)
+      val ctxKeys = spark.table(tableName("silver_ctx")).select("tx_hash")
+      writeBucketed(spark, "silver_rin",
+        Enrich.resolvedInputs(
+            spark.table(tableName("tx_inputs")), spark.table(tableName("tx_outputs")))
+          .join(ctxKeys, Seq("tx_hash"), "left_semi"))
+      writeBucketed(spark, "silver_outs",
+        spark.table(tableName("tx_outputs")).join(ctxKeys, Seq("tx_hash"), "left_semi"))
     }
-    val ann = BestChain.annotateDistributed(spark.read.parquet(bronzeDir("blocks")))
-    ann.select(col("hash"), col("parent_hash"), col("ts"),
-        col("height").cast("int").as("height"), col("is_on_best_chain"))
-      .coalesce(1).write.mode("overwrite").parquet(annotatedDir)
-    val annDf = spark.read.parquet(annotatedDir)
-    val ctx = GoldStats.chainTxs(spark.read.parquet(bronzeDir("transactions")), annDf)
-    writeBucketed(spark, "silver_ctx", ctx)
-    val ctxKeys = spark.table(tableName("silver_ctx")).select("tx_hash")
-    writeBucketed(spark, "silver_rin",
-      Enrich.resolvedInputs(
-          spark.table(tableName("tx_inputs")), spark.table(tableName("tx_outputs")))
-        .join(ctxKeys, Seq("tx_hash"), "left_semi"))
-    writeBucketed(spark, "silver_outs",
-      spark.table(tableName("tx_outputs")).join(ctxKeys, Seq("tx_hash"), "left_semi"))
-    Files.createDirectories(Paths.get(baseDir))
-    Files.write(marker, Array.emptyByteArray)
+    registerBucketed(spark)
   }
 
   def bronze(spark: SparkSession, table: String): DataFrame = {

@@ -213,27 +213,19 @@ object Similarity {
   }
 
   // ------------------------------------------------- sidecar I/O (Hadoop FS)
-  // The `_cellstats.json` sidecar goes through the Hadoop FileSystem API, not
-  // java.nio — an index on HDFS or an object store gets the same skew signal
-  // a local one does (java.nio would silently no-op there). The sidecar also
-  // carries the RUNNING per-cell counts, so each append can merge its own
-  // O(new) counts instead of re-listing the whole (and growing) index.
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
+  // The `_cellstats.json` sidecar goes through the Hadoop FileSystem API
+  // (graft.sinks.Hfs), not java.nio — an index on HDFS or an object store
+  // gets the same skew signal a local one does. The sidecar also carries the
+  // RUNNING per-cell counts, so each append can merge its own O(new) counts
+  // instead of re-listing the whole (and growing) index.
 
   private def writeCellStats(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       stats: IvfAppendStats, cells: Map[Int, Long]): Unit = {
-    val (fs, p) = hadoopFs(spark, s"$dir/_cellstats.json")
     val cellsJson = cells.toSeq.sortBy(_._1)
       .map { case (c, n) => "\"" + c + "\":" + n }.mkString("{", ",", "}")
-    val line = stats.json.dropRight(1) + s""","cells":$cellsJson}""" + "\n"
-    val out = fs.create(p, /*overwrite=*/ true)
-    try out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.sinks.Hfs.writeText(spark, s"$dir/_cellstats.json",
+      stats.json.dropRight(1) + s""","cells":$cellsJson}""" + "\n")
   }
 
   /** The sidecar's running per-cell counts, if a sidecar exists and carries
@@ -241,16 +233,8 @@ object Similarity {
     * one-time partition-metadata scan).
     */
   private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[String] = {
-    val (fs, p) = hadoopFs(spark, s"$dir/_cellstats.json")
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Option[String] =
+    graft.sinks.Hfs.readText(spark, s"$dir/_cellstats.json")
 
   private def parseCells(sidecar: String): Option[Map[Int, Long]] =
     """"cells":\{([^}]*)\}""".r.findFirstMatchIn(sidecar).map { m =>
@@ -437,8 +421,7 @@ object Similarity {
       // cannot double-count the batch being written
       val prior: Map[Int, Long] = readSidecar(spark, dir).flatMap(parseCells)
         .getOrElse {
-          val (fs, cellsPath) = hadoopFs(spark, s"$dir/cells")
-          if (!fs.exists(cellsPath)) Map.empty[Int, Long]
+          if (!graft.sinks.Hfs.exists(spark, s"$dir/cells")) Map.empty[Int, Long]
           else spark.read.parquet(s"$dir/cells").groupBy("cell").count()
             .as[(Int, Long)].collect().toMap
         }
@@ -519,8 +502,8 @@ object Similarity {
     val skew = """"skew":([0-9.eE+-]+)""".r
       .findFirstMatchIn(sidecar.get).map(_.group(1).toDouble)
     if (!skew.exists(_ > maxSkew)) return false
-    val (fs, _) = hadoopFs(spark, dir)
     def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = hp(dir).getFileSystem(spark.sessionState.newHadoopConf())
     // Every swap step must actually happen before anything is deleted: a
     // rename that silently returned false followed by the cleanup deletes
     // would destroy the only surviving copy.

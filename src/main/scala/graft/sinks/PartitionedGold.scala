@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -28,9 +28,6 @@ object PartitionedGold {
   /** Attach the partition column: height / bucketSize. */
   def withBucket(df: DataFrame, heightCol: String, bucketSize: Int = 10000): DataFrame =
     df.withColumn(BucketCol, (col(heightCol) / bucketSize).cast("int"))
-
-  private def fsExists(spark: SparkSession, path: String): Boolean =
-    Hfs.exists(spark, path)
 
   /** Diff-and-overwrite: write `gold` (carrying `heightCol`) to `path`,
     * rewriting ONLY the height buckets whose CONTENT differs from what is on
@@ -79,7 +76,7 @@ object PartitionedGold {
       spark.createDataFrame(spark.sparkContext.parallelize(sigs.toSeq, 1), sidecarSchema)
         .write.mode(SaveMode.Overwrite).parquet(sidecarPath(path))
 
-    if (!fsExists(spark, path)) {
+    if (!Hfs.exists(spark, path)) {
       overwriteAffected(bucketed, path)
       val sigs = sig(bucketed)
       writeSidecar(sigs)
@@ -91,7 +88,7 @@ object PartitionedGold {
     // a directory without data files counts as missing, like a half-written
     // one — read as "no buckets on disk" it would rewrite every bucket
     val sidecarRows: Option[Array[Row]] =
-      if (!fsExists(spark, sidecarPath(path))) None
+      if (!Hfs.exists(spark, sidecarPath(path))) None
       else scala.util.Try {
         val df = spark.read.schema(sidecarSchema).parquet(sidecarPath(path))
         if (df.inputFiles.isEmpty) None else Some(df.collect())

@@ -7,6 +7,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.operators.ChainOps
+import graft.sinks.{Hfs, PartitionedGold, StoreManifest}
 
 /** Structured Streaming path (SURVEY.md §2.9) — the Spark-native form of the
   * reference's `synchronizeDatabase` loop (BlockchainToGraph.java:116–167):
@@ -89,7 +90,7 @@ object ChainStream {
       trigger: Trigger = Trigger.AvailableNow(),
       bucketSize: Int = 10000): DataStreamWriter[Row] =
     appendThenRecompute(newBlocks, bronzeDir, recompute, checkpointDir, trigger)(
-      graft.sinks.PartitionedGold.syncAffected(_, goldDir, "height", bucketSize))
+      PartitionedGold.syncAffected(_, goldDir, "height", bucketSize))
 
   /** The micro-batch body both gold writers share: append the batch to
     * bronze, re-read bronze, collapse replayed appends, recompute gold and
@@ -115,15 +116,6 @@ object ChainStream {
           .dropDuplicates("hash") // replayed appends collapse here
         sink(recompute(spark, bronze))
       }
-
-  private def fsExists(spark: SparkSession, path: String): Boolean =
-    graft.sinks.Hfs.exists(spark, path)
-
-  private def fsWriteText(spark: SparkSession, path: String, text: String): Unit =
-    graft.sinks.Hfs.writeText(spark, path, text)
-
-  private def fsReadText(spark: SparkSession, path: String): Option[String] =
-    graft.sinks.Hfs.readText(spark, path)
 
   /** The route a [[bestChainIncremental]] call took. */
   sealed abstract class ChainRoute(val name: String)
@@ -199,16 +191,18 @@ object ChainStream {
     * store lists its slot directories, and Spark lists more than 32
     * subdirectories through a Spark job (one task per directory, about 0.5 s
     * per read at 64 slots); at 32 the listing stays on the driver. A store
-    * written under another count re-bootstraps once (the `_slots` sidecar).
+    * written under another count re-bootstraps once (its manifest records
+    * the count).
     */
   private[graft] val LabelSlots = 32
+  /** Layout version of the label store: a change to what it lays down bumps it. */
+  private val LabelsVersion = 1
   /** The height-bucketed `_bestchain` cursor as [[writeCursor]] writes it
-    * (the bucket is the partition column). A flat or pre-height cursor is
-    * read by inference for its one-time migration.
+    * (the bucket is the partition column).
     */
   private val CursorSchema = StructType(Seq(StructField("hash", StringType),
     StructField("height", IntegerType),
-    StructField(graft.sinks.PartitionedGold.BucketCol, IntegerType)))
+    StructField(PartitionedGold.BucketCol, IntegerType)))
   /** The frontier sidecar body as [[writeFrontierBody]] writes it. */
   private val FrontierSchema = StructType(
     Seq("kind", "hash", "parent_hash").map(StructField(_, StringType)))
@@ -293,10 +287,8 @@ object ChainStream {
     * chain bit-identical to what the full path would produce on the
     * connected subgraph.
     *
-    * @param prevCursor prior best chain (hash, height) — None when absent or
-    *                   schema-incompatible (pre-height cursors force one
-    *                   full resolution, after which the new cursor carries
-    *                   heights)
+    * @param prevCursor prior best chain (hash, height) — None when absent
+    *                   (the full resolution, route "bootstrap")
     * @param top        prevCursor's top height buckets, collected once by the
     *                   caller ([[CursorTop]]): the prior tip and the
     *                   membership/anchor lookups come from it instead of
@@ -304,8 +296,8 @@ object ChainStream {
     *                   is never trusted as absence — with a Frontier it gets
     *                   a second-chance lookup against the FULL cursor (deep
     *                   anchors), without one it routes to the full
-    *                   resolution. None (a flat cursor) = every lookup and
-    *                   the prior tip read the full cursor
+    *                   resolution. None = every lookup and the prior tip
+    *                   read the full cursor
     * @param frontier   the stamped off-chain index, or None when absent,
     *                   crash-invalidated, or overflowed (→ the conservative
     *                   bronze-probe path above)
@@ -548,7 +540,7 @@ object ChainStream {
     }
     // candidate tip among the RESOLVED blocks vs the prior tip — annotate's
     // exact ordering (max height, then min hash). The prior tip is in the
-    // collected top bucket; only a flat cursor pays the TakeOrdered scan.
+    // collected top bucket; without one it is a TakeOrdered scan.
     val candidate = heights.minBy { case (k, v) => (-v, k) }
     val prevTip = top.fold(tipOf(cursor))(_.tip)
     val candWins = prevTip.forall { case (ph, pH) =>
@@ -642,15 +634,13 @@ object ChainStream {
       fundersOf: (SparkSession, DataFrame) => DataFrame,
       labelsDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      slots: Int = LabelSlots): DataStreamWriter[Row] =
+      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
     newBlocks.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        walletLabelsBatch(batch.sparkSession, batch, bronzeDir, fundersOf,
-          labelsDir, slots)
+        walletLabelsBatch(batch.sparkSession, batch, bronzeDir, fundersOf, labelsDir)
         ()
       }
 
@@ -682,7 +672,7 @@ object ChainStream {
       bronzeDir: String,
       fundersOf: (SparkSession, DataFrame) => DataFrame,
       labelsDir: String,
-      slots: Int): WalletBatch = {
+      slots: Int = LabelSlots): WalletBatch = {
     // Swap-register discipline applied to the batch as a whole: every frame
     // the batch materializes (localCheckpoints of slot-, bucket- and
     // chain-sized data; the resolvers' internal rebases) is DEAD once the
@@ -727,54 +717,41 @@ object ChainStream {
       .dropDuplicates("hash") // replayed appends collapse here
     val storePath = s"$labelsDir/labels"
     val cursorPath = s"$labelsDir/_bestchain"
-    val slotsPath = s"$labelsDir/_slots"
-    // the cursor's height buckets come from a directory listing (no scan);
-    // a listing with buckets is the layout writeCursor writes, read with its
-    // known schema
-    val bucketColName = graft.sinks.PartitionedGold.BucketCol
-    val tipBuckets: Seq[Int] = graft.sinks.Hfs.listDirNames(spark, cursorPath)
-      .filter(_.startsWith(bucketColName + "="))
+    // The cursor's height buckets come from a directory listing (no scan).
+    // A listing without buckets is no cursor: none written yet, or one
+    // written from an EMPTY chain (a connected-only bootstrap before any
+    // genesis arrived) — the maintainer bootstraps until a genesis-rooted
+    // chain exists, and that full route writes the whole bucketed layout.
+    val bucket = PartitionedGold.BucketCol
+    val tipBuckets: Seq[Int] = Hfs.listDirNames(spark, cursorPath)
+      .filter(_.startsWith(bucket + "="))
       .flatMap(n => scala.util.Try(n.split("=")(1).toInt).toOption)
-    // prior cursor, if present and height-carrying (a pre-r14 hash-only
-    // cursor still serves the reorg diff below, but not incremental heights)
-    // A flat or pre-height cursor is read by inference, Try-guarded: a
-    // cursor dir written from an EMPTY chain (connected-only bootstrap
-    // before any genesis arrived) has no parquet files and cannot be read —
-    // treated as no cursor, so the maintainer keeps bootstrapping until a
-    // genesis-rooted chain exists (conservative, documented).
-    val prevCursorAny: Option[DataFrame] =
-      if (tipBuckets.nonEmpty) Some(spark.read.schema(CursorSchema).parquet(cursorPath))
-      else if (!fsExists(spark, cursorPath)) None
-      else scala.util.Try {
-        val df = spark.read.parquet(cursorPath); df.schema; df
-      }.toOption
+    val prevCursor: Option[DataFrame] =
+      if (tipBuckets.isEmpty) None
+      else Some(spark.read.schema(CursorSchema).parquet(cursorPath))
     // Pre-genesis drain: no cursor and no null-parent block in bronze means
     // the connected chain is EMPTY — there is nothing to cluster, store, or
     // index yet, and a bootstrap attempt would still collect+walk the whole
     // bronze per batch only to produce that empty chain. One pushed-down
     // probe, then wait for the genesis to arrive (the reorder-buffer
     // discipline applied to the chain's own root).
-    if (prevCursorAny.isEmpty &&
+    if (prevCursor.isEmpty &&
         traced("wallet: genesis probe")(
           bronze.where(col("parent_hash").isNull).isEmpty))
       return WalletBatch(route = None)
-    val prevCursorH = prevCursorAny.filter(_.columns.contains("height"))
-      .map(_.select(col("hash"), col("height")))
     // The TOP two height buckets, collected ONCE (≤ 2 × CursorBucketSize
     // rows, partition-pruned): the prior tip, the membership/anchor
     // lookups, the reorged-out rows, the frontier's reorged-out pairs and
     // the cursor write's prefix all come from these rows when the heights
     // they need are in range — one cursor read per batch instead of one
     // per consumer. What lies below the range takes the full-cursor reads.
-    val prevTop: Option[CursorTop] =
-      if (tipBuckets.isEmpty) None
-      else {
-        val fromBucket = math.max(tipBuckets.max - 1, 0)
-        val rows = prevCursorAny.get.where(col(bucketColName) >= fromBucket)
-          .select("hash", "height").collect()
-        Some(CursorTop(rows.iterator.map(r => r.getString(0) -> r.getInt(1)).toMap,
-          fromBucket * CursorBucketSize))
-      }
+    val prevTop: Option[CursorTop] = prevCursor.map { cursor =>
+      val fromBucket = math.max(tipBuckets.max - 1, 0)
+      val rows = cursor.where(col(bucket) >= fromBucket)
+        .select("hash", "height").collect()
+      CursorTop(rows.iterator.map(r => r.getString(0) -> r.getInt(1)).toMap,
+        fromBucket * CursorBucketSize)
+    }
     val prevTip: Option[(String, Int)] = prevTop.flatMap(_.tip)
     // the OFF-CHAIN index ([[Frontier]]): dangling parent hashes bronze
     // references but does not contain, plus every bronze block NOT on the
@@ -799,13 +776,13 @@ object ChainStream {
     // the fragment's blocks from the chain.
     val frontierPath = s"$labelsDir/_frontier"
     val frontierStampPath = s"$labelsDir/_frontier_ok"
-    val stampOk = (fsReadText(spark, frontierStampPath).map(_.trim),
+    val stampOk = (Hfs.readText(spark, frontierStampPath).map(_.trim),
       prevTip.map(_._1)) match {
       case (Some(s), Some(tip)) => s == tip
       case _ => false
     }
     val frontierRows: Option[Array[Row]] =
-      if (!stampOk || !fsExists(spark, frontierPath)) None
+      if (!stampOk || !Hfs.exists(spark, frontierPath)) None
       else Some(spark.read.schema(FrontierSchema).parquet(frontierPath).collect())
     val frontierOverflow =
       frontierRows.exists(_.exists(_.getString(0) == "overflow"))
@@ -819,12 +796,12 @@ object ChainStream {
       }
     val upd = traced("wallet: best chain")(
       if (!collected)
-        bestChainIncremental(spark, bronze, batch, prevCursorH, prevTop, frontier)
+        bestChainIncremental(spark, bronze, batch, prevCursor, prevTop, frontier)
       else {
         val (h, p) = (batch.schema.fieldIndex("hash"), batch.schema.fieldIndex("parent_hash"))
         advanceChain(spark, bronze,
           batchRows.map(r => (r.getString(h), r.getString(p))).distinctBy(_._1),
-          prevCursorH, prevTop, frontier)
+          prevCursor, prevTop, frontier)
       })
     val route = upd.route
     val unchanged = route match { case ChainRoute.Unchanged => true; case _ => false }
@@ -832,13 +809,12 @@ object ChainStream {
     // is only readable-for-overwrite under the SAME slots value it was
     // written with: resuming with a different value would route an address's
     // replacement row to a different slot partition and leave the stale row
-    // behind — duplicate, conflicting labels with no error. The value is
-    // persisted beside the store on bootstrap and validated every batch; a
-    // disagreement (or a pre-sidecar store) is treated as store loss and
-    // re-bootstraps under the current value.
-    val storedSlots = fsReadText(spark, slotsPath).map(_.trim.toInt)
-    val bootstrapping = !fsExists(spark, storePath) || prevCursorAny.isEmpty ||
-      !storedSlots.contains(slots)
+    // behind — duplicate, conflicting labels with no error. The store's
+    // manifest records the value; a missing, empty or different manifest is
+    // store loss: re-bootstrap under the current value, the cursor kept.
+    val manifest = StoreManifest("wallet_labels", LabelsVersion, Map("slots" -> slots))
+    val bootstrapping = !Hfs.exists(spark, storePath) || prevCursor.isEmpty ||
+      !StoreManifest.read(spark, labelsDir).contains(manifest)
     if (!bootstrapping && unchanged) {
       // The store provably already reflects this chain (no label work), but
       // the FRONTIER may have changed: a catch-up batch whose blocks all
@@ -852,12 +828,12 @@ object ChainStream {
       if (tip.isDefined && (grewOrShrank || !stampOk)) {
         val nf: Option[Frontier] =
           (if (grewOrShrank) upd.newFrontier
-           else deriveFrontier(spark, bronze, prevCursorAny.get.select("hash")))
+           else deriveFrontier(spark, bronze, prevCursor.get.select("hash")))
             .filter(f => // cap enforcement — same rule as the main tail
               f.pending.size <= PendingCap && f.dangling.size <= DanglingCap)
-        fsWriteText(spark, frontierStampPath, "!pending\n")
+        Hfs.writeText(spark, frontierStampPath, "!pending\n")
         writeFrontierBody(spark, frontierPath, nf)
-        fsWriteText(spark, frontierStampPath, tip.get + "\n")
+        Hfs.writeText(spark, frontierStampPath, tip.get + "\n")
         return WalletBatch(Some(route),
           pending = Some(nf.fold(-1)(_.pending.size)),
           dangling = Some(nf.fold(-1)(_.dangling.size)))
@@ -870,25 +846,27 @@ object ChainStream {
     val bestHashes = upd.best.select("hash")
     val bestFunders = fundersOf(spark,
       bronze.join(bestHashes, Seq("hash"), "left_semi"))
-    val bucket = graft.sinks.PartitionedGold.BucketCol
     def slotOf(addr: org.apache.spark.sql.Column) =
       pmod(xxhash64(addr), lit(slots)).cast("int")
     def upsert(store: DataFrame, delta: DataFrame): DataFrame =
       delta.unionByName(
         store.join(delta.select("address"), Seq("address"), "left_anti"))
     val record = if (bootstrapping) {
-      // bootstrap (or cursor lost / slots disagree): one full clustering
+      // bootstrap (or cursor lost / manifest disagrees): one full clustering
       // of the best chain. The clustering consumes the funder set TWICE
       // (address universe + co-spend edge derivation), and each lazy
       // evaluation re-runs the corpus-grain funder join — persist across
       // the two consumers for the one batch that pays the O(chain) cost.
       val bf = bestFunders.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the manifest is written last: a crash inside the overwrite leaves
+      // no manifest, and the next batch bootstraps again
+      Hfs.delete(spark, StoreManifest.path(labelsDir))
       val addrs = bf.select(col("src_address").as("address")).distinct()
       traced("wallet: bootstrap cluster+write")(WalletCluster.clusters(addrs, bf)
         .withColumn(bucket, slotOf(col("address")))
         .write.mode("overwrite").partitionBy(bucket).parquet(storePath))
       bf.unpersist(blocking = false)
-      fsWriteText(spark, slotsPath, slots.toString + "\n")
+      StoreManifest.write(spark, labelsDir, manifest)
       WalletBatch(Some(route), arrived = -1, invalidated = -1, storeBootstrap = true)
     } else {
       // Explicit schema: a legitimately-EMPTY store is valid state — a
@@ -921,9 +899,7 @@ object ChainStream {
             case None =>
               // bucket predicate first: the reorged-out rows live at or
               // above the anchor's bucket, so the scan is partition-pruned
-              // (a pre-bucketing cursor just scans — one-time, until the
-              // next cursor write migrates it)
-              cursorPrune(prevCursorAny.get, anchorH)
+              cursorPrune(prevCursor.get, anchorH)
                 .where(col("height") > anchorH).select("hash")
           }
           (inv, path.map(_._1).toDF("hash"))
@@ -934,7 +910,7 @@ object ChainStream {
           // and each is block-hash-grain (bounded by the chain, KBs–MBs), so
           // one eager checkpoint apiece beats re-running the chain × chain
           // set-diff join per consumer.
-          val prevBest = prevCursorAny.get.select("hash")
+          val prevBest = prevCursor.get.select("hash")
           val inv = ChainOps.localCheckpoint(prevBest.join(bestHashes, Seq("hash"), "left_anti"))
           val arr = ChainOps.localCheckpoint(bestHashes.join(prevBest, Seq("hash"), "left_anti"))
           nArrived = arr.count(); nInvalidated = inv.count() // local, checkpointed
@@ -993,7 +969,7 @@ object ChainStream {
             .where(col(bucket).isin(changedSlots.map(Integer.valueOf): _*))
             .join(changes.select("address"), Seq("address"), "left_anti")
             .unionByName(slotted))
-        graft.sinks.PartitionedGold.overwriteAffected(content, storePath, bucket)
+        PartitionedGold.overwriteAffected(content, storePath, bucket)
       }
       WalletBatch(Some(route), nArrived, nInvalidated, repair.map(_._2))
     }
@@ -1031,7 +1007,7 @@ object ChainStream {
           deriveFrontier(spark, bronze, bestHashes)
         else {
           val invRows = prevTop.flatMap(_.from(anchorH)).map(_.toArray).getOrElse(
-            cursorPrune(prevCursorAny.get, anchorH)
+            cursorPrune(prevCursor.get, anchorH)
               .where(col("height") >= anchorH)
               .select(col("hash"), col("height").cast("int").as("height"))
               .collect().map(r => (r.getString(0), r.getInt(1))))
@@ -1052,7 +1028,7 @@ object ChainStream {
     // inside, None = the overflow marker, Some = a trusted Frontier — which
     // is exactly what `frontier` already encodes when the rows were read
     val prevBody: Option[Option[Frontier]] = frontierRows.map(_ => frontier)
-    fsWriteText(spark, frontierStampPath, "!pending\n")
+    Hfs.writeText(spark, frontierStampPath, "!pending\n")
     if (!prevBody.contains(frontierCapped))
       writeFrontierBody(spark, frontierPath, frontierCapped)
     // Write ordering is store-then-cursor: a crash between them leaves a
@@ -1065,18 +1041,18 @@ object ChainStream {
     // above the prior one — every such bucket receives content, so a
     // dynamic partition overwrite of bucket-sized data covers it with no
     // deletion case. At a 100M-block chain that is a KB-scale write per
-    // sync instead of a GB-scale cursor rewrite. The full routes (fallback/
-    // bootstrap/migration from a pre-bucketed or genesis-reset cursor)
-    // rewrite the whole bucketed layout from the checkpointed resolution.
-    // the new tip, derived BEFORE the cursor write — on the migration
-    // routes upd.best is a lazy read of the very files the write replaces
+    // sync instead of a GB-scale cursor rewrite. The full routes write only
+    // the buckets whose content changed, the whole layout on bootstrap, from
+    // the checkpointed resolution.
+    // the new tip: the walk's path head on the extend route, the prior tip
+    // on the unchanged route, else the resolved chain's
     val newTip: Option[String] = upd.extendDelta.map(_._1.head._1)
       .orElse(if (unchanged) prevTip.map(_._1) else None)
       .orElse(tipOf(upd.best).map(_._1))
-    writeCursor(spark, upd, prevCursorAny, prevTop, cursorPath)
+    writeCursor(spark, upd, prevCursor, prevTop, cursorPath)
     // 4. re-stamp with the NEW tip — the last write of the batch, so a
     // matching stamp proves body and cursor were both committed together
-    newTip.foreach(t => fsWriteText(spark, frontierStampPath, t + "\n"))
+    newTip.foreach(t => Hfs.writeText(spark, frontierStampPath, t + "\n"))
     record
   }
 
@@ -1089,7 +1065,6 @@ object ChainStream {
   private def deriveFrontier(
       spark: SparkSession, bronze: DataFrame,
       bestHashes: DataFrame): Option[Frontier] = {
-    import spark.implicits._
     val parents = bronze.select(col("parent_hash").as("h"))
       .where(col("h").isNotNull).distinct()
     val dRows = parents
@@ -1170,23 +1145,18 @@ object ChainStream {
     */
   private[graft] val BatchWalkCap = 250000
 
-  /** Partition-prune a bucketed cursor to the buckets at/above `anchorH`;
-    * a pre-bucketing (flat) cursor is returned as-is.
-    */
+  /** Partition-prune the cursor to the buckets at/above `anchorH`. */
   private def cursorPrune(cursor: DataFrame, anchorH: Int): DataFrame =
-    if (!cursor.columns.contains(graft.sinks.PartitionedGold.BucketCol)) cursor
-    else cursor.where(col(graft.sinks.PartitionedGold.BucketCol) >=
-      lit(math.max(anchorH, 0) / CursorBucketSize))
+    cursor.where(col(PartitionedGold.BucketCol) >= math.max(anchorH, 0) / CursorBucketSize)
 
   private def writeCursor(
       spark: SparkSession, upd: BestChainUpdate,
       prevCursor: Option[DataFrame], top: Option[CursorTop],
       cursorPath: String): Unit = {
     import spark.implicits._
-    val bucketCol = graft.sinks.PartitionedGold.BucketCol
+    val bucketCol = PartitionedGold.BucketCol
     upd.extendDelta match {
-      case Some((path, anchorH)) if anchorH >= 0 &&
-          prevCursor.exists(_.columns.contains(bucketCol)) =>
+      case Some((path, anchorH)) if anchorH >= 0 =>
         // affected buckets = [anchor bucket .. new tip bucket]; content =
         // the prior chain's rows at or below the anchor WITHIN those
         // buckets, plus the new path. When the anchor bucket is in the
@@ -1202,28 +1172,20 @@ object ChainStream {
             val prefix = cursorPrune(prevCursor.get, anchorH)
               .where(col("height") <= anchorH)
               .select("hash", "height")
-            ChainOps.localCheckpoint(graft.sinks.PartitionedGold.withBucket(
+            ChainOps.localCheckpoint(PartitionedGold.withBucket(
               prefix.unionByName(path.toDF("hash", "height")), "height", CursorBucketSize))
         }
-        graft.sinks.PartitionedGold.overwriteAffected(content, cursorPath)
+        PartitionedGold.overwriteAffected(content, cursorPath)
       case _ =>
-        // The "unchanged" route only reaches here during a re-bootstrap
-        // (slots change / missing sidecar with a replayed or stale-only
-        // batch), where upd.best IS the lazy read of cursorPath: an
-        // already-bucketed cursor needs no rewrite at all (content is
-        // bit-identical by definition of the route), and a flat pre-bucketing
-        // cursor being migrated must be checkpointed first or the overwrite
-        // destroys the path its own plan reads mid-job.
-        val unchanged = upd.route match { case ChainRoute.Unchanged => true; case _ => false }
-        val readsCursorPath = unchanged || upd.extendDelta.exists(_._2 >= 0)
-        if (unchanged && prevCursor.exists(_.columns.contains(bucketCol))) return
-        // checkpoint wherever the plan reads cursorPath (migration cases) —
-        // the full-resolution route is already checkpointed in the resolver
-        val src = (if (readsCursorPath) ChainOps.localCheckpoint(upd.best) else upd.best)
-          .select(col("hash"), col("height").cast("int").as("height"))
-        val newBuckets = graft.sinks.PartitionedGold.withBucket(
-          src, "height", CursorBucketSize)
-        prevCursor.filter(_.columns.contains(bucketCol)) match {
+        // "unchanged" reaches here only on a label-store re-bootstrap: the
+        // cursor already holds this chain (upd.best is a lazy read of it)
+        if (upd.route == ChainRoute.Unchanged) return
+        // upd.best reads no cursor file here: the full routes are
+        // checkpointed in the resolver, an anchor < 0 is the walk's local path
+        val newBuckets = PartitionedGold.withBucket(
+          upd.best.select(col("hash"), col("height").cast("int").as("height")),
+          "height", CursorBucketSize)
+        prevCursor match {
           case Some(prev) =>
             // Bucketed prior cursor: write ONLY the buckets whose content
             // changed — rows present on exactly one side mark their bucket
@@ -1232,10 +1194,7 @@ object ChainStream {
             // best chain rewrites one bucket, not the whole chain layout;
             // the batch that finally connects the corpus rewrites them all,
             // which is its honest cost.
-            val prevB = graft.sinks.PartitionedGold.withBucket(
-              prev.select(col("hash"), col("height").cast("int").as("height")),
-              "height", CursorBucketSize)
-            val changed = newBuckets.unionByName(prevB)
+            val changed = newBuckets.unionByName(prev.select("hash", "height", bucketCol))
               .groupBy("hash", "height", bucketCol).count()
               .where(col("count") === 1)
               .select(bucketCol).distinct()
@@ -1243,18 +1202,18 @@ object ChainStream {
             if (changed.nonEmpty) {
               val content = newBuckets
                 .where(col(bucketCol).isin(changed.toSeq.map(Integer.valueOf): _*))
-              graft.sinks.PartitionedGold.overwriteAffected(content, cursorPath)
+              PartitionedGold.overwriteAffected(content, cursorPath)
               // a changed bucket with NO new content (the chain shrank past
               // its boundary) gets nothing from the dynamic overwrite — its
               // stale directory must go explicitly
               val kept = newBuckets.select(bucketCol).distinct()
                 .collect().map(_.getInt(0)).toSet
               (changed -- kept).foreach { b =>
-                graft.sinks.Hfs.delete(spark, s"$cursorPath/$bucketCol=$b")
+                Hfs.delete(spark, s"$cursorPath/$bucketCol=$b")
               }
             }
           case None =>
-            // bootstrap or flat-cursor migration: whole bucketed layout
+            // bootstrap: the whole bucketed layout
             newBuckets.write.mode("overwrite").partitionBy(bucketCol).parquet(cursorPath)
         }
     }

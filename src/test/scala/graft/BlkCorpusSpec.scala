@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.chain.{BestChain, BlkCorpus}
@@ -133,5 +135,58 @@ class BlkCorpusSpec extends SparkSpec {
     assert(row(0).getAs[Long]("input_tx_balance") == expect.getLong(0))
     assert(row(0).getAs[Long]("input_tx_count") == expect.getLong(1))
     assert(row(0).getAs[Long]("output_tx_count") == 0L)
+  }
+
+  test("corpus: the silver tables hold the layout the writer lays down, one file per bucket") {
+    BlkCorpus.ensureMaterialized(spark)
+    assert(graft.sinks.StoreManifest.read(spark, BlkCorpus.baseDir).contains(BlkCorpus.Manifest))
+    Seq("ctx", "rin", "outs").foreach { t =>
+      val files = java.nio.file.Files.list(java.nio.file.Paths.get(BlkCorpus.silverDir(t)))
+      val parquet = try files.iterator().asScala.count(_.toString.endsWith(".parquet"))
+        finally files.close()
+      assert(parquet == BlkCorpus.Buckets, s"silver/$t holds $parquet parquet files")
+    }
+  }
+
+  test("corpus manifest: a missing, mismatched, empty or _MATERIALIZED-only directory is rebuilt once") {
+    import graft.sinks.StoreManifest
+    val root = java.nio.file.Files.createTempDirectory("graft-corpus-manifest")
+    var builds = 0
+    // the corpus's own open rule, on a stand-in build that leaves one file
+    def open(dir: java.nio.file.Path): Unit =
+      StoreManifest.ensure(spark, dir.toString, BlkCorpus.Manifest) {
+        builds += 1
+        java.nio.file.Files.createDirectories(dir)
+        java.nio.file.Files.writeString(dir.resolve("built"), "")
+      }
+    def stale(name: String)(manifest: Option[String], marker: Boolean): java.nio.file.Path = {
+      val dir = java.nio.file.Files.createDirectories(root.resolve(name))
+      java.nio.file.Files.writeString(dir.resolve("old_layout.parquet"), "")
+      manifest.foreach(graft.sinks.Hfs.writeText(spark, StoreManifest.path(dir.toString), _))
+      if (marker) java.nio.file.Files.write(dir.resolve("_MATERIALIZED"), Array.emptyByteArray)
+      dir
+    }
+    val other = BlkCorpus.Manifest.copy(layout = BlkCorpus.Manifest.layout + ("buckets" -> 256))
+    val dirs = Seq(
+      root.resolve("missing"),
+      stale("marker_only")(None, marker = true),
+      stale("empty")(Some(""), marker = false),
+      stale("unparseable")(Some("""{"format":"blkcorpus","vers"""), marker = false),
+      stale("older_version")(Some(BlkCorpus.Manifest.copy(version = BlkCorpus.Version - 1).json),
+        marker = false),
+      stale("other_buckets")(Some(other.json), marker = false))
+    dirs.foreach { dir =>
+      builds = 0
+      open(dir)
+      assert(builds == 1, s"${dir.getFileName} was not rebuilt")
+      // deleted before the rebuild: nothing of the old layout survives
+      val left = java.nio.file.Files.list(dir).iterator().asScala
+        .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
+      assert(left == Set("built", "_manifest"), s"${dir.getFileName} kept $left")
+      assert(StoreManifest.read(spark, dir.toString).contains(BlkCorpus.Manifest))
+      // current now: the next open reads the manifest and builds nothing
+      open(dir)
+      assert(builds == 1, s"${dir.getFileName} rebuilt a current corpus")
+    }
   }
 }

@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
         .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
     }
     val writer = ChainStream.incrementalWalletLabels(
-      blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt", slots = 8)
+      blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt")
     def labels(): Map[String, String] = spark.read.parquet(s"$tmp/labels/labels")
       .select("address", "wallet_id").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -538,13 +538,7 @@ class StreamingSpec extends SparkSpec {
 
   test("incrementalWalletLabels: resuming with a different slots value re-bootstraps instead of corrupting the store") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-stream-ws").toString
-    val input = MemoryStream[(String, String, Long, Seq[(String, Seq[String])])]
-    val blocks = input.toDF().toDF("hash", "parent_hash", "ts", "txs")
-      .select(col("hash"),
-        when(col("parent_hash") === "", lit(null)).otherwise(col("parent_hash")).as("parent_hash"),
-        col("ts"), col("txs"))
     def fundersOf(s: org.apache.spark.sql.SparkSession,
         df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       df.select(explode(col("txs")).as("t"))
@@ -552,27 +546,26 @@ class StreamingSpec extends SparkSpec {
     def labels(): Map[String, String] = spark.read.parquet(s"$tmp/labels/labels")
       .select("address", "wallet_id").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
+    // the streaming writer always runs the default slot count; the batch
+    // step takes the count, so a resume under another one can be staged
+    def step(rows: Seq[(String, String, Long, Seq[(String, Seq[String])])], slots: Int) =
+      ChainStream.walletLabelsBatch(spark, rows.toDF("hash", "parent_hash", "ts", "txs"),
+        s"$tmp/bronze", fundersOf, s"$tmp/labels", slots)
+    def storedSlots = graft.sinks.StoreManifest.read(spark, s"$tmp/labels")
+      .map(_.layout("slots"))
 
-    // bootstrap under slots=8 — the sidecar records the store's slot count
-    input.addData(("g", "", 1000L, Seq(("t1", Seq("a1", "a2")))))
-    ChainStream.incrementalWalletLabels(
-        blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt", slots = 8)
-      .start().awaitTermination()
+    // bootstrap under slots=8 — the manifest records the store's slot count
+    step(Seq(("g", null, 1000L, Seq(("t1", Seq("a1", "a2"))))), 8)
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1"))
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$tmp/labels/_slots")).trim == "8")
+    assert(storedSlots.contains(8))
 
     // resume the SAME store with slots=4: slot assignment disagrees with the
     // on-disk layout, so the maintainer must re-bootstrap under the new
     // value — a silent continue would leave a2's replacement row in one slot
     // and its stale row in another
-    input.addData(("a", "g", 1100L, Seq(("t2", Seq("a2", "a3")))))
-    ChainStream.incrementalWalletLabels(
-        blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt", slots = 4)
-      .start().awaitTermination()
+    assert(step(Seq(("a", "g", 1100L, Seq(("t2", Seq("a2", "a3"))))), 4).storeBootstrap)
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1"))
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$tmp/labels/_slots")).trim == "4")
+    assert(storedSlots.contains(4))
     // one row per address (no stale duplicates across slot partitions), and
     // every row sits in the slot the NEW value assigns
     val store = spark.read.parquet(s"$tmp/labels/labels")
@@ -581,6 +574,49 @@ class StreamingSpec extends SparkSpec {
       .where(col(graft.sinks.PartitionedGold.BucketCol) =!=
         pmod(xxhash64(col("address")), lit(4)).cast("int"))
     assert(misplaced.isEmpty, "rows left in slots the new value does not assign")
+  }
+
+  test("wallet label store: an empty or other-version manifest re-bootstraps and converges to the same labels") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-stream-manifest").toString
+    def fundersOf(s: org.apache.spark.sql.SparkSession,
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(explode(col("txs")).as("t"))
+        .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    // the same feed into two stores: `ref` is never disturbed
+    def step(store: String, rows: Seq[(String, String, Long, Seq[(String, Seq[String])])]) =
+      ChainStream.walletLabelsBatch(spark, rows.toDF("hash", "parent_hash", "ts", "txs"),
+        s"$tmp/$store/bronze", fundersOf, s"$tmp/$store/labels")
+    def labels(store: String): Map[String, String] =
+      spark.read.parquet(s"$tmp/$store/labels/labels").select("address", "wallet_id")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // the manifest goes through the store's own filesystem, checksum included
+    def writeManifest(text: String): Unit =
+      graft.sinks.Hfs.writeText(spark, s"$tmp/hit/labels/_manifest", text)
+    val feed = Seq(
+      Seq(("g", null, 1000L, Seq(("t1", Seq("a1", "a2"))))),
+      Seq(("a", "g", 1100L, Seq(("t2", Seq("a2", "a3"))))),
+      Seq(("b", "a", 1200L, Seq(("t3", Seq("a4", "a5"))))),
+      Seq(("c", "b", 1300L, Seq(("t4", Seq("a5", "a1"))))))
+    val ref = feed.map(step("ref", _))
+    assert(ref.head.storeBootstrap && ref.tail.forall(r => r.routeName == "extend" && !r.storeBootstrap))
+
+    assert(step("hit", feed(0)).storeBootstrap)
+    // a crash between the manifest's create and its write leaves it empty:
+    // the next batch re-bootstraps instead of failing on the parse
+    writeManifest("")
+    val afterEmpty = step("hit", feed(1))
+    assert(afterEmpty.routeName == "extend" && afterEmpty.storeBootstrap)
+    assert(labels("hit") == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1"))
+    // a store another layout version wrote re-bootstraps the same way
+    writeManifest("""{"format":"wallet_labels","version":0,"layout":{"slots":32}}""")
+    assert(step("hit", feed(2)).storeBootstrap)
+    // the manifest is current again: the next batch is a plain extension
+    val last = step("hit", feed(3))
+    assert(last.routeName == "extend" && !last.storeBootstrap)
+    assert(labels("hit") == labels("ref"))
+    assert(graft.sinks.StoreManifest.read(spark, s"$tmp/hit/labels") ==
+      graft.sinks.StoreManifest.read(spark, s"$tmp/ref/labels"))
   }
 
   test("graceful shutdown: stop lands on a batch boundary; resume has no duplicates") {
@@ -799,7 +835,7 @@ class StreamingSpec extends SparkSpec {
     val before = cursorSigs()
 
     // Replay the SAME batch under a different slots value: bootstrapping is
-    // forced (sidecar disagrees) while the best chain is UNCHANGED — the
+    // forced (manifest disagrees) while the best chain is UNCHANGED — the
     // cursor's plan is a read of its own path, so the write must be skipped
     // (already bucketed, content identical), not an overwrite-while-reading
     val replay = ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
@@ -808,8 +844,9 @@ class StreamingSpec extends SparkSpec {
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1"))
     assert(cursorSigs() == before, "unchanged re-bootstrap rewrote the bucketed cursor")
 
-    // Flat pre-bucketing cursor (the r13 layout): the same re-bootstrap must
-    // MIGRATE it — checkpoint first, then rewrite bucketed — not crash
+    // Flat cursor without height buckets (a layout no writer produces): it
+    // is no cursor, so the batch bootstraps through the full route, which
+    // writes the whole bucketed layout
     val flat = spark.read.parquet(s"$tmp/labels/_bestchain")
       .select("hash", "height").localCheckpoint(true)
     val fsPath = java.nio.file.Paths.get(s"$tmp/labels/_bestchain")
@@ -817,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     flat.write.mode("overwrite").parquet(s"$tmp/labels/_bestchain")
     val migrate = ChainStream.walletLabelsBatch(spark, batch, s"$tmp/bronze", fundersOf,
       s"$tmp/labels", slots = 2)
-    assert(migrate.routeName == "unchanged")
+    assert(migrate.routeName == "bootstrap")
     val migrated = spark.read.parquet(s"$tmp/labels/_bestchain")
     assert(migrated.columns.contains(graft.sinks.PartitionedGold.BucketCol),
       "flat cursor was not migrated to the bucketed layout")
