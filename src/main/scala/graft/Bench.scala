@@ -124,8 +124,8 @@ object Bench {
     * retries, i.e. it WAITS OUT the window instead of averaging it in.
     *
     * Why this and not round-robin interleaving of queries (the other r17
-    * proposal): one sample per query per pass would evict every operator's
-    * swap registers and the codegen cache between a query's samples —
+    * proposal): one sample per query per pass would close every query's
+    * cache scope and evict the codegen cache between a query's samples —
     * measured 70 s vs 7.5 s on bk0 when queries' caches coexisted (round 7)
     * — so interleaving trades a contention artifact for a permanent cache
     * -thrash artifact. The sentinel measures the host directly and leaves
@@ -220,8 +220,8 @@ object Bench {
     *     extra samples — a transient hiccup is outvoted, real drift keeps
     *     flagging.
     *  4. CONTAMINATION RECOVERY (once): if still unstable, call
-    *     `recoveryPrep` (release caches + GC in production), re-warm to the
-    *     settle criterion, and take ONE fresh sample set. A fresh set that is
+    *     `recoveryPrep` (reopen the query scope + GC in production), re-warm
+    *     to the settle criterion, and take ONE fresh sample set. A fresh set that is
     *     STABLE replaces the poisoned one; a fresh set that is ALSO unstable
     *     is rejected — flagging stays on the ORIGINAL set (the two sets come
     *     from differently-warmed protocol states, so a concatenated median
@@ -379,19 +379,19 @@ object Bench {
       gate.calibrate(9)
       diag += f"[bench] sentinel floor ${gate.floorMs}%.1fms (9 probes, running min; gate at ${gate.factor}x)"
     }
-    val results = names.filter(n => only.forall(_.contains(n))).map { name =>
-      // Cold-cache boundary: drain every operator's retained swap register
-      // before each query. WITHIN a query the warm+timed runs share the
-      // registers (that is the steady-state being measured); ACROSS queries
-      // the registers coexist in the deliberately small bench heap and the
-      // eviction thrash poisons the medians (bk0 measured 70s in-suite vs
-      // 7.5s isolated before this boundary existed).
-      Graft.releaseCaches()
+    val results = names.filter(n => only.forall(_.contains(n))).map { name => Scope {
+      // Cold-cache boundary: one scope per query, one nested scope per
+      // sample. A sample's results are dropped when it ends; the query's
+      // index memos live in the query scope, so its warm and timed samples
+      // share one built index (that is the steady state being measured).
+      // ACROSS queries nothing is retained: cached state coexisting in the
+      // deliberately small bench heap thrashes and poisons the medians (bk0
+      // measured 70s in-suite vs 7.5s isolated before this boundary existed).
       def once(): (Double, Long) = {
         val gc0 = gcMillis()
         val j0 = jobTimes.keySet.maxOption.getOrElse(-1)
         val t0 = System.nanoTime()
-        try all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try Scope(all(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
         catch { case e: Throwable =>
           if (!failures.contains(name)) {
             failures ::= name
@@ -422,15 +422,14 @@ object Bench {
       // contention) burns the warm cap and moves on — the recovery protocol
       // and the validity flag own that case. The full protocol (warm /
       // resample / recovery) lives in [[measure]], spec-pinned by
-      // BenchProtocolSpec; production recovery = drop every retained cache,
-      // ask the JVM to collect, settle, one fresh sample set (r15: the
-      // round's official bench was invalidated by ONE query measured
+      // BenchProtocolSpec; production recovery = close and reopen the query
+      // scope, ask the JVM to collect, settle, one fresh sample set (r15:
+      // the round's official bench was invalidated by ONE query measured
       // through a sustained contended window resampling could not outvote).
       val m = measure[(Double, Long)](
         once _, _._1, runs,
         recoveryPrep = () => {
-          Graft.releaseCaches()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+          Scope.reopen()
           System.gc()
           Thread.sleep(2000)
         },
@@ -465,7 +464,7 @@ object Bench {
       }
       val times = m.samples.map(_._1)
       name -> ((median(times), trimmedSpread(times), times.max - times.min), m)
-    }
+    }}
     failures.foreach(n => diag += s"[bench] WARNING: $n time is a failure, not a run")
     // Recall audit folded into the round's bench run: the ANN queries are
     // rows-only in the oracle gate, so without this a recall drift would
@@ -474,9 +473,8 @@ object Bench {
     // boolean on the bench line.
     val recallOk =
       try {
-        Graft.releaseCaches()
         val recalls = RecallAudit.checks.toSeq.sortBy(_._1).map {
-          case (n, fn) => n -> fn(spark, sfDir)
+          case (n, fn) => n -> Scope(fn(spark, sfDir))
         }
         val recallJson = recalls.map { case (n, r) =>
           f""""$n": {"recall_vs_bruteforce": $r%.4f, "floor": ${RecallAudit.floors(n)}%.2f, "pass": ${r >= RecallAudit.floors(n)}}"""

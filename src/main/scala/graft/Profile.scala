@@ -72,11 +72,12 @@ object Profile {
       qlist.split(",").foreach { q =>
         val build = SparkEntry.queries.getOrElse(q, sys.error(
           s"unknown query '$q' — not in SparkEntry.queries"))
-        Graft.releaseCaches()
-        t(s"$q warm") { force(build(spark, dataDir)) }
-        record = true
-        t(s"$q measured") { force(build(spark, dataDir)) }
-        record = false
+        Scope {
+          t(s"$q warm") { Scope(force(build(spark, dataDir))) }
+          record = true
+          t(s"$q measured") { Scope(force(build(spark, dataDir))) }
+          record = false
+        }
       }
       spark.stop(); sys.exit(0)
     }

@@ -54,19 +54,18 @@ object RelScaleRehearsal {
       "j6_multihop_agg", "j8_range_join", "w1_rank", "w3_running_sum")
       .filter(n => legFilter.forall(_.exists(n.contains)))
     Seq(("1x", src), (s"${k}x", dir)).foreach { case (tag, d) =>
-      names.foreach { name =>
-        Graft.releaseCaches()
+      names.foreach { name => Scope {
         def once(): Double = {
           val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, d)
-            .write.format("noop").mode("overwrite").save()
+          Scope(SparkEntry.queries(name)(spark, d)
+            .write.format("noop").mode("overwrite").save())
           (System.nanoTime() - t0) / 1e9
         }
         val warm = once()
         val s1 = once()
         val s2 = once()
         Rehearsal.emit(f"""{"rehearsal":"$name","rel":"$tag","warm":$warm%.2f,"s1":$s1%.2f,"s2":$s2%.2f}""")
-      }
+      }}
     }
     spark.stop()
   }

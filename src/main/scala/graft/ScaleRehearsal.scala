@@ -36,11 +36,10 @@ object ScaleRehearsal {
     // the 4-run measurement protocol
     val nSamples = sys.env.getOrElse("SPARK_GRAFT_SCALE_SAMPLES", "3").toInt
     val doWarm = sys.env.get("SPARK_GRAFT_SCALE_WARM").forall(_ != "0")
-    names.foreach { name =>
-      Graft.releaseCaches()
-      def once(): Double = timed(
+    names.foreach { name => Scope {
+      def once(): Double = timed(Scope(
         SparkEntry.queries(name)(spark, "unused")
-          .write.format("noop").mode("overwrite").save())._2
+          .write.format("noop").mode("overwrite").save()))._2
       // one warm + 3 samples, reported as median + spread: a single sample
       // cannot distinguish a regression from single-JVM heap-pressure
       // variance (r13's bk4 at 30x swung 9.9 -> 55.8 s on one sample)
@@ -49,7 +48,7 @@ object ScaleRehearsal {
       val med = samples.sorted.apply(samples.length / 2)
       val spread = samples.max - samples.min
       Rehearsal.emit(f"""{"rehearsal":"$name","scale":$scale,"warm":$warm%.2f,"median":$med%.2f,"spread":$spread%.2f,"samples":[${samples.map(s => f"$s%.2f").mkString(",")}]}""")
-    }
+    }}
 
     // GraphX / iterative graph analytics at corpus scale. Since r18 the
     // address pool scales WITH the chain (BlkCorpus.NumAddresses ∝ Scale),
@@ -59,9 +58,8 @@ object ScaleRehearsal {
     // over a skewed (sentinel in-degree ≈ 15% of outputs) dataflow at every
     // scale. Edge DERIVATION is still timed separately (the corpus-grain
     // part); vertex/edge counts ship on every line.
-    if (legOn("graph")) {
+    if (legOn("graph")) Scope {
       import org.apache.spark.sql.functions._
-      Graft.releaseCaches()
       val rin = graft.chain.BlkCorpus.silver(spark, "rin")
       val outs = graft.chain.BlkCorpus.silver(spark, "outs")
       def edgesDf = graft.graph.GraphAnalytics.flowEdges(rin, outs)
@@ -74,8 +72,8 @@ object ScaleRehearsal {
         .union(edges.select(col("dst").as("x"))).distinct().count()
       Rehearsal.emit(f"""{"rehearsal":"graph_edges","scale":$scale,"edges":$nEdges,"vertices":$nVerts,"derive_s":$tDerive%.2f}""")
       def leg(name: String)(f: => Long): Unit = {
-        f // warm
-        val (rows, sec) = timed(f)
+        Scope(f) // warm
+        val (rows, sec) = timed(Scope(f))
         Rehearsal.emit(f"""{"rehearsal":"graph_$name","scale":$scale,"edges":$nEdges,"rows":$rows,"sec":$sec%.2f}""")
       }
       leg("pagerank")(graft.graph.GraphAnalytics.pageRank(edges).count())
@@ -98,15 +96,13 @@ object ScaleRehearsal {
       else
         Rehearsal.emit(f"""{"rehearsal":"graph_triangles","scale":$scale,"edges":$nEdges,"skipped":"wedges $wedges > budget $wedgeBudget (shuffle-disk guard)"}""")
       edges.unpersist()
-      Graft.releaseCaches()
     }
 
     // Isolated raw-parse leg: bk0@30× is parse-dominated (124–152 s in
     // r19's rehearsal), so the per-task parse cost needs its own A/B
     // instrument — a noop write of the parsed dataset materializes every
     // block/tx/script column without bronze projection or chain resolution.
-    if (legOn("parse")) {
-      Graft.releaseCaches()
+    if (legOn("parse")) Scope {
       val parsed = graft.sources.BlockFileSource.read(spark, graft.chain.BlkCorpus.rawDir)
       def once(): Double =
         timed(parsed.write.format("noop").mode("overwrite").save())._2
@@ -126,9 +122,8 @@ object ScaleRehearsal {
     // the full path re-derives and rewrites every row. Non-trivial deltas
     // (new addresses, cluster merges) are property-gated against full
     // recompute on random graphs in PropertySpec.
-    if (legOn("incremental")) {
+    if (legOn("incremental")) Scope {
       import org.apache.spark.sql.functions._
-      Graft.releaseCaches()
       val rin = graft.chain.BlkCorpus.silver(spark, "rin")
       val ctx = graft.chain.BlkCorpus.silver(spark, "ctx")
       val tipStart = ctx.agg(max("height")).head.get(0)
@@ -167,9 +162,8 @@ object ScaleRehearsal {
     // recompute of the truncated chain, at 50k/500k-block scale) plus the
     // affected fraction; O(affected) cost scaling is property-gated on
     // random graphs whose components are small (PropertySpec).
-    if (legOn("reorg")) {
+    if (legOn("reorg")) Scope {
       import org.apache.spark.sql.functions._
-      Graft.releaseCaches()
       val rin = graft.chain.BlkCorpus.silver(spark, "rin")
       val ctx = graft.chain.BlkCorpus.silver(spark, "ctx")
       val tip = ctx.agg(max("height")).head.get(0).asInstanceOf[Number].intValue
@@ -241,9 +235,8 @@ object ScaleRehearsal {
     // it contraction does — this leg's 1×/10×/30× runs are the calibration
     // evidence, with the router tracking the cheaper route at every scale.
     // Also timed: the no-op pre-route (a reorg of funder-less blocks).
-    if (legOn("shallow")) {
+    if (legOn("shallow")) Scope {
       import org.apache.spark.sql.functions._
-      Graft.releaseCaches()
       val nWallets = 20000L * scale
       val walletSize = 5
       val txs = spark.range(nWallets * 3).select(

@@ -105,14 +105,13 @@ object StreamRehearsal {
     }
 
     // Inter-leg vacuum: each leg's working set (persisted funder frames,
-    // checkpoint blocks, shuffle files) is dead at its boundary — release
-    // the engine's swap registers and force one GC so the ContextCleaner
-    // reaps the disk footprint NOW instead of whenever the heap happens to
-    // fill. The health lines bracket each leg so any future aged artifact
-    // carries its own diagnosis (heap / cached blocks / blockmgr bytes).
+    // checkpoint blocks, shuffle files) is dead at its boundary — run the
+    // leg in its own scope and force one GC so the ContextCleaner reaps the
+    // disk footprint NOW instead of whenever the heap happens to fill. The
+    // health lines bracket each leg so any future aged artifact carries its
+    // own diagnosis (heap / cached blocks / blockmgr bytes).
     def vacuumed(name: String)(leg: => Unit): Unit = {
-      leg
-      Graft.releaseCaches()
+      Scope(leg)
       System.gc()
       Rehearsal.health(spark, s"after_$name")
     }

@@ -26,11 +26,10 @@ object Verify {
     def selected(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
-        // same cold-cache boundary as Bench: 107 queries in one session
-        // would otherwise accumulate every operator's retained register
-        Graft.releaseCaches()
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        // same cold-cache boundary as Bench: one scope per query, so 107
+        // queries in one session never accumulate each other's caches
+        try Scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
@@ -42,7 +41,7 @@ object Verify {
     // number survives even when the driver keeps only its own outDir.
     val recalls = RecallAudit.checks.toSeq.sortBy(_._1).flatMap {
       case (name, fn) if selected(name) =>
-        try Some(name -> fn(spark, sfDir))
+        try Some(name -> Scope(fn(spark, sfDir)))
         catch { case e: Throwable =>
           System.err.println(s"[verify] recall $name failed: ${e.getMessage}"); None
         }

@@ -194,18 +194,6 @@ object BestChain {
     }
   }
 
-  /** The previous invocation's materialized annotation: each call swaps its
-    * result RDD in and unpersists the predecessor, so repeated annotations
-    * (bench reruns, bk0→bk1→bk6 in one session) hold at most ONE extra copy
-    * of the block set instead of leaking every run's doubling state.
-    */
-  private val lastAnn =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** Drop the retained annotation ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit =
-    Option(lastAnn.getAndSet(null)).foreach(_.unpersist(blocking = false))
-
   /** The scale path, route-picked on the block count with the same size cut
     * as Spark's own broadcast-vs-shuffle join decision:
     *
@@ -374,18 +362,16 @@ object BestChain {
     val ann = withH
       .join(sHash.withColumn("is_on_best_chain", lit(true)), Seq("hash"), "left")
       .na.fill(false, Seq("is_on_best_chain"))
-    // Materialize the final annotation, then drop every piece of loop state
-    // — jump tables, the membership frontier, the dictionary, and the
-    // PREVIOUS invocation's annotation — so repeated annotations hold one
-    // copy, not one per run.
-    val (annDf, annRdd) = ChainOps.traced("annotate: final rebase")(ChainOps.rebase(ann))
+    // Materialize the final annotation (pinned to the caller's scope), then
+    // drop every piece of loop state — jump tables, the membership
+    // frontier, the dictionary.
+    val (annDf, _) = ChainOps.traced("annotate: final rebase")(ChainOps.rebase(ann))
     resolved.tables.foreach(_._2.unpersist(blocking = false))
     // On the walk route no tables were kept, so the height pass's final
     // state RDD is not covered by the loop above — drop it explicitly.
     resolved.resultRdd.unpersist(blocking = false)
     resolved.dict.unpersist()
     if (sRdd != null) sRdd.unpersist(blocking = false)
-    Option(lastAnn.getAndSet(annRdd)).foreach(_.unpersist(blocking = false))
     annDf
   }
 }

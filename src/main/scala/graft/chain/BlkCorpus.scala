@@ -430,10 +430,11 @@ object BlkCorpus {
     * the same joins per query. Oracle layering is unchanged: DuckDB oracles
     * recompute everything from BRONZE (+ the bk1-gated annotation), so a bug
     * in the silver build still fails bk2–bk5.
-    * A directory whose manifest is not [[Manifest]] is deleted and rebuilt.
+    * A directory whose manifest is not [[Manifest]] is deleted and rebuilt,
+    * in a scope of its own: the build's caches are dead once it is written.
     */
   def ensureMaterialized(spark: SparkSession): Unit = synchronized {
-    graft.sinks.StoreManifest.ensure(spark, baseDir, Manifest) {
+    graft.sinks.StoreManifest.ensure(spark, baseDir, Manifest)(graft.Scope {
       val truth = generate()
       spark.createDataFrame(truth).toDF("hash", "height", "is_on_best_chain")
         .coalesce(1).write.mode("overwrite").parquet(truthDir)
@@ -457,7 +458,7 @@ object BlkCorpus {
           .join(ctxKeys, Seq("tx_hash"), "left_semi"))
       writeBucketed(spark, "silver_outs",
         spark.table(tableName("tx_outputs")).join(ctxKeys, Seq("tx_hash"), "left_semi"))
-    }
+    })
     registerBucketed(spark)
   }
 

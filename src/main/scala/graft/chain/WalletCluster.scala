@@ -58,26 +58,6 @@ object WalletCluster {
     case object Contraction extends RepairRoute("contraction")
   }
 
-  /** The previous invocation's materialized clustering — swapped per call so
-    * repeated runs (bench reruns) hold ONE copy, not one per run (same
-    * discipline as BestChain.lastAnn).
-    */
-  private val lastResult =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** The mass repair route's materialized best-chain funders — same swap
-    * discipline (the route's OUTPUT is lazy, so the input must outlive the
-    * call; the next repair or [[release]] drops it).
-    */
-  private val lastMassBf =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** Drop the retained clustering ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit = {
-    Option(lastResult.getAndSet(null)).foreach(_.unpersist(blocking = false))
-    Option(lastMassBf.getAndSet(null)).foreach(_.unpersist(blocking = false))
-  }
-
   private val LabelSchema = StructType(Seq(
     StructField("address", StringType), StructField("wallet_id", StringType)))
 
@@ -124,15 +104,10 @@ object WalletCluster {
     val funders = txFunders.select(col("tx_hash"), col("src_address").as("address")).distinct()
     // Funder-only vertices: every other address is a singleton by
     // construction and labels itself via the final left join.
-    def labelled(labels: Map[String, String]): DataFrame = {
-      // the in-memory routes hold NO persisted state of their own — but they
-      // must still drain the register a previous DISTRIBUTED run filled, or
-      // that stale clustering stays cached for the rest of the session
-      Option(lastResult.getAndSet(null)).foreach(_.unpersist(blocking = false))
+    def labelled(labels: Map[String, String]): DataFrame =
       universe
         .join(broadcast(labelFrame(spark, labels)), Seq("address"), "left")
         .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id"))
-    }
     val envelope = ChainOps.driverEnvelope
     // Envelope route, decided on the pairs actually collected (there are
     // at least as many pairs as star edges, so the edges fit too).
@@ -175,15 +150,13 @@ object WalletCluster {
       .join(labeled.join(walletLabel, "cc").select("address", "wallet_id"),
         Seq("address"), "left")
       .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id"))
-    // Materialize, then drop every piece of GraphX state (Pregel leaves its
-    // final graph cached) plus the previous invocation's result — a bench
-    // rerun or a long session must hold one clustering, not one per call.
-    val (outDf, outRdd) = ChainOps.rebase(out)
+    // Materialize (pinned to the caller's scope), then drop every piece of
+    // GraphX state (Pregel leaves its final graph cached).
+    val (outDf, _) = ChainOps.rebase(out)
     ccGraph.unpersist(blocking = false)
     graph.unpersist(blocking = false)
     dict.unpersist()
     edgeRdd.unpersist(blocking = false)
-    Option(lastResult.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
 
@@ -550,15 +523,13 @@ object WalletCluster {
       // alternative does exactly that).
       if (belowFloor || nMembers * 2 >= nStored) {
         // the recompute consumes bf ~4× (universe distinct, funder distinct,
-        // hub self-join, the final label join) — materialize it ONCE, held
-        // in the swap register because the route's output is lazy. The
+        // hub self-join, the final label join) — materialize it ONCE, pinned
+        // to the caller's scope because the route's output is lazy. The
         // contraction route deliberately does NOT do this: its consumers
         // are semi-joins that push down to the source scan, and a corpus-
         // sized persist on the O(affected) path is exactly the cache churn
         // the route exists to avoid.
-        val (bfM, bfRdd) = ChainOps.rebase(
-          bf, StorageLevel.MEMORY_AND_DISK_SER)
-        Option(lastMassBf.getAndSet(bfRdd)).foreach(_.unpersist(blocking = false))
+        val (bfM, _) = ChainOps.rebase(bf, StorageLevel.MEMORY_AND_DISK_SER)
         val fresh = clusters( // clusters distincts both inputs itself
             bfM.select("address"),
             bfM.select(col("tx_hash"), col("address").as("src_address")))

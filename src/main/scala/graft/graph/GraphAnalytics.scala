@@ -134,19 +134,14 @@ object GraphAnalytics {
       .join(o.select(col("s").as("a"), col("t").as("b")), Seq("a", "b"))
     val counts = tris.select(explode(array(col("s"), col("a"), col("b"))).as("address"))
       .groupBy("address").agg(count(lit(1)).as("triangles"))
-    // Materialize the decoded result, then drop the oriented set (one live
-    // copy — the kCore/LPA swap-unpersist discipline).
-    val (outDf, outRdd) = ChainOps.rebase(
+    // Materialize the decoded result (pinned to the caller's scope), then
+    // drop the oriented set.
+    val (outDf, _) = ChainOps.rebase(
       dict.decode(counts, "address", bcast = dict.n <= ChainOps.BroadcastMaxRows))
     oRdd.unpersist(blocking = false)
     dict.unpersist()
-    Option(lastTri.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
-
-  /** Previous triangleCounts materialization (swap-unpersist per call). */
-  private val lastTri =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
 
   /** The number of wedge rows [[triangleCounts]]' self-join materializes —
     * Σ_s c_s·(c_s−1) over oriented out-degrees c_s. Measurement helper for
@@ -174,8 +169,8 @@ object GraphAnalytics {
     * dropped endpoint leave) — all key-partitioned, no driver state beyond
     * the empty-check count. Rounds are data-bounded (graph diameter-ish, the
     * loop is capped); each round's edge set is rebased so lineage stays flat
-    * at any iteration count, and intermediates swap-unpersist (one live
-    * copy). Returns the k-core's vertices as (address).
+    * at any iteration count, and each round unpersists its predecessor (one
+    * live copy). Returns the k-core's vertices as (address).
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 200): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -249,16 +244,11 @@ object GraphAnalytics {
     }
     val members = und.select(explode(array(col("u"), col("v"))).as("address"))
       .distinct()
-    val (outDf, outRdd) = ChainOps.rebase(dict.decode(members, "address", bcast))
+    val (outDf, _) = ChainOps.rebase(dict.decode(members, "address", bcast))
     prev.foreach(_.unpersist(blocking = false))
     dict.unpersist()
-    Option(lastCore.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
-
-  /** Previous kCore materialization (swap-unpersist per call). */
-  private val lastCore =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
 
   /** Synchronous label propagation — community detection on the undirected
     * counterparty graph. Every vertex starts as its own label; each round
@@ -274,8 +264,9 @@ object GraphAnalytics {
     * (vertex, label) count + one min_by hash aggregate per round — the
     * aggregateMessages dataflow, all map-side partial, no windows over the
     * graph. The argmax is min_by over a (−count, label) struct, not a
-    * sorted rank. Each round rebases lineage and swap-unpersists, so a
-    * deeper propagation stays flat-plan (the kCore discipline).
+    * sorted rank. Each round rebases lineage and unpersists its
+    * predecessor, so a deeper propagation stays flat-plan (the kCore
+    * discipline).
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -346,20 +337,14 @@ object GraphAnalytics {
     // returned frame no longer references the adjacency — safe to drop now.
     adjJoin.unpersist(blocking = false)
     // decode both columns back to the caller's id space and materialize, so
-    // the dictionary can be dropped and repeated calls hold one copy
-    // (lastLpa swap).
+    // the dictionary can be dropped
     val decoded = dict.decode(dict.decode(labels, "address", bcastLabels), "label", bcastLabels)
       .select(col("address"), col("label").as("community"))
-    val (outDf, outRdd) = ChainOps.rebase(decoded)
+    val (outDf, _) = ChainOps.rebase(decoded)
     dict.unpersist()
     prev.foreach(_.unpersist(blocking = false))
-    Option(lastLpa.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
   }
-
-  /** Previous labelPropagation materialization (swap-unpersist per call). */
-  private val lastLpa =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
 
   /** PageRank over the flow graph: influence ranking of addresses.
     * Returns (address, rank) — GraphX Pregel under the hood.
@@ -379,30 +364,17 @@ object GraphAnalytics {
     val graph = Graph(dict.frame.select("vid").rdd.map(r => (r.getLong(0), ())), e)
     val rankGraph = graph.staticPageRank(iterations, resetProb)
     val out = dict.decode(rankGraph.vertices.toDF("address", "rank"), "address")
-    // Materialize, then drop GraphX state + the previous call's result —
-    // repeated invocations hold one ranking, not one per call. staticPageRank
-    // returns an UNcached mapVertices wrapper over its internally-cached
-    // final iteration graph, so Graph.unpersist on the result misses it;
-    // the persistent-RDD snapshot delta catches every internal cache.
+    // Materialize (pinned to the caller's scope), then drop GraphX state.
+    // staticPageRank returns an UNcached mapVertices wrapper over its
+    // internally-cached final iteration graph, so Graph.unpersist on the
+    // result misses it; the persistent-RDD snapshot delta catches every
+    // internal cache.
     // (Assumes no concurrent materialization in this session — true for the
     // Verify/Bench drivers, which run queries sequentially.)
     val (outDf, outRdd) = ChainOps.rebase(out)
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!before.contains(id) && id != outRdd.id) rdd.unpersist(blocking = false)
     }
-    Option(lastRank.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
-  }
-
-  /** Previous pageRank materialization (swap-unpersist per call). */
-  private val lastRank =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** Drop the retained ranking + core ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit = {
-    Option(lastRank.getAndSet(null)).foreach(_.unpersist(blocking = false))
-    Option(lastCore.getAndSet(null)).foreach(_.unpersist(blocking = false))
-    Option(lastLpa.getAndSet(null)).foreach(_.unpersist(blocking = false))
-    Option(lastTri.getAndSet(null)).foreach(_.unpersist(blocking = false))
   }
 }

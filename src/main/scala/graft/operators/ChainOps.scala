@@ -60,7 +60,8 @@ object ChainOps {
     * rounds (observed: driver pinned for minutes at 13 rounds). Dropping to
     * the RDD erases Catalyst state entirely: the next round plans against a
     * flat scan, every round, at constant cost. Returns the rebased frame and
-    * its backing RDD so callers can unpersist the previous round.
+    * its backing RDD so callers can unpersist the previous round; the cache
+    * is pinned to the calling thread's innermost open [[graft.Scope]].
     */
   private[graft] def rebase(
       df: DataFrame,
@@ -84,53 +85,23 @@ object ChainOps {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long) = {
     val rdd = df.rdd
-    pin(rdd.persist(level))
+    graft.Scope.pin(rdd.persist(level))
     val n = rdd.count() // materialize now so the previous round can be dropped
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd, n)
   }
 
-  /** Eager local checkpoint that the calling thread's [[scoped]] block (if
-    * any) drops at its close — the form every per-batch checkpoint of the
-    * streaming maintainer takes.
+  /** Eager local checkpoint, pinned to the calling thread's innermost open
+    * [[graft.Scope]] — the form every per-batch checkpoint of the streaming
+    * maintainer takes.
     */
   private[graft] def localCheckpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
     cp.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => pin(l.rdd)
+      case l: org.apache.spark.sql.execution.LogicalRDD => graft.Scope.pin(l.rdd)
       case _ =>
     }
     cp
   }
-
-  /** RDDs materialized on this thread since its open [[scoped]] block began;
-    * null when none is open. Thread-confined, so a query running beside the
-    * scope on another thread never has its caches swept by it.
-    */
-  private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]]
-
-  /** Record `rdd` in the calling thread's open scope, if any. */
-  private[graft] def pin[R <: org.apache.spark.rdd.RDD[_]](rdd: R): R = {
-    Option(scope.get).foreach(_ += rdd)
-    rdd
-  }
-
-  /** Run `f`, then unpersist everything [[rebase]], [[rebaseCounted]],
-    * [[localCheckpoint]] and the resolve loop materialized on THIS thread
-    * meanwhile — for work whose intermediate results are all dead once it
-    * returns (a maintainer micro-batch re-opens its state from disk).
-    * Nested calls join the outer scope.
-    */
-  private[graft] def scoped[A](f: => A): A =
-    if (scope.get != null) f
-    else {
-      val pinned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-      scope.set(pinned)
-      try f
-      finally {
-        scope.remove()
-        pinned.foreach(_.unpersist(blocking = false))
-      }
-    }
 
   /** A DataFrame over rows already on the driver, as a parallelized RDD —
     * not a LocalRelation. Catalyst rules (ConvertToLocalRelation,
@@ -158,7 +129,7 @@ object ChainOps {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long, Long) = {
     val rdd = df.rdd
-    pin(rdd.persist(level))
+    graft.Scope.pin(rdd.persist(level))
     val (total, pending) = rdd.mapPartitions { it =>
       var t = 0L; var p = 0L
       it.foreach { r => t += 1; if (!r.getBoolean(boolIdx)) p += 1 }
@@ -368,11 +339,9 @@ object ChainOps {
   def rootsAndDepths(nodes: DataFrame, idCol: String, parentCol: String): DataFrame = {
     val resolved = resolve(nodes, idCol, parentCol, keepTables = false)
     // Materialize the decoded result NOW (it references the persisted
-    // dictionary — see resolve), register it swap-style so repeated calls
-    // hold one copy, then drop the loop's internals.
-    val (out, outRdd) = rebase(resolved.result
+    // dictionary — see resolve), then drop the loop's internals.
+    val (out, _) = rebase(resolved.result
       .select(col("id").as(idCol), col("ptr").as("root"), col("dist").as("height")))
-    Option(lastResolve.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     resolved.resultRdd.unpersist(blocking = false)
     resolved.dict.unpersist()
     out
@@ -383,13 +352,4 @@ object ChainOps {
     */
   def depths(nodes: DataFrame, idCol: String, parentCol: String): DataFrame =
     rootsAndDepths(nodes, idCol, parentCol).drop("root")
-
-  /** Previous rootsAndDepths materialization (swap-unpersist per call). */
-  private val lastResolve =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** Drop the retained depth materializations ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit = {
-    Option(lastResolve.getAndSet(null)).foreach(_.unpersist(blocking = false))
-  }
 }

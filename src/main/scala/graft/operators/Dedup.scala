@@ -371,12 +371,11 @@ object Dedup {
     // Cache the shingle stream for the query: the candidate join (one
     // reused exchange), the hot-shingle census and the set sizes all read
     // it, and each would otherwise re-run the tokenize+shingle flatMap over
-    // the full corpus. Columnar MEMORY_AND_DISK (spills, never OOMs);
-    // run-scoped via swap-unpersist like every other iterative cache here.
-    val shAll = shingleRows(df, idCol, textCol, shingleK)
+    // the full corpus. Columnar MEMORY_AND_DISK (spills, never OOMs),
+    // pinned to the caller's scope like every other engine cache.
+    val shAll = graft.Scope.pin(shingleRows(df, idCol, textCol, shingleK)
       .withColumnRenamed(idCol, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastShingles.getAndSet(shAll)).foreach(_.unpersist(blocking = false))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sh = maxShingleDf match {
       case None => shAll
       case Some(cap) =>
@@ -402,8 +401,8 @@ object Dedup {
     * document maps to the MIN doc id of its connected component (keep that
     * one, drop the rest — the group-assignment step every dedup pipeline
     * ends with). GraphX connectedComponents — O(diameter) supersteps — with
-    * the same join-based dense-id assignment and swap-unpersist cache
-    * discipline as [[graft.chain.WalletCluster]]. Pairs from ANY generator
+    * the same join-based dense-id assignment and scope-pinned result as
+    * [[graft.chain.WalletCluster]]. Pairs from ANY generator
     * compose: minhash/simhash candidates, verified Jaccard/cosine pairs.
     *
     * @param docs  one-column DF of all doc ids (singletons cluster alone)
@@ -434,9 +433,6 @@ object Dedup {
       val labels = UnionFind.components(
         p.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
       pRdd.unpersist(blocking = false)
-      // drain the register a previous DISTRIBUTED run filled — this route
-      // holds no persisted state, but the stale clustering must not linger
-      Option(lastClusters.getAndSet(null)).foreach(_.unpersist(blocking = false))
       val labelDf = labels.toSeq.toDF("doc_id", "cluster_id")
       return universe
         .join(broadcast(labelDf), Seq("doc_id"), "left")
@@ -458,26 +454,11 @@ object Dedup {
     val out = universe
       .join(ccGraph.vertices.toDF("doc_id", "cluster_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    val (outDf, outRdd) = ChainOps.rebase(out)
+    val (outDf, _) = ChainOps.rebase(out)
     ccGraph.unpersist(blocking = false)
     graph.unpersist(blocking = false)
     pRdd.unpersist(blocking = false)
-    Option(lastClusters.getAndSet(outRdd)).foreach(_.unpersist(blocking = false))
     outDf
-  }
-
-  /** Previous nearDupClusters materialization (swap-unpersist per call). */
-  private val lastClusters =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
-
-  /** Previous ngramJaccardPairs shingle cache (swap-unpersist per call). */
-  private val lastShingles =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Drop every retained dedup cache ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit = {
-    Option(lastShingles.getAndSet(null)).foreach(_.unpersist(blocking = false))
-    Option(lastClusters.getAndSet(null)).foreach(_.unpersist(blocking = false))
   }
 
   /** 64-bit SimHash: sign-aggregated token hashes (per occurrence, not per

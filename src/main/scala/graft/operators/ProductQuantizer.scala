@@ -128,29 +128,6 @@ object ProductQuantizer {
     (table.map(_.toSeq).toSeq, math.sqrt(qn))
   }
 
-  /** LRU index memo with swap-unpersist eviction — one shape for the PQ and
-    * IVF-PQ caches (drained together by [[release]]).
-    */
-  private final class ModelCache[V](onEvict: V => Unit) {
-    private val map = new java.util.LinkedHashMap[String, V](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = {
-        val evict = size() > PqCacheSize
-        if (evict) onEvict(e.getValue)
-        evict
-      }
-    }
-    def getOrBuild(key: String)(build: => V): V = map.synchronized {
-      var v = map.get(key)
-      if (v == null) { v = build; map.put(key, v) }
-      v
-    }
-    def entries: Int = map.synchronized(map.size())
-    def drain(): Unit = map.synchronized {
-      map.values().forEach(v => onEvict(v))
-      map.clear()
-    }
-  }
-
   /** Build the index: train m sub-codebooks on the sample, encode the whole
     * corpus in ONE narrow typed pass (broadcast codebooks, JIT'd argmin).
     * Codes are kept as array<int> for plan readability — the storage-layer
@@ -216,9 +193,6 @@ object ProductQuantizer {
       .where(col("rank") <= k)
   }
 
-  private val PqCacheSize = 16
-  private val pqCache = new ModelCache[PqModel](_.unpersist())
-
   /** Flat-PQ corpus ceiling, rows (`graft.pqFlatScanMaxRows` overrides):
     * flat ADC is a whole-corpus scan PER QUERY BATCH — the right default at
     * fixture/feature-store scale (no cell-assignment recall loss, one fewer
@@ -229,33 +203,10 @@ object ProductQuantizer {
   def PqFlatScanMaxRows: Long =
     sys.props.get("graft.pqFlatScanMaxRows").map(_.toLong).getOrElse(10000000L)
 
-  /** Corpus row count per memo key, so the routing probe costs one count
-    * per (plan, params, data version) — not one per query batch. Drained
-    * with the caches; also size-bounded (a long-lived session re-keying on
-    * every corpus append must not grow this map without bound).
-    */
-  private val pqRouteCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val PqRouteCountsMax = 256
-
-  /** Data-version component of a memo key. File-backed plans are keyed by
-    * their input-file SET, so a corpus that grows (files appended, then
-    * re-read over the same path — same semantic plan) re-keys: the stale
-    * count cannot pin the flat route once the data crosses the ceiling, and
-    * a stale encoded index cannot serve rows that no longer reflect the
-    * corpus (r18 ask #7). Non-file plans (views, joins over memory) have no
-    * cheap version signal and fall back to plan identity alone —
-    * `releaseCaches()` stays their refresh, documented contract.
-    */
-  private def dataVersion(df: DataFrame): String = {
-    val files = df.inputFiles
-    if (files.isEmpty) "v0"
-    else s"v${files.length}:${files.sorted.toSeq.hashCode()}"
-  }
-
   /** Memoizing front (the [[Similarity.ivfTopK]] shape): one encoded corpus
-    * per (plan, params), swap-evicted LRU, drained by
-    * [[graft.Graft.releaseCaches]].
+    * per (plan, params) in the outermost open [[graft.Scope]], and with it
+    * the corpus row count the route is picked on, so the routing probe costs
+    * one count per (plan, params, data version) — not one per query batch.
     *
     * ROUTING: flat ADC up to [[PqFlatScanMaxRows]] corpus rows; above it the
     * call delegates to the IVF-PQ composition (same k / m / ksub / rerank,
@@ -268,21 +219,9 @@ object ProductQuantizer {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int = 8, ksub: Int = 16, maxIter: Int = 5, rerank: Int = 0): DataFrame = {
-    val key = corpus.queryExecution.analyzed.canonicalized.semanticHash().toString +
-      s":${dataVersion(corpus)}:$idCol:$vecCol:$m:$ksub:$maxIter"
-    // Count OUTSIDE the map's mapping function: corpus.count() is a full
-    // Spark job, and computeIfAbsent would hold the bin lock for its whole
-    // duration, blocking unrelated keys that hash to the same bin.
-    val nCorpus: Long = {
-      val cached = pqRouteCounts.get(key)
-      if (cached != null) cached.longValue()
-      else {
-        val n = corpus.count()
-        if (pqRouteCounts.size >= PqRouteCountsMax) pqRouteCounts.clear()
-        val prev = pqRouteCounts.putIfAbsent(key, n)
-        if (prev != null) prev.longValue() else n
-      }
-    }
+    val slot = Similarity.memoSlot("pq", corpus, idCol, vecCol, m, ksub, maxIter)
+    val version = Similarity.dataVersion(corpus)
+    val nCorpus = graft.Scope.memo(s"rows:$slot", version)(corpus.count())(_ => ())
     if (nCorpus > PqFlatScanMaxRows) {
       org.slf4j.LoggerFactory.getLogger("graft.pq").warn(
         s"pqTopK: corpus has $nCorpus rows > flat-scan ceiling $PqFlatScanMaxRows — " +
@@ -290,13 +229,10 @@ object ProductQuantizer {
       ivfPqTopKFor(corpus, queries, idCol, vecCol, k,
         m = m, ksub = ksub, maxIter = maxIter, rerank = rerank)
     } else {
-      pqTopK(pqCache.getOrBuild(key)(
-        pqIndex(corpus, idCol, vecCol, m, ksub, maxIter)), queries, k, rerank)
+      pqTopK(graft.Scope.memo(slot, version)(
+        pqIndex(corpus, idCol, vecCol, m, ksub, maxIter))(_.unpersist()), queries, k, rerank)
     }
   }
-
-  /** Observable memo bound for tests. */
-  def pqCacheEntries: Int = pqCache.entries
 
   // ----------------------------------------------------------------- IVF-PQ
 
@@ -387,31 +323,18 @@ object ProductQuantizer {
       .where(col("rank") <= k)
   }
 
-  private val ivfPqCache = new ModelCache[IvfPqModel](_.unpersist())
-
   /** Memoizing front (the [[pqTopKFor]] shape): one encoded+celled corpus
-    * per (plan, params), swap-evicted LRU, drained by
-    * [[graft.Graft.releaseCaches]].
+    * per (plan, params) in the outermost open [[graft.Scope]].
     */
   def ivfPqTopKFor(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 64, nprobe: Int = 8,
       m: Int = 8, ksub: Int = 16, maxIter: Int = 5, rerank: Int = 0): DataFrame = {
-    val key = corpus.queryExecution.analyzed.canonicalized.semanticHash().toString +
-      s":${dataVersion(corpus)}:$idCol:$vecCol:$nlist:$m:$ksub:$maxIter"
-    ivfPqTopK(ivfPqCache.getOrBuild(key)(
-      ivfPqIndex(corpus, idCol, vecCol, nlist, m, ksub, maxIter)),
-      queries, k, nprobe, rerank)
-  }
-
-  /** Observable memo bound for tests. */
-  def ivfPqCacheEntries: Int = ivfPqCache.entries
-
-  /** Drop every memoized PQ / IVF-PQ index ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit = {
-    pqCache.drain()
-    ivfPqCache.drain()
-    pqRouteCounts.clear()
+    val model = graft.Scope.memo(
+        Similarity.memoSlot("ivfpq", corpus, idCol, vecCol, nlist, m, ksub, maxIter),
+        Similarity.dataVersion(corpus))(
+      ivfPqIndex(corpus, idCol, vecCol, nlist, m, ksub, maxIter))(_.unpersist())
+    ivfPqTopK(model, queries, k, nprobe, rerank)
   }
 }

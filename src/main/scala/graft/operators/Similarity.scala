@@ -244,38 +244,6 @@ object Similarity {
       }.toMap
     }
 
-  /** Memo for the convenience ivfTopK(corpus, ...) overload, keyed on the
-    * corpus' canonicalized analyzed plan + parameters — the second probe of
-    * the same logical corpus reuses the built index instead of re-scanning.
-    * Explicit [[ivfIndex]]/[[IvfModel]] management is the production API.
-    *
-    * Bounded LRU: at most [[IvfCacheSize]] indexes stay persisted; evicting
-    * one unpersists its cells, so a long-lived session probing many distinct
-    * corpora holds a constant number of cached cell sets, not one per corpus
-    * ever probed. All access goes through the map's own lock (builds are
-    * rare and heavy; serializing them is fine).
-    */
-  val IvfCacheSize = 4
-  private val ivfCache =
-    new java.util.LinkedHashMap[String, IvfModel](16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, IvfModel]): Boolean = {
-        val evict = size() > IvfCacheSize
-        if (evict) e.getValue.unpersist()
-        evict
-      }
-    }
-
-  /** Number of memoized (persisted) IVF indexes — observable bound for tests. */
-  def ivfCacheEntries: Int = ivfCache.synchronized(ivfCache.size())
-
-  /** Drop every memoized IVF index ([[graft.Graft.releaseCaches]]).
-    * Explicitly-built [[IvfModel]]s are caller-owned and untouched.
-    */
-  private[graft] def release(): Unit = ivfCache.synchronized {
-    ivfCache.values().forEach(_.unpersist())
-    ivfCache.clear()
-  }
-
   /** Build an IVF index: train spherical k-means centroids on a driver-side
     * sample (deterministic, no RNG — kilobytes on the driver, never the
     * corpus), then assign every corpus row to its cell in ONE narrow typed
@@ -563,22 +531,40 @@ object Similarity {
     IvfModel(centroids, spark.read.parquet(s"$dir/cells"), idCol, vecCol)
   }
 
+  /** The memo slot of an index over `corpus` built with `params`: the
+    * corpus' canonicalized analyzed plan, the index kind and its parameters.
+    */
+  private[operators] def memoSlot(kind: String, corpus: DataFrame, params: Any*): String =
+    (kind +: corpus.queryExecution.analyzed.canonicalized.semanticHash().toString +:
+      params.map(_.toString)).mkString(":")
+
+  /** Data-version component of a memo entry. File-backed plans are keyed by
+    * their input-file SET, so a corpus that grows (files appended, then
+    * re-read over the same path — same semantic plan) re-keys and its entry
+    * is rebuilt: a stale index cannot serve rows that no longer reflect the
+    * corpus. Non-file plans (views, joins over memory) have no cheap version
+    * signal and keep their entry for the life of the scope.
+    */
+  private[operators] def dataVersion(df: DataFrame): String = {
+    val files = df.inputFiles
+    if (files.isEmpty) "v0"
+    else s"v${files.length}:${files.sorted.toSeq.hashCode()}"
+  }
+
   /** IVF approximate top-k: same output shape as [[bruteForceTopK]]. The
-    * index for this corpus is built on first use and memoized (canonical
-    * plan + params key), so repeated probes pay only the probe join — the
-    * build-once/probe-many contract of an inverted-file index.
+    * index for this corpus is built on first use and memoized in the
+    * outermost open [[graft.Scope]], so repeated probes in that scope pay
+    * only the probe join — the build-once/probe-many contract of an
+    * inverted-file index. Explicit [[ivfIndex]]/[[IvfModel]] management is
+    * the production API; its models are caller-owned.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 64, nprobe: Int = 8, maxIter: Int = 5): DataFrame = {
-    val key = corpus.queryExecution.analyzed.canonicalized.semanticHash().toString +
-      s":$idCol:$vecCol:$nlist:$maxIter"
-    val model = ivfCache.synchronized {
-      var m = ivfCache.get(key)
-      if (m == null) { m = ivfIndex(corpus, idCol, vecCol, nlist, maxIter); ivfCache.put(key, m) }
-      m
-    }
+    val model = graft.Scope.memo(
+        memoSlot("ivf", corpus, idCol, vecCol, nlist, maxIter), dataVersion(corpus))(
+      ivfIndex(corpus, idCol, vecCol, nlist, maxIter))(_.unpersist())
     ivfProbe(model, queries, k, nprobe)
   }
 

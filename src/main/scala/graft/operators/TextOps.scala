@@ -9,17 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** The previous bigramSurprisal call's materialized per-doc histogram —
-    * swapped per call so repeated runs hold ONE copy (same discipline as
-    * BestChain.lastAnn / WalletCluster.lastResult).
-    */
-  private val lastHist =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Drop the retained histogram ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit =
-    Option(lastHist.getAndSet(null)).foreach(_.unpersist(blocking = false))
-
   def tokens(textCol: Column): Column = split(lower(trim(textCol)), "\\s+")
 
   /** Whitespace token count. */
@@ -445,14 +434,12 @@ object TextOps {
     // subtree has no exchange for ReuseExchange to dedupe (the old groupBy
     // formulation did), so without persistence the corpus scan + histogram
     // would run twice per call. Persist at count grain — far smaller than the
-    // raw text — under the session-wide swap-register discipline
-    // ([[graft.Graft.releaseCaches]]); re-shuffling on id instead would
-    // reintroduce the corpus-wide (doc, bigram) exchange this formulation
-    // exists to avoid.
-    val perDoc = df
+    // raw text — pinned to the caller's [[graft.Scope]]; re-shuffling on id
+    // instead would reintroduce the corpus-wide (doc, bigram) exchange this
+    // formulation exists to avoid.
+    val perDoc = graft.Scope.pin(df
       .select(col(idCol), explode(bigram_counts(trim(col(textCol)))).as(Seq("bg", "cd")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastHist.getAndSet(perDoc)).foreach(_.unpersist(blocking = false))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val counts = perDoc.groupBy("bg").agg(sum("cd").as("c"))
     val total = counts.agg(sum("c").as("tt"))
     val bits = (x: Column) => length(bin(x))

@@ -58,7 +58,7 @@ object VertexDictionary {
       if (orderPreserving) v.orderBy("oid").rdd.zipWithIndex()
       else v.rdd.zipWithUniqueId()
     val rdd = rows.map { case (r, i) => Row(r.get(0), i) }
-    ChainOps.pin(rdd.persist(level))
+    graft.Scope.pin(rdd.persist(level))
     val frame = values.sparkSession.createDataFrame(rdd, StructType(Seq(
       StructField("oid", v.schema("oid").dataType),
       StructField("vid", LongType, nullable = false))))

@@ -30,28 +30,20 @@ object BlkScale {
 
   private def pq(dir: String): String = s"read_parquet('$dir/*.parquet')"
 
-  /** Run-scoped persisted intermediates for the from-raw pipeline (bk0).
-    * Only frames consumed by SEVERAL branches of the digest DAG belong here:
-    * cTxs (the two semi-joins, first-appearance, and the final assembly all
-    * read it) and — since the bucket-aligned pair-merge txStats replaced the
-    * direction-tagged union — rin and outs as well: the pair-merge shape
-    * reads each side TWICE (per-tx aggregate + distinct key set), which is
-    * free over bucketed silver (bk2's case) but over bk0's freshly-parsed
-    * unbucketed bronze re-paid the outpoint join and the wire-format parse
-    * per consumer (measured: staging them cuts the digest phase 3.7 → 2.3 s
-    * warm at 1×, isolated bk0 −23%). Each new run swaps its set in,
-    * unpersisting the previous run's (bench reruns hold ONE copy, not one
-    * per run).
+  /** Persisted intermediates for the from-raw pipeline (bk0), pinned to the
+    * caller's [[graft.Scope]]. Only frames consumed by SEVERAL branches of
+    * the digest DAG belong here: cTxs (the two semi-joins, first-appearance,
+    * and the final assembly all read it) and — since the bucket-aligned
+    * pair-merge txStats replaced the direction-tagged union — rin and outs
+    * as well: the pair-merge shape reads each side TWICE (per-tx aggregate +
+    * distinct key set), which is free over bucketed silver (bk2's case) but
+    * over bk0's freshly-parsed unbucketed bronze re-paid the outpoint join
+    * and the wire-format parse per consumer (measured: staging them cuts the
+    * digest phase 3.7 → 2.3 s warm at 1×, isolated bk0 −23%). A frame
+    * staged twice (headers must be cached before the annotator's eager
+    * envelope probe fires) is persisted and pinned once.
     */
-  private val scratch =
-    new java.util.concurrent.atomic.AtomicReference[Seq[org.apache.spark.sql.DataFrame]](Nil)
   private def stageForRun(dfs: org.apache.spark.sql.DataFrame*): Unit = {
-    // identity-aware swap: a frame staged EARLY in the run (headers must be
-    // cached before the annotator's eager envelope probe fires) survives a
-    // later restage that adds the rest — only frames leaving the set drop
-    scratch.getAndSet(dfs.toSeq)
-      .filterNot(old => dfs.exists(_ eq old))
-      .foreach(_.unpersist(blocking = false))
     // SER, not deserialized rows: bk0 is the bench's heaviest query and the
     // one whose peak footprint decides whether a contended host window can
     // triple its samples (r15's official bench was invalidated on exactly
@@ -73,12 +65,8 @@ object BlkScale {
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
       else org.apache.spark.storage.StorageLevel.DISK_ONLY
     dfs.filterNot(df => df.storageLevel.useMemory || df.storageLevel.useDisk)
-      .foreach(_.persist(level))
+      .foreach(df => graft.Scope.pin(df.persist(level)))
   }
-
-  /** Drop the retained pipeline scratch ([[graft.Graft.releaseCaches]]). */
-  private[graft] def release(): Unit =
-    scratch.getAndSet(Nil).foreach(_.unpersist(blocking = false))
 
   /** Non-recursive bronze CTEs over the materialized parquet. */
   private def bronzeCtes: String =

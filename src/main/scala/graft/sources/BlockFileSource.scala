@@ -574,19 +574,11 @@ object BlockFileSource {
     (pathScan(blkFiles(spark, path), networkMagic, lenient = true, Some(acc)), acc)
   }
 
-  /** The previous [[toBronze]] call's cached parse: each call swaps its
-    * dataset in and unpersists the predecessor, so repeated end-to-end runs
-    * (bench reruns of bk0) hold at most ONE cached copy of the parsed corpus
-    * instead of accumulating one per run — at 50k blocks each leaked copy is
-    * hundreds of MB of storage memory and the later runs thrash on eviction.
-    */
-  private val lastParsed =
-    new java.util.concurrent.atomic.AtomicReference[Dataset[RawBlock]](null)
-
   /** Bronze projection: the four relational tables of the chain layer
     * (SURVEY.md §1.3) from parsed blocks, with script→address decode (C7).
-    * The parse is cached (four tables consume it); the cache is run-scoped —
-    * the next toBronze call drops it.
+    * The parse is cached (four tables consume it), pinned to the caller's
+    * [[graft.Scope]]: the caller's scope drops it, or outside one, Spark's
+    * cleaner once no table references it.
     */
   def toBronze(blocks: Dataset[RawBlock]): Map[String, DataFrame] = {
     val spark = blocks.sparkSession
@@ -594,8 +586,7 @@ object BlockFileSource {
     // SER, not plain cache(): the parsed corpus is millions of small nested
     // objects deserialized; storing it as Tungsten bytes keeps it out of the
     // GC trace set (a deserialized copy measurably stalls whole-heap GCs).
-    val b = blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Option(lastParsed.getAndSet(b)).foreach(_.unpersist(blocking = false))
+    val b = graft.Scope.pin(blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     // The genesis header's prev-hash is all zeros on the wire; the chain
     // layer marks roots with NULL.
     val blocksDf = b.select(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
+import graft.Scope
 import graft.operators.ChainOps
 import graft.sinks.{Hfs, PartitionedGold, StoreManifest}
 
@@ -97,7 +98,9 @@ object ChainStream {
     * hand it to `sink`. Idempotent: recompute is a pure function of bronze,
     * so replaying a batch after a crash converges to the same gold state.
     * Bronze is read with the schema that wrote it — the batch's — so the
-    * read starts no schema-inference job.
+    * read starts no schema-inference job. The body runs in its own scope
+    * (as [[walletLabelsBatch]]): what the recompute materialized is dropped
+    * once the sink write lands.
     */
   private def appendThenRecompute(
       newBlocks: DataFrame,
@@ -114,7 +117,7 @@ object ChainStream {
         batch.write.mode("append").parquet(bronzeDir)
         val bronze = spark.read.schema(batch.schema).parquet(bronzeDir)
           .dropDuplicates("hash") // replayed appends collapse here
-        sink(recompute(spark, bronze))
+        Scope(sink(recompute(spark, bronze)))
       }
 
   /** The route a [[bestChainIncremental]] call took. */
@@ -673,20 +676,19 @@ object ChainStream {
       fundersOf: (SparkSession, DataFrame) => DataFrame,
       labelsDir: String,
       slots: Int = LabelSlots): WalletBatch = {
-    // Swap-register discipline applied to the batch as a whole: every frame
-    // the batch materializes (localCheckpoints of slot-, bucket- and
-    // chain-sized data; the resolvers' internal rebases) is DEAD once the
-    // on-disk store/cursor/frontier are written — nothing persisted inside
-    // one batch is read by the next, which re-opens everything from disk.
-    // Without this sweep those blocks wait for the GC-driven ContextCleaner,
-    // and a long-running maintainer on a large driver heap (where full GCs
-    // are rare) accumulates checkpoint blocks + their shuffle files for the
-    // cleaner's 30-min periodic-GC default — the measured single-JVM aging
-    // of the r16 30× campaign (tail batches 20–70 s on constant batch
-    // work). The sweep covers only what THIS thread materialized: a query
-    // running beside the maintainer (the gold sink on the same feed) keeps
-    // its caches and checkpoints.
-    val record = ChainOps.scoped(
+    // The batch runs in its own scope: every frame it materializes
+    // (localCheckpoints of slot-, bucket- and chain-sized data; the
+    // resolvers' rebases and results) is DEAD once the on-disk
+    // store/cursor/frontier are written — nothing persisted inside one
+    // batch is read by the next, which re-opens everything from disk — and
+    // the scope unpersists it all when the batch returns. Left to the
+    // GC-driven ContextCleaner, a long-running maintainer on a large driver
+    // heap (where full GCs are rare) accumulates checkpoint blocks + their
+    // shuffle files — the measured single-JVM aging of the r16 30× campaign
+    // (tail batches 20–70 s on constant batch work). The scope is confined
+    // to this thread: a query running beside the maintainer (the gold sink
+    // on the same feed) keeps its caches and checkpoints.
+    val record = Scope(
       walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots))
     logWalletBatch(record)
     record
@@ -928,8 +930,8 @@ object ChainStream {
         if (if (nInvalidated >= 0) nInvalidated == 0
             else traced("wallet: invalidated probe")(invalidated.isEmpty)) None
         else traced("wallet: repair") {
-          // the mass route materializes its own funder input (swap-register
-          // discipline in repairAfterReorg); the change set — minimal on
+          // the mass route materializes its own funder input (pinned to
+          // this batch's scope); the change set — minimal on
           // every route — is checkpointed here so its several consumers
           // below never re-run the repair
           val (rows, repairRoute) = WalletCluster.repairAfterReorg(

@@ -1,15 +1,22 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.chain.WalletCluster
 import graft.graph.GraphAnalytics
 
-/** Repeated invocations of operators that cache internally must hold a
-  * CONSTANT number of persisted RDDs (swap-unpersist of the previous call),
-  * not one per call — a long-lived session (bench reruns, a streaming driver
-  * re-annotating per batch) otherwise accumulates cached state until the
-  * executors thrash on storage eviction.
+/** How long the engine keeps a materialized result cached is the caller's
+  * [[Scope]]: an operator's result and everything it cached on the way stay
+  * cached until the innermost open scope on the calling thread closes, and no
+  * other call — on this thread or another — drops them first. Repeated calls,
+  * each under its own scope, therefore return to a constant baseline instead
+  * of accumulating cached state until the executors thrash on eviction.
   */
 class CacheDisciplineSpec extends SparkSpec {
 
@@ -47,6 +54,37 @@ class CacheDisciplineSpec extends SparkSpec {
     last
   }
 
+  private def persisted(rdd: RDD[_]): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(rdd.id)
+
+  /** The persisted RDD behind an operator's rebased result frame. */
+  private def backing(df: DataFrame): RDD[_] = {
+    val root = df.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
+      .getOrElse(fail("not a rebased frame"))
+    Iterator.iterate(List[RDD[_]](root))(_.flatMap(_.dependencies.map(_.rdd)))
+      .takeWhile(_.nonEmpty).flatten.find(persisted)
+      .getOrElse(fail("no persisted RDD under the frame"))
+  }
+
+  /** `f` on a fresh thread, which has no open scope of its own. */
+  private def onThread[A](f: => A): A =
+    Await.result(Future(f)(ExecutionContext.global), 5.minutes)
+
+  /** Run `call` three times, each under its own scope: every close returns
+    * the session to the cached-RDD count it had before the first call.
+    */
+  private def eachScopeReturnsToBaseline(call: => Unit): Unit = {
+    val baseline = quiescedCount()
+    val after = (1 to 3).map { _ =>
+      Scope(call)
+      assert(eventually(cachedCount <= baseline),
+        s"closing the scope left cached state: $baseline before, $cachedCount after")
+      cachedCount
+    }
+    assert(after(2) <= after(0),
+      s"cached RDDs grew across calls: ${after(0)} after 1 call, ${after(2)} after 3")
+  }
+
   test("WalletCluster.clusters: repeated calls hold constant cached state") {
     import spark.implicits._
     val addrs = (1 to 60).map(i => s"a$i").toDF("address")
@@ -54,26 +92,14 @@ class CacheDisciplineSpec extends SparkSpec {
       Seq((s"t$t", s"a${t * 3 - 2}"), (s"t$t", s"a${t * 3 - 1}"), (s"t$t", s"a${t * 3}")))
       .toDF("tx_hash", "src_address")
 
-    WalletCluster.clusters(addrs, funders).collect()
-    val after1 = cachedCount
-    WalletCluster.clusters(addrs, funders).collect()
-    WalletCluster.clusters(addrs, funders).collect()
-    val after3 = cachedCount
-    assert(after3 <= after1,
-      s"cached RDDs grew across calls: $after1 after 1 call, $after3 after 3")
+    eachScopeReturnsToBaseline(WalletCluster.clusters(addrs, funders).collect())
   }
 
   test("pageRank: repeated calls hold constant cached state") {
     import spark.implicits._
     val edges = (1 to 30).map(i => (s"a$i", s"a${i % 10 + 1}", 100L))
       .toDF("src", "dst", "value")
-    GraphAnalytics.pageRank(edges, iterations = 3).collect()
-    val after1 = cachedCount
-    GraphAnalytics.pageRank(edges, iterations = 3).collect()
-    GraphAnalytics.pageRank(edges, iterations = 3).collect()
-    val after3 = cachedCount
-    assert(after3 <= after1,
-      s"cached RDDs grew across calls: $after1 after 1 call, $after3 after 3")
+    eachScopeReturnsToBaseline(GraphAnalytics.pageRank(edges, iterations = 3).collect())
   }
 
   test("minhash/ngram pair generation: repeated calls hold constant cached state") {
@@ -85,61 +111,62 @@ class CacheDisciplineSpec extends SparkSpec {
         operators.Dedup.minhashSignatures(docs, "doc_id", "text"), "doc_id").collect()
       operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text").collect()
     }
-    run()
-    val after1 = cachedCount
-    run(); run()
-    val after3 = cachedCount
-    assert(after3 <= after1,
-      s"cached RDDs grew across calls: $after1 after 1 call, $after3 after 3")
+    eachScopeReturnsToBaseline(run())
   }
 
-  test("Graft.releaseCaches drains every retained register") {
+  test("closing a scope drains it, and the operators refill in the next scope") {
     import spark.implicits._
-    val baseline = cachedCount // caches owned by OTHER suites, if any
-    // touch several register-holding operators...
+    val baseline = quiescedCount() // caches owned by OTHER suites, if any
     val addrs = (1 to 30).map(i => s"a$i").toDF("address")
     val funders = (1 to 10).flatMap(t =>
       Seq((s"t$t", s"a${t * 3 - 2}"), (s"t$t", s"a${t * 3 - 1}")))
       .toDF("tx_hash", "src_address")
-    WalletCluster.clusters(addrs, funders).collect()
     val docs = (1 to 20).map(i => (i.toLong, s"some text body $i")).toDF("doc_id", "text")
-    operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text").collect()
     val emb = (1 to 50).map(i => (i.toLong, Array.tabulate(8)(d => (i * d).toFloat)))
       .toDF("vec_id", "embedding")
-    operators.Similarity.ivfTopK(emb, emb.where(col("vec_id") < 3),
-      "vec_id", "embedding", k = 2, nlist = 4, nprobe = 2).collect()
-    operators.ProductQuantizer.ivfPqTopKFor(emb, emb.where(col("vec_id") < 3),
-      "vec_id", "embedding", k = 2, nlist = 4, nprobe = 2, m = 4, ksub = 4).collect()
-    assert(cachedCount > 0, "operators should have retained state before release")
-    // ...then the release hook must return the session to a cold cache.
+    // a fresh thread, so the scope below is the outermost one and holds the
+    // index memos as well as the pins
+    onThread {
+      Scope {
+        WalletCluster.clusters(addrs, funders).collect()
+        operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text").collect()
+        operators.Similarity.ivfTopK(emb, emb.where(col("vec_id") < 3),
+          "vec_id", "embedding", k = 2, nlist = 4, nprobe = 2).collect()
+        operators.ProductQuantizer.ivfPqTopKFor(emb, emb.where(col("vec_id") < 3),
+          "vec_id", "embedding", k = 2, nlist = 4, nprobe = 2, m = 4, ksub = 4).collect()
+        assert(cachedCount > baseline, "operators should have cached state inside the scope")
+        assert(Scope.memoSlots.count(_.startsWith("ivf:")) == 1)
+        assert(Scope.memoSlots.count(_.startsWith("ivfpq:")) == 1)
+      }
+      assert(Scope.memoSlots.isEmpty)
+    }
     // Delta-based bound (<= not == 0): suites share one session and an
-    // earlier suite may legitimately hold its OWN caches — release only
-    // owns the engine's registers.
-    Graft.releaseCaches()
+    // earlier suite may legitimately hold its OWN caches — a scope owns
+    // only what the engine cached inside it.
     assert(eventually(cachedCount <= baseline),
-      s"release did not return to the $baseline-cache baseline: $cachedCount")
+      s"closing the scope did not return to the $baseline-cache baseline: $cachedCount")
     // baseline for the refill check must be a QUIESCED floor — sampling
     // while an async unpersist is still draining reads a count that later
     // falls, and the refill delta assertion below then fails spuriously.
-    val afterRelease = quiescedCount()
-    assert(operators.Similarity.ivfCacheEntries == 0)
-    assert(operators.ProductQuantizer.ivfPqCacheEntries == 0)
-    // the operators still work afterwards (registers just refill; the
-    // shingle cache is register-backed on every route, unlike clusters,
+    val afterClose = quiescedCount()
+    // the operators still work in the next scope, and their caches refill
+    // (the shingle cache is persisted on every route, unlike clusters',
     // whose in-memory envelope route holds no persisted state at all)...
-    operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text").collect()
-    assert(eventually(cachedCount > afterRelease),
-      s"refill not visible over the $afterRelease floor: $cachedCount")
-    // ...and a second release returns to the same floor: nothing leaks
-    Graft.releaseCaches()
-    assert(eventually(cachedCount <= afterRelease),
-      s"releaseCaches floor grew: $afterRelease -> $cachedCount")
+    Scope {
+      operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text").collect()
+      assert(eventually(cachedCount > afterClose),
+        s"refill not visible over the $afterClose floor: $cachedCount")
+    }
+    // ...and closing it returns to the same floor: nothing leaks
+    assert(eventually(cachedCount <= afterClose),
+      s"scope floor grew: $afterClose -> $cachedCount")
   }
 
   test("kCore / labelPropagation / triangleCounts: repeated calls hold constant cached state") {
     import spark.implicits._
-    // the r19 rebases (initial und, static adj, oriented o) must swap- or
-    // eagerly-unpersist — a leak here grows cached state per call
+    // the r19 rebases (initial und, static adj, oriented o) must be pinned
+    // to the scope or eagerly unpersisted — a leak here grows cached state
+    // per call
     val edges = (1 to 120).map(i => (s"a${i % 30}", s"a${(i * 7 + 1) % 30}", 1L))
       .toDF("src", "dst", "value")
     def run(): Unit = {
@@ -147,12 +174,7 @@ class CacheDisciplineSpec extends SparkSpec {
       GraphAnalytics.labelPropagation(edges, rounds = 3).collect()
       GraphAnalytics.triangleCounts(edges).collect()
     }
-    run()
-    val after1 = quiescedCount()
-    run(); run()
-    val after3 = quiescedCount()
-    assert(after3 <= after1,
-      s"cached RDDs grew across calls: $after1 after 1 call, $after3 after 3")
+    eachScopeReturnsToBaseline(run())
   }
 
   test("labelPropagation: rounds do not re-derive the static adjacency (r18 finding)") {
@@ -166,8 +188,7 @@ class CacheDisciplineSpec extends SparkSpec {
     // round costs only its own join + two aggregate exchanges over cached
     // inputs. Stage completions fire for EXECUTED stages only, so cached
     // reuse shows up as genuinely fewer stages.
-    def stagesFor(rounds: Int): Int = {
-      Graft.releaseCaches()
+    def stagesFor(rounds: Int): Int = Scope {
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
@@ -205,12 +226,36 @@ class CacheDisciplineSpec extends SparkSpec {
     import spark.implicits._
     val blocks = (("g", null: String, 0L) +: (1 to 50).map(i =>
       (s"b$i", if (i == 1) "g" else s"b${i - 1}", i.toLong))).toDF("hash", "parent_hash", "ts")
-    chain.BestChain.annotateDistributed(blocks).collect()
-    val after1 = cachedCount
-    chain.BestChain.annotateDistributed(blocks).collect()
-    chain.BestChain.annotateDistributed(blocks).collect()
-    val after3 = cachedCount
-    assert(after3 <= after1,
-      s"cached RDDs grew across calls: $after1 after 1 call, $after3 after 3")
+    eachScopeReturnsToBaseline(chain.BestChain.annotateDistributed(blocks).collect())
+  }
+
+  test("two kCore results made in one scope both stay cached until that scope closes") {
+    import spark.implicits._
+    val edges = (1 to 60).map(i => (s"a${i % 20}", s"a${(i * 7 + 1) % 20}", 1L))
+      .toDF("src", "dst", "value")
+    val (first, second) = Scope {
+      val first = backing(GraphAnalytics.kCore(edges, k = 2))
+      val second = backing(GraphAnalytics.kCore(edges, k = 2))
+      assert(persisted(first), "the second kCore dropped the first one's cached result")
+      assert(persisted(second))
+      (first, second)
+    }
+    assert(!persisted(first) && !persisted(second), "closing the scope left a result cached")
+  }
+
+  test("a call on a second thread does not unpersist a result that the first thread still holds") {
+    import spark.implicits._
+    val edges = (1 to 60).map(i => (s"a${i % 20}", s"a${(i * 7 + 1) % 20}", 1L))
+      .toDF("src", "dst", "value")
+    Scope {
+      val held = backing(GraphAnalytics.kCore(edges, k = 2))
+      val other = onThread(Scope {
+        val r = backing(GraphAnalytics.kCore(edges, k = 2))
+        assert(persisted(r))
+        r
+      })
+      assert(!persisted(other), "the other thread's scope kept its result cached")
+      assert(persisted(held), "a kCore on another thread dropped this thread's cached result")
+    }
   }
 }

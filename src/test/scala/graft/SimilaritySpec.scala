@@ -14,6 +14,9 @@ class SimilaritySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.1"
 
+  /** Index memos of one kind held by the test's (outermost) scope. */
+  private def memos(kind: String): Int = Scope.memoSlots.count(_.startsWith(s"$kind:"))
+
   private def topkSet(df: org.apache.spark.sql.DataFrame, idCol: String): Set[(Long, Long)] =
     df.select(col("query_id").cast("long"), col(idCol).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -36,17 +39,17 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.ProductQuantizer
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 3)
-    Graft.releaseCaches() // reset memoized indexes + routing counts
+    // the test's own scope starts with no memoized index or routing count;
     // the route shows in which memo served the call: flat PQ or IVF-PQ
-    def memos = (ProductQuantizer.pqCacheEntries, ProductQuantizer.ivfPqCacheEntries)
+    def routes = (memos("pq"), memos("ivfpq"))
     ProductQuantizer.pqTopKFor(emb, queries, "vec_id", "embedding", k = 5).collect()
-    assert(memos == ((1, 0)), "flat route expected")
+    assert(routes == ((1, 0)), "flat route expected")
     sys.props("graft.pqFlatScanMaxRows") = "10"
     try {
-      Graft.releaseCaches()
+      Scope.reopen() // a scope boundary: the memos start over
       val rows = ProductQuantizer
         .pqTopKFor(emb, queries, "vec_id", "embedding", k = 5).collect()
-      assert(memos == ((0, 1)), "IVF-PQ delegation expected")
+      assert(routes == ((0, 1)), "IVF-PQ delegation expected")
       val perQuery = rows.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
       assert(perQuery.keySet.size == 3 && perQuery.values.forall(_ == 5))
     } finally sys.props.remove("graft.pqFlatScanMaxRows")
@@ -67,25 +70,22 @@ class SimilaritySpec extends SparkSpec {
     val queries = vecs(1, 2)
     sys.props("graft.pqFlatScanMaxRows") = "100"
     try {
-      Graft.releaseCaches()
+      // the test's own scope starts with no memo
       ProductQuantizer.pqTopKFor(
         spark.read.parquet(dir), queries, "vec_id", "embedding",
         k = 3, m = 4, ksub = 4).collect()
       // the route shows in which memo served the call: flat PQ or IVF-PQ
-      assert(ProductQuantizer.pqCacheEntries == 1 &&
-        ProductQuantizer.ivfPqCacheEntries == 0, "flat route expected")
-      // grow past the ceiling — NO releaseCaches: the re-key alone must flip
+      assert(memos("pq") == 1 && memos("ivfpq") == 0, "flat route expected")
+      // grow past the ceiling — NO scope boundary: the re-key alone must flip
       vecs(61, 220).coalesce(1).write.mode("append").parquet(dir)
       val rows = ProductQuantizer.pqTopKFor(
         spark.read.parquet(dir), queries, "vec_id", "embedding",
         k = 3, m = 4, ksub = 4, rerank = 12).collect()
-      assert(ProductQuantizer.ivfPqCacheEntries == 1,
-        "stale memo kept the flat route after growth")
+      assert(memos("ivfpq") == 1, "stale memo kept the flat route after growth")
+      // the grown corpus' row count replaced the stale one
+      assert(memos("rows") == 1, "a re-keyed memo was added beside its stale entry")
       assert(rows.nonEmpty)
-    } finally {
-      sys.props.remove("graft.pqFlatScanMaxRows")
-      Graft.releaseCaches()
-    }
+    } finally sys.props.remove("graft.pqFlatScanMaxRows") // the test's scope closes
   }
 
   test("IVF top-k recall >= 0.89 of brute force on sf0.1 embeddings") {
@@ -224,20 +224,25 @@ class SimilaritySpec extends SparkSpec {
   test("IVF memo is bounded: probing many distinct corpora evicts + unpersists") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 3)
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    // 2 more distinct corpora than the cache holds — each filter is a
-    // distinct canonical plan, so each builds (and persists) its own index
-    (0 until Similarity.IvfCacheSize + 2).foreach { i =>
-      val corpus = emb.filter(col("vec_id") % 7 =!= i)
-      Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", k = 3,
-        nlist = 8, nprobe = 4).write.format("noop").mode("overwrite").save()
-    }
-    assert(Similarity.ivfCacheEntries <= Similarity.IvfCacheSize)
-    // evicted cell sets are actually UNPERSISTED, not leaked: each live
-    // model persists exactly one cells DataFrame
-    val persistedNow = spark.sparkContext.getPersistentRDDs.size
-    assert(persistedNow - baseline <= Similarity.IvfCacheSize,
-      s"leaked persisted RDDs: $baseline -> $persistedNow")
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.size
+    // six distinct corpora — each filter is a distinct canonical plan, so
+    // each builds (and persists) its own index, memoized in the test's scope
+    def probe(i: Int): Unit =
+      Similarity.ivfTopK(emb.filter(col("vec_id") % 7 =!= i), queries, "vec_id", "embedding",
+        k = 3, nlist = 8, nprobe = 4).write.format("noop").mode("overwrite").save()
+    (0 until 6).foreach(probe)
+    assert(memos("ivf") == 6)
+    // a second probe of a corpus reuses its index: nothing more is persisted
+    val built = sc.getPersistentRDDs.size
+    probe(0)
+    assert(memos("ivf") == 6 && sc.getPersistentRDDs.size == built)
+    // each live model persists exactly one cells DataFrame
+    assert(built - baseline <= 6, s"leaked persisted RDDs: $baseline -> $built")
+    Scope.reopen() // the scope closes: every index is unpersisted
+    assert(memos("ivf") == 0)
+    assert(sc.getPersistentRDDs.size <= baseline,
+      s"closing the scope left indexes persisted: $baseline -> ${sc.getPersistentRDDs.size}")
   }
 
   test("IVF save/load: identical probe results, partition-pruned scan") {

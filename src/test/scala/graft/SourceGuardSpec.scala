@@ -62,6 +62,19 @@ class SourceGuardSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders)
   }
 
+  test("no AtomicReference, LinkedHashMap or ConcurrentHashMap field in chain/, graph/, operators/, queries/, sources/") {
+    // how long a materialized result stays cached is the caller's Scope: a
+    // "last result" register or an index memo held in an object is shared by
+    // every caller, on any thread, and each call decides for all of them
+    val main = srcRoot.resolve("main/scala/graft")
+    val cache = "\\b(?:AtomicReference|LinkedHashMap|ConcurrentHashMap)\\b".r
+    val offenders = Seq("chain", "graph", "operators", "queries", "sources")
+      .flatMap(d => scalaFiles(main.resolve(d)))
+      .filter(p => cache.findFirstIn(code(p)).isDefined)
+      .map(p => main.relativize(p).toString)
+    assert(offenders.isEmpty, offenders)
+  }
+
   test("a GraftSession session has the engine's SQL functions") {
     assert(spark.sql("SELECT block_subsidy(0)").head().getLong(0) == 5000000000L)
   }

@@ -136,6 +136,34 @@ class StreamingSpec extends SparkSpec {
     assert(all2.contains("b"))
   }
 
+  test("a gold micro-batch leaves nothing it materialized cached once it lands") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = Files.createTempDirectory("graft-gold-scope").toString
+    val sc = spark.sparkContext
+    val input = MemoryStream[(String, String, Long)]
+    val blocks = input.toDF().toDF("hash", "parent_hash", "ts")
+      .select(col("hash"),
+        when(col("parent_hash") === "", lit(null)).otherwise(col("parent_hash")).as("parent_hash"),
+        col("ts"))
+    val writer = ChainStream.incrementalGold(
+      blocks, s"$tmp/bronze",
+      (_, bronze) => BestChain.annotate(bronze),
+      s"$tmp/gold", s"$tmp/ckpt")
+    input.addData(("g", "", 1000L) +:
+      (1 to 20).map(i => (s"b$i", if (i == 1) "g" else s"b${i - 1}", 1000L + i)): _*)
+    // a low envelope puts the annotation on the doubling route, which
+    // rebases every round and its result
+    sys.props("graft.broadcastMaxRows") = "4"
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      writer.start().awaitTermination()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"the gold batch left ${left.size} materializations cached")
+    } finally sys.props.remove("graft.broadcastMaxRows")
+    assert(spark.read.parquet(s"$tmp/gold").where(col("is_on_best_chain")).count() == 21)
+  }
+
   test("incrementalWalletLabels: streamed reorg splits stored components; replay writes nothing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
