@@ -49,13 +49,14 @@ object Rehearsal {
 
   /** A maintainer batch record under the evidence-line keys: route, blocks
     * arrived / invalidated (-1 = not derived), repair route ("bootstrap"
-    * when the store was rebuilt, "skipped" when no repair ran), the
-    * frontier sizes a quiet batch re-stamped, and a full route's why/kind.
+    * when the store was rebuilt, "skipped" when no repair ran), where a
+    * replace repair's edges came from, the frontier sizes a quiet batch
+    * re-stamped, and a full route's why/kind.
     */
   def batchWork(b: WalletBatch): ListMap[String, Any] = ListMap(
     "route" -> b.routeName, "arrived" -> b.arrived, "invalidated" -> b.invalidated,
     "repair" -> (if (b.storeBootstrap) "bootstrap" else b.repair.fold("skipped")(_.name)),
-    "pending" -> b.pending, "dangling" -> b.dangling,
+    "edges" -> b.edges.map(_.detail), "pending" -> b.pending, "dangling" -> b.dangling,
     "why" -> b.reason, "kind" -> b.kind)
 
   /** In-leg router-economics assertion with ONE contention retry. The legs

@@ -263,7 +263,7 @@ object ScaleRehearsal {
         ._1.collect()
       graft.chain.WalletCluster.clusters(keptAddrs, keptFunders).collect()
       val ((rep, route), tRepair) = timed {
-        val (rows, route) =
+        val (rows, route, _) =
           graft.chain.WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
         (rows.collect(), route.name)
       }
@@ -283,7 +283,7 @@ object ScaleRehearsal {
       // mass proxy — the label says which was asserted).
       val altFloor = if (route == "contraction") Long.MaxValue else 0L
       val (altRoute, tAlt) = timed {
-        val (rows, route) = graft.chain.WalletCluster.repairAfterReorg(
+        val (rows, route, _) = graft.chain.WalletCluster.repairAfterReorg(
           stored, invFunders, keptFunders, contractionMinStore = altFloor)
         rows.collect()
         route.name

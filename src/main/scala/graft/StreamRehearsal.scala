@@ -313,7 +313,7 @@ object StreamRehearsal {
     // once the store exceeds the driver envelope (30×), the driver-side
     // "replace" under it — the label keeps the comparator honest
     val ((massRows, altRoute), tMass) = timed {
-      val (rows, route) = graft.chain.WalletCluster.repairAfterReorg(
+      val (rows, route, _) = graft.chain.WalletCluster.repairAfterReorg(
         preStored, invFunders, bestFunders,
         contractionMinStore = Long.MaxValue)
       (rows.count(), route.name)

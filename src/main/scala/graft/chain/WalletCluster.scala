@@ -58,6 +58,41 @@ object WalletCluster {
     case object Contraction extends RepairRoute("contraction")
   }
 
+  /** Where [[repairAfterReorg]]'s replace route takes the post-reorg
+    * co-spend edges from.
+    */
+  sealed trait EdgeSource
+  object EdgeSource {
+    /** Collect the post-reorg chain's funding pairs (`bestFunders`) and
+      * build its star edges again: O(chain).
+      */
+    case object Rederive extends EdgeSource
+    /** The multiset of the chain up to an earlier tip T0 on the prior chain,
+      * moved to the post-reorg chain: minus the star edges of `retract` (the
+      * funding pairs of the blocks under T0 that left the chain), plus those
+      * of `add` (the pairs of the blocks that joined it after T0, arrivals
+      * included). O(reorg depth + the blocks between T0 and the anchor).
+      */
+    final case class Stored(edges: Edges, retract: DataFrame, add: DataFrame)
+        extends EdgeSource
+  }
+
+  /** The post-reorg star-edge multiset a replace repair built on the driver:
+    * `stored` = it moved the [[EdgeSource.Stored]] multiset, else it
+    * re-derived the edges from the whole chain's pairs.
+    */
+  final case class PostEdges(edges: Edges, stored: Boolean)
+
+  /** `edges` minus `retract` plus `add`, keeping the edges still given by
+    * at least one transaction.
+    */
+  private def moveEdges(edges: Edges, retract: Edges, add: Edges): Edges = {
+    val m = scala.collection.mutable.HashMap.from(edges)
+    retract.foreach { case (e, n) => m(e) = m.getOrElse(e, 0L) - n }
+    add.foreach { case (e, n) => m(e) = m.getOrElse(e, 0L) + n }
+    m.iterator.filter(_._2 > 0).toMap
+  }
+
   private val LabelSchema = StructType(Seq(
     StructField("address", StringType), StructField("wallet_id", StringType)))
 
@@ -76,27 +111,45 @@ object WalletCluster {
     else Some(rows.map(r => (r.getString(0), r.getString(1))))
   }
 
-  /** Component labels of the co-spend graph over collected (tx, address)
-    * pairs: a star per tx around its min funder, then union-find. Every
-    * address on an edge maps to its component's min address; an address on
-    * no edge is absent (a singleton). A null tx or null address adds no
-    * edge, as in the distributed derivation (its hub join and `=!=` drop
-    * them).
+  /** A chain's co-spend star edges on the driver, as a multiset:
+    * (funder, hub) → the number of the chain's transactions giving that edge,
+    * where a transaction's hub is its min funder. Only the keys matter for
+    * the components; the counts let a reorg retract a branch's edges
+    * ([[EdgeSource.Stored]]).
     */
-  private def starLabels(pairs: Iterable[(String, String)]): Map[String, String] = {
+  type Edges = Map[(String, String), Long]
+
+  /** The star-edge multiset of collected distinct (tx, address) pairs. A
+    * null tx or null address adds no edge, as in the distributed derivation
+    * (its hub join and `=!=` drop them).
+    */
+  private[graft] def starEdges(pairs: Iterable[(String, String)]): Edges = {
     val kept = pairs.filter { case (t, a) => t != null && a != null }
     val hub = kept.groupMapReduce(_._1)(_._2)((x, y) => if (x < y) x else y)
-    UnionFind.components(kept.iterator.collect {
-      case (t, a) if a != hub(t) => (a, hub(t))
-    })
+    kept.iterator.collect { case (t, a) if a != hub(t) => (a, hub(t)) }
+      .toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
   }
+
+  /** Component labels of a star-edge multiset: every address on an edge
+    * maps to its component's min address; an address on no edge is absent
+    * (a singleton).
+    */
+  private def labelsOf(edges: Edges): Map[String, String] =
+    UnionFind.components(edges.keysIterator)
 
   /** @param addresses  one-column DF of the full address universe
     * @param txFunders  (tx_hash, src_address) distinct funding pairs
     * @return (address, wallet_id) where wallet_id = min address in the
     *         component (stable, engine-independent label)
     */
-  def clusters(addresses: DataFrame, txFunders: DataFrame): DataFrame = {
+  def clusters(addresses: DataFrame, txFunders: DataFrame): DataFrame =
+    clustered(addresses, txFunders)._1
+
+  /** [[clusters]], and the star-edge multiset when the funding pairs fit the
+    * driver envelope (the route that collects them); None above it.
+    */
+  private[graft] def clustered(
+      addresses: DataFrame, txFunders: DataFrame): (DataFrame, Option[Edges]) = {
     val spark = addresses.sparkSession
     import spark.implicits._
 
@@ -112,7 +165,9 @@ object WalletCluster {
     // Envelope route, decided on the pairs actually collected (there are
     // at least as many pairs as star edges, so the edges fit too).
     collectPairs(funders, envelope) match {
-      case Some(pairs) => return labelled(starLabels(pairs))
+      case Some(pairs) =>
+        val edges = starEdges(pairs)
+        return (labelled(labelsOf(edges)), Some(edges))
       case None =>
     }
     // Star per tx around the MIN funder address (any fixed hub keeps the
@@ -132,7 +187,7 @@ object WalletCluster {
       val labels = UnionFind.components(
         edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
       edgeRdd.unpersist(blocking = false)
-      return labelled(labels)
+      return (labelled(labels), None)
     }
 
     // Dense unique vertex ids (no hash-collision risk at 100 TB); the edge
@@ -157,7 +212,7 @@ object WalletCluster {
     graph.unpersist(blocking = false)
     dict.unpersist()
     edgeRdd.unpersist(blocking = false)
-    outDf
+    (outDf, None)
   }
 
   /** INCREMENTAL wallet clustering — the chain-side member of the engine's
@@ -245,7 +300,8 @@ object WalletCluster {
           Seq("address"), "left_semi")
         .collect().iterator.map(r => r.getString(0) -> r.getString(1)).toMap
     def node(a: String): String = if (a == null) null else stored.getOrElse(a, a)
-    val relabel = starLabels(pairs.iterator.map { case (t, a) => (t, node(a)) }.toSeq.distinct)
+    val relabel = labelsOf(starEdges(
+      pairs.iterator.map { case (t, a) => (t, node(a)) }.toSeq.distinct))
     // contracted nodes whose label moved; stored labels among them carry
     // their stored members along
     val moved = relabel.filter { case (n, w) => n != w }
@@ -290,12 +346,24 @@ object WalletCluster {
     *
     * Txs present ONLY in the replacement blocks and funded entirely by
     * unaffected addresses are ordinary NEW transactions. The replace route
-    * handles them too: it clusters the whole post-reorg chain, so its
-    * output alone equals a full recompute of that chain, new addresses
-    * included. The noop, mass and contraction routes do not: feed those
-    * txs through [[incrementalClusters]] after them (the property suite
-    * gates both compositions against a full recompute of the post-reorg
-    * chain).
+    * handles them too: it clusters the post-reorg chain's whole edge set,
+    * so its output alone equals a full recompute of that chain, new
+    * addresses included. The noop, mass and contraction routes do not: feed
+    * those txs through [[incrementalClusters]] after them (the property
+    * suite gates both compositions against a full recompute of the
+    * post-reorg chain).
+    *
+    * THE REPLACE ROUTE'S EDGES come from `source`. [[EdgeSource.Stored]]
+    * moves the multiset of an earlier tip on the prior chain by two
+    * lookups of O(reorg depth + lag) blocks, then runs union-find over the
+    * edges still given by a transaction: a tip_follow reorg at 1× looks up
+    * ~300 blocks (~1k pairs) and clusters ~6.8k edges, where
+    * [[EdgeSource.Rederive]] collects the post-reorg chain's ~231k funding
+    * pairs (1–2 s more per reorg). Rederive is the route when no trusted
+    * multiset exists; it skips the work when no invalidated block carries a
+    * funder (the noop probe), which the stored route does not need. Either
+    * source returns the post-reorg multiset it built, for the caller to
+    * store; the re-derived one only when the pairs fit the driver.
     *
     * ROUTE ECONOMICS: the contraction route is O(affected) in DATA but pays
     * a fixed ladder of ~10 jobs (affected probe, member materialization,
@@ -324,46 +392,48 @@ object WalletCluster {
     *                     current post-reorg best chain
     * @param contractionMinStore stored-row floor below which the
     *                     recompute-diff route is always taken
-    * @return the route taken, and the MINIMAL change set on every route:
+    * @param source       where the replace route's edges come from;
+    *                     `invalidated` and `bestFunders` are by-name, and
+    *                     a replace route on a stored multiset reads neither
+    * @return the MINIMAL change set on every route, the route taken, and
+    *         the replace route's post-reorg multiset when it built one on
+    *         the driver. The change set:
     *         (address, wallet_id) only for stored addresses whose label
     *         differs from `oldLabels` — split members that re-label, and
     *         members of unaffected components whose label moves through a
     *         merge. New addresses are never emitted, except on the replace
     *         route: there every post-reorg funder address missing from the
     *         store is emitted with its label (a null funder as (null,
-    *         null)). Upsert into the store; a row equal to its stored label
+    *         null); on a stored multiset, a null funder of an added block).
+    *         Upsert into the store; a row equal to its stored label
     *         is never emitted. A member address absent from the post-reorg
     *         chain re-labels to itself — semantically a one-address wallet;
     *         the next full recompute drops it with the rest of the vanished
     *         universe.
     */
   def repairAfterReorg(
-      oldLabels: DataFrame, invalidated: DataFrame,
-      bestFunders: DataFrame,
-      contractionMinStore: Long = ContractionMinStoreRows): (DataFrame, RepairRoute) = {
+      oldLabels: DataFrame, invalidated: => DataFrame,
+      bestFunders: => DataFrame,
+      contractionMinStore: Long = ContractionMinStoreRows,
+      source: EdgeSource = EdgeSource.Rederive)
+      : (DataFrame, RepairRoute, Option[PostEdges]) = {
     val old = oldLabels.select(col("address"), col("wallet_id"))
-    val invAddrs = invalidated.select(col("src_address").as("address")).distinct()
     // REPLACE route — store below the economics floor: the store bounds the
     // universe (up to the replacement branch's new addresses), so the whole
     // labeling is driver-sized BY THE SAME BOUND that routes here, and the
     // diff that costs a store-join ladder at scale is a hash-map pass. Cost
-    // = ONE clustering of the post-reorg chain (exactly what the full
-    // recompute this route is measured against) + two driver-sized collects;
-    // r15's measured premium over the full recompute on small stores — the
-    // corpus-grain bestFunders materialization plus the 3-way diff join of
-    // the mass route below — is gone. Output: genuinely changed rows,
-    // vanished affected members self-labeled, and the post-reorg chain's
-    // new addresses with their labels.
+    // = ONE clustering of the post-reorg edges + two driver-sized collects.
+    // Output: genuinely changed rows, vanished affected members
+    // self-labeled, and the post-reorg chain's new addresses with their
+    // labels.
     //
     // ONE bounded probe answers the routing question AND (on the replace
     // path) IS the store snapshot the diff needs: collecting up to
     // min(floor, driver-cap + 1) rows tells us whether the store fits under
-    // BOTH bounds, and when it does the probe already holds every row — the
-    // separate count + collect of r16 (two scheduled jobs, each ~a tenth of
-    // the whole small-store repair) collapse into one. A store at or above
-    // the probe cap routes distributed and pays its exact count there (the
-    // mass/contraction decision needs it; at that scale a parquet-backed
-    // count is metadata-cheap).
+    // BOTH bounds, and when it does the probe already holds every row. A
+    // store at or above the probe cap routes distributed and pays its exact
+    // count there (the mass/contraction decision needs it; at that scale a
+    // parquet-backed count is metadata-cheap).
     val driverCap = ChainOps.driverEnvelope
     val probeCap = math.min(contractionMinStore, driverCap + 1L).toInt
     val storedProbe =
@@ -378,86 +448,103 @@ object WalletCluster {
     if (probeCap > 0 && storedProbe.length < probeCap) {
       val spark = oldLabels.sparkSession
       import spark.implicits._
-      // No-op pre-route as a LIMIT-1 probe, not a full derivation: this is
-      // the only place the route touches `invalidated` at all. The r16 leg
-      // decomposition put the small-store premium (repair 1.6–1.9× over the
-      // bare recompute) in exactly the invalidated-side work only the repair
-      // path paid — the full distinct+collect of invalidated funder
-      // addresses and the affected-component gate over them — so the route
-      // now skips both: a nonempty probe costs one pushed-down row, and the
-      // diff below is correct with or without the gate (a gate-worthy no-op
-      // just produces an empty diff the long way — rare, and bounded by the
-      // small-store recompute this route already costs).
-      if (invalidated.isEmpty) return (old.where(lit(false)), RepairRoute.Noop)
       val storedRows = storedProbe.map(r => (r.getString(0), r.getString(1)))
-      val bf = bestFunders
-        .select(col("tx_hash"), col("src_address").as("address"))
       // The diff reads fresh labels at STORED addresses (changed members
       // re-label, vanished members self-label) and at every post-reorg
       // funder address the store lacks — the replacement branch's new
       // addresses, which get their label from the same clustering, so the
       // caller needs no incremental pass over the arrivals. A null funder
       // is never stored: it gives the distributed path's (null, null) row.
-      // The whole-universe labeling clusters() builds is overkill here: its
-      // final pass left-joins the labels onto the universe — a shuffle and a
-      // job whose only consumer is this lookup. Inline the clustering
-      // instead: the SAME min-address-hub star edges, and UnionFind labels
-      // by component minimum — canonical across every route. No presence
-      // pass for stored addresses either: one with NO kept co-spend edge
-      // emits (a, a) when its label moved whether it is a kept SINGLETON
-      // (fresh label = itself) or VANISHED from the post-reorg chain
-      // (self-labeled by the output contract) — the two cases produce the
-      // same row. Everything collected is structurally bounded by the
-      // broadcast envelope: the distinct funding pairs when they fit (hubs,
-      // star edges and union-find then run on the driver, as in clusters'
-      // envelope route), else the distributed edge list; beyond that, the
-      // distributed clustering, whose rows at stored addresses are
-      // collected (≤ nStored) — a post-reorg funder universe that dwarfs
-      // the store, the ADVICE-flagged hazard, never reaches the driver.
+      // No presence pass for stored addresses: one with NO kept co-spend
+      // edge emits (a, a) when its label moved whether it is a kept
+      // SINGLETON (fresh label = itself) or VANISHED from the post-reorg
+      // chain (self-labeled by the output contract) — the two cases produce
+      // the same row.
       val storedAddrs = storedRows.iterator.map(_._1).filter(_ != null).toSet
       def storedFrame = broadcast(storedAddrs.toSeq.toDF("address"))
       def isNew(a: String) = a == null || !storedAddrs.contains(a)
-      val fu = bf.distinct()
-      val (freshAt, newRows): (String => String, DataFrame) =
-        collectPairs(fu, driverCap) match {
-          case Some(pairs) =>
-            val labels = starLabels(pairs)
-            val at = (a: String) => if (a == null) null else labels.getOrElse(a, a)
-            (at, labelFrame(spark, pairs.iterator.map(_._2).filter(isNew).toSet.map(
-              (a: String) => (a, at(a)))))
+      // fresh labels of the driver-side edges, and the rows of the new
+      // funder addresses among `pairs`
+      def onDriver(edges: Edges, pairs: Array[(String, String)]) = {
+        val labels = labelsOf(edges)
+        val at = (a: String) => if (a == null) null else labels.getOrElse(a, a)
+        (at, labelFrame(spark, pairs.iterator.map(_._2).filter(isNew).toSet.map(
+          (a: String) => (a, at(a)))))
+      }
+      // distinct on the driver: a lookup's pairs are O(depth)
+      def distinctPairs(df: DataFrame) =
+        collectPairs(df.select(col("tx_hash"), col("src_address")), driverCap).map(_.distinct)
+      // The STORED source: the multiset moved to the post-reorg chain by its
+      // two O(depth + lag) lookups — no read of the whole chain. Every new
+      // address funds an added pair (the prior chain's funders are all
+      // stored). Lookups past the envelope re-derive instead.
+      val moved = source match {
+        case EdgeSource.Stored(edges, retract, add) =>
+          for (r <- distinctPairs(retract); a <- distinctPairs(add))
+            yield (moveEdges(edges, starEdges(r), starEdges(a)), a)
+        case EdgeSource.Rederive => None
+      }
+      val (freshAt, newRows, post): (String => String, DataFrame, Option[PostEdges]) =
+        moved match {
+          case Some((edges, added)) =>
+            val (at, rows) = onDriver(edges, added)
+            (at, rows, Some(PostEdges(edges, stored = true)))
           case None =>
-            val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
-            val edgeRows = fu.join(hubs, "tx_hash")
-              .where(col("address") =!= col("hub"))
-              .select(col("address").as("src"), col("hub").as("dst"))
+            // No-op pre-route as a LIMIT-1 probe, not a full derivation: a
+            // reorg whose invalidated blocks carry no funders splits nothing,
+            // and the recompute below is O(chain). The moved multiset needs
+            // no such gate: its cost is the lookups it already paid.
+            if (invalidated.isEmpty) return (old.where(lit(false)), RepairRoute.Noop, None)
+            val fu = bestFunders.select(col("tx_hash"), col("src_address").as("address"))
               .distinct()
-            val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
-            // new addresses are found distributed on both arms below: the
-            // post-reorg universe may dwarf the driver envelope
-            val newAddrs = fu.select("address").distinct()
-              .join(storedFrame, Seq("address"), "left_anti")
-            if (nEdges <= driverCap) {
-              val labels = graft.operators.UnionFind.components(
-                edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
-              edgeRdd.unpersist(blocking = false)
-              ((a: String) => labels.getOrElse(a, a),
-                newAddrs.join(broadcast(labelFrame(spark, labels)), Seq("address"), "left")
-                  .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id")))
-            } else {
-              // co-spend edges outgrew the driver envelope under a tiny store
-              // (pathologically dense corpus): distributed clustering. An
-              // address absent from its stored-address rows (vanished)
-              // self-labels — same rule as the in-memory arms.
-              edgeRdd.unpersist(blocking = false)
-              val fresh = clusters( // clusters distincts both inputs itself
-                bf.select("address"),
-                bf.select(col("tx_hash"), col("address").as("src_address")))
-              val m = fresh.join(storedFrame, Seq("address"), "left_semi").collect()
-                .iterator.map(r => r.getString(0) -> r.getString(1)).toMap
-              ((a: String) => m.getOrElse(a, a),
-                fresh.join(newAddrs, Seq("address"), "left_semi")
-                  .unionByName(newAddrs.where(col("address").isNull)
-                    .select(col("address"), col("address").as("wallet_id"))))
+            // REDERIVED: collect the post-reorg chain's distinct funding
+            // pairs when they fit (hubs, star edges and union-find then run on
+            // the driver, as in clusters' envelope route), else the
+            // distributed edge list; beyond that, the distributed clustering,
+            // whose rows at stored addresses are collected (≤ nStored) — a
+            // post-reorg funder universe that dwarfs the store, the
+            // ADVICE-flagged hazard, never reaches the driver.
+            collectPairs(fu, driverCap) match {
+              case Some(pairs) =>
+                val edges = starEdges(pairs)
+                val (at, rows) = onDriver(edges, pairs)
+                (at, rows, Some(PostEdges(edges, stored = false)))
+              case None =>
+                val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
+                val edgeRows = fu.join(hubs, "tx_hash")
+                  .where(col("address") =!= col("hub"))
+                  .select(col("address").as("src"), col("hub").as("dst"))
+                  .distinct()
+                val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
+                // new addresses are found distributed on both arms below: the
+                // post-reorg universe may dwarf the driver envelope
+                val newAddrs = fu.select("address").distinct()
+                  .join(storedFrame, Seq("address"), "left_anti")
+                if (nEdges <= driverCap) {
+                  val labels = UnionFind.components(
+                    edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
+                  edgeRdd.unpersist(blocking = false)
+                  ((a: String) => labels.getOrElse(a, a),
+                    newAddrs.join(broadcast(labelFrame(spark, labels)), Seq("address"), "left")
+                      .select(col("address"), coalesce(col("wallet_id"), col("address")).as("wallet_id")),
+                    None)
+                } else {
+                  // co-spend edges outgrew the driver envelope under a tiny
+                  // store (pathologically dense corpus): distributed
+                  // clustering. An address absent from its stored-address rows
+                  // (vanished) self-labels — same rule as the in-memory arms.
+                  edgeRdd.unpersist(blocking = false)
+                  val fresh = clusters( // clusters distincts both inputs itself
+                    fu.select("address"),
+                    fu.select(col("tx_hash"), col("address").as("src_address")))
+                  val m = fresh.join(storedFrame, Seq("address"), "left_semi").collect()
+                    .iterator.map(r => r.getString(0) -> r.getString(1)).toMap
+                  ((a: String) => m.getOrElse(a, a),
+                    fresh.join(newAddrs, Seq("address"), "left_semi")
+                      .unionByName(newAddrs.where(col("address").isNull)
+                        .select(col("address"), col("address").as("wallet_id"))),
+                    None)
+                }
             }
         }
       // same emission rule as the mass route's diff join, as a map pass:
@@ -465,14 +552,15 @@ object WalletCluster {
       // replacement-branch edges), and vanished members singleton. A
       // vanished stored member is PROVABLY affected — its every pre-reorg
       // funding pair must have been in the retracted blocks, or it would
-      // still appear post-reorg — so the old affected-set test it used to
-      // ride on was redundant (and already-singleton rows skip on nw == w).
+      // still appear post-reorg — so no affected-set test is needed (and
+      // already-singleton rows skip on nw == w).
       val out = storedRows.iterator.flatMap { case (a, w) =>
         val nw = freshAt(a)
         if (nw != w) Some((a, nw)) else None
       }.toSeq
-      return (labelFrame(spark, out).unionByName(newRows), RepairRoute.Replace)
+      return (labelFrame(spark, out).unionByName(newRows), RepairRoute.Replace, post)
     }
+    val invAddrs = invalidated.select(col("src_address").as("address")).distinct()
     // the probe said "not driver-sized": the distributed routes need the
     // exact count (mass-vs-contraction compares member fraction to it)
     val nStored = old.count()
@@ -492,7 +580,7 @@ object WalletCluster {
       old.join(invAddrs, Seq("address"), "left_semi")
         .select(col("wallet_id")).distinct())
     try {
-      if (nAffected == 0) return (old.where(lit(false)), RepairRoute.Noop)
+      if (nAffected == 0) return (old.where(lit(false)), RepairRoute.Noop, None)
       // NOT distinct'ed here: a corpus-wide distinct is a full shuffle per
       // consumer, and every consumer below either semi-joins bf down to the
       // affected neighborhood first (then distincts the small result) or—on
@@ -549,7 +637,7 @@ object WalletCluster {
             (col("new_id").isNull && col("_aff").isNotNull &&
               col("wallet_id") =!= col("address")))
           .select(col("address"), coalesce(col("new_id"), col("address")).as("wallet_id")),
-          RepairRoute.Mass)
+          RepairRoute.Mass, None)
       }
       // Materialized here (and only here): every contraction step below reads
       // the member set at least once.
@@ -600,7 +688,7 @@ object WalletCluster {
             .select(col("address"), col("new_id").as("wallet_id"))
           // Collected by every caller before the register is reused; the
           // member set is small (affected components only) on this route.
-          (memberRows.unionByName(movedMembers), RepairRoute.Contraction)
+          (memberRows.unionByName(movedMembers), RepairRoute.Contraction, None)
         } finally { contractedRdd.unpersist(blocking = false); () }
       } finally { membersRdd.unpersist(blocking = false); () }
     } finally { affectedRdd.unpersist(blocking = false); () }

@@ -352,8 +352,7 @@ object GraphAnalytics {
   def pageRank(edges: DataFrame, iterations: Int = 10, resetProb: Double = 0.15): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     // explode(array(src, dst)) emits both endpoints in ONE scan of the edge
     // frame — the union-of-two-selects form it replaces computed the edge
     // subtree twice (for g2 that was the whole flowEdges derivation)
@@ -367,14 +366,19 @@ object GraphAnalytics {
     // Materialize (pinned to the caller's scope), then drop GraphX state.
     // staticPageRank returns an UNcached mapVertices wrapper over its
     // internally-cached final iteration graph, so Graph.unpersist on the
-    // result misses it; the persistent-RDD snapshot delta catches every
-    // internal cache.
-    // (Assumes no concurrent materialization in this session — true for the
-    // Verify/Bench drivers, which run queries sequentially.)
-    val (outDf, outRdd) = ChainOps.rebase(out)
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id) && id != outRdd.id) rdd.unpersist(blocking = false)
+    // result misses it: drop what this call persisted in the rank graph's
+    // own lineage instead — never the session's, which holds what other
+    // threads cached meanwhile, nor a cache of the caller's input.
+    val (outDf, _) = ChainOps.rebase(out)
+    val seen = scala.collection.mutable.HashSet.empty[Int]
+    def drop(rdd: org.apache.spark.rdd.RDD[_]): Unit = if (seen.add(rdd.id)) {
+      if (rdd.getStorageLevel != StorageLevel.NONE && !before.contains(rdd.id))
+        rdd.unpersist(blocking = false)
+      rdd.dependencies.foreach(d => drop(d.rdd))
     }
+    drop(rankGraph.vertices)
+    drop(rankGraph.edges)
+    dict.unpersist()
     outDf
   }
 }

@@ -193,14 +193,19 @@ object ChainOps {
         (cur("done") || col(s"hid$tag").isNull || col(s"hdone$tag")).as("done"))
   }
 
+  private def tracing: Boolean = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
+
   /** Perf tracing for the doubling loops (SPARK_GRAFT_TRACE=1). */
   private[graft] def traced[A](name: String)(f: => A): A =
-    if (!sys.env.get("SPARK_GRAFT_TRACE").contains("1")) f
+    if (!tracing) f
     else {
       val t0 = System.nanoTime(); val r = f
       println(f"[trace] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
+
+  /** One `[trace]` line under SPARK_GRAFT_TRACE=1: a route record. */
+  private[graft] def trace(line: => String): Unit = if (tracing) println(s"[trace] $line")
 
   /** The pointer-jumping loop shared by [[rootsAndDepths]] and
     * [[graft.chain.BestChain.annotateDistributed]]. State rows are

@@ -257,7 +257,7 @@ object Blockchain {
         val keptFunders = rinAll.join(keptTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")
           .select("tx_hash", "src_address")
 
-        val (repair, _) = WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
+        val (repair, _, _) = WalletCluster.repairAfterReorg(stored, invFunders, keptFunders)
         val repaired = repair.unionByName(
           stored.join(repair.select("address"), Seq("address"), "left_anti"))
         val outsPost = F.txOutputsDf(s).join(keptTxs.select("tx_hash"), Seq("tx_hash"), "left_semi")

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -32,6 +33,26 @@ private[graft] object Hfs {
     val out = fs(spark, p).create(p, /*overwrite=*/ true)
     try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** Whole-file overwrite through a buffered data stream: a driver-sized
+    * binary body, written without a Spark job.
+    */
+  def writeData(spark: SparkSession, path: String)(body: DataOutputStream => Unit): Unit = {
+    val p = new Path(path)
+    val out = new DataOutputStream(new BufferedOutputStream(fs(spark, p).create(p, true)))
+    try body(out) finally out.close()
+  }
+
+  /** A file written by [[writeData]], read back by `body`; None when absent. */
+  def readData[A](spark: SparkSession, path: String)(body: DataInputStream => A): Option[A] = {
+    val p = new Path(path)
+    val f = fs(spark, p)
+    if (!f.exists(p)) None
+    else {
+      val in = new DataInputStream(new BufferedInputStream(f.open(p)))
+      try Some(body(in)) finally in.close()
+    }
   }
 
   /** Names of the immediate child directories of `path` (empty when the

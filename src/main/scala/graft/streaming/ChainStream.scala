@@ -141,6 +141,32 @@ object ChainStream {
     }
   }
 
+  /** Where a reorg batch's replace repair took its co-spend edges from
+    * (see [[graft.chain.WalletCluster.EdgeSource]]).
+    */
+  sealed abstract class EdgeRoute(val name: String) {
+    def detail: String
+  }
+  object EdgeRoute {
+    /** The stored `_edges` multiset, moved to the post-reorg chain. `lag` =
+      * the prior tip's height minus the multiset tip's; `lookupBlocks` =
+      * the blocks whose funders were looked up (retracted plus added).
+      */
+    final case class Multiset(lag: Int, lookupBlocks: Int) extends EdgeRoute("multiset") {
+      def detail: String = s"multiset lag=$lag lookup=$lookupBlocks"
+    }
+    /** Re-derived from the whole post-reorg chain. `reason`: "missing" (no
+      * multiset), "pending" (its last write did not finish), "off-chain"
+      * (its tip is not on the prior cursor chain), "outside-buckets" (the
+      * blocks to look up reach below the collected cursor buckets), "full"
+      * (a full-resolution batch has no anchor), "envelope" (the lookups
+      * exceeded the driver envelope).
+      */
+    final case class Rederived(reason: String) extends EdgeRoute("rederived") {
+      def detail: String = s"rederived $reason"
+    }
+  }
+
   /** What one [[walletLabelsBatch]] call did — the evidence that a batch's
     * cost tracks ITS delta, not the accumulated corpus. Counts are taken
     * only where already materialized (checkpointed sets / local paths), so
@@ -151,6 +177,8 @@ object ChainStream {
     * @param arrived     blocks newly on the best chain (-1 = not derived)
     * @param invalidated blocks reorged out (-1 = not derived)
     * @param repair      the reorg repair's route; None = no repair ran
+    * @param edges       where a replace repair's edges came from; None on
+    *                    the other routes
     * @param storeBootstrap the batch rebuilt the store by a full clustering
     * @param pending     pending-index size, when a quiet batch rewrote the
     *                    frontier (-1 = it wrote the overflow marker)
@@ -161,6 +189,7 @@ object ChainStream {
       arrived: Long = 0L,
       invalidated: Long = 0L,
       repair: Option[graft.chain.WalletCluster.RepairRoute] = None,
+      edges: Option[EdgeRoute] = None,
       storeBootstrap: Boolean = false,
       pending: Option[Int] = None,
       dangling: Option[Int] = None) {
@@ -199,7 +228,7 @@ object ChainStream {
     */
   private[graft] val LabelSlots = 32
   /** Layout version of the label store: a change to what it lays down bumps it. */
-  private val LabelsVersion = 1
+  private val LabelsVersion = 2
   /** The height-bucketed `_bestchain` cursor as [[writeCursor]] writes it
     * (the bucket is the partition column).
     */
@@ -211,6 +240,9 @@ object ChainStream {
     Seq("kind", "hash", "parent_hash").map(StructField(_, StringType)))
 
   private def logWalletBatch(record: WalletBatch): Unit = {
+    ChainOps.trace(s"wallet: batch route=${record.routeName}" +
+      record.repair.fold("")(r => s" repair=${r.name}") +
+      record.edges.fold("")(e => s" edges=${e.detail}"))
     walletBatchLog.add(record)
     while (walletBatchLog.size() > WalletBatchLogCap) walletBatchLog.poll()
     ()
@@ -842,12 +874,17 @@ object ChainStream {
       }
       return WalletBatch(Some(route))
     }
-    // bestFunders is only EVALUATED by the bootstrap clustering and the
-    // reorg repair (both rare) — a pure tip extension never pays this
-    // chain-sized derivation, it stays a lazy plan.
+    // bestFunders is only planned by the bootstrap clustering and a reorg
+    // repair that cannot move the stored edge multiset (both rare) — a tip
+    // extension or a multiset repair never pays this chain-sized derivation.
     val bestHashes = upd.best.select("hash")
-    val bestFunders = fundersOf(spark,
+    lazy val bestFunders = fundersOf(spark,
       bronze.join(bestHashes, Seq("hash"), "left_semi"))
+    // the new tip: the walk's path head on the extend route, the prior tip
+    // on the unchanged route, else the resolved chain's
+    lazy val newTip: Option[String] = upd.extendDelta.map(_._1.head._1)
+      .orElse(if (unchanged) prevTip.map(_._1) else None)
+      .orElse(tipOf(upd.best).map(_._1))
     def slotOf(addr: org.apache.spark.sql.Column) =
       pmod(xxhash64(addr), lit(slots)).cast("int")
     def upsert(store: DataFrame, delta: DataFrame): DataFrame =
@@ -864,9 +901,12 @@ object ChainStream {
       // no manifest, and the next batch bootstraps again
       Hfs.delete(spark, StoreManifest.path(labelsDir))
       val addrs = bf.select(col("src_address").as("address")).distinct()
-      traced("wallet: bootstrap cluster+write")(WalletCluster.clusters(addrs, bf)
-        .withColumn(bucket, slotOf(col("address")))
-        .write.mode("overwrite").partitionBy(bucket).parquet(storePath))
+      traced("wallet: bootstrap cluster+write") {
+        val (labels, edges) = WalletCluster.clustered(addrs, bf)
+        labels.withColumn(bucket, slotOf(col("address")))
+          .write.mode("overwrite").partitionBy(bucket).parquet(storePath)
+        edges.foreach(writeEdges(spark, labelsDir, _, newTip))
+      }
       bf.unpersist(blocking = false)
       StoreManifest.write(spark, labelsDir, manifest)
       WalletBatch(Some(route), arrived = -1, invalidated = -1, storeBootstrap = true)
@@ -930,15 +970,28 @@ object ChainStream {
         if (if (nInvalidated >= 0) nInvalidated == 0
             else traced("wallet: invalidated probe")(invalidated.isEmpty)) None
         else traced("wallet: repair") {
+          def lookup(hashes: Seq[String]): DataFrame =
+            if (hashes.isEmpty) Seq.empty[(String, String)].toDF("tx_hash", "src_address")
+            else fundersOf(spark, bronze.join(hashes.toDF("hash"), Seq("hash"), "left_semi"))
+          val (source, edgeRoute) = edgeSource(spark, labelsDir, upd.extendDelta,
+            prevCursor.get, prevTop.get, lookup)
           // the mass route materializes its own funder input (pinned to
           // this batch's scope); the change set — minimal on
           // every route — is checkpointed here so its several consumers
           // below never re-run the repair
-          val (rows, repairRoute) = WalletCluster.repairAfterReorg(
+          val (rows, repairRoute, post) = WalletCluster.repairAfterReorg(
             stored,
             fundersOf(spark, bronze.join(invalidated, Seq("hash"), "left_semi")),
-            bestFunders)
-          Some((ChainOps.localCheckpoint(rows), repairRoute))
+            bestFunders, source = source)
+          val changed = ChainOps.localCheckpoint(rows)
+          post.foreach(p => writeEdges(spark, labelsDir, p.edges, newTip))
+          // a stored source the lookups outgrew re-derived after all
+          val edgesFrom = if (post.exists(_.stored)) edgeRoute else edgeRoute match {
+            case _: EdgeRoute.Multiset => EdgeRoute.Rederived("envelope")
+            case r => r
+          }
+          Some((changed, repairRoute,
+            Some(edgesFrom).filter(_ => repairRoute == WalletCluster.RepairRoute.Replace)))
         }
       val repairChanges = repair.map(_._1)
       val afterRepair = repairChanges.fold(stored)(upsert(stored, _))
@@ -973,7 +1026,7 @@ object ChainStream {
             .unionByName(slotted))
         PartitionedGold.overwriteAffected(content, storePath, bucket)
       }
-      WalletBatch(Some(route), nArrived, nInvalidated, repair.map(_._2))
+      WalletBatch(Some(route), nArrived, nInvalidated, repair.map(_._2), repair.flatMap(_._3))
     }
     // Frontier upkeep, stamp-invalidate-first (see the read-side note):
     // 1. invalidate the stamp, 2. rewrite the body if it changed, 3. write
@@ -986,6 +1039,16 @@ object ChainStream {
     // would put bronze-sized anti-joins plus capped driver collects back on
     // the O(batch) path, so overflow sticks until the next full route
     // refreshes it.
+    //
+    // The `_edges` multiset (the best chain's co-spend star edges, for the
+    // reorg repair) follows the same stamp protocol with one difference:
+    // it is written only by the bootstrap and a replace repair, BEFORE the
+    // store and the cursor (`!pending`, body, new tip — [[writeEdges]]),
+    // and its stamp is trusted only while it names a block on the prior
+    // cursor chain. A crash after its stamp leaves a tip the cursor never
+    // reached, which [[edgeSource]] distrusts; extend and unchanged
+    // batches leave it alone, and the repair moves it by the blocks
+    // between its tip and the anchor.
     val incrementalRoute = route match {
       case _: ChainRoute.Full => false
       case ChainRoute.Extend | ChainRoute.Unchanged => true
@@ -1046,11 +1109,6 @@ object ChainStream {
     // sync instead of a GB-scale cursor rewrite. The full routes write only
     // the buckets whose content changed, the whole layout on bootstrap, from
     // the checkpointed resolution.
-    // the new tip: the walk's path head on the extend route, the prior tip
-    // on the unchanged route, else the resolved chain's
-    val newTip: Option[String] = upd.extendDelta.map(_._1.head._1)
-      .orElse(if (unchanged) prevTip.map(_._1) else None)
-      .orElse(tipOf(upd.best).map(_._1))
     writeCursor(spark, upd, prevCursor, prevTop, cursorPath)
     // 4. re-stamp with the NEW tip — the last write of the batch, so a
     // matching stamp proves body and cursor were both committed together
@@ -1098,6 +1156,72 @@ object ChainStream {
       .coalesce(1).write.mode("overwrite").parquet(path)
     ()
   }
+
+  /** Where a reorg batch's replace repair takes its co-spend edges from.
+    * The `_edges` multiset is trusted only when its stamp T0 is a hash on
+    * the prior cursor chain: a stamp at `!pending`, or one naming a tip the
+    * cursor never reached (a crash between the multiset and the cursor
+    * writes), re-derives. Moving it to the post-reorg chain of anchor A
+    * retracts the cursor blocks in (A, T0's height] and adds those in
+    * (T0's height, A] plus the arrivals — two `lookup`s, both within the
+    * collected top buckets or the batch re-derives.
+    */
+  private def edgeSource(
+      spark: SparkSession, labelsDir: String,
+      extendDelta: Option[(Seq[(String, Int)], Int)],
+      prevCursor: DataFrame, top: CursorTop,
+      lookup: Seq[String] => DataFrame): (graft.chain.WalletCluster.EdgeSource, EdgeRoute) = {
+    import graft.chain.WalletCluster.EdgeSource
+    def rederive(reason: String) = (EdgeSource.Rederive, EdgeRoute.Rederived(reason))
+    (extendDelta, Hfs.readText(spark, s"$labelsDir/_edges_ok").map(_.trim)) match {
+      case (None, _) => rederive("full")
+      case (_, None) => rederive("missing")
+      case (_, Some("!pending")) => rederive("pending")
+      case (Some((path, anchorH)), Some(t0)) => top.rows.get(t0) match {
+        case None =>
+          val below = top.fromHeight > 0 &&
+            !prevCursor.where(col("hash") === t0).limit(1).isEmpty
+          rederive(if (below) "outside-buckets" else "off-chain")
+        case Some(t0h) => top.from(math.min(t0h, anchorH) + 1) match {
+          case None => rederive("outside-buckets")
+          case Some(rows) => readEdges(spark, labelsDir) match {
+            case None => rederive("missing")
+            case Some(edges) =>
+              val range = rows.toSeq
+              val retract = range.collect { case (h, ht) if ht > anchorH && ht <= t0h => h }
+              val add = range.collect { case (h, ht) if ht > t0h && ht <= anchorH => h } ++
+                path.map(_._1)
+              (EdgeSource.Stored(edges, lookup(retract), lookup(add)),
+                EdgeRoute.Multiset(top.tip.fold(t0h)(_._2) - t0h, retract.size + add.size))
+          }
+        }
+      }
+    }
+  }
+
+  /** Overwrite the `_edges` multiset of the chain ending at `tip`, in the
+    * stamp order: `!pending`, the body, then the tip (no tip leaves it
+    * pending). The body is one binary file — the edge count, then (funder,
+    * hub, n) per edge — written and read on the driver without a Spark job:
+    * it is driver-sized by construction (the repair builds it in memory).
+    */
+  private def writeEdges(spark: SparkSession, labelsDir: String,
+      edges: graft.chain.WalletCluster.Edges, tip: Option[String]): Unit = {
+    val stampPath = s"$labelsDir/_edges_ok"
+    Hfs.writeText(spark, stampPath, "!pending\n")
+    Hfs.writeData(spark, s"$labelsDir/_edges") { out =>
+      out.writeInt(edges.size)
+      edges.foreach { case ((a, h), n) => out.writeUTF(a); out.writeUTF(h); out.writeLong(n) }
+    }
+    tip.foreach(t => Hfs.writeText(spark, stampPath, t + "\n"))
+  }
+
+  /** The `_edges` body [[writeEdges]] wrote; None when there is none. */
+  private[graft] def readEdges(
+      spark: SparkSession, labelsDir: String): Option[graft.chain.WalletCluster.Edges] =
+    Hfs.readData(spark, s"$labelsDir/_edges") { in =>
+      Iterator.fill(in.readInt())((in.readUTF(), in.readUTF()) -> in.readLong()).toMap
+    }
 
   /** Height-bucket width of the `_bestchain` cursor layout. */
   private[graft] val CursorBucketSize = 10000

@@ -243,6 +243,28 @@ class CacheDisciplineSpec extends SparkSpec {
     assert(!persisted(first) && !persisted(second), "closing the scope left a result cached")
   }
 
+  test("a pageRank on a second thread leaves the kCore results this thread's open scope holds cached") {
+    import spark.implicits._
+    val edges = (1 to 60).map(i => (s"a${i % 20}", s"a${(i * 7 + 1) % 20}", 1L))
+      .toDF("src", "dst", "value")
+    // the ranking's input waits at the gate (one task, so the kCores below
+    // keep the other cores): they run while the pageRank call is open
+    CacheDisciplineSpec.gate = new CacheDisciplineSpec.Gate
+    val held = udf((s: String) => CacheDisciplineSpec.pass(s))
+    val gated = edges.coalesce(1).withColumn("src", held(col("src")))
+    Scope {
+      val ranking = Future(Scope(GraphAnalytics.pageRank(gated, iterations = 20).collect()))(
+        ExecutionContext.global)
+      val results = try {
+        assert(CacheDisciplineSpec.gate.entered.await(2, MINUTES), "the pageRank never read its input")
+        (1 to 3).map(_ => backing(GraphAnalytics.kCore(edges, k = 2)))
+      } finally CacheDisciplineSpec.gate.open.countDown()
+      Await.result(ranking, 5.minutes)
+      val dropped = results.count(r => !persisted(r))
+      assert(dropped == 0, s"a pageRank on another thread dropped $dropped of 3 cached kCore results")
+    }
+  }
+
   test("a call on a second thread does not unpersist a result that the first thread still holds") {
     import spark.implicits._
     val edges = (1 to 60).map(i => (s"a${i % 20}", s"a${(i * 7 + 1) % 20}", 1L))
@@ -257,5 +279,22 @@ class CacheDisciplineSpec extends SparkSpec {
       assert(!persisted(other), "the other thread's scope kept its result cached")
       assert(persisted(held), "a kCore on another thread dropped this thread's cached result")
     }
+  }
+}
+
+object CacheDisciplineSpec {
+  /** A latch pair an operator's input passes through: `entered` once a task
+    * reads it, then each row waits for `open` (at most two minutes).
+    */
+  final class Gate {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val open = new java.util.concurrent.CountDownLatch(1)
+  }
+  @volatile var gate = new Gate
+
+  def pass(s: String): String = {
+    gate.entered.countDown()
+    gate.open.await(2, java.util.concurrent.TimeUnit.MINUTES)
+    s
   }
 }

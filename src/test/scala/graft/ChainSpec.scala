@@ -165,7 +165,7 @@ class ChainSpec extends SparkSpec {
     def run(inv: org.apache.spark.sql.DataFrame, best: org.apache.spark.sql.DataFrame,
         floor: Long = WalletCluster.ContractionMinStoreRows)
         : (Map[String, String], WalletCluster.RepairRoute) = {
-      val (rows, route) = WalletCluster.repairAfterReorg(stored, inv, best,
+      val (rows, route, _) = WalletCluster.repairAfterReorg(stored, inv, best,
         contractionMinStore = floor)
       (rows.collect().map(r => r.getString(0) -> r.getString(1)).toMap, route)
     }
@@ -241,7 +241,7 @@ class ChainSpec extends SparkSpec {
       // the replace route's LIMIT-1 probe concludes this without any
       // derivation pass
       val emptyInv = all.where(lit(false))
-      val (r1, route1) = WalletCluster.repairAfterReorg(stored, emptyInv, all)
+      val (r1, route1, _) = WalletCluster.repairAfterReorg(stored, emptyInv, all)
       assert(route1 == WalletCluster.RepairRoute.Noop && r1.collect().isEmpty)
       // listener events are posted asynchronously; a short settle beats
       // reaching into the private listener bus
@@ -258,7 +258,7 @@ class ChainSpec extends SparkSpec {
       // repair premium, r16 rehearsal), so the call costs the bounded
       // small-store recompute rather than a discovery ladder
       val unknownInv = Seq(("tz", "zz99")).toDF("tx_hash", "src_address")
-      val (r2, _) = WalletCluster.repairAfterReorg(stored, unknownInv, all)
+      val (r2, _, _) = WalletCluster.repairAfterReorg(stored, unknownInv, all)
       assert(r2.collect().isEmpty)
     } finally {
       spark.sparkContext.removeSparkListener(listener)

@@ -205,7 +205,7 @@ class PlanSpec extends SparkSpec {
     val all = txs.toDF("tx_hash", "src_address")
     val stored = txs.map(t => (t._2, t._2.replace('y', 'x'))).distinct
       .toDF("address", "wallet_id")
-    val (rows, route) = graft.chain.WalletCluster
+    val (rows, route, _) = graft.chain.WalletCluster
       .repairAfterReorg(stored, all.where(col("tx_hash") === "t00"),
         all.where(col("tx_hash") =!= "t00"),
         contractionMinStore = 0) // pin the contraction route's plan shape
@@ -228,7 +228,7 @@ class PlanSpec extends SparkSpec {
     val all = txs.toDF("tx_hash", "src_address")
     val stored = (Seq("a0", "a1", "a2", "a3", "a4", "a5").map((_, "a0")) ++
       Seq(("b0", "b0"), ("b1", "b0"))).toDF("address", "wallet_id")
-    val (rows, route) = graft.chain.WalletCluster
+    val (rows, route, _) = graft.chain.WalletCluster
       .repairAfterReorg(stored, all.where(col("tx_hash") === "t2"),
         all.where(col("tx_hash") =!= "t2"),
         contractionMinStore = 0) // past the replace route's small-store floor

@@ -501,7 +501,7 @@ class PropertySpec extends SparkSpec {
         // to gate the O(affected) route on random graphs (tiny stores would
         // otherwise all route to the recompute-diff path, which ChainSpec
         // pins separately)
-        val (repairRows, _) = WalletCluster.repairAfterReorg(
+        val (repairRows, _, _) = WalletCluster.repairAfterReorg(
             stored.toSeq.toDF("address", "wallet_id"), oldBr, bestFunders,
             contractionMinStore = 0)
         val repair = repairRows.collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -563,7 +563,7 @@ class PropertySpec extends SparkSpec {
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         for (envelope <- Seq(None, Some(stored.size))) {
           envelope.foreach(e => sys.props("graft.broadcastMaxRows") = e.toString)
-          val (rows, route) = try WalletCluster.repairAfterReorg(storedDf, oldBr, best)
+          val (rows, route, _) = try WalletCluster.repairAfterReorg(storedDf, oldBr, best)
             finally sys.props.remove("graft.broadcastMaxRows")
           val ctx = s"envelope=$envelope common=$commonTxs old=$oldBranchTxs new=$newBranchTxs"
           assert(route == WalletCluster.RepairRoute.Replace, ctx)
@@ -573,6 +573,86 @@ class PropertySpec extends SparkSpec {
           val repair = got.collect { case (Some(a), w) => a -> w.orNull }.toMap
           assert(repair.forall { case (a, w) => !stored.get(a).contains(w) },
             s"replace re-asserted stored labels $ctx")
+          val maintained = stored ++ repair
+          postUniverse.foreach { a =>
+            assert(maintained.get(a).contains(full(a)),
+              s"label diverges at $a: maintained=${maintained.get(a)} full=${full(a)} $ctx")
+          }
+          (maintained.keySet -- postUniverse).foreach { a =>
+            assert(maintained(a) == a, s"orphaned $a not a singleton: ${maintained(a)} $ctx")
+          }
+        }
+    }
+  }
+
+  test("property: the multiset replace repair == the re-derived replace repair == full recompute (re-mined txs, null funders, T0 below and above the anchor)") {
+    import spark.implicits._
+    import graft.chain.WalletCluster
+    import WalletCluster.{EdgeSource, PostEdges, RepairRoute}
+    // random chains of blocks: a common prefix (anchor A = its last block),
+    // the branch reorged OUT and the replacement branch. The stored multiset
+    // is the prior chain's up to a tip T0, taken at or below A and above it.
+    // The replacement branch re-mines the old branch's first tx on odd
+    // seeds; null funders sit on a common tx, beside a real funder on the
+    // old branch, and alone on the new branch.
+    val txGen = Gen.choose(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0, 14)).map(_.distinct.map(i => f"a$i%02d")))
+    val blockGen = Gen.choose(0, 3).flatMap(n => Gen.listOfN(n, txGen))
+    val branchGen = Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, blockGen))
+    type Block = Seq[(String, Seq[String])]
+    def tag(blocks: Seq[Seq[Seq[String]]], p: String): Seq[Block] =
+      blocks.zipWithIndex.map { case (txs, b) =>
+        txs.zipWithIndex.map { case (fs, t) => (s"$p$b.$t", fs) }
+      }
+    def pairs(blocks: Seq[Block]): Seq[(String, String)] =
+      blocks.flatten.flatMap { case (t, fs) => fs.map(f => (t, f)) }
+    def frame(ps: Seq[(String, String)]) = ps.toDF("tx_hash", "src_address")
+    def labelRows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.getString(0)), Option(r.getString(1)))).toSeq
+    forAllSeeded(Gen.zip(branchGen, branchGen, branchGen, Gen.choose(0, 99)), 10) {
+      case (commonTxs, oldTxs, newTxs, pick) =>
+        val common = tag(commonTxs, "c").updated(0, tag(commonTxs, "c").head :+ (("cz", Seq(null: String))))
+        val old = tag(oldTxs, "o").updated(0, tag(oldTxs, "o").head :+ (("oz", Seq("a01", null: String))))
+        val fresh = tag(newTxs, "n")
+        val remined = if (pick % 2 == 1) fresh.updated(0, fresh.head :+ old.head.head) else fresh
+        val repl = remined.updated(remined.size - 1, remined.last :+ (("nz", Seq(null: String))))
+        val prior = common ++ old
+        val post = common ++ repl
+        val anchor = common.size
+        val postPairs = pairs(post)
+        val postUniverse = postPairs.map(_._2).filter(_ != null).distinct
+        val storedDf = WalletCluster.clusters(
+            pairs(prior).map(_._2).filter(_ != null).distinct.toDF("address"), frame(pairs(prior)))
+          .localCheckpoint(true)
+        val stored = storedDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        val full = WalletCluster.clusters(postUniverse.toDF("address"), frame(postPairs))
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        val (headRows, headRoute, headPost) =
+          WalletCluster.repairAfterReorg(storedDf, frame(pairs(old)), frame(postPairs))
+        assert(headRoute == RepairRoute.Replace)
+        val postEdges = WalletCluster.starEdges(postPairs)
+        assert(headPost == Some(PostEdges(postEdges, stored = false)))
+        val head = labelRows(headRows)
+        for (t0h <- Seq(1 + pick % anchor, anchor + 1 + pick % old.size)) {
+          val ctx = s"T0=$t0h A=$anchor common=$common old=$old new=$repl"
+          val source = EdgeSource.Stored(WalletCluster.starEdges(pairs(prior.take(t0h))),
+            frame(pairs(prior.slice(anchor, t0h))),
+            frame(pairs(prior.slice(t0h, anchor) ++ repl)))
+          // the stored source reads neither the invalidated pairs nor the chain
+          val (rows, route, moved) = WalletCluster.repairAfterReorg(storedDf,
+            sys.error("read the invalidated pairs"), sys.error("read the whole chain"),
+            source = source)
+          assert(route == RepairRoute.Replace, ctx)
+          assert(moved == Some(PostEdges(postEdges, stored = true)), s"moved multiset $ctx")
+          val got = labelRows(rows)
+          // same rows as the re-derived route; the null row comes from the
+          // null funder of the added blocks
+          assert(got.filter(_._1.isDefined).toSet == head.filter(_._1.isDefined).toSet,
+            s"multiset rows != re-derived rows $ctx")
+          assert(got.filter(_._1.isEmpty) == Seq((None, None)), ctx)
+          val repair = got.collect { case (Some(a), w) => a -> w.orNull }.toMap
+          assert(repair.forall { case (a, w) => !stored.get(a).contains(w) },
+            s"multiset repair re-asserted stored labels $ctx")
           val maintained = stored ++ repair
           postUniverse.foreach { a =>
             assert(maintained.get(a).contains(full(a)),

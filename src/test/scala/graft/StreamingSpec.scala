@@ -174,11 +174,14 @@ class StreamingSpec extends SparkSpec {
       .select(col("hash"),
         when(col("parent_hash") === "", lit(null)).otherwise(col("parent_hash")).as("parent_hash"),
         col("ts"), col("txs"))
-    // every funder derivation the maintainer plans goes through here
+    // every funder derivation the maintainer plans goes through here, with
+    // the blocks it asks for
     val funderCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val funderBlocks = new java.util.concurrent.ConcurrentLinkedQueue[String]
     def fundersOf(s: org.apache.spark.sql.SparkSession,
         df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       funderCalls.incrementAndGet()
+      df.select("hash").collect().foreach(r => funderBlocks.add(r.getString(0)))
       df.select(explode(col("txs")).as("t"))
         .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
     }
@@ -213,6 +216,7 @@ class StreamingSpec extends SparkSpec {
     // stored component splits) while the replacement branch's t4 co-spends
     // (a4,a5), merging a new address into the {a3,a4} side
     funderCalls.set(0)
+    funderBlocks.clear()
     input.addData(
       ("b2", "a", 1201L, Seq(("t4", Seq("a4", "a5")))),
       ("c2", "b2", 1300L, Seq.empty[(String, Seq[String])]))
@@ -220,16 +224,24 @@ class StreamingSpec extends SparkSpec {
     // the reorg batch resolved O(batch) against the cursor, not via a full
     // bronze annotate
     assert(lastLoggedRoute == "extend")
-    // ONE clustering per reorg batch: the replace repair clusters the whole
-    // post-reorg chain, arrivals included, so the batch derives funders for
-    // the invalidated blocks and the best chain only — no third derivation
-    // for an incremental pass over the arrivals
+    // ONE clustering per reorg batch: the replace repair moves the stored
+    // edge multiset to the post-reorg chain, arrivals included, so the batch
+    // derives funders for the invalidated blocks and the arrived blocks only
+    // — never the whole best chain, and no third derivation for an
+    // incremental pass over the arrivals
     val reorgRecord = {
       import scala.jdk.CollectionConverters._
       ChainStream.walletBatchLog.asScala.last
     }
     assert(reorgRecord.repair.contains(graft.chain.WalletCluster.RepairRoute.Replace))
+    assert(reorgRecord.edges.contains(ChainStream.EdgeRoute.Multiset(lag = 0, lookupBlocks = 3)))
     assert(funderCalls.get == 2, s"reorg batch derived funders ${funderCalls.get} times")
+    val looked = {
+      import scala.jdk.CollectionConverters._
+      funderBlocks.asScala.toSeq
+    }
+    assert(looked.sorted == Seq("b", "b2", "c2"),
+      s"reorg batch looked up funders of $looked, not the invalidated plus arrived blocks")
     assert(labels() == Map(
       "a1" -> "a1", "a2" -> "a1", "a3" -> "a3", "a4" -> "a3", "a5" -> "a3"))
     // repaired store == full recompute of the post-reorg chain
@@ -1250,6 +1262,78 @@ class StreamingSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$tmp/labels/_frontier_ok")).trim == C)
     assert(frontierBody().isEmpty)
+  }
+
+  test("edge multiset crash windows: a pending stamp or an off-cursor tip re-derives, and the store converges to the full recompute") {
+    import spark.implicits._
+    import graft.chain.WalletCluster
+    import ChainStream.EdgeRoute
+    def fundersOf(s: org.apache.spark.sql.SparkSession,
+        df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(explode(col("txs")).as("t"))
+        .select(col("t._1").as("tx_hash"), explode(col("t._2")).as("src_address"))
+    for (crash <- Seq("pending", "off-chain")) {
+      val tmp = Files.createTempDirectory("graft-edges-crash").toString
+      val labelsDir = s"$tmp/labels"
+      def step(rows: (String, String, Long, Seq[(String, Seq[String])])*) =
+        ChainStream.walletLabelsBatch(spark,
+          rows.toDF("hash", "parent_hash", "ts", "txs"), s"$tmp/bronze", fundersOf, labelsDir, 8)
+      def stamp() = graft.sinks.Hfs.readText(spark, s"$labelsDir/_edges_ok").map(_.trim)
+      def body() = ChainStream.readEdges(spark, labelsDir).get
+      def labels() = spark.read.parquet(s"$labelsDir/labels").select("address", "wallet_id")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      // the best chain's funding pairs, its star edges and its labels
+      def bestPairs() = {
+        val bronze = spark.read.parquet(s"$tmp/bronze").dropDuplicates("hash")
+        val best = BestChain.annotate(bronze).where(col("is_on_best_chain")).select("hash")
+        fundersOf(spark, bronze.join(best, Seq("hash"), "left_semi"))
+      }
+      def converged(ctx: String): Unit = {
+        val bf = bestPairs()
+        val full = WalletCluster.clusters(
+            bf.select(col("src_address").as("address")).distinct(), bf)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(labels() == full, s"$ctx: store != full recompute")
+        assert(body() == WalletCluster.starEdges(
+          bf.distinct().collect().map(r => (r.getString(0), r.getString(1)))),
+          s"$ctx: stored multiset != the best chain's star edges")
+      }
+      // bootstrap g <- a <- b: the multiset is written for tip b
+      step(("g", null, 1000L, Seq(("t1", Seq("a1", "a2")))),
+        ("a", "g", 1100L, Seq(("t2", Seq("a3", "a4")))),
+        ("b", "a", 1200L, Seq(("t3", Seq("a2", "a3")))))
+      assert(stamp().contains("b"))
+      converged(s"$crash bootstrap")
+      // the crash: a multiset write stopped after its `!pending` stamp, or
+      // one finished for a tip the cursor never reached, with a body that
+      // would merge every address into one wallet if trusted
+      crash match {
+        case "pending" =>
+          graft.sinks.Hfs.writeText(spark, s"$labelsDir/_edges_ok", "!pending\n")
+        case "off-chain" =>
+          graft.sinks.Hfs.writeData(spark, s"$labelsDir/_edges") { out =>
+            out.writeInt(3)
+            Seq("a2", "a4", "a5").foreach { a => out.writeUTF(a); out.writeUTF("a1"); out.writeLong(1L) }
+          }
+          graft.sinks.Hfs.writeText(spark, s"$labelsDir/_edges_ok", "z" * 64 + "\n")
+      }
+      // the reorg b2 <- c2 retracts t3 and re-derives from the whole chain
+      val reorg = step(("b2", "a", 1201L, Seq(("t4", Seq("a4", "a5")))),
+        ("c2", "b2", 1300L, Seq.empty[(String, Seq[String])]))
+      assert(reorg.repair.contains(WalletCluster.RepairRoute.Replace), crash)
+      assert(reorg.edges.contains(EdgeRoute.Rederived(crash)), s"$crash: ${reorg.edges}")
+      assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a3", "a4" -> "a3", "a5" -> "a3"))
+      assert(stamp().contains("c2"), s"$crash: the re-derived multiset was not re-stamped")
+      converged(s"$crash reorg")
+      // and the rewritten multiset serves the next reorg, its tip c2 above
+      // the anchor a: b, c, d overtake b2, c2
+      val back = step(("c", "b", 1400L, Seq(("t5", Seq("a5", "a6")))),
+        ("d", "c", 1500L, Seq.empty[(String, Seq[String])]))
+      assert(back.edges.contains(EdgeRoute.Multiset(lag = 0, lookupBlocks = 5)), s"$crash: ${back.edges}")
+      assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1", "a4" -> "a1",
+        "a5" -> "a5", "a6" -> "a5"))
+      converged(s"$crash second reorg")
+    }
   }
 
   test("frontier overflow at the pending cap: sidecar records overflow, batches fall back, a full route restores the index") {
