@@ -75,6 +75,17 @@ class SourceGuardSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders)
   }
 
+  test("only Bench, Verify, Profile and the Rehearsal runner define main, and no leg knob is read") {
+    // a probe or rehearsal main of its own grows its own filters, knobs and
+    // emit code; a timing belongs to a Rehearsal leg, a check to a spec
+    val main = srcRoot.resolve("main")
+    val mains = scalaFiles(main).filter(p => "\\bdef main\\(".r.findFirstIn(code(p)).isDefined)
+      .map(_.getFileName.toString).sorted
+    assert(mains == Seq("Bench.scala", "Profile.scala", "Rehearsal.scala", "Verify.scala"), mains)
+    val knobs = scalaFiles(main).flatMap(p => "SPARK_GRAFT_[A-Z0-9_]*_LEGS".r.findAllIn(code(p)))
+    assert(knobs.isEmpty, knobs)
+  }
+
   test("a GraftSession session has the engine's SQL functions") {
     assert(spark.sql("SELECT block_subsidy(0)").head().getLong(0) == 5000000000L)
   }

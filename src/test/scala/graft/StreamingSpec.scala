@@ -844,7 +844,7 @@ class StreamingSpec extends SparkSpec {
     assert(got.get("click").contains(2L))
   }
 
-  test("re-bootstrap on a replayed batch: the 'unchanged' cursor is never overwritten while read (and a flat cursor migrates)") {
+  test("re-bootstrap on a replayed batch: the 'unchanged' cursor is never overwritten while read (and a flat cursor takes the bootstrap route)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-stream-reboot").toString
     def fundersOf(s: org.apache.spark.sql.SparkSession,
