@@ -1,5 +1,10 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
+
 /** Benchmark main: runs the headline queries against SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. Results are forced
   * with a noop-format write so Catalyst cannot prune work under a count().
@@ -30,6 +35,8 @@ object Bench {
     // pure GraphX stage latency and measures nothing about the engine.
     "bk0_e2e_pipeline", "bk2_tx_stats", "bk4_address_stats", "bk5_wallet_clusters",
     "bk7_utxo_set")
+
+  private implicit val formats: Formats = DefaultFormats
 
   private[graft] def median(ss: Seq[Double]): Double = {
     val s = ss.sorted; s(s.length / 2)
@@ -312,16 +319,6 @@ object Bench {
         probeLog.take(freshFrom).toSeq, pprobeLog.take(freshFrom).toSeq)
   }
 
-  /** Total JVM GC time across all collectors, ms. Per-sample deltas separate
-    * "the query got slower" from "the session was collecting garbage" — the
-    * r10/r11 bk4 instability diagnostic.
-    */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum
-  }
-
   def main(args: Array[String]): Unit = {
     // The driver parses the LAST line of the captured run log as the result
     // JSON. sbt relays forked stderr as one buffered [error]-prefixed block
@@ -337,17 +334,6 @@ object Bench {
     CodegenTripwire.install()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    // Verbose mode: per-job wall times per sample, for tracing which subtree
-    // of a DAG re-evaluates on slow samples (the bk4 lead from round 11).
-    val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").exists(_ != "0")
-    val jobTimes = new scala.collection.concurrent.TrieMap[Int, (Long, Long)]
-    if (verbose) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobTimes.put(js.jobId, (js.time, -1L))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          jobTimes.updateWith(je.jobId)(_.map { case (s, _) => (s, je.time) })
-      })
     val all = SparkEntry.queries
     val names = headline.filter(all.contains)
     // Steady-state protocol: warm each query immediately before timing it
@@ -379,6 +365,12 @@ object Bench {
       gate.calibrate(9)
       diag += f"[bench] sentinel floor ${gate.floorMs}%.1fms (9 probes, running min; gate at ${gate.factor}x)"
     }
+    // window quality: worst gated bracket probe over `floorMs` (−1 = none)
+    def worstX(probes: Seq[(Double, Double)], floorMs: Double): Double = {
+      val gated = probes.filter(_._1 >= 0)
+      if (gated.isEmpty || floorMs <= 0) -1.0
+      else gated.iterator.flatMap(p => Iterator(p._1, p._2)).max * 1e3 / floorMs
+    }
     val results = names.filter(n => only.forall(_.contains(n))).map { name => Scope {
       // Cold-cache boundary: one scope per query, one nested scope per
       // sample. A sample's results are dropped when it ends; the query's
@@ -387,24 +379,18 @@ object Bench {
       // ACROSS queries nothing is retained: cached state coexisting in the
       // deliberately small bench heap thrashes and poisons the medians (bk0
       // measured 70s in-suite vs 7.5s isolated before this boundary existed).
-      def once(): (Double, Long) = {
-        val gc0 = gcMillis()
-        val j0 = jobTimes.keySet.maxOption.getOrElse(-1)
-        val t0 = System.nanoTime()
-        try Scope(all(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
+      // One sample = the phase `name` under a telemetry sink: every job lands
+      // on it or an engine phase nested in it, and its GC delta separates
+      // "the query got slower" from "the session was collecting garbage".
+      def once(): Telemetry.Timed[Unit] = Telemetry.timed(spark.sparkContext) {
+        try Telemetry.phase(name)(
+          Scope(all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()))
         catch { case e: Throwable =>
           if (!failures.contains(name)) {
             failures ::= name
             System.err.println(s"[bench] $name FAILED: ${e.getMessage.linesIterator.next()}")
           }
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (verbose) {
-          val js = jobTimes.toSeq.filter(_._1 > j0).sortBy(_._1)
-            .map { case (id, (s, e)) => f"j$id=${if (e < 0) -1.0 else (e - s) / 1e3}%.1fs" }
-          diag += f"[bench]   $name sample $sec%.2fs gc+${gcMillis() - gc0}ms jobs: ${js.mkString(" ")}"
-        }
-        (sec, gcMillis() - gc0)
       }
       // Warm to STEADY STATE, not a fixed count: the first execution pays
       // codegen + JIT + page cache (6–11x steady state), and the next 1–3
@@ -426,8 +412,8 @@ object Bench {
       // scope, ask the JVM to collect, settle, one fresh sample set (r15:
       // the round's official bench was invalidated by ONE query measured
       // through a sustained contended window resampling could not outvote).
-      val m = measure[(Double, Long)](
-        once _, _._1, runs,
+      val m = measure[Telemetry.Timed[Unit]](
+        once _, _.sec, runs,
         recoveryPrep = () => {
           Scope.reopen()
           System.gc()
@@ -443,28 +429,22 @@ object Bench {
       // means within-session accumulation (heap aging, lineage, shuffle
       // files), not noise — the sorted median alone cannot distinguish them.
       diag += f"[bench] $name samples (after ${m.warms} warms): " +
-        m.samples.map { case (s, g) => f"$s%.2f(gc ${g}ms)" }.mkString(", ")
+        m.samples.map(s => f"${s.sec}%.2f(gc ${s.phases.filter(_.path == name).map(_.work.gcMs).sum}ms)")
+          .mkString(", ")
       // Window quality per query (r18 ask #6): worst accepted bracket probe
       // relative to the run's floor. ≤ the gate factor by construction when
       // gated; "ungated" marks samples the budget let through unprobed.
       if (gate.enabled) {
-        val gatedProbes = m.probes.filter(_._1 >= 0)
-        val ungated = m.probes.length - gatedProbes.length
-        val worst =
-          if (gatedProbes.isEmpty || gate.floorMs <= 0) -1.0
-          else gatedProbes.iterator.flatMap(p => Iterator(p._1, p._2)).max * 1e3 / gate.floorMs
-        val gatedPP = m.pprobes.filter(_._1 >= 0)
-        val pworst =
-          if (gatedPP.isEmpty || gate.pfloorMs <= 0) -1.0
-          else gatedPP.iterator.flatMap(p => Iterator(p._1, p._2)).max * 1e3 / gate.pfloorMs
-        diag += f"[bench] $name window-quality: worst-probe/floor ${worst}%.2fx over ${gatedProbes.length} gated sample(s)" +
+        val gated = m.probes.count(_._1 >= 0)
+        val pworst = worstX(m.pprobes, gate.pfloorMs)
+        diag += f"[bench] $name window-quality: worst-probe/floor ${worstX(m.probes, gate.floorMs)}%.2fx over $gated gated sample(s)" +
           (if (pworst > 0) f", full-width ${pworst}%.2fx" else "") +
-          (if (ungated > 0) s", $ungated ungated" else "") +
+          (if (m.probes.length > gated) s", ${m.probes.length - gated} ungated" else "") +
           (if (m.discarded > 0) s", ${m.discarded} discarded" else "")
       }
-      val times = m.samples.map(_._1)
-      name -> ((median(times), trimmedSpread(times), times.max - times.min), m)
+      name -> m
     }}
+    def secs(m: Measurement[Telemetry.Timed[Unit]]): Seq[Double] = m.samples.map(_.sec)
     failures.foreach(n => diag += s"[bench] WARNING: $n time is a failure, not a run")
     // Recall audit folded into the round's bench run: the ANN queries are
     // rows-only in the oracle gate, so without this a recall drift would
@@ -505,42 +485,29 @@ object Bench {
     // round 11's driver run was poisoned by host contention and its medians
     // read as a 6x regression until a human re-ran it — a contaminated run
     // must never be distinguishable from a regression only by re-running.
-    val unstableNames = results.collect {
-      case (name, ((m, s, _), _)) if s > math.max(m * 0.5, 0.5) => name
-    }
-    unstableNames.foreach { n =>
-      val (m, s, _) = results.find(_._1 == n).get._2._1
-      diag += f"[bench] WARNING: $n spread $s%.2fs vs median $m%.2fs — samples unstable"
+    val unstableNames = results.collect { case (n, m) if unstable(secs(m)) =>
+      diag += f"[bench] WARNING: $n spread ${trimmedSpread(secs(m))}%.2fs vs median ${median(secs(m))}%.2fs — samples unstable"
+      n
     }
     def r3(d: Double): String = f"$d%.3f"
-    val qs = results.map { case (k, ((m, _, _), _)) => "\"" + k + "\":" + r3(m) }
+    val qs = results.map { case (k, m) => "\"" + k + "\":" + r3(median(secs(m))) }
       .mkString("{", ",", "}")
-    val spread = results.map { case (k, ((_, s, _), _)) => "\"" + k + "\":" + r3(s) }
+    val spread = results.map { case (k, m) => "\"" + k + "\":" + r3(trimmedSpread(secs(m))) }
       .mkString("{", ",", "}")
     // Per-sample bracket-probe pairs, ms (−1 = ungated): the raw host-window
-    // evidence per accepted sample — full artifact only.
-    val probesJson = results.map { case (k, (_, m)) =>
-      "\"" + k + "\":" + m.probes.map { case (a, b) =>
-        f"[${a * 1e3}%.1f,${b * 1e3}%.1f]"
-      }.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Full-width (all-cores) probe pairs, same alignment: the steady-mild-
-    // load observable — quiet ≈1×, external load L on C cpus reads ≈1+L/C.
-    val pprobesJson = results.map { case (k, (_, m)) =>
-      "\"" + k + "\":" + m.pprobes.map { case (a, b) =>
-        f"[${a * 1e3}%.1f,${b * 1e3}%.1f]"
-      }.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // spread_raw has never differed from spread on a valid run (trimming only
-    // kicks in past 6 samples); it nearly doubles the artifact, so it ships
-    // only under the debug flag.
-    val spreadRaw =
-      if (sys.env.get("SPARK_GRAFT_BENCH_DEBUG").exists(_ != "0"))
-        ",\"spread_raw\":" + results
-          .map { case (k, ((_, _, r), _)) => "\"" + k + "\":" + r3(r) }
-          .mkString("{", ",", "}")
-      else ""
-    val total = results.map(_._2._1._1).sum
+    // evidence per accepted sample; the full-width (all-cores) pairs are the
+    // steady-mild-load observable (quiet ≈1×, load L on C cpus ≈1+L/C).
+    def probesJson(of: Measurement[_] => Seq[(Double, Double)]): String =
+      Serialization.write(ListMap.from(results.map { case (k, m) =>
+        k -> of(m).map { case (a, b) => Seq(Telemetry.round(a * 1e3, 1), Telemetry.round(b * 1e3, 1)) }
+      }))
+    // Per query, its samples' phases (Telemetry.summary) and its last
+    // sample's route decisions — full artifact only.
+    val phasesJson = Serialization.write(ListMap.from(results.map { case (k, m) =>
+      k -> Telemetry.summary(m.samples.map(_.phases)) }))
+    val routesJson = Serialization.write(ListMap.from(results.map { case (k, m) =>
+      k -> m.samples.last.routes.map(_.fields) }))
+    val total = results.map(r => median(secs(r._2))).sum
     // A codegen compile error anywhere in the run means some stage's timing
     // is interpreted-eval, not the engine — the run cannot stand as official.
     val codegenErrors = CodegenTripwire.hits
@@ -561,38 +528,26 @@ object Bench {
     // quiet run reads ~1.0–1.2×; the documented gate boundary (steady
     // multi-tenant load a 1-thread probe under-sees) reads 1.5–1.9×. Makes
     // cross-round band matching a one-glance comparison on the compact line.
-    val worstProbeX: Double =
-      if (!gate.enabled || gate.floorMs <= 0) -1.0
-      else {
-        val all = results.iterator.flatMap(_._2._2.probes.iterator)
-          .filter(_._1 >= 0).flatMap(p => Iterator(p._1, p._2))
-        if (all.isEmpty) -1.0 else all.max * 1e3 / gate.floorMs
-      }
+    val worstProbeX = if (!gate.enabled) -1.0 else worstX(results.flatMap(_._2.probes), gate.floorMs)
     // Same one-number summary over the full-width probe: ≈1.0–1.3× quiet;
     // a steady external load the 1-thread probe cannot see reads 1+L/C here.
-    val worstPProbeX: Double =
-      if (!gate.enabled || gate.pfloorMs <= 0) -1.0
-      else {
-        val all = results.iterator.flatMap(_._2._2.pprobes.iterator)
-          .filter(_._1 >= 0).flatMap(p => Iterator(p._1, p._2))
-        if (all.isEmpty) -1.0 else all.max * 1e3 / gate.pfloorMs
-      }
+    val worstPProbeX = if (!gate.enabled) -1.0 else worstX(results.flatMap(_._2.pprobes), gate.pfloorMs)
     val sentinelJson =
-      f""""sentinel":{"enabled":${gate.enabled},"floor_ms":${gate.floorMs}%.2f,"discards":${gate.discards},"worst_probe_x":$worstProbeX%.2f,"pfloor_ms":${gate.pfloorMs}%.2f,"worst_pprobe_x":$worstPProbeX%.2f,"probes_ms":$probesJson,"pprobes_ms":$pprobesJson}"""
-    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"spread":$spread$spreadRaw,"runs":$runs,"sf":"$sfDir","valid":$valid,"recall_ok":$recallOk,"codegen_compile_errors":$codegenErrors,$sentinelJson,"unstable":${strArr(unstableNames)},"failures":${strArr(failures.reverse)}}"""
+      f""""sentinel":{"enabled":${gate.enabled},"floor_ms":${gate.floorMs}%.2f,"discards":${gate.discards},"worst_probe_x":$worstProbeX%.2f,"pfloor_ms":${gate.pfloorMs}%.2f,"worst_pprobe_x":$worstPProbeX%.2f,"probes_ms":${probesJson(_.probes)},"pprobes_ms":${probesJson(_.pprobes)}}"""
+    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"spread":$spread,"runs":$runs,"sf":"$sfDir","valid":$valid,"recall_ok":$recallOk,"codegen_compile_errors":$codegenErrors,$sentinelJson,"phases":$phasesJson,"routes":$routesJson,"unstable":${strArr(unstableNames)},"failures":${strArr(failures.reverse)}}"""
     // The driver's tail window is ~2,000 chars and it parses the LAST line of
     // the captured log as JSON — a 3.5 KB line survives complete at EOF but
-    // arrives front-truncated in the window (the r13 failure mode: the full
-    // line with spread + spread_raw was 3,523 chars). The final line is
-    // therefore a COMPACT summary: the per-query medians stay (the documented
-    // contract, ~1,450 chars at 45 queries) but spreads live only in
+    // arrives front-truncated in the window (the r13 failure mode: a full
+    // line of 3,523 chars). The final line is therefore a COMPACT summary:
+    // the per-query medians stay (the documented contract, ~1,450 chars at
+    // 45 queries) but spreads, phases and routes live only in
     // target/bench.json / bench/BENCH_FULL_latest.json — and a hard guard
     // drops "queries" too if the line would ever approach the window.
     // The heaviest query's spread decides validity in practice (r15: bk0 was
     // the sole unstable entry and its spread lived only in the full
     // artifact) — ship it on the compact line too, one entry, ~40 chars.
-    val heavySpread = results.sortBy(-_._2._1._1).headOption.map {
-      case (k, ((_, s, _), _)) => s""","heavy_spread":{"$k":${r3(s)}}"""
+    val heavySpread = results.sortBy(r => -median(secs(r._2))).headOption.map {
+      case (k, m) => s""","heavy_spread":{"$k":${r3(trimmedSpread(secs(m)))}}"""
     }.getOrElse("")
     def compactLine(withQueries: Boolean): String = {
       val q = if (withQueries) s""","queries":$qs""" else ""

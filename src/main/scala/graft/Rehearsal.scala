@@ -14,6 +14,7 @@ import org.apache.spark.storage.StorageLevel
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
+import graft.Telemetry.{round, Timed}
 import graft.chain.{BestChain, BlkCorpus, Enrich, GoldStats, WalletCluster}
 import graft.graph.GraphAnalytics
 import graft.streaming.ChainStream
@@ -25,8 +26,9 @@ import graft.streaming.ChainStream.WalletBatch
   *
   *   {"rehearsal":name,"scale":S,"median":…,"spread":…,"samples":[…],…}
   *
-  * followed by the leg's own fields (routes, batch work, bytes written; a
-  * second timing of the same leg is nested as {median, spread, samples}).
+  * followed by the leg's own fields (batch work, bytes written; a second
+  * timing of the same leg is nested as {median, spread, samples}), then the
+  * samples' `phases`, `phase_cover` and `routes` ([[graft.Telemetry]]).
   * Every timing takes one warm run and [[Samples]] samples, each bracketed
   * by Bench's sentinel gate: a sample taken in a contended host window is
   * discarded and retaken.
@@ -115,31 +117,29 @@ object Rehearsal {
     g
   }
 
+  /** Run `run` once in its own scope, timed, with a telemetry sink attached. */
+  private def timed[A](run: => A): Timed[A] =
+    Telemetry.timed(SparkSession.active.sparkContext)(Scope(run))
+
   /** One warm run of `run`, then [[Samples]] gated ones: a sample whose
     * bracketing probes show a contended host is discarded and retaken, up to
-    * the gate's per-query budget. `setup` runs untimed before every run, each
-    * run in its own scope. Returns (seconds, result) per sample.
+    * the gate's per-query budget. `setup` runs untimed before every run.
     */
-  private def sampled[A](run: => A, setup: () => Unit = () => ()): Seq[(Double, A)] = {
-    def timed(): (Double, A) = {
-      setup()
-      val t0 = System.nanoTime()
-      val a = Scope(run)
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
-    def gated(): (Double, A) = {
+  private def sampled[A](run: => A, setup: () => Unit = () => ()): Seq[Timed[A]] = {
+    def one(): Timed[A] = { setup(); timed(run) }
+    def gated(): Timed[A] = {
       var discards = 0
       while (gate.active && discards < gate.maxDiscardsPerQuery) {
         if (gate.quiet()) {
-          val s = timed()
+          val s = one()
           if (gate.quiet()) return s
         }
         gate.discardAndWait(discards)
         discards += 1
       }
-      timed()
+      one()
     }
-    timed()
+    one()
     Seq.fill(Samples)(gated())
   }
 
@@ -148,8 +148,21 @@ object Rehearsal {
     "median" -> round(Bench.median(secs), 2), "spread" -> round(secs.max - secs.min, 2),
     "samples" -> secs.map(round(_, 2)))
 
-  private def line(name: String, scale: Int, secs: Seq[Double], fields: (String, Any)*): Unit =
+  private def timing(name: String, scale: Int, secs: Seq[Double], fields: (String, Any)*): Unit =
     emit(json((Seq("rehearsal" -> name, "scale" -> scale) ++ stats(secs) ++ fields): _*))
+
+  /** A timing line of samples, then their phases (Telemetry.summary), the share of
+    * each one's wall its top-level phases cover, and the last one's routes. */
+  private def line(name: String, scale: Int, runs: Seq[Timed[_]], fields: (String, Any)*): Unit =
+    timing(name, scale, runs.map(_.sec), fields ++ Seq(
+      "phases" -> Telemetry.summary(runs.map(_.phases)),
+      "phase_cover" -> runs.map(r =>
+        round(r.phases.filterNot(_.path.contains('/')).map(_.work.wallNs).sum / 1e9 / r.sec, 3)),
+      "routes" -> runs.last.routes.map(_.fields)): _*)
+
+  /** The wallet maintainer's batch records of one sample ([[WalletBatch.decision]]). */
+  private def batchWork(run: Timed[_]): Seq[ListMap[String, Any]] =
+    run.routes.map(_.decision).filter(_.op == "wallet batch").map(_.detail)
 
   private def work(leg: String): String = Paths.get(s"target/rehearsal/$leg").toAbsolutePath.toString
 
@@ -158,8 +171,10 @@ object Rehearsal {
   // ---------------------------------------------------------------- queries
 
   private def queryLine(spark: SparkSession, name: String, scale: Int, dir: String): Unit =
-    line(name, scale, sampled(SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()).map(_._1))
+    line(name, scale, sampled {
+      val df = Telemetry.phase("build")(SparkEntry.queries(name)(spark, dir))
+      Telemetry.phase("write")(df.write.format("noop").mode("overwrite").save())
+    })
 
   /** A registered query over the sf tables and over their K× replica. */
   private def scaledQueryLeg(name: String, tables: SparkSession => (Int, String)): Leg = spark => {
@@ -239,7 +254,7 @@ object Rehearsal {
     BlkCorpus.ensureMaterialized(spark)
     val parsed = graft.sources.BlockFileSource.read(spark, BlkCorpus.rawDir)
     line("parse", BlkCorpus.Scale,
-      sampled(parsed.write.format("noop").mode("overwrite").save()).map(_._1))
+      sampled(Telemetry.phase("write")(parsed.write.format("noop").mode("overwrite").save())))
   }
 
   /** The flow-edge derivation and the iterative graph loops over it. The
@@ -250,16 +265,15 @@ object Rehearsal {
     val scale = BlkCorpus.Scale
     def edgesDf = GraphAnalytics.flowEdges(BlkCorpus.silver(spark, "rin"),
       BlkCorpus.silver(spark, "outs"))
-    val derive = sampled(edgesDf.write.format("noop").mode("overwrite").save())
+    val derive = sampled(Telemetry.phase("write")(edgesDf.write.format("noop").mode("overwrite").save()))
     val edges = Scope.pin(edgesDf.persist())
     val nEdges = edges.count()
     val nVerts = edges.select(col("src").as("x"))
       .union(edges.select(col("dst").as("x"))).distinct().count()
-    line("graph_edges", scale, derive.map(_._1), "edges" -> nEdges, "vertices" -> nVerts)
+    line("graph_edges", scale, derive, "edges" -> nEdges, "vertices" -> nVerts)
     def loop(name: String, fields: (String, Any)*)(rows: => Long): Unit = {
       val runs = sampled(rows)
-      line(s"graph_$name", scale, runs.map(_._1),
-        Seq("edges" -> nEdges, "rows" -> runs.last._2) ++ fields: _*)
+      line(s"graph_$name", scale, runs, Seq("edges" -> nEdges, "rows" -> runs.last.value) ++ fields: _*)
     }
     loop("pagerank")(GraphAnalytics.pageRank(edges).count())
     loop("kcore")(GraphAnalytics.kCore(edges, k = 2).count())
@@ -343,10 +357,10 @@ object Rehearsal {
     val c = corpusRelabel(spark, depth = 1000, reorg = false)
     val delta = sampled(c.upsert())
     val full = sampled(c.full())
-    val exact = c.exact(delta.last._2, full.last._2)
-    line("wallet_incremental", BlkCorpus.Scale, delta.map(_._1),
-      "full_s" -> stats(full.map(_._1)), "delta_rows" -> delta.last._2.length,
-      "full_rows" -> full.last._2.length, "exact" -> exact)
+    val exact = c.exact(delta.last.value, full.last.value)
+    line("wallet_incremental", BlkCorpus.Scale, delta,
+      "full_s" -> stats(full.map(_.sec)), "delta_rows" -> delta.last.value.length,
+      "full_rows" -> full.last.value.length, "exact" -> exact)
     if (!exact) throw new IllegalStateException(
       "wallet_incremental: upserted labels differ from the full re-clustering")
   }
@@ -358,16 +372,16 @@ object Rehearsal {
     val c = corpusRelabel(spark, depth = 100, reorg = true)
     val repair = sampled(c.repair()._1)
     val full = sampled(c.full())
-    val exact = c.exact(repair.last._2, full.last._2)
-    line("wallet_reorg_repair", BlkCorpus.Scale, repair.map(_._1), "depth" -> 100,
-      "comparator" -> "bare_recompute", "full_s" -> stats(full.map(_._1)),
-      "repair_rows" -> repair.last._2.length, "stored_rows" -> c.stored.count(),
+    val exact = c.exact(repair.last.value, full.last.value)
+    line("wallet_reorg_repair", BlkCorpus.Scale, repair, "depth" -> 100,
+      "comparator" -> "bare_recompute", "full_s" -> stats(full.map(_.sec)),
+      "repair_rows" -> repair.last.value.length, "stored_rows" -> c.stored.count(),
       "exact" -> exact)
     if (!exact) throw new IllegalStateException(
       "wallet_reorg_repair: repaired labels differ from the re-clustered chain")
-    assertEconomics("deep-reorg repair", "repair", Bench.median(repair.map(_._1)),
-      "bare_recompute", Bench.median(full.map(_._1)),
-      () => (timed(c.repair())._2, timed(c.full())._2))
+    assertEconomics("deep-reorg repair", "repair", Bench.median(repair.map(_.sec)),
+      "bare_recompute", Bench.median(full.map(_.sec)),
+      () => (timed(c.repair()).sec, timed(c.full()).sec))
   }
 
   private def shallowLeg(spark: SparkSession): Unit = {
@@ -378,32 +392,27 @@ object Rehearsal {
     val scale = BlkCorpus.Scale
     val c = shallowRelabel(spark, 20000L * scale)
     val repair = sampled(c.repair())
-    val route = repair.last._2._2
+    val route = repair.last.value._2
     val altFloor = if (route == "contraction") Long.MaxValue else 0L
     val alt = sampled(c.repair(altFloor))
-    val altRoute = alt.last._2._2
+    val altRoute = alt.last.value._2
     val full = sampled(c.full())
     val noop = sampled(c.copy(moved = c.moved.where(lit(false))).repair()._1)
     val bare = route == "contraction" && altRoute == "replace"
-    val (compName, comp) = if (bare) ("bare_recompute", full.map(_._1)) else (altRoute, alt.map(_._1))
-    val exact = c.exact(repair.last._2._1, full.last._2)
-    line("wallet_reorg_repair_shallow", scale, repair.map(_._1),
+    val (compName, comp) =
+      if (bare) ("bare_recompute", full.map(_.sec)) else (altRoute, alt.map(_.sec))
+    val exact = c.exact(repair.last.value._1, full.last.value)
+    line("wallet_reorg_repair_shallow", scale, repair,
       "wallets" -> 20000L * scale, "affected_wallets" -> 100L * scale, "route" -> route,
-      "alt_route" -> altRoute, "alt_s" -> stats(alt.map(_._1)), "comparator" -> compName,
-      "full_s" -> stats(full.map(_._1)), "noop_s" -> stats(noop.map(_._1)),
-      "noop_rows" -> noop.last._2.length, "repair_rows" -> repair.last._2._1.length,
+      "alt_route" -> altRoute, "alt_s" -> stats(alt.map(_.sec)), "comparator" -> compName,
+      "full_s" -> stats(full.map(_.sec)), "noop_s" -> stats(noop.map(_.sec)),
+      "noop_rows" -> noop.last.value.length, "repair_rows" -> repair.last.value._1.length,
       "stored_rows" -> c.stored.count(), "exact" -> exact)
     if (!exact) throw new IllegalStateException(
       "wallet_reorg_repair_shallow: repaired labels differ from the re-clustered chain")
-    assertEconomics("shallow-reorg router", route, Bench.median(repair.map(_._1)),
+    assertEconomics("shallow-reorg router", route, Bench.median(repair.map(_.sec)),
       compName, Bench.median(comp),
-      () => (timed(c.repair())._2, timed(if (bare) c.full() else c.repair(altFloor))._2))
-  }
-
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
+      () => (timed(c.repair()).sec, timed(if (bare) c.full() else c.repair(altFloor)).sec))
   }
 
   // ---------------------------------------------------------------- streaming
@@ -466,10 +475,10 @@ object Rehearsal {
     * order `orderOf(nBatches, sliceHeight)` picks, one synchronous
     * `walletLabelsBatch` each, into `workDir/labels`. At least 10 slices,
     * each under the incremental walk's driver-side batch bound. Returns
-    * (slice, seconds, record) per batch.
+    * (slice, record) per batch; each batch runs as a `wallet` phase.
     */
   private[graft] def walletSlices(spark: SparkSession, workDir: String, funders: CorpusFunders)(
-      orderOf: (Int, Int) => Seq[Int]): Seq[(Int, Double, WalletBatch)] = {
+      orderOf: (Int, Int) => Seq[Int]): Seq[(Int, WalletBatch)] = {
     fresh(workDir)
     val ann = BlkCorpus.annotated(spark)
     val maxH = ann.agg(max("height")).head().get(0).asInstanceOf[Number].intValue
@@ -477,9 +486,8 @@ object Rehearsal {
     val step = maxH / nBatches + 1
     orderOf(nBatches, step).map { i =>
       val slice = headers(ann.where(col("height") >= i * step && col("height") < (i + 1) * step))
-      val (rec, sec) = timed(ChainStream.walletLabelsBatch(
+      (i, ChainStream.walletLabelsBatch(
         spark, slice, s"$workDir/bronze", funders.of, s"$workDir/labels"))
-      (i, sec, rec)
     }
   }
 
@@ -507,8 +515,8 @@ object Rehearsal {
       q.awaitTermination()
       q.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchDuration / 1e3)
     }, () => fresh(dir))
-    val batchS = runs.last._2
-    line("stream_catchup", BlkCorpus.Scale, runs.map(_._1),
+    val batchS = runs.last.value
+    line("stream_catchup", BlkCorpus.Scale, runs,
       "files_per_trigger" -> GoldFilesPerTrigger,
       "blocks" -> spark.read.parquet(s"$dir/bronze").dropDuplicates("hash").count(),
       "batches" -> batchS.size, "batch_s" -> batchS.map(round(_, 1)))
@@ -557,11 +565,10 @@ object Rehearsal {
       tip = nh
       r
     }
-    line("partitioned_sink_tip_follow", BlkCorpus.Scale, follows.map(_._1),
-      "sync_s" -> follows.map(f => round(f._1, 2)),
-      "changed_buckets" -> follows.map(_._2._1),
-      "written_kb" -> follows.map(f => round(f._2._2 / 1e3, 0)),
-      "gold_mb" -> round(follows.last._2._3 / 1e6, 1))
+    line("partitioned_sink_tip_follow", BlkCorpus.Scale, follows,
+      "changed_buckets" -> follows.map(_.value._1),
+      "written_kb" -> follows.map(f => round(f.value._2 / 1e3, 0)),
+      "gold_mb" -> round(follows.last.value._3 / 1e6, 1))
   }
 
   /** The wallet labeling maintained as the corpus streams in out of chain
@@ -574,18 +581,16 @@ object Rehearsal {
     val funders = new CorpusFunders(spark)
     val dir = work("wallet")
     val runs = sampled({
-      ChainStream.walletBatchLog.clear()
       val q = walletStream(spark, dir, funders).start()
       q.awaitTermination()
       val progress = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      (progress.map(_.batchDuration / 1e3), progress.last.numInputRows,
-        ChainStream.walletBatchLog.asScala.toSeq)
+      (progress.map(_.batchDuration / 1e3), progress.last.numInputRows)
     }, () => fresh(dir))
-    val (batchS, finalFiles, batchLog) = runs.last._2
+    val (batchS, finalFiles) = runs.last.value
     val labels = spark.read.parquet(s"$dir/labels/labels").count()
-    line("wallet_labels_catchup", scale, runs.map(_._1),
+    line("wallet_labels_catchup", scale, runs,
       "files_per_trigger" -> WalletFilesPerTrigger, "batches" -> batchS.size,
-      "batch_s" -> batchS.map(round(_, 1)), "batch_work" -> batchLog.map(batchWork),
+      "batch_s" -> batchS.map(round(_, 1)), "batch_work" -> batchWork(runs.last),
       "labels" -> labels)
     // Catch-up bar: the corpus derives from Random(42), so which batch
     // connects the bulk of the chain is fixed per scale — the final one —
@@ -593,10 +598,10 @@ object Rehearsal {
     // 20 s + 3.1 ms/label (13.4 s measured at 1×/1,500 labels, 136.8 s at
     // 30×/45,000). The final batch's files and the chain length are recorded
     // so a corpus change that moves the connect shows in the artifact.
-    val finals = runs.map(_._2._1.last)
+    val finals = runs.map(_.value._1.last)
     val bar = 20.0 + 0.0031 * labels
     val met = Bench.median(finals) <= bar
-    line("wallet_labels_catchup_bar", scale, finals, "final_batch_files" -> finalFiles,
+    timing("wallet_labels_catchup_bar", scale, finals, "final_batch_files" -> finalFiles,
       "chain_blocks" -> BlkCorpus.annotated(spark).count(), "labels" -> labels,
       "bar_s" -> round(bar, 1), "met" -> met)
     if (!met) throw new IllegalStateException(
@@ -608,22 +613,20 @@ object Rehearsal {
     val follows = sampled {
       i += 1
       val nh = f"ffff7$i%059d"
-      val rec = ChainStream.walletLabelsBatch(spark,
+      ChainStream.walletLabelsBatch(spark,
         Seq((nh, tip, 4100000000L + i)).toDF("hash", "parent_hash", "ts"),
         s"$dir/bronze", funders.of, s"$dir/labels")
       tip = nh
-      rec.routeName
     }
-    line("wallet_labels_tip_follow", scale, follows.map(_._1), "routes" -> follows.map(_._2))
+    line("wallet_labels_tip_follow", scale, follows, "batch_work" -> follows.flatMap(batchWork))
   }
 
   private def sliceLeg(leg: String, orderOf: (Int, Int) => Seq[Int]): Leg = spark => {
     val funders = new CorpusFunders(spark)
     val runs = sampled(walletSlices(spark, work(leg), funders)(orderOf))
-    val batches = runs.last._2
-    line(s"wallet_labels_$leg", BlkCorpus.Scale, runs.map(_._1),
-      "batches" -> batches.size, "batch_s" -> batches.map(b => round(b._2, 1)),
-      "routes" -> batches.map(_._3.routeName), "batch_work" -> batches.map(b => batchWork(b._3)))
+    val batches = runs.last.phases.filter(_.path == "wallet")
+    line(s"wallet_labels_$leg", BlkCorpus.Scale, runs, "batches" -> batches.size,
+      "batch_s" -> batches.map(b => round(b.work.wallNs / 1e9, 1)), "batch_work" -> batchWork(runs.last))
   }
 
   /** The maintainer's reorg batch on [[smallWallets]] laid out as a chain:
@@ -676,7 +679,7 @@ object Rehearsal {
       fresh(dir)
       FileUtils.copyDirectory(new File(boot), new File(dir))
     })
-    val rec = runs.last._2
+    val rec = runs.last.value
     val repairRoute = rec.repair.fold("skipped")(_.name)
     // the route the maintainer chose and the one it rejected, each timed on
     // the pre-reorg store; the forced alternative is genuinely "mass" once
@@ -685,15 +688,15 @@ object Rehearsal {
     val pre = c.relabel(boot)
     val chosen = sampled(pre.repair()._2)
     val mass = sampled(pre.repair(Long.MaxValue))
-    val altRoute = mass.last._2._2
-    line("maintainer_contraction", BlkCorpus.Scale, runs.map(_._1), "wallets" -> c.wallets,
+    val altRoute = mass.last.value._2
+    line("maintainer_contraction", BlkCorpus.Scale, runs, "wallets" -> c.wallets,
       "stored_rows" -> pre.stored.count(), "chain_route" -> rec.routeName,
-      "repair_route" -> repairRoute, "chosen_route_s" -> stats(chosen.map(_._1)),
-      "alternative_route" -> altRoute, "mass_alternative_s" -> stats(mass.map(_._1)),
-      "mass_rows" -> mass.last._2._1.length)
-    assertEconomics("maintainer router", repairRoute, Bench.median(chosen.map(_._1)),
-      altRoute, Bench.median(mass.map(_._1)),
-      () => (timed(pre.repair())._2, timed(pre.repair(Long.MaxValue))._2))
+      "repair_route" -> repairRoute, "chosen_route_s" -> stats(chosen.map(_.sec)),
+      "alternative_route" -> altRoute, "mass_alternative_s" -> stats(mass.map(_.sec)),
+      "mass_rows" -> mass.last.value._1.length)
+    assertEconomics("maintainer router", repairRoute, Bench.median(chosen.map(_.sec)),
+      altRoute, Bench.median(mass.map(_.sec)),
+      () => (timed(pre.repair()).sec, timed(pre.repair(Long.MaxValue)).sec))
   }
 
   // ---------------------------------------------------------------- documents
@@ -708,8 +711,6 @@ object Rehearsal {
     import graft.operators.{Dedup, Similarity}
     import spark.implicits._
     val (k, dir) = docTables(spark)
-    def out(name: String, secs: Seq[Double], fields: (String, Any)*): Unit =
-      line(name, k, secs, fields: _*)
     def copied(from: String, to: String): () => Unit = () => {
       fresh(to)
       FileUtils.copyDirectory(new File(from), new File(to))
@@ -726,8 +727,8 @@ object Rehearsal {
     val join = sampled(Dedup.minhashPairsAgainst(
       Dedup.bandedBuckets(Dedup.minhashSignatures(batch, "doc_id", "text"), "doc_id"),
       Dedup.readMinhashBandIndex(spark, bandDir), "doc_id").count())
-    out("bandidx_incremental", join.map(_._1), "freeze_s" -> stats(freeze.map(_._1)),
-      "batch_pairs" -> join.last._2)
+    line("bandidx_incremental", k, join, "freeze_s" -> stats(freeze.map(_.sec)),
+      "batch_pairs" -> join.last.value)
 
     // IVF index: the full build vs appending a 500-vector batch of fresh ids
     val ivfDir = s"$dir-ivf"
@@ -741,13 +742,13 @@ object Rehearsal {
       .select((col("vec_id") + lit(900000000L)).as("vec_id"), col("embedding"), col("label"))
     val append = sampled(Similarity.appendToIvfIndex(spark, s"$ivfDir/work", vBatch,
       "vec_id", "embedding"), copied(s"$ivfDir/base", s"$ivfDir/work"))
-    val st = append.last._2
-    out("ivf_incremental", append.map(_._1), "build_s" -> stats(build.map(_._1)),
+    val st = append.last.value
+    line("ivf_incremental", k, append, "build_s" -> stats(build.map(_.sec)),
       "cells_touched" -> st.touchedCells, "max_cell" -> st.maxCell, "skew" -> round(st.skew, 2))
     // the same batch's semantic-dup check against the appended index
     val loaded = Similarity.loadIvfIndex(spark, s"$ivfDir/work", "vec_id", "embedding")
     val sem = sampled(Similarity.semanticDupsAgainst(loaded, vBatch, tau = 0.95).count())
-    out("semantic_dups_against", sem.map(_._1), "dups" -> sem.last._2)
+    line("semantic_dups_against", k, sem, "dups" -> sem.last.value)
     // a drifted batch: near-copies of one vector all land in one cell, sized
     // past the largest cell, so maxCell itself must jump where the uniform
     // batch left the stats flat — the signal that schedules a rebuild
@@ -759,8 +760,8 @@ object Rehearsal {
     }.toDF("vec_id", "embedding")
     val drift = sampled(Similarity.appendToIvfIndex(spark, s"$ivfDir/drift", drifted,
       "vec_id", "embedding"), copied(s"$ivfDir/work", s"$ivfDir/drift"))
-    val ds = drift.last._2
-    out("ivf_drifted_append", drift.map(_._1), "n_drift" -> nDrift,
+    val ds = drift.last.value
+    line("ivf_drifted_append", k, drift, "n_drift" -> nDrift,
       "cells_touched" -> ds.touchedCells, "max_cell" -> ds.maxCell,
       "skew" -> round(ds.skew, 2), "max_cell_delta" -> (ds.maxCell - st.maxCell))
 
@@ -780,8 +781,8 @@ object Rehearsal {
           .as[String].collect().mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val runs = sampled(graft.sinks.RollingCuration.absorbBatch(spark, jsonl, s"$dir-absorb",
         verifyTau = verifyTau), copied(rollDir, s"$dir-absorb"))
-      val r = runs.last._2
-      out(name, runs.map(_._1), "appended" -> r.appended, "near_dropped" -> r.nearDups,
+      val r = runs.last.value
+      line(name, k, runs, "appended" -> r.appended, "near_dropped" -> r.nearDups,
         "exact_dropped" -> r.historyDups, "collisions" -> r.historyCollisions,
         "weak_collisions" -> r.historyWeakCollisions)
     }
@@ -812,21 +813,6 @@ object Rehearsal {
     */
   private def json(fields: (String, Any)*): String = Serialization.write(ListMap(fields: _*))
 
-  /** `x` rounded to `places` decimals, for seconds on an evidence line. */
-  private def round(x: Double, places: Int): BigDecimal =
-    BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP)
-
-  /** A maintainer batch record under the evidence-line keys: route, blocks
-    * arrived / invalidated (-1 = not derived), repair route ("bootstrap"
-    * when the store was rebuilt, "skipped" when no repair ran), where a
-    * replace repair's edges came from, the frontier sizes a quiet batch
-    * re-stamped, and a full route's why/kind.
-    */
-  private def batchWork(b: WalletBatch): ListMap[String, Any] = ListMap(
-    "route" -> b.routeName, "arrived" -> b.arrived, "invalidated" -> b.invalidated,
-    "repair" -> (if (b.storeBootstrap) "bootstrap" else b.repair.fold("skipped")(_.name)),
-    "edges" -> b.edges.map(_.detail), "pending" -> b.pending, "dangling" -> b.dangling,
-    "why" -> b.reason, "kind" -> b.kind)
 
   /** Router-economics assertion with ONE contention retry: the chosen route
     * must take at most 1.3× the rejected one plus 0.5 s. A host window
@@ -857,8 +843,7 @@ object Rehearsal {
   private def health(spark: SparkSession, tag: String): Unit = {
     val rt = Runtime.getRuntime
     val heapMb = (rt.totalMemory() - rt.freeMemory()) / 1e6
-    val gcS = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
+    val gcS = Telemetry.gcMs() / 1e3
     val cachedMb = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / 1e6
     // the ContextCleaner may delete a block, or its directory, between a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 
+import graft.Telemetry.{phase, route, RouteDecision}
 import graft.operators.ChainOps
 
 /** Best-chain resolution over an append-only block set — the Spark-native
@@ -150,14 +151,13 @@ object BestChain {
   private[graft] def bestChainConnectedWithFrontier(
       blocks: DataFrame, envelope: Int)
       : (DataFrame, Option[(Set[String], Map[String, String])]) = {
-    import ChainOps.traced
-    val probe = traced("bestChainConnected: envelope probe")(blocks
-      .select("hash", "parent_hash")
-      .limit(envelope + 1).collect()
-      .map(r => (r.getString(0), r.getString(1))))
-    if (probe.length <= envelope) {
-      val (memo, onChain) = traced("bestChainConnected: in-memory walk")(
-        resolveInMemory(probe, genesisRootedTips = true))
+    val probe = phase("probe")(blocks.select("hash", "parent_hash")
+      .limit(envelope + 1).collect().map(r => (r.getString(0), r.getString(1))))
+    val walk = probe.length <= envelope
+    route(RouteDecision("bestChainConnected", if (walk) "walk" else "distributed",
+      probe.length, envelope, if (walk) "within the envelope" else "above the envelope"))
+    if (walk) {
+      val (memo, onChain) = phase("walk")(resolveInMemory(probe, genesisRootedTips = true))
       val ids = probe.iterator.map(_._1).toSet
       val rows = memo.iterator.collect {
         case (k, v) if onChain.contains(k) && ids.contains(k) => Row(k, v)
@@ -223,8 +223,10 @@ object BestChain {
     * before taking the loop. It collects every column of `blocks`: callers
     * pass narrow header frames — (hash, parent_hash, ts[, nonce_order]).
     */
-  def annotateDistributed(blocks: DataFrame): DataFrame = {
-    import ChainOps.traced
+  def annotateDistributed(blocks: DataFrame): DataFrame =
+    phase("annotate")(annotateRouted(blocks))
+
+  private def annotateRouted(blocks: DataFrame): DataFrame = {
     val envelope = ChainOps.driverEnvelope
     // The probe stays a limit+collect DELIBERATELY: CollectLimit executes
     // partitions incrementally (1, 4, 16, …) and stops at envelope+1 rows,
@@ -236,12 +238,13 @@ object BestChain {
     // the incremental probe survives. At the 2²⁰ envelope a header row
     // (hash, parent, ts) is ~300 B on the driver, ~300 MB in all: the
     // build-side cost a BroadcastExchange of the block set would pay.
-    val probe = traced("annotate: envelope probe")(
-      blocks.limit(envelope + 1).collect())
-    if (probe.length <= envelope)
-      return annotateInMemory(blocks, probe)
+    val probe = phase("probe")(blocks.limit(envelope + 1).collect())
+    val inMemory = probe.length <= envelope
+    route(RouteDecision("annotate", if (inMemory) "envelope" else "doubling",
+      probe.length, envelope, if (inMemory) "within the envelope" else "above the envelope"))
+    if (inMemory) return phase("in-memory")(annotateInMemory(blocks, probe))
 
-    val resolved = traced("annotate: resolve")(ChainOps.resolve(
+    val resolved = phase("resolve")(ChainOps.resolve(
       blocks.select("hash", "parent_hash"), "hash", "parent_hash",
       keepTables = true))
     val h = resolved.result
@@ -260,8 +263,7 @@ object BestChain {
     val encState = blocks.sparkSession.createDataFrame(resolved.resultRdd,
       StructType(Seq(StructField("id", LongType), StructField("ptr", LongType),
         StructField("dist", LongType), StructField("done", BooleanType))))
-    val maxDistRow = traced("annotate: tip max-dist")(
-      encState.agg(max(col("dist"))).head())
+    val maxDistRow = phase("tip max-dist")(encState.agg(max(col("dist"))).head())
     if (maxDistRow.isNullAt(0)) { // empty chain: empty annotation, not a driver crash
       resolved.tables.foreach(_._2.unpersist(blocking = false))
       resolved.resultRdd.unpersist(blocking = false)
@@ -272,7 +274,7 @@ object BestChain {
     val tipCands = encState.where(col("dist") === tipHeight)
       .select("id", "ptr").collect().map(r => (r.getLong(0), r.getLong(1)))
     val candVids = tipCands.flatMap(p => Seq(p._1, p._2)).distinct
-    val vidToHash = traced("annotate: tip decode")(resolved.dict.frame
+    val vidToHash = phase("tip decode")(resolved.dict.frame
       .where(col("vid").isin(candVids: _*)).collect()
       .map(r => r.getLong(1) -> r.get(0).asInstanceOf[String]).toMap)
     val (tipVid, tipRootVid) = tipCands.minBy(p => vidToHash(p._1))
@@ -347,8 +349,7 @@ object BestChain {
         // fragments (measured: last span 29 s fragmented vs ~6 s bounded).
         val coalesced = hops.foldLeft(s)(_ unionByName _)
           .coalesce(blocks.sparkSession.sessionState.conf.numShufflePartitions)
-        val (ns, nsRdd) = ChainOps.traced(s"annotate: membership span=$span")(
-          ChainOps.rebase(coalesced))
+        val (ns, nsRdd) = phase(s"membership span=$span")(ChainOps.rebase(coalesced))
         if (sRdd != null) sRdd.unpersist(blocking = false)
         s = ns; sRdd = nsRdd
         span *= arity
@@ -365,7 +366,7 @@ object BestChain {
     // Materialize the final annotation (pinned to the caller's scope), then
     // drop every piece of loop state — jump tables, the membership
     // frontier, the dictionary.
-    val (annDf, _) = ChainOps.traced("annotate: final rebase")(ChainOps.rebase(ann))
+    val (annDf, _) = phase("final rebase")(ChainOps.rebase(ann))
     resolved.tables.foreach(_._2.unpersist(blocking = false))
     // On the walk route no tables were kept, so the height pass's final
     // state RDD is not covered by the loop above — drop it explicitly.

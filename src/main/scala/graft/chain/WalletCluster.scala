@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.Telemetry.{phase, route, RouteDecision}
 import graft.operators.{ChainOps, UnionFind, VertexDictionary}
 
 /** Wallet clustering = connected components over the co-spend graph —
@@ -166,6 +167,7 @@ object WalletCluster {
     // at least as many pairs as star edges, so the edges fit too).
     collectPairs(funders, envelope) match {
       case Some(pairs) =>
+        route(RouteDecision("clustered", "envelope", pairs.length, envelope, "pairs fit"))
         val edges = starEdges(pairs)
         return (labelled(labelsOf(edges)), Some(edges))
       case None =>
@@ -184,11 +186,13 @@ object WalletCluster {
     val (edgeDf, edgeRdd, nEdges) = ChainOps.rebaseCounted(edgeRows)
 
     if (nEdges <= envelope) {
+      route(RouteDecision("clustered", "union-find", nEdges, envelope, "edges fit"))
       val labels = UnionFind.components(
         edgeDf.collect().iterator.map(r => (r.getString(0), r.getString(1))))
       edgeRdd.unpersist(blocking = false)
       return (labelled(labels), None)
     }
+    route(RouteDecision("clustered", "graphx", nEdges, envelope, "edges do not fit"))
 
     // Dense unique vertex ids (no hash-collision risk at 100 TB); the edge
     // joins AND the graph's vertex set read the one pinned assignment.
@@ -243,10 +247,14 @@ object WalletCluster {
     // its star edges and union-find run there; the store is read by one
     // broadcast semi-join for the batch addresses' labels, and once more
     // for the members of labels that moved. Same delta as below.
-    collectPairs(newFunders.select(col("tx_hash"), col("src_address")).distinct(),
-        ChainOps.driverEnvelope) match {
-      case Some(pairs) => return incrementalInMemory(old, pairs)
+    val envelope = ChainOps.driverEnvelope
+    phase("funder collect")(collectPairs(
+        newFunders.select(col("tx_hash"), col("src_address")).distinct(), envelope)) match {
+      case Some(pairs) =>
+        route(RouteDecision("incrementalClusters", "envelope", pairs.length, envelope, "pairs fit"))
+        return phase("clustering")(incrementalInMemory(old, pairs))
       case None =>
+        route(RouteDecision("incrementalClusters", "distributed", envelope + 1L, envelope, "pairs do not fit"))
     }
     // Both frames below are BATCH-grain (the day's funding pairs and their
     // contraction — never the store or the chain) and each is consumed
@@ -436,8 +444,8 @@ object WalletCluster {
     // parquet-backed count is metadata-cheap).
     val driverCap = ChainOps.driverEnvelope
     val probeCap = math.min(contractionMinStore, driverCap + 1L).toInt
-    val storedProbe =
-      if (probeCap > 0) old.limit(probeCap).collect() else Array.empty[org.apache.spark.sql.Row]
+    val storedProbe = phase("store probe")(
+      if (probeCap > 0) old.limit(probeCap).collect() else Array.empty[org.apache.spark.sql.Row])
     // Replace route iff the probe returned the WHOLE store strictly under
     // its cap: nStored = probe length < min(floor, cap+1) implies both
     // belowFloor and the driver bound. The hard driver bound stays separate
@@ -480,14 +488,15 @@ object WalletCluster {
       // stored). Lookups past the envelope re-derive instead.
       val moved = source match {
         case EdgeSource.Stored(edges, retract, add) =>
-          for (r <- distinctPairs(retract); a <- distinctPairs(add))
+          for (r <- phase("retract lookup")(distinctPairs(retract));
+               a <- phase("add lookup")(distinctPairs(add)))
             yield (moveEdges(edges, starEdges(r), starEdges(a)), a)
         case EdgeSource.Rederive => None
       }
       val (freshAt, newRows, post): (String => String, DataFrame, Option[PostEdges]) =
         moved match {
           case Some((edges, added)) =>
-            val (at, rows) = onDriver(edges, added)
+            val (at, rows) = phase("union-find")(onDriver(edges, added))
             (at, rows, Some(PostEdges(edges, stored = true)))
           case None =>
             // No-op pre-route as a LIMIT-1 probe, not a full derivation: a
@@ -504,10 +513,10 @@ object WalletCluster {
             // whose rows at stored addresses are collected (≤ nStored) — a
             // post-reorg funder universe that dwarfs the store, the
             // ADVICE-flagged hazard, never reaches the driver.
-            collectPairs(fu, driverCap) match {
+            phase("chain pairs")(collectPairs(fu, driverCap)) match {
               case Some(pairs) =>
                 val edges = starEdges(pairs)
-                val (at, rows) = onDriver(edges, pairs)
+                val (at, rows) = phase("union-find")(onDriver(edges, pairs))
                 (at, rows, Some(PostEdges(edges, stored = false)))
               case None =>
                 val hubs = fu.groupBy("tx_hash").agg(min("address").as("hub"))
@@ -554,10 +563,10 @@ object WalletCluster {
       // funding pair must have been in the retracted blocks, or it would
       // still appear post-reorg — so no affected-set test is needed (and
       // already-singleton rows skip on nw == w).
-      val out = storedRows.iterator.flatMap { case (a, w) =>
+      val out = phase("label diff")(storedRows.iterator.flatMap { case (a, w) =>
         val nw = freshAt(a)
         if (nw != w) Some((a, nw)) else None
-      }.toSeq
+      }.toSeq)
       return (labelFrame(spark, out).unionByName(newRows), RepairRoute.Replace, post)
     }
     val invAddrs = invalidated.select(col("src_address").as("address")).distinct()

@@ -193,20 +193,6 @@ object ChainOps {
         (cur("done") || col(s"hid$tag").isNull || col(s"hdone$tag")).as("done"))
   }
 
-  private def tracing: Boolean = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-
-  /** Perf tracing for the doubling loops (SPARK_GRAFT_TRACE=1). */
-  private[graft] def traced[A](name: String)(f: => A): A =
-    if (!tracing) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[trace] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  /** One `[trace]` line under SPARK_GRAFT_TRACE=1: a route record. */
-  private[graft] def trace(line: => String): Unit = if (tracing) println(s"[trace] $line")
-
   /** The pointer-jumping loop shared by [[rootsAndDepths]] and
     * [[graft.chain.BestChain.annotateDistributed]]. State rows are
     * (id, ptr, dist, done): ptr = the min(arity^round, depth)-ancestor
@@ -259,7 +245,7 @@ object ChainOps {
     val enc = dict.encode(dict.encode(base0, "id"), "parent", joinType = "left").distinct()
     val tables = scala.collection.mutable.ArrayBuffer
       .empty[(DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])]
-    var (state, stateRdd, n, unresolved) = traced("resolve round 0 (init rebase)")(
+    var (state, stateRdd, n, unresolved) = graft.Telemetry.phase("round 0")(
       rebaseCountFalse(
         enc.select(
           col("id"),
@@ -316,7 +302,7 @@ object ChainOps {
       // side rounds keep deserialized rows: the table is re-broadcast from
       // the RDD every hop and staying deserialized avoids 15 decode passes
       // per round on the latency-critical small-corpus path.
-      val (next, nextRdd, _, remaining) = traced(s"resolve round $r")(
+      val (next, nextRdd, _, remaining) = graft.Telemetry.phase(s"round $r")(
         rebaseCountFalse(round, boolIdx = 3,
           if (bcast) StorageLevel.MEMORY_AND_DISK
           else StorageLevel.MEMORY_AND_DISK_SER))
@@ -342,7 +328,8 @@ object ChainOps {
     *         id of the chain's origin (≙ genesis block).
     */
   def rootsAndDepths(nodes: DataFrame, idCol: String, parentCol: String): DataFrame = {
-    val resolved = resolve(nodes, idCol, parentCol, keepTables = false)
+    val resolved =
+      graft.Telemetry.phase("resolve")(resolve(nodes, idCol, parentCol, keepTables = false))
     // Materialize the decoded result NOW (it references the persisted
     // dictionary — see resolve), then drop the loop's internals.
     val (out, _) = rebase(resolved.result

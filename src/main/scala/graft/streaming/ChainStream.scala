@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
-import graft.Scope
+import graft.{Scope, Telemetry}
 import graft.operators.ChainOps
 import graft.sinks.{Hfs, PartitionedGold, StoreManifest}
 
@@ -200,17 +200,16 @@ object ChainStream {
     def reason: Option[String] = full.map(_.reason)
     /** How the full resolution resolved; None on the incremental routes. */
     def kind: Option[String] = full.map(_.kind)
+    /** The batch as a route record (`rows` = blocks arrived; the detail's repair
+      * is "bootstrap" when the store was rebuilt, "skipped" when none ran). */
+    def decision: Telemetry.RouteDecision = Telemetry.RouteDecision("wallet batch", routeName,
+      arrived, -1L, reason.getOrElse(""), scala.collection.immutable.ListMap(
+        "route" -> routeName, "arrived" -> arrived, "invalidated" -> invalidated,
+        "repair" -> (if (storeBootstrap) "bootstrap" else repair.fold("skipped")(_.name)),
+        "edges" -> edges.map(_.detail), "pending" -> pending, "dangling" -> dangling,
+        "why" -> reason, "kind" -> kind))
   }
 
-  /** The records of recent [[walletLabelsBatch]] calls, for callers that
-    * drive the maintainer through a streaming query and so never see the
-    * return values (rehearsal legs drain it per leg). Bounded: a month-long
-    * maintainer must not accumulate a record per batch forever — the oldest
-    * entries drop past [[WalletBatchLogCap]].
-    */
-  private[graft] val WalletBatchLogCap = 10000
-  private[graft] val walletBatchLog =
-    new java.util.concurrent.ConcurrentLinkedQueue[WalletBatch]
   /** On-disk wallet-store data schema (the slot partition column is
     * directory-derived). Store reads specify it explicitly because an empty
     * store — zero data files, just _SUCCESS — is valid state that schema
@@ -238,15 +237,6 @@ object ChainStream {
   /** The frontier sidecar body as [[writeFrontierBody]] writes it. */
   private val FrontierSchema = StructType(
     Seq("kind", "hash", "parent_hash").map(StructField(_, StringType)))
-
-  private def logWalletBatch(record: WalletBatch): Unit = {
-    ChainOps.trace(s"wallet: batch route=${record.routeName}" +
-      record.repair.fold("")(r => s" repair=${r.name}") +
-      record.edges.fold("")(e => s" edges=${e.detail}"))
-    walletBatchLog.add(record)
-    while (walletBatchLog.size() > WalletBatchLogCap) walletBatchLog.poll()
-    ()
-  }
 
   /** The chain tip rule, stated once: max height, ties to the min hash —
     * annotate's own order. Reads `hash` and `height` of any chain frame.
@@ -698,8 +688,8 @@ object ChainStream {
     * write-ordering note below); only the frontier sidecar is re-stamped
     * when it grew.
     *
-    * @return what the batch did; the record is also appended to
-    *         [[walletBatchLog]]
+    * @return what the batch did; the record is also posted as a route
+    *         decision of the batch's `wallet` phase ([[graft.Telemetry]])
     */
   private[graft] def walletLabelsBatch(
       spark: SparkSession,
@@ -720,10 +710,12 @@ object ChainStream {
     // (tail batches 20–70 s on constant batch work). The scope is confined
     // to this thread: a query running beside the maintainer (the gold sink
     // on the same feed) keeps its caches and checkpoints.
-    val record = Scope(
-      walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots))
-    logWalletBatch(record)
-    record
+    Telemetry.phase("wallet") {
+      val record = Scope(
+        walletLabelsBatchImpl(spark, batch, bronzeDir, fundersOf, labelsDir, slots))
+      Telemetry.route(record.decision)
+      record
+    }
   }
 
   private def walletLabelsBatchImpl(
@@ -734,15 +726,14 @@ object ChainStream {
       labelsDir: String,
       slots: Int): WalletBatch = {
     import graft.chain.WalletCluster
-    import ChainOps.traced
+    import Telemetry.phase
     // The micro-batch is read ONCE: its header rows land in bronze and feed
     // the chain walk from the same collect. Over the walk cap the batch is
     // written as it stands and the walk's own probe routes to the full
     // resolution.
-    val batchRows = traced("wallet: batch collect")(
-      batch.limit(BatchWalkCap + 1).collect())
+    val batchRows = phase("batch collect")(batch.limit(BatchWalkCap + 1).collect())
     val collected = batchRows.length <= BatchWalkCap
-    traced("wallet: bronze append")(
+    phase("bronze append")(
       (if (collected) ChainOps.driverFrame(spark, batchRows.toSeq, batch.schema) else batch)
         .write.mode("append").parquet(bronzeDir))
     // the engine wrote every bronze file with the batch's schema: read with
@@ -770,8 +761,7 @@ object ChainStream {
     // probe, then wait for the genesis to arrive (the reorder-buffer
     // discipline applied to the chain's own root).
     if (prevCursor.isEmpty &&
-        traced("wallet: genesis probe")(
-          bronze.where(col("parent_hash").isNull).isEmpty))
+        phase("genesis probe")(bronze.where(col("parent_hash").isNull).isEmpty))
       return WalletBatch(route = None)
     // The TOP two height buckets, collected ONCE (≤ 2 × CursorBucketSize
     // rows, partition-pruned): the prior tip, the membership/anchor
@@ -828,7 +818,7 @@ object ChainStream {
           rows.iterator.filter(_.getString(0) == "p")
             .map(r => r.getString(1) -> r.getString(2)).toMap)
       }
-    val upd = traced("wallet: best chain")(
+    val upd = phase("best chain")(
       if (!collected)
         bestChainIncremental(spark, bronze, batch, prevCursor, prevTop, frontier)
       else {
@@ -901,7 +891,7 @@ object ChainStream {
       // no manifest, and the next batch bootstraps again
       Hfs.delete(spark, StoreManifest.path(labelsDir))
       val addrs = bf.select(col("src_address").as("address")).distinct()
-      traced("wallet: bootstrap cluster+write") {
+      phase("bootstrap") {
         val (labels, edges) = WalletCluster.clustered(addrs, bf)
         labels.withColumn(bucket, slotOf(col("address")))
           .write.mode("overwrite").partitionBy(bucket).parquet(storePath)
@@ -968,8 +958,8 @@ object ChainStream {
       // and O(corpus) per batch).
       val repair =
         if (if (nInvalidated >= 0) nInvalidated == 0
-            else traced("wallet: invalidated probe")(invalidated.isEmpty)) None
-        else traced("wallet: repair") {
+            else phase("invalidated probe")(invalidated.isEmpty)) None
+        else phase("repair") {
           def lookup(hashes: Seq[String]): DataFrame =
             if (hashes.isEmpty) Seq.empty[(String, String)].toDF("tx_hash", "src_address")
             else fundersOf(spark, bronze.join(hashes.toDF("hash"), Seq("hash"), "left_semi"))
@@ -1004,7 +994,7 @@ object ChainStream {
       val replaced = repair.exists(_._2 == WalletCluster.RepairRoute.Replace)
       val delta =
         if (nArrived == 0L || replaced) Seq.empty[(String, String)].toDF("address", "wallet_id")
-        else traced("wallet: incremental")(ChainOps.localCheckpoint(
+        else phase("incremental")(ChainOps.localCheckpoint(
           WalletCluster.incrementalClusters(afterRepair,
             fundersOf(spark, bronze.join(arrived, Seq("hash"), "left_semi")))))
       // combined changed-row set vs the ON-DISK store
@@ -1012,7 +1002,7 @@ object ChainStream {
       val slotted = changes.withColumn(bucket, slotOf(col("address")))
       val changedSlots = slotted.select(bucket).distinct()
         .collect().map(_.getInt(0))
-      if (changedSlots.nonEmpty) traced("wallet: slot write") {
+      if (changedSlots.nonEmpty) phase("slot write") {
         // full content of ONLY the changed slots; localCheckpoint is
         // slot-sized, not store-sized, and breaks the cycle of reading
         // the path being overwritten. Explicit schema: the store can be

@@ -138,14 +138,15 @@ class CorpusGuardSpec extends SparkSpec {
   test("wallet catch-up: the streamed labels converge, and the bootstrap takes the driver walk") {
     val funders = new CorpusFunders(spark)
     inDir("wallet") { dir =>
-      ChainStream.walletBatchLog.clear()
-      Rehearsal.walletStream(spark, dir, funders).start().awaitTermination()
+      val drain = Telemetry.timed(spark.sparkContext)(
+        Rehearsal.walletStream(spark, dir, funders).start().awaitTermination())
       assertLabelsConverged(s"$dir/labels", funders.best)
       // the drain's one full resolution, when genesis arrives, cascades on
       // the driver at every corpus that fits the walk cap; the distributed
       // doubling would converge too, only slower
       assert(BlkCorpus.annotated(spark).count() <= ChainStream.BootstrapWalkCap)
-      val kind = ChainStream.walletBatchLog.asScala.toSeq.flatMap(_.kind).lastOption
+      val kind = drain.routes.map(_.decision).filter(_.op == "wallet batch")
+        .flatMap(_.detail("kind").asInstanceOf[Option[String]]).lastOption
       assert(kind.contains("walk"), s"catch-up bootstrap left the driver-walk path: kind=$kind")
     }
   }
@@ -154,7 +155,7 @@ class CorpusGuardSpec extends SparkSpec {
     val funders = new CorpusFunders(spark)
     inDir("backfill") { dir =>
       val routes = Rehearsal.walletSlices(spark, dir, funders)(Rehearsal.chainOrder)
-        .map(_._3.routeName)
+        .map(_._2.routeName)
       assert(routes.drop(1).forall(_ == "extend"), histogram(routes))
       assertLabelsConverged(s"$dir/labels", funders.best)
     }
@@ -168,7 +169,7 @@ class CorpusGuardSpec extends SparkSpec {
       val expected = runs.indices.map { j =>
         if (j == 0) "bootstrap" else if (fed(j)(runs(j)._1 - 1)) "extend" else "unchanged"
       }
-      val routes = runs.map(_._3.routeName)
+      val routes = runs.map(_._2.routeName)
       assert(expected.contains("unchanged") && routes == expected, histogram(routes))
       assertLabelsConverged(s"$dir/labels", funders.best)
     }

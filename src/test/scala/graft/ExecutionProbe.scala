@@ -52,11 +52,11 @@ object ExecutionProbe {
       }
     }
     val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
+    org.apache.spark.TelemetryBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       val out = f
-      org.apache.spark.ListenerBusDrain(sc)
+      org.apache.spark.TelemetryBus.drain(sc)
       (out, Counts(scans.map { case (k, v) => k -> v.get }, inference.get, listing.get))
     } finally sc.removeSparkListener(listener)
   }

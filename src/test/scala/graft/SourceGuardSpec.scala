@@ -75,14 +75,58 @@ class SourceGuardSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders)
   }
 
-  test("only Bench, Verify, Profile and the Rehearsal runner define main, and no leg knob is read") {
+  /** Whether a match of `what` in `src` sits directly in an `object` body:
+    * the innermost braces around it were opened by an `object` header, not
+    * by a class, a method or a block.
+    */
+  private def atObjectLevel(src: String, what: scala.util.matching.Regex): Boolean = {
+    val opener = "\\b(?:object|class|trait|new|def|val|var)\\b".r
+    what.findAllMatchIn(src).exists { m =>
+      var stack = List.empty[Boolean] // per open brace: an object body?
+      var from = 0 // start of the statement the next brace belongs to
+      (0 until m.start).foreach { i =>
+        src(i) match {
+          case '{' =>
+            stack ::= opener.findAllIn(src.substring(from, i)).toSeq.lastOption.contains("object")
+            from = i + 1
+          case '}' => stack = stack.drop(1); from = i + 1
+          case ';' => from = i + 1
+          case _ =>
+        }
+      }
+      stack.headOption.contains(true)
+    }
+  }
+
+  test("no object-level ConcurrentLinkedQueue, AtomicReference, ConcurrentHashMap or LinkedHashMap in streaming/") {
+    // a batch record belongs to whoever asked for it (the call's return
+    // value, a telemetry sink): a queue held in an object is shared by every
+    // query on every thread and grows for the life of the JVM. A field of a
+    // class instance, such as Graceful's set of managed queries, is the
+    // owner's own state.
+    val main = srcRoot.resolve("main/scala/graft")
+    val register =
+      "\\b(?:ConcurrentLinkedQueue|AtomicReference|ConcurrentHashMap|LinkedHashMap)\\b".r
+    assert(atObjectLevel(
+      "object A { private val q = new java.util.concurrent.ConcurrentLinkedQueue[Int] }", register))
+    val graceful = code(main.resolve("streaming/Graceful.scala"))
+    assert(register.findFirstIn(graceful).isDefined && !atObjectLevel(graceful, register))
+    val offenders = scalaFiles(main.resolve("streaming"))
+      .filter(p => atObjectLevel(code(p), register))
+      .map(p => main.relativize(p).toString)
+    assert(offenders.isEmpty, offenders)
+  }
+
+  test("only Bench, Verify and the Rehearsal runner define main, and no leg or telemetry knob is read") {
     // a probe or rehearsal main of its own grows its own filters, knobs and
-    // emit code; a timing belongs to a Rehearsal leg, a check to a spec
+    // emit code; a timing belongs to a Rehearsal leg or a telemetry phase, a
+    // check to a spec
     val main = srcRoot.resolve("main")
     val mains = scalaFiles(main).filter(p => "\\bdef main\\(".r.findFirstIn(code(p)).isDefined)
       .map(_.getFileName.toString).sorted
-    assert(mains == Seq("Bench.scala", "Profile.scala", "Rehearsal.scala", "Verify.scala"), mains)
-    val knobs = scalaFiles(main).flatMap(p => "SPARK_GRAFT_[A-Z0-9_]*_LEGS".r.findAllIn(code(p)))
+    assert(mains == Seq("Bench.scala", "Rehearsal.scala", "Verify.scala"), mains)
+    val knobs = scalaFiles(main).flatMap(p => ("SPARK_GRAFT_[A-Z0-9_]*_LEGS|" +
+      "SPARK_GRAFT_(?:TRACE|PROFILE|BENCH_VERBOSE|BENCH_DEBUG)\\b").r.findAllIn(code(p)))
     assert(knobs.isEmpty, knobs)
   }
 

@@ -11,11 +11,13 @@ import graft.streaming.ChainStream
 
 class StreamingSpec extends SparkSpec {
 
-  /** Route of the last maintainer batch a streaming query ran. */
-  private def lastLoggedRoute: String = {
-    import scala.jdk.CollectionConverters._
-    ChainStream.walletBatchLog.asScala.last.routeName
-  }
+  /** The wallet maintainer batch records of a run. */
+  private def walletBatches(run: Telemetry.Timed[_]): Seq[Telemetry.RouteDecision] =
+    run.routes.map(_.decision).filter(_.op == "wallet batch")
+
+  /** The record of the last wallet maintainer batch `run` posted. */
+  private def lastWalletBatch(run: => Unit): Telemetry.RouteDecision =
+    walletBatches(Telemetry.timed(spark.sparkContext)(run)).last
 
   test("parseUpdateTips extracts hash+height from bitcoind-style log lines") {
     import spark.implicits._
@@ -208,8 +210,7 @@ class StreamingSpec extends SparkSpec {
       ("g", "", 1000L, Seq(("t1", Seq("a1", "a2")))),
       ("a", "g", 1100L, Seq(("t2", Seq("a3", "a4")))),
       ("b", "a", 1200L, Seq(("t3", Seq("a2", "a3")))))
-    writer.start().awaitTermination()
-    assert(lastLoggedRoute == "bootstrap")
+    assert(lastWalletBatch(writer.start().awaitTermination()).route == "bootstrap")
     assert(labels() == Map("a1" -> "a1", "a2" -> "a1", "a3" -> "a1", "a4" -> "a1"))
 
     // Batch 2: longer fork b2 <- c2 reorgs b out — t3's merge RETRACTS (the
@@ -220,21 +221,18 @@ class StreamingSpec extends SparkSpec {
     input.addData(
       ("b2", "a", 1201L, Seq(("t4", Seq("a4", "a5")))),
       ("c2", "b2", 1300L, Seq.empty[(String, Seq[String])]))
-    writer.start().awaitTermination()
+    val reorgRecord = lastWalletBatch(writer.start().awaitTermination())
     // the reorg batch resolved O(batch) against the cursor, not via a full
     // bronze annotate
-    assert(lastLoggedRoute == "extend")
+    assert(reorgRecord.route == "extend")
     // ONE clustering per reorg batch: the replace repair moves the stored
     // edge multiset to the post-reorg chain, arrivals included, so the batch
     // derives funders for the invalidated blocks and the arrived blocks only
     // — never the whole best chain, and no third derivation for an
     // incremental pass over the arrivals
-    val reorgRecord = {
-      import scala.jdk.CollectionConverters._
-      ChainStream.walletBatchLog.asScala.last
-    }
-    assert(reorgRecord.repair.contains(graft.chain.WalletCluster.RepairRoute.Replace))
-    assert(reorgRecord.edges.contains(ChainStream.EdgeRoute.Multiset(lag = 0, lookupBlocks = 3)))
+    assert(reorgRecord.detail("repair") == graft.chain.WalletCluster.RepairRoute.Replace.name)
+    assert(reorgRecord.detail("edges") ==
+      Some(ChainStream.EdgeRoute.Multiset(lag = 0, lookupBlocks = 3).detail))
     assert(funderCalls.get == 2, s"reorg batch derived funders ${funderCalls.get} times")
     val looked = {
       import scala.jdk.CollectionConverters._
@@ -259,10 +257,10 @@ class StreamingSpec extends SparkSpec {
     input.addData(
       ("b2", "a", 1201L, Seq(("t4", Seq("a4", "a5")))),
       ("c2", "b2", 1300L, Seq.empty[(String, Seq[String])]))
-    writer.start().awaitTermination()
+    val replayed = lastWalletBatch(writer.start().awaitTermination())
     // a replayed batch is recognized on the cursor and exits before any
     // label work — no store read, no cursor rewrite
-    assert(lastLoggedRoute == "unchanged")
+    assert(replayed.route == "unchanged")
     assert(storeFiles() == fpBefore, "replayed batch rewrote label slots")
     assert(labels() == full)
   }
@@ -390,8 +388,7 @@ class StreamingSpec extends SparkSpec {
       blocks, s"$tmp/bronze", fundersOf, s"$tmp/labels", s"$tmp/ckpt")
     // bootstrap: 400 single-funder txs spread the store over every slot
     input.addData(("g", "", 1000L, (0 until 400).map(i => (f"t$i%03d", Seq(f"a$i%03d")))))
-    writer.start().awaitTermination()
-    assert(lastLoggedRoute == "bootstrap")
+    assert(lastWalletBatch(writer.start().awaitTermination()).route == "bootstrap")
     import scala.jdk.CollectionConverters._
     val slotDirs = Files.list(java.nio.file.Paths.get(s"$tmp/labels/labels")).iterator().asScala
       .count(p => Files.isDirectory(p))
@@ -400,8 +397,10 @@ class StreamingSpec extends SparkSpec {
     // extension: a co-spend of a stored and a new address reads the store
     // and rewrites the changed slots
     input.addData(("h", "g", 1100L, Seq(("u1", Seq("a000", "z")))))
-    val (_, counts) = ExecutionProbe(spark)(writer.start().awaitTermination())
-    assert(lastLoggedRoute == "extend")
+    val extend = Telemetry.timed(spark.sparkContext)(
+      ExecutionProbe(spark)(writer.start().awaitTermination())._2)
+    val counts = extend.value
+    assert(walletBatches(extend).last.route == "extend")
     assert(counts.listingJobs == 0,
       s"extend batch started ${counts.listingJobs} listing jobs over $slotDirs slot directories")
     val labels = spark.read.parquet(s"$tmp/labels/labels").select("address", "wallet_id")
